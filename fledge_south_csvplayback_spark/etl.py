@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fledge_south_csvplayback_spark.operators import clean
+from fledge_south_csvplayback_spark.sources import csv_source
 
 
 def flatten_if_dump(df: DataFrame, ts_col: str = "user_ts") -> DataFrame:
@@ -64,7 +65,10 @@ def run_etl(
     method: str = "linear",
     ts_col: str = "user_ts",
 ) -> DataFrame:
-    df = (
+    # pandas' NA sentinels (NA, n/a, null, NaN, ...) read as missing,
+    # as in the reference's read_csv: without this, the repair's
+    # numeric cast fails on them under ANSI mode
+    df = csv_source.null_na_sentinels(
         spark.read.option("header", True)
         .option("escape", '"')
         .csv(input_path)

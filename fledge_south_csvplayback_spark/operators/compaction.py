@@ -22,8 +22,9 @@ from __future__ import annotations
 import math
 import os
 import re
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -143,11 +144,16 @@ def partition_cols(path: str) -> list[str]:
 
 # --- versioned-dir + manifest promote (the lakehouse pointer pattern) --------
 # Shared by every persisted-index maintenance op (BM25 postings/stats,
-# media bands, the text shingle-df compactor predates it with its own
-# copy): readers resolve one small pointer file whose replacement is an
-# atomic POSIX rename / per-object store PUT — they never depend on a
-# directory overwrite or rename being atomic. A crash at any
-# instruction leaves a manifest that names a COMPLETE table.
+# the text shingles/bands/shingle-df tables, media bands): readers
+# resolve one small pointer file whose replacement is an atomic POSIX
+# rename / per-object store PUT — they never depend on a directory
+# overwrite or rename being atomic. A crash at any instruction leaves a
+# manifest that names a COMPLETE table.
+
+
+def manifest_name(stem: str) -> str:
+    """The pointer file naming the live version of the ``<stem>`` table."""
+    return f"{stem}_MANIFEST"
 
 
 def manifest_resolve(index_dir: str, manifest: str, fallback: str) -> str:
@@ -158,6 +164,13 @@ def manifest_resolve(index_dir: str, manifest: str, fallback: str) -> str:
         with open(m) as f:
             return os.path.join(index_dir, f.read().strip())
     return os.path.join(index_dir, fallback) if fallback else index_dir
+
+
+def table_dir(index_dir: str, stem: str) -> str:
+    """The CURRENT dir of the ``<stem>`` table: the version its
+    manifest names, or the literal seeded ``<stem>`` dir before any
+    promote has run."""
+    return manifest_resolve(index_dir, manifest_name(stem), stem)
 
 
 def manifest_promote(index_dir: str, manifest: str, name: str) -> None:
@@ -176,32 +189,37 @@ def next_version(cur_name: str, stem: str) -> str:
     return f"{stem}.v{int(cur_name.rsplit('.v', 1)[1]) + 1}"
 
 
+def _superseded(index_dir: str, stem: str, cur: str) -> list[str]:
+    """Every ``<stem>`` dir under ``index_dir`` but the live ``cur``:
+    versions an earlier promote replaced, crashed staging attempts,
+    and the literal seed dir once a version is live."""
+    cur_name = os.path.basename(cur)
+    return [
+        os.path.join(index_dir, name)
+        for name in sorted(os.listdir(index_dir))
+        if name != cur_name
+        and (name.startswith(f"{stem}.v") or (name == stem and cur_name != stem))
+    ]
+
+
 def sweep_stale_versions(index_dir: str, stem: str, cur: str) -> None:
     """Deferred cleanup: version dirs superseded by an EARLIER promote
     — plus crashed staging leftovers and orphaned ``.tmp`` manifests —
     are garbage; the dir the CURRENT manifest names is never touched,
     so a reader that resolved it before this write keeps what it is
-    reading (the compact_text_neardup_index read-stability rule)."""
+    reading (the read-stability rule of ``fold_ingest_partitions``)."""
     import shutil
 
-    cur_name = os.path.basename(cur)
+    for full in _superseded(index_dir, stem, cur):
+        shutil.rmtree(full)
     for name in sorted(os.listdir(index_dir)):
-        if name == cur_name:
-            continue
-        full = os.path.join(index_dir, name)
-        if name.startswith(f"{stem}.v") or (
-            name == stem and cur_name != stem
-        ):
-            shutil.rmtree(full)
-        elif name.endswith("_MANIFEST.tmp"):
-            os.remove(full)
+        if name.endswith("_MANIFEST.tmp"):
+            os.remove(os.path.join(index_dir, name))
 
 
 # per-version fold ledger: which ingest_batch partitions the version's
 # seed already absorbed (underscore name: invisible to parquet scans,
-# like _SUCCESS). The canonical copies of the ledger helpers live here
-# since round 14; the text shingle-df compactor predates them with the
-# same semantics.
+# like _SUCCESS)
 FOLDED_LEDGER = "_FOLDED"
 
 
@@ -214,7 +232,8 @@ def batch_parts(d: str) -> set[str]:
 def read_folded(d: str) -> set[str] | None:
     """The version dir's fold ledger, or None when absent (a dir made
     by code predating the ledger — rescue is then skipped: moving a
-    partition that might already be folded would double its rows)."""
+    partition that might already be folded would count its rows twice,
+    which is worse than leaving a late append behind)."""
     p = os.path.join(d, FOLDED_LEDGER)
     if not os.path.exists(p):
         return None
@@ -227,26 +246,58 @@ def _batch_id(part: str) -> int:
     return int(part.split("=", 1)[1])
 
 
+def union_rows(parts: DataFrame, n_out: int) -> DataFrame:
+    """The row-identical fold merge: every folded row lands in the
+    seed unchanged, spread round-robin over ``n_out`` files."""
+    return parts.drop("ingest_batch").repartition(n_out)
+
+
 def fold_ingest_partitions(
     spark: SparkSession,
     index_dir: str,
     stem: str,
     target_bytes: int = DEFAULT_TARGET_BYTES,
     horizon: int | None = None,
+    merge: Callable[[DataFrame, int], DataFrame] = union_rows,
 ) -> str:
-    """Fold every ``ingest_batch=N`` partition of the ``<stem>`` table
-    under ``index_dir`` into ONE merged ``ingest_batch=-1`` partition —
-    a row-identical union (callers needing an aggregation, like the
-    text shingle-df sum, keep their own fold) — staged as
-    ``<stem>.v<N+1>`` and promoted by an atomic manifest rename.
-    Returns the promoted dir. Shared by the media band index and the
-    text shingles/bands tables; the full crash/rescue analysis lives on
-    ``corpus_ingest.compact_text_neardup_index``, whose lifecycle this
-    generalizes: deferred sweep of superseded versions (read
-    stability), ``_FOLDED``-ledger rescue of batch partitions a
-    concurrent append completed after the prior merge pinned its
-    input, and a crash at any instruction leaving a manifest that
-    names a complete table.
+    """Fold the ``ingest_batch=N`` partitions of the ``<stem>`` table
+    under ``index_dir`` into ONE seed partition ``ingest_batch=-1``,
+    staged as ``<stem>.v<N+1>`` and promoted by an atomic manifest
+    rename. Returns the live dir. This is the one fold lifecycle of
+    the streaming indexes: the text shingles/bands tables and the
+    media bands table fold by row union, the text shingle-df table by
+    a per-shingle sum (``corpus_ingest.compact_text_neardup_index``).
+
+    MERGE: ``merge(parts, n_out)`` turns the read of the folded
+    partitions (``ingest_batch`` column included) into the seed rows
+    to write; ``n_out`` = ceil(folded bytes / ``target_bytes``) is the
+    file count a row-preserving merge should aim for. The merge owns
+    the whole plan of the write — an aggregating merge already ends
+    in its own exchange, and nothing is added after it.
+
+    CRASH BEHAVIOR: the new table is fully staged under
+    ``<stem>.v<N+1>`` while the manifest still names the old dir, then
+    ONE atomic file rename moves the pointer. A crash at ANY
+    instruction leaves a manifest that names a complete table — there
+    is no window (the retire-then-promote swap this replaced left the
+    table briefly absent between two renames). The superseded dir is
+    deleted by the NEXT fold (deferred sweep), never by the promote
+    itself, so a reader that resolved it before the promote keeps a
+    complete table for as long as it reads.
+
+    CONCURRENT APPENDS: a batch that resolved the old dir may write
+    its ``ingest_batch=N`` partition there after the merge pinned its
+    input — the fold would miss it, and a blind deferred delete would
+    lose it. Every staged version therefore records which partitions
+    its seed absorbed (the ``_FOLDED`` ledger), and the next fold's
+    sweep rescues (moves, not deletes) any superseded-dir partition
+    absent from the live ledger. The promote never touches the old
+    dir — a mid-promote move would break read stability and leave a
+    crash window with moved partitions in an unpromoted dir — so a
+    completed concurrent append waits one fold cycle in the
+    superseded dir. A batch MID-write at the moment of a rescue move
+    is the one remaining race, which is why the contract is still:
+    fold between batches.
 
     HORIZON (round-14 advice: the contract as an enforceable API, not
     a docstring): with ``horizon=H`` only batches with id < H fold
@@ -260,36 +311,23 @@ def fold_ingest_partitions(
     deferred-sweep RESCUE is deliberately NOT horizon-filtered:
     rescue moves a partition intact (identity preserved, probe
     exclusion unbroken); only the merge erases identity, and skipping
-    rescue would delete the rows with the superseded dir.
+    rescue would delete the rows with the superseded dir. A fold with
+    nothing below the horizon keeps the current version (the sweep
+    still runs).
     """
     import shutil
 
-    manifest = f"{stem}_MANIFEST"
-    cur = manifest_resolve(index_dir, manifest, stem)
-    cur_name = os.path.basename(cur)
+    cur = table_dir(index_dir, stem)
     folded = read_folded(cur)
-    # deferred cleanup of superseded versions, rescuing any batch
-    # partition absent from the current ledger (completed concurrent
-    # appends wait one compaction cycle in the superseded dir)
-    for name in sorted(os.listdir(index_dir)):
-        if name == cur_name:
-            continue
-        if not (
-            name.startswith(f"{stem}.v")
-            or (name == stem and cur_name != stem)
-        ):
-            continue
-        full = os.path.join(index_dir, name)
+    for full in _superseded(index_dir, stem, cur):
         if folded is not None:
-            for part in sorted(batch_parts(full)):
-                if part == "ingest_batch=-1" or part in folded:
-                    continue
+            for part in sorted(batch_parts(full) - folded - {"ingest_batch=-1"}):
                 dst = os.path.join(cur, part)
                 if not os.path.exists(dst):
                     os.rename(os.path.join(full, part), dst)
         shutil.rmtree(full)
 
-    nxt = next_version(cur_name, stem)
+    nxt = next_version(os.path.basename(cur), stem)
     staged = os.path.join(index_dir, nxt)
     # pin the merge's input to the partitions present NOW — the fold
     # ledger must describe exactly what the seed absorbed. The seed
@@ -302,18 +340,16 @@ def fold_ingest_partitions(
         parts = [p for p in all_parts if _batch_id(p) < horizon]
         carry = [p for p in all_parts if _batch_id(p) >= horizon]
     if not any(_batch_id(p) >= 0 for p in parts):
-        # nothing below the horizon to fold: keep the current version
-        # (the deferred sweep above still ran)
         return cur
     fold_bytes = sum(
         input_bytes(os.path.join(cur, p)) for p in parts
     )
     n_out = max(1, math.ceil(fold_bytes / target_bytes))
-    merged = (
-        spark.read.option("basePath", cur)
-        .parquet(*[os.path.join(cur, p) for p in parts])
-        .drop("ingest_batch")
-        .repartition(n_out)
+    merged = merge(
+        spark.read.option("basePath", cur).parquet(
+            *[os.path.join(cur, p) for p in parts]
+        ),
+        n_out,
     )
     merged.write.mode("overwrite").parquet(f"{staged}/ingest_batch=-1")
     with open(os.path.join(staged, FOLDED_LEDGER), "w") as f:
@@ -330,8 +366,8 @@ def fold_ingest_partitions(
         dst = os.path.join(staged, p)
         if not os.path.exists(dst):
             os.rename(os.path.join(cur, p), dst)
-    manifest_promote(index_dir, manifest, nxt)
-    return os.path.join(index_dir, nxt)
+    manifest_promote(index_dir, manifest_name(stem), nxt)
+    return staged
 
 
 def compact_parquet(

@@ -2349,6 +2349,29 @@ def corpus_diff(
     )
 
 
+def churn_split(
+    diff: DataFrame, key: str = "doc_id"
+) -> tuple[DataFrame, DataFrame]:
+    """``corpus_diff`` churn -> (keys leaving an index, keys
+    (re)entering it), the split every diff-driven index maintenance
+    op starts from. A 'changed' key does both: its old rows are stale
+    and its new content mints new ones. Each side is broadcast when
+    under the shared ``HOT_BROADCAST_MAX`` policy (churn normally is;
+    a corpus-sized churn degrades to a shuffle, not a broadcast OOM)."""
+    from fledge_south_csvplayback_spark.operators.dedup import (
+        HOT_BROADCAST_MAX,
+    )
+
+    if not {key, "status"} <= set(diff.columns):
+        raise ValueError(f"diff frame needs ({key}, status) columns")
+
+    def side(*statuses: str) -> DataFrame:
+        t = diff.filter(F.col("status").isin(*statuses)).select(key)
+        return F.broadcast(t) if t.count() <= HOT_BROADCAST_MAX else t
+
+    return side("removed", "changed"), side("added", "changed")
+
+
 def _snapshot_b(docs: DataFrame) -> DataFrame:
     """Deterministic synthetic 'next crawl': hash class k = bucket(doc_id)
     mod DIFF_MOD — class 0 docs are REMOVED, class 1 docs get revised

@@ -2173,7 +2173,10 @@ def media_index_append(
     indexes take appends through ``media_ingest.media_accept_batch``
     (per-partition overwrite, re-delivery idempotent), which this
     flat-layout append cannot emulate."""
-    if os.path.exists(os.path.join(index_dir, "bands_MANIFEST")):
+    from fledge_south_csvplayback_spark.operators import compaction
+
+    manifest = compaction.manifest_name("bands")
+    if os.path.exists(os.path.join(index_dir, manifest)):
         raise ValueError(
             f"{index_dir} is a compacted STREAMING media index "
             "(bands_MANIFEST present): a flat append here would land "
@@ -2432,21 +2435,6 @@ def video_neardup_ingest(
 # to index state instead of training shards).
 
 
-def _diff_doc_sets(diff: DataFrame):
-    """churn frame -> (doc_ids leaving the index, doc_ids (re)entering
-    it). A 'changed' doc does both: its old band rows are stale and
-    its new hash mints new ones."""
-    if not {"doc_id", "status"} <= set(diff.columns):
-        raise ValueError("diff frame needs (doc_id, status) columns")
-    gone = diff.filter(
-        F.col("status").isin("removed", "changed")
-    ).select("doc_id")
-    fresh = diff.filter(
-        F.col("status").isin("added", "changed")
-    ).select("doc_id")
-    return gone, fresh
-
-
 def media_index_maintenance_plan(
     spark: SparkSession,
     index_dir: str,
@@ -2465,24 +2453,18 @@ def media_index_maintenance_plan(
     ``HOT_BROADCAST_MAX``-guarded) by the leaving doc_ids; new keys
     explode from the churn docs' hashes only. One fine-grained
     (tbl, kk) aggregate over the union; neither snapshot is scanned."""
-    from fledge_south_csvplayback_spark.operators.dedup import (
-        HOT_BROADCAST_MAX,
-    )
+    from fledge_south_csvplayback_spark.operators.curation import churn_split
 
     meta = spark.read.parquet(f"{index_dir}/meta").collect()[0]
-    gone, fresh = _diff_doc_sets(diff)
-
-    def bounded(t: DataFrame) -> DataFrame:
-        return F.broadcast(t) if t.count() <= HOT_BROADCAST_MAX else t
-
+    gone, fresh = churn_split(diff)
     stale = (
         spark.read.parquet(f"{index_dir}/bands")
-        .join(bounded(gone), "doc_id", "left_semi")
+        .join(gone, "doc_id", "left_semi")
         .select("tbl", "kk", F.lit(1).alias("rm"), F.lit(0).alias("ad"))
     )
     minted = (
         _band_keys(
-            new_stats.join(bounded(fresh), "doc_id", "left_semi"),
+            new_stats.join(fresh, "doc_id", "left_semi"),
             meta.hash_col,
             meta.n_bands,
             meta.m,
@@ -2515,12 +2497,9 @@ def media_index_apply_diff(
     row-identical to a full rebuild from the new snapshot (the
     reconciliation pytest pins frame equality, and the plan above is
     exactly the touched-key support of the rewrite)."""
-    from fledge_south_csvplayback_spark.operators.dedup import (
-        HOT_BROADCAST_MAX,
-    )
-
     from fledge_south_csvplayback_spark.operators.curation import (
         _paths_overlap,
+        churn_split,
     )
 
     if _paths_overlap(out_dir, index_dir):
@@ -2529,16 +2508,12 @@ def media_index_apply_diff(
             "the index read path"
         )
     meta = spark.read.parquet(f"{index_dir}/meta").collect()[0]
-    gone, fresh = _diff_doc_sets(diff)
-
-    def bounded(t: DataFrame) -> DataFrame:
-        return F.broadcast(t) if t.count() <= HOT_BROADCAST_MAX else t
-
+    gone, fresh = churn_split(diff)
     carried = spark.read.parquet(f"{index_dir}/bands").join(
-        bounded(gone), "doc_id", "left_anti"
+        gone, "doc_id", "left_anti"
     )
     minted = _band_keys(
-        new_stats.join(bounded(fresh), "doc_id", "left_semi"),
+        new_stats.join(fresh, "doc_id", "left_semi"),
         meta.hash_col,
         meta.n_bands,
         meta.m,

@@ -45,6 +45,8 @@ import struct
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fledge_south_csvplayback_spark.operators.curation import churn_split
+
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
 LSH_PLANES = 16
@@ -920,33 +922,6 @@ def _read_centroids(spark: SparkSession, index_dir: str) -> list[tuple]:
     )
 
 
-def _ivf_diff_sets(diff: DataFrame):
-    """-> (leaving, entering) vec_id frames, each broadcast when under
-    the shared ``HOT_BROADCAST_MAX`` policy (churn normally is; a
-    corpus-sized churn degrades to a shuffle, not a broadcast OOM)."""
-    from fledge_south_csvplayback_spark.operators.dedup import (
-        HOT_BROADCAST_MAX,
-    )
-
-    if not {"vec_id", "status"} <= set(diff.columns):
-        raise ValueError("diff frame needs (vec_id, status) columns")
-
-    def bounded(t: DataFrame) -> DataFrame:
-        return F.broadcast(t) if t.count() <= HOT_BROADCAST_MAX else t
-
-    gone = bounded(
-        diff.filter(F.col("status").isin("removed", "changed")).select(
-            "vec_id"
-        )
-    )
-    fresh = bounded(
-        diff.filter(F.col("status").isin("added", "changed")).select(
-            "vec_id"
-        )
-    )
-    return gone, fresh
-
-
 def ivf_index_maintenance_plan(
     spark: SparkSession,
     index_dir: str,
@@ -961,7 +936,7 @@ def ivf_index_maintenance_plan(
     centroids via the same GEMM the builder uses. Cells absent from
     this plan are byte-identical before and after the apply."""
     cents = _read_centroids(spark, index_dir)
-    gone, fresh = _ivf_diff_sets(diff)
+    gone, fresh = churn_split(diff, "vec_id")
     stale = (
         spark.read.parquet(index_dir)
         .join(gone, "vec_id", "left_semi")
@@ -1007,7 +982,7 @@ def ivf_index_apply_diff(
     one because the IVF index is corpus-sized and a full copy per
     crawl is the cost being avoided."""
     cents = _read_centroids(spark, index_dir)
-    gone, fresh = _ivf_diff_sets(diff)
+    gone, fresh = churn_split(diff, "vec_id")
     idx = spark.read.parquet(index_dir)
     touched_old = (
         idx.join(gone, "vec_id", "left_semi")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fledge_south_csvplayback_spark.operators import fanout
+from fledge_south_csvplayback_spark.operators import compaction, fanout
 
 STOPWORDS = ("the", "a", "of", "and", "in")
 
@@ -948,19 +948,15 @@ def _bm25_stats(base: DataFrame) -> DataFrame:
 # rename; they never depend on a directory overwrite being atomic).
 # All names are underscore-prefixed so a plain parquet read of the
 # index root cannot see them as data.
-_BM25_STATS_MANIFEST = "_stats_MANIFEST"
-_BM25_POSTINGS_MANIFEST = "_postings_MANIFEST"
+_BM25_STATS_MANIFEST = compaction.manifest_name("_stats")
+_BM25_POSTINGS_MANIFEST = compaction.manifest_name("_postings")
 
 
 def bm25_stats_dir(index_dir: str) -> str:
-    from fledge_south_csvplayback_spark.operators import compaction
-
-    return compaction.manifest_resolve(index_dir, _BM25_STATS_MANIFEST, "_stats")
+    return compaction.table_dir(index_dir, "_stats")
 
 
 def bm25_postings_dir(index_dir: str) -> str:
-    from fledge_south_csvplayback_spark.operators import compaction
-
     return compaction.manifest_resolve(index_dir, _BM25_POSTINGS_MANIFEST, "")
 
 
@@ -971,8 +967,6 @@ def _promote_bm25_stats(spark: SparkSession, row, index_dir: str) -> None:
     delete-then-write window could show a racing reader a missing or
     partial sidecar (round-13 verdict item 3)."""
     import os
-
-    from fledge_south_csvplayback_spark.operators import compaction
 
     cur = bm25_stats_dir(index_dir)
     compaction.sweep_stale_versions(index_dir, "_stats", cur)
@@ -1083,8 +1077,6 @@ def compact_bm25_index(
     the near-dup index); queries race either freely.
     """
     import os
-
-    from fledge_south_csvplayback_spark.operators import compaction
 
     cur = bm25_postings_dir(index_dir)
     compaction.sweep_stale_versions(index_dir, "_postings", cur)

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
+from fledge_south_csvplayback_spark.operators import compaction
 from fledge_south_csvplayback_spark.operators.curation import (
     _keep_first_per_fingerprint,
     _quality_cols,
@@ -57,16 +58,20 @@ DOCS_SCHEMA = (
 def shingles_table_dir(index_dir: str) -> str:
     """Resolve the CURRENT shingles table dir (versioned pointer once
     ``compact_text_neardup_batches`` has run; literal before)."""
-    from fledge_south_csvplayback_spark.operators import compaction
-
-    return compaction.manifest_resolve(index_dir, "shingles_MANIFEST", "shingles")
+    return compaction.table_dir(index_dir, "shingles")
 
 
 def bands_table_dir(index_dir: str) -> str:
     """Resolve the CURRENT bands table dir (same pointer pattern)."""
-    from fledge_south_csvplayback_spark.operators import compaction
+    return compaction.table_dir(index_dir, "bands")
 
-    return compaction.manifest_resolve(index_dir, "bands_MANIFEST", "bands")
+
+def df_table_dir(index_dir: str) -> str:
+    """Resolve the CURRENT shingle-df table dir (same pointer pattern)."""
+    return compaction.table_dir(index_dir, "shingle_df")
+
+
+_DF_MANIFEST = compaction.manifest_name("shingle_df")
 
 
 def compact_text_neardup_batches(
@@ -91,8 +96,6 @@ def compact_text_neardup_batches(
     without downtime; ``horizon=None`` folds everything (only safe
     when no re-delivery can occur).
     """
-    from fledge_south_csvplayback_spark.operators import compaction
-
     compaction.fold_ingest_partitions(
         spark, index_dir, "shingles", horizon=horizon
     )
@@ -110,7 +113,8 @@ def seed_text_neardup_index(
     pruning, not scans (the ``media_ingest`` layout)."""
     import os
 
-    for m in ("shingles_MANIFEST", "bands_MANIFEST", _DF_MANIFEST):
+    for stem in ("shingles", "bands", "shingle_df"):
+        m = compaction.manifest_name(stem)
         if os.path.exists(os.path.join(index_dir, m)):
             # a stale manifest from a previously-compacted index would
             # shadow the literal seed dirs for every reader (the
@@ -133,62 +137,24 @@ def seed_text_neardup_index(
     ).parquet(f"{index_dir}/shingle_df/ingest_batch=-1")
 
 
-_DF_MANIFEST = "shingle_df_MANIFEST"
-_FOLDED = "_FOLDED"  # per-version sidecar: which batch partitions the
-# version's seed already folded in (underscore name: invisible to the
-# parquet scan, like _SUCCESS)
-
-
-def _batch_parts(d: str) -> set[str]:
-    import os
-
-    if not os.path.isdir(d):
-        return set()
-    return {x for x in os.listdir(d) if x.startswith("ingest_batch=")}
-
-
-def _read_folded(d: str) -> set[str] | None:
-    """The version dir's fold ledger, or None when absent (a dir made
-    by code predating the ledger — rescue is then skipped, because
-    moving a partition that might already be folded would double-count
-    its df rows, which is worse than the old losing-the-append
-    behavior)."""
-    import os
-
-    p = os.path.join(d, _FOLDED)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return {ln.strip() for ln in f if ln.strip()}
-
-
-def df_table_dir(index_dir: str) -> str:
-    """Resolve the CURRENT shingle-df table directory.
-
-    The manifest file (one line: the live versioned dir's name) is the
-    single source of truth once a compaction has run; absent, the
-    seeded literal ``shingle_df`` path applies. This is the lakehouse
-    metadata-pointer pattern (Iceberg/Delta): readers never depend on
-    a directory rename being atomic — only on replacing one small file,
-    which is atomic on POSIX (rename) and per-object on object stores.
-    """
-    import os
-
-    m = os.path.join(index_dir, _DF_MANIFEST)
-    if os.path.exists(m):
-        with open(m) as f:
-            return os.path.join(index_dir, f.read().strip())
-    return f"{index_dir}/shingle_df"
+def _sum_df(parts: DataFrame, _n_out: int) -> DataFrame:
+    """The shingle-df fold merge: one row per shingle, its df summed
+    over every folded partition (the aggregate's own exchange sizes
+    the write)."""
+    return parts.groupBy("s").agg(F.sum("df").alias("df"))
 
 
 def compact_text_neardup_index(spark: SparkSession, index_dir: str) -> None:
     """Maintenance: fold every accepted shingle-df partition into the
     seed partition (``ingest_batch=-1``) so the per-batch probe's
     df re-sum — the one corpus-proportional step in ``_neardup_gate``
-    — reads one pre-summed table instead of N partitions. Bands and
-    shingles fold separately via ``compact_text_neardup_batches``
-    (round 14 — a row union, not a sum, with a stricter horizon
-    contract since their lineage is what the exclusion filter
+    — reads one pre-summed table instead of N partitions. The fold is
+    ``compaction.fold_ingest_partitions`` with a per-shingle sum as
+    its merge (versioned dir + atomic manifest promote, deferred
+    sweep, ``_FOLDED``-ledger rescue of concurrent appends; the crash
+    analysis lives there). Bands and shingles fold separately via
+    ``compact_text_neardup_batches`` (a row union, with a stricter
+    horizon contract since their lineage is what the exclusion filter
     targets); run both past the checkpoint horizon.
 
     Run it only for batch ids past the stream's checkpoint horizon: a
@@ -198,104 +164,28 @@ def compact_text_neardup_index(spark: SparkSession, index_dir: str) -> None:
     near-cap-recall trade, never a correctness error on pairs already
     written.
 
-    Crash behavior (versioned dir + manifest promote, round-12 rework
-    of the retire-then-promote swap whose between-renames window left
-    ``shingle_df`` briefly absent): the new table is fully staged under
-    ``shingle_df.v<N+1>`` while the manifest still names the old dir,
-    then ONE atomic file rename moves the pointer. A crash at ANY
-    instruction leaves a manifest that names a complete table — there
-    is no window. The superseded dir is deleted on the NEXT compaction
-    (deferred cleanup), never by the swap itself, so a batch running
-    concurrently with the swap keeps the directory it already resolved
-    for READING.
-
-    Concurrent-batch WRITES (review finding, round 12): a batch that
-    resolved the old dir may append its ``ingest_batch=N`` partition
-    there after the merge read its file list — folding would miss it,
-    and blind deferred deletion would lose it. Every staged version
-    therefore records WHICH partitions its seed folded (the
-    ``_FOLDED`` sidecar), and the next compaction's cleanup rescues
-    (moves, not deletes) any superseded-dir partition absent from the
-    current ledger. The swap itself never touches the old dir — not
-    even to move late appends (its own review follow-up: a mid-swap
-    move would break the read-stability guarantee above and leave a
-    crash window where moved partitions sat in an unpromoted dir), so
-    completed concurrent appends simply wait one compaction cycle in
-    the superseded dir. A batch MID-write at the moment of a rescue
-    move is the one remaining race, which is why the contract still
-    says run compaction between batches."""
+    Two leftovers of the pre-manifest (pre-round-12) layout are
+    recovered first: a df table renamed aside to ``shingle_df_retired``
+    and never promoted back is restored, and a ``shingle_df_compacting``
+    staging tree is removed."""
     import os
     import shutil
 
     cur = df_table_dir(index_dir)
-    cur_name = os.path.basename(cur)
-    # pre-manifest crashed-swap recovery (pre-round-12 layout): the df
-    # table was renamed aside and never promoted back
     retired = f"{index_dir}/shingle_df_retired"
-    if cur_name == "shingle_df" and os.path.exists(retired):
-        has_parts = os.path.isdir(cur) and any(
-            x.startswith("ingest_batch=") for x in os.listdir(cur)
-        )
-        if not has_parts:
+    if os.path.basename(cur) == "shingle_df" and os.path.exists(retired):
+        if compaction.batch_parts(cur):
+            shutil.rmtree(retired)
+        else:
             if os.path.isdir(cur):
                 os.rmdir(cur)
             os.rename(retired, cur)
-        else:
-            shutil.rmtree(retired)
-    # deferred cleanup: every non-current version dir is garbage — a
-    # crashed staging attempt, or the dir the PREVIOUS swap superseded
-    # — EXCEPT batch partitions the current ledger never folded
-    # (completed concurrent appends): those move into the live dir
-    # before their old home is removed.
-    folded = _read_folded(cur)
-    for name in sorted(os.listdir(index_dir)):
-        if name == cur_name:
-            continue
-        full = os.path.join(index_dir, name)
-        if name == "shingle_df_compacting":
-            # pre-round-12 staging leftover (the old code overwrote it
-            # on the next run; the new layout never writes it)
-            shutil.rmtree(full)
-            continue
-        if name.startswith("shingle_df.v") or (
-            name == "shingle_df" and cur_name != "shingle_df"
-        ):
-            if folded is not None:
-                for part in sorted(_batch_parts(full)):
-                    if part == "ingest_batch=-1" or part in folded:
-                        continue
-                    dst = os.path.join(cur, part)
-                    if not os.path.exists(dst):
-                        os.rename(os.path.join(full, part), dst)
-            shutil.rmtree(full)
-
-    if cur_name == "shingle_df":
-        nxt = "shingle_df.v1"
-    else:
-        nxt = f"shingle_df.v{int(cur_name.rsplit('.v', 1)[1]) + 1}"
-    staged = os.path.join(index_dir, nxt)
-    # pin the merge's input to the partitions present NOW — the fold
-    # ledger must describe exactly what the seed absorbed
-    parts = sorted(_batch_parts(cur))
-    merged = (
-        spark.read.option("basePath", cur)
-        .parquet(*[os.path.join(cur, p) for p in parts])
-        .groupBy("s")
-        .agg(F.sum("df").alias("df"))
+    staging = f"{index_dir}/shingle_df_compacting"
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    compaction.fold_ingest_partitions(
+        spark, index_dir, "shingle_df", merge=_sum_df
     )
-    merged.write.mode("overwrite").parquet(f"{staged}/ingest_batch=-1")
-    with open(os.path.join(staged, _FOLDED), "w") as f:
-        f.write("\n".join(parts) + "\n")
-    # partitions that land during/after the merge stay in the old dir
-    # untouched (read stability) — the ledger above is what lets the
-    # NEXT compaction's cleanup rescue them instead of deleting them
-    # the one cutover: replace the manifest via atomic file rename
-    tmp = os.path.join(index_dir, _DF_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(nxt)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, os.path.join(index_dir, _DF_MANIFEST))
 
 
 def _neardup_gate(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from fledge_south_csvplayback_spark.operators import compaction
 from fledge_south_csvplayback_spark.operators.multimodal import (
     IMG_BANDS,
     IMG_BLOCK_M,
@@ -45,17 +46,13 @@ from fledge_south_csvplayback_spark.operators.multimodal import (
 
 HASHES_SCHEMA = "doc_id long, dhash string"
 
-_BANDS_MANIFEST = "bands_MANIFEST"
-
 
 def media_bands_dir(index_dir: str) -> str:
     """Resolve the CURRENT band-table directory (the shared
-    versioned-pointer pattern, ``compaction.manifest_resolve``):
-    the literal ``bands`` path until a ``compact_media_index`` has
-    promoted a version."""
-    from fledge_south_csvplayback_spark.operators import compaction
-
-    return compaction.manifest_resolve(index_dir, _BANDS_MANIFEST, "bands")
+    versioned-pointer pattern, ``compaction.table_dir``): the literal
+    ``bands`` path until a ``compact_media_index`` has promoted a
+    version."""
+    return compaction.table_dir(index_dir, "bands")
 
 
 def compact_media_index(
@@ -63,13 +60,13 @@ def compact_media_index(
 ) -> None:
     """Maintenance: fold every accepted band partition into the seed
     partition (``ingest_batch=-1``) so the per-batch probe reads ONE
-    pre-merged table instead of N per-batch directories — the media
-    twin of ``corpus_ingest.compact_text_neardup_index``, sharing its
-    versioned-dir + atomic-manifest promote, deferred sweep, and
-    ``_FOLDED``-ledger rescue of concurrent appends (see that
-    docstring for the crash analysis; band rows are plain rows, so
-    the fold is a union, not an aggregation, and the folded table is
-    row-identical to the partitioned one).
+    pre-merged table instead of N per-batch directories, via the
+    shared ``compaction.fold_ingest_partitions`` lifecycle
+    (versioned-dir + atomic-manifest promote, deferred sweep, and
+    ``_FOLDED``-ledger rescue of concurrent appends; its docstring
+    holds the crash analysis). Band rows are plain rows, so the fold
+    is a union, not an aggregation, and the folded table is
+    row-identical to the partitioned one.
 
     HORIZON CONTRACT (stricter than the text df compactor's): run it
     only for batch ids past the stream's checkpoint horizon. A batch
@@ -85,8 +82,6 @@ def compact_media_index(
     promoted version un-folded, identity intact — a live stream can
     compact without downtime. ``horizon=None`` folds everything.
     """
-    from fledge_south_csvplayback_spark.operators import compaction
-
     compaction.fold_ingest_partitions(spark, index_dir, "bands", horizon=horizon)
 
 
@@ -104,7 +99,8 @@ def seed_media_index(
     builder writes, under the stream's Hive-partitioned root)."""
     import os
 
-    if os.path.exists(os.path.join(index_dir, _BANDS_MANIFEST)):
+    manifest = compaction.manifest_name("bands")
+    if os.path.exists(os.path.join(index_dir, manifest)):
         # a stale manifest from a previously-compacted index would
         # shadow the literal seed dir for every reader — re-seeding a
         # compacted index is a fresh-directory job, fail loudly

@@ -222,6 +222,56 @@ def test_fold_horizon_carries_live_batches_unfolded(spark, tmp_path):
     assert got2 == {(d, p) for d, p, _b in all_rows}
 
 
+def test_fold_sum_merge_with_horizon(spark, tmp_path):
+    """The aggregating merge (the shingle-df per-shingle sum) under a
+    horizon: batches below it fold into ONE summed row per shingle in
+    the seed, batches at/past it are carried with their ingest_batch
+    identity and rows untouched, and the ledger lists exactly the
+    folded partitions."""
+    import os
+
+    from fledge_south_csvplayback_spark.streaming.corpus_ingest import _sum_df
+
+    idx = str(tmp_path / "idx")
+    tbl = os.path.join(idx, "shingle_df")
+    batches = {
+        -1: [(1, 5), (2, 1)],
+        0: [(1, 2), (3, 4)],
+        1: [(2, 7), (3, 1)],
+        2: [(1, 9), (4, 6)],
+    }
+    for batch, rows in batches.items():
+        spark.createDataFrame(rows, "s long, df long").write.parquet(
+            f"{tbl}/ingest_batch={batch}"
+        )
+
+    cur = compaction.fold_ingest_partitions(
+        spark, idx, "shingle_df", horizon=2, merge=_sum_df
+    )
+    assert os.path.basename(cur) == "shingle_df.v1"
+    assert compaction.batch_parts(cur) == {"ingest_batch=-1", "ingest_batch=2"}
+    seed = sorted(
+        tuple(r)
+        for r in spark.read.parquet(f"{cur}/ingest_batch=-1")
+        .select("s", "df")
+        .collect()
+    )
+    # one row per shingle, df summed over batches -1, 0 and 1
+    assert seed == [(1, 7), (2, 8), (3, 5)]
+    carried = sorted(
+        (r.s, r.df)
+        for r in spark.read.parquet(cur)
+        .filter(F.col("ingest_batch") == 2)
+        .collect()
+    )
+    assert carried == [(1, 9), (4, 6)]
+    assert compaction.read_folded(cur) == {
+        "ingest_batch=-1",
+        "ingest_batch=0",
+        "ingest_batch=1",
+    }
+
+
 def test_fragmentation_stats_and_trigger(spark, tmp_path):
     """fragmentation_stats measures the per-partition file-open bound;
     needs_compaction fires only on genuine fragmentation (round 15 —

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fledge_south_csvplayback_spark.operators import curation
+from fledge_south_csvplayback_spark.operators import compaction, curation
 from fledge_south_csvplayback_spark.streaming import corpus_ingest as CI
 from tests.conftest import TEST_SF_DIR
 
@@ -475,7 +475,8 @@ def test_compact_swap_has_no_absent_window(spark, tmp_path):
     assert os.path.isdir(f"{idx}/shingle_df")
     CI.compact_text_neardup_index(spark, idx)
     assert not os.path.exists(f"{idx}/shingle_df")
-    assert os.path.basename(CI.df_table_dir(idx)) == "shingle_df.v2"
+    # nothing left to fold: the current version is kept
+    assert os.path.basename(CI.df_table_dir(idx)) == "shingle_df.v1"
     assert totals() == want
 
 
@@ -518,7 +519,7 @@ def test_compact_rescues_concurrent_append(spark, tmp_path):
     assert got.pop(-424242) == 3  # rescued, counted once
     assert got == base  # folded partitions were NOT double-counted
     # and the new ledger owns the rescued partition
-    assert "ingest_batch=77" in CI._read_folded(CI.df_table_dir(idx))
+    assert "ingest_batch=77" in compaction.read_folded(CI.df_table_dir(idx))
 
 
 def test_compact_sweeps_pre_round12_staging_leftover(spark, tmp_path):

@@ -131,3 +131,39 @@ def test_etl_output_round_trips_quoted_values(spark, tmp_path):
     assert res.collect()[0].note == 'he said "hi", twice'
     f = sorted(glob.glob(str(tmp_path / "out" / "part-*.csv")))[0]
     assert pd.read_csv(f)["note"].tolist() == ['he said "hi", twice']
+
+
+def test_etl_fill_treats_pandas_na_sentinels_as_holes(spark, tmp_path):
+    """NA, n/a, null and NaN cells in numeric channels are holes, as
+    pandas' read_csv reads them: the linear fill equals pandas
+    interpolate(method="linear", limit_direction="both"). Without the
+    sentinel pass the numeric cast raised on NA/n/a/null under ANSI
+    mode, and a NaN cell was kept as a value the fill left alone."""
+    import pandas as pd
+    import pytest
+
+    p = str(tmp_path / "sentinels.csv")
+    with open(p, "w") as f:
+        f.write(
+            "user_ts,a,b\n"
+            "2020-01-01 00:00:00,NA,1.0\n"
+            "2020-01-01 00:00:01,2.0,n/a\n"
+            "2020-01-01 00:00:02,null,3.0\n"
+            "2020-01-01 00:00:03,4.0,NaN\n"
+            "2020-01-01 00:00:04,NaN,5.0\n"
+            "2020-01-01 00:00:05,8.0,null\n"
+            "2020-01-01 00:00:06,,NA\n"
+        )
+    res = etl.run_etl(
+        spark, p, str(tmp_path / "out"), choice="fill", method="linear"
+    )
+    got = [[r.a, r.b] for r in res.orderBy("user_ts").collect()]
+    pdf = pd.read_csv(p)
+    want = (
+        pdf[["a", "b"]]
+        .interpolate(method="linear", limit_direction="both")
+        .values.tolist()
+    )
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g == pytest.approx(w)
