@@ -14,11 +14,15 @@ Spark shapes:
 
 - The report and the all-null test are single-pass aggregates (one row
   over any data size; map-side partial aggregation).
-- Rolling fills are 2-row trailing windows; interpolation is the
-  last/first-ignorenulls + row-distance-weights pattern. Windows accept
-  ``partition_cols`` (e.g. per-device/per-file) so state never funnels
-  through one partition at scale; the ETL tool's single-file semantics
-  use the global window deliberately.
+- Rolling fills are 2-row trailing windows. Interpolation numbers the
+  rows once (``row_number`` over the order columns, which also breaks
+  ties) and finds both neighbours with last-ignorenulls over running
+  frames on that number, ascending for the previous known value and
+  descending for the next, then weights by row distance: two sorts and
+  O(n) work per partition. Windows accept ``partition_cols`` (e.g.
+  per-device/per-file) so state never funnels through one partition at
+  scale; the ETL tool's single-file semantics use the global window
+  deliberately.
 - Flattening is ``from_json`` (F7) — the idiomatic upgrade of the
   reference's per-row string splitting (process_csv_data.py:74-80).
 """
@@ -126,10 +130,18 @@ def rolling_median_fill(
 
 # ---------------------------------------------------------------------------
 # W3: linear / nearest interpolation, limit_direction='both'
-# (process_csv_data.py:124-126). last/first ignore-nulls over
-# unbounded-direction frames + row-distance weights; leading/trailing
-# gaps take the nearest existing value. 'nearest' ties (equidistant)
-# take the earlier neighbor.
+# (process_csv_data.py:124-126). A row number over ``order_cols`` fixes
+# one total order per partition (ties in ``order_cols`` are broken once,
+# here, so both neighbours and the distance weights see the same order).
+# Both neighbour lookups are then running frames over that number: the
+# previous known value is last-ignorenulls from unbounded preceding to
+# the current row ordered by it ascending, the next known value the same
+# aggregate ordered descending. Spark keeps a running frame's state as
+# it streams the sorted partition, so each partition costs two sorts and
+# O(n) aggregation, where a frame running to unbounded following would
+# be re-evaluated per row, O(n^2). Leading/trailing gaps take the
+# nearest existing value; 'nearest' ties (equidistant) take the earlier
+# neighbour.
 # ---------------------------------------------------------------------------
 def interpolate_fill(
     df: DataFrame,
@@ -140,24 +152,30 @@ def interpolate_fill(
 ) -> DataFrame:
     if method not in ("linear", "nearest"):
         raise ValueError(f"unsupported interpolation method {method!r}")
-    base = _w(order_cols, partition_cols)
-    w_prev = base.rowsBetween(Window.unboundedPreceding, 0)
-    w_next = base.rowsBetween(0, Window.unboundedFollowing)
-    w_rn = base
-    out = df.withColumn("_rn", F.row_number().over(w_rn))
+    # the row-number helper must not collide with an input column (any
+    # CSV header reaches here); Spark resolves names case-insensitively
+    taken = {c.lower() for c in df.columns}
+    rn_name = "_rn"
+    while rn_name in taken:
+        rn_name = "_" + rn_name
+    rn = F.col(rn_name)
+    part = Window.partitionBy(*[qcol(c) for c in partition_cols or []])
+    w_prev = part.orderBy(rn.asc()).rowsBetween(Window.unboundedPreceding, 0)
+    w_next = part.orderBy(rn.desc()).rowsBetween(Window.unboundedPreceding, 0)
+    out = df.withColumn(rn_name, F.row_number().over(_w(order_cols, partition_cols)))
     for c in cols:
-        rn_if = F.when(qcol(c).isNotNull(), F.col("_rn"))
+        rn_if = F.when(qcol(c).isNotNull(), rn)
         prev_v = F.last(qcol(c), ignorenulls=True).over(w_prev)
-        next_v = F.first(qcol(c), ignorenulls=True).over(w_next)
+        next_v = F.last(qcol(c), ignorenulls=True).over(w_next)
         prev_rn = F.last(rn_if, ignorenulls=True).over(w_prev)
-        next_rn = F.first(rn_if, ignorenulls=True).over(w_next)
+        next_rn = F.last(rn_if, ignorenulls=True).over(w_next)
         if method == "linear":
             interp = prev_v + (next_v - prev_v) * (
-                (F.col("_rn") - prev_rn) / (next_rn - prev_rn)
+                (rn - prev_rn) / (next_rn - prev_rn)
             )
         else:
             interp = F.when(
-                (F.col("_rn") - prev_rn) <= (next_rn - F.col("_rn")), prev_v
+                (rn - prev_rn) <= (next_rn - rn), prev_v
             ).otherwise(next_v)
         out = out.withColumn(
             c,
@@ -166,7 +184,7 @@ def interpolate_fill(
             .when(next_v.isNull(), prev_v)
             .otherwise(interp),
         )
-    return out.drop("_rn")
+    return out.drop(rn_name)
 
 
 # ---------------------------------------------------------------------------

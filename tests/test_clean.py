@@ -248,29 +248,119 @@ def test_partitioned_fill_two_device_values(spark):
     assert got[("d2", 3)] is None
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.mark.parametrize(
-    "build",
+    "build, one_exchange",
     [
-        lambda df: clean.interpolate_fill(df, ["a"], ["ts"], ["device"]),
-        lambda df: clean.interpolate_fill(
-            df, ["a"], ["ts"], ["device"], method="nearest"
+        (lambda df: clean.interpolate_fill(df, ["a"], ["ts"], ["device"]), True),
+        (
+            lambda df: clean.interpolate_fill(
+                df, ["a"], ["ts"], ["device"], method="nearest"
+            ),
+            True,
         ),
-        lambda df: clean.rolling_mean_fill(df, ["a"], ["ts"], ["device"]),
-        lambda df: clean.rolling_median_fill(df, ["a"], ["ts"], ["device"]),
-        lambda df: clean.interpolate_cubic(df, ["a"], ["ts"], ["device"]),
+        (lambda df: clean.rolling_mean_fill(df, ["a"], ["ts"], ["device"]), False),
+        (lambda df: clean.rolling_median_fill(df, ["a"], ["ts"], ["device"]), False),
+        (lambda df: clean.interpolate_cubic(df, ["a"], ["ts"], ["device"]), False),
     ],
     ids=["linear", "nearest", "rolling_mean", "rolling_median", "cubic"],
 )
-def test_partitioned_fill_plan_shards_by_key(spark, build):
-    plan = (
-        build(_two_device(spark))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+def test_partitioned_fill_plan_shards_by_key(spark, build, one_exchange):
+    plan = _executed_plan(build(_two_device(spark)))
     assert "hashpartitioning(device" in plan, plan
     # the global-window funnel (every row through ONE task) must be gone
     assert "SinglePartition" not in plan, plan
+    if one_exchange:
+        # the interpolation's row-number, ascending and descending
+        # windows share one partitioning: re-sorts, never a re-shuffle
+        exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
+        assert len(exchanges) == 1, plan
+        assert "Exchange hashpartitioning(device" in exchanges[0], plan
+
+
+@pytest.mark.parametrize("method", ["linear", "nearest"])
+def test_interpolate_plan_has_no_unbounded_following_frame(spark, method):
+    """Both neighbour lookups are running frames (unbounded preceding to
+    the current row); a frame to unbounded following is re-evaluated per
+    row and makes the fill quadratic in the partition's rows."""
+    for df, parts in ((_two_device(spark), ["device"]), (_dirty_numeric(spark), None)):
+        plan = _executed_plan(
+            clean.interpolate_fill(df, ["a"], ["ts"], parts, method=method)
+        )
+        assert "unboundedpreceding" in plan.lower(), plan
+        assert "unboundedfollowing" not in plan.lower(), plan
+
+
+def test_interpolate_keeps_user_column_named_like_helper(spark):
+    """A CSV header may be anything, including the fill's row-number
+    helper name: the input's ``_rn`` column comes back unchanged."""
+    rows = [(1, 1.0, "x"), (2, None, "y"), (3, 3.0, None), (4, None, "z")]
+    df = spark.createDataFrame(rows, "ts int, a double, _rn string")
+    for method in ("linear", "nearest"):
+        out = clean.interpolate_fill(df, ["a"], ["ts"], method=method)
+        assert out.columns == ["ts", "a", "_rn"]
+        got = out.orderBy("ts").collect()
+        assert [r._rn for r in got] == ["x", "y", None, "z"], method
+        assert [r.a for r in got] == [1.0, 2.0 if method == "linear" else 1.0, 3.0, 3.0]
+
+
+def _holed_series(rng, n: int) -> np.ndarray:
+    """Uniform values with isolated holes, runs of 3-8 holes, and a
+    leading and a trailing gap."""
+    y = rng.uniform(-50.0, 50.0, n)
+    holes = rng.random(n) < 0.05
+    for start in rng.integers(10, n - 20, n // 500):
+        holes[start : start + rng.integers(3, 9)] = True
+    holes[: rng.integers(1, 5)] = True
+    holes[n - rng.integers(1, 5) :] = True
+    y[holes] = np.nan
+    return y
+
+
+def _nearest_reference(y: np.ndarray) -> np.ndarray:
+    """Nearest known position per row; equidistant ties take the earlier
+    neighbour, rows before the first / after the last known value clamp."""
+    pos = np.arange(len(y))
+    known = np.flatnonzero(~np.isnan(y))
+    nxt = np.searchsorted(known, pos, side="left")  # first known >= pos
+    prv = nxt - (known[np.minimum(nxt, len(known) - 1)] != pos)  # last known <= pos
+    p = known[np.clip(prv, 0, len(known) - 1)]
+    q = known[np.minimum(nxt, len(known) - 1)]
+    take_prev = (prv >= 0) & ((nxt >= len(known)) | (pos - p <= q - pos))
+    return np.where(take_prev, y[p], y[q])
+
+
+def test_interpolate_scale_parity(spark):
+    """20 000 rows in one window partition: linear equals pandas, nearest
+    equals a numpy nearest-known-position reference (pandas' nearest
+    needs SciPy). At this size a frame that is re-evaluated per row
+    takes minutes, so a return of the quadratic fill shows in the
+    test durations."""
+    n = 20_000
+    rng = np.random.default_rng(20_000)
+    pdf = pd.DataFrame(
+        {"ts": np.arange(n), "a": _holed_series(rng, n), "b": _holed_series(rng, n)}
+    )
+    # rows arrive out of order: the fill must order by ts, not by input
+    df = spark.createDataFrame(pdf.sample(frac=1.0, random_state=7)).repartition(4)
+    for method in ("linear", "nearest"):
+        got = (
+            clean.interpolate_fill(df, ["a", "b"], ["ts"], method=method)
+            .toPandas()
+            .sort_values("ts")
+        )
+        assert got["ts"].tolist() == list(range(n))
+        for c in ("a", "b"):
+            if method == "linear":
+                want = pdf[c].interpolate(method="linear", limit_direction="both")
+            else:
+                want = _nearest_reference(pdf[c].to_numpy())
+            np.testing.assert_allclose(
+                got[c].to_numpy(), np.asarray(want), rtol=0, atol=1e-9
+            )
 
 
 def test_fills_handle_dotted_column_names(spark):
