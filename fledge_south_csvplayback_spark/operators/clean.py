@@ -16,37 +16,73 @@ Spark shapes:
   over any data size; map-side partial aggregation).
 - Rolling fills are 2-row trailing windows. Interpolation numbers the
   rows once (``row_number`` over the order columns, which also breaks
-  ties) and finds both neighbours with last-ignorenulls over running
-  frames on that number, ascending for the previous known value and
-  descending for the next, then weights by row distance: two sorts and
-  O(n) work per partition. Windows accept ``partition_cols`` (e.g.
-  per-device/per-file) so state never funnels through one partition at
-  scale; the ETL tool's single-file semantics use the global window
-  deliberately.
+  ties), then computes each column's four neighbours once, as named
+  columns: the next known value and its row number from last-ignorenulls
+  over a running frame on that number ordered descending, the previous
+  ones from the same frame ordered ascending. A final projection weights
+  by row distance: three sorts and O(n) work per partition, and the
+  ascending window runs last, so rows leave in order-column order.
+  Windows accept ``partition_cols`` (e.g. per-device/per-file) so state
+  never funnels through one partition at scale; the ETL tool's
+  single-file semantics use the global window deliberately.
+- The blank, cast, rolling and interpolation steps are SQL text, one
+  ``selectExpr`` per step over ``qname``-quoted names. Every PySpark
+  Column/``functions`` call captures its call-site origin (a stack walk
+  and several JVM round trips), and a Column-API fill makes a few dozen
+  such calls per column; the SQL text makes none, so the driver-side
+  build stays a few milliseconds per step whatever the column count.
 - Flattening is ``from_json`` (F7) — the idiomatic upgrade of the
   reference's per-row string splitting (process_csv_data.py:74-80).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import WindowSpec
 
 from fledge_south_csvplayback_spark.schema import qcol, qname
 
 
-def _is_blank(c: str) -> Column:
-    """Whitespace-only cell (reference str.isspace(), csvplayback.py:685)."""
-    return qcol(c).isNotNull() & (F.trim(qcol(c)) == "")
+def _blank(q: str) -> str:
+    """SQL: the quoted column ``q`` holds a whitespace-only cell
+    (reference str.isspace(), csvplayback.py:685)."""
+    return f"{q} IS NOT NULL AND trim({q}) = ''"
+
+
+def _blank_to_null(q: str) -> str:
+    """SQL: ``q`` with whitespace-only cells as NULL (process_csv_data.py:119)."""
+    return f"CASE WHEN {_blank(q)} THEN NULL ELSE {q} END"
+
+
+def _replace(
+    df: DataFrame, exprs: dict[str, str], columns: list[str] | None = None
+) -> DataFrame:
+    """One ``selectExpr`` of ``columns`` (default: all of ``df``'s) in
+    order, each replaced by its SQL expression in ``exprs`` if it has
+    one and passed through otherwise."""
+    return df.selectExpr(
+        *[
+            f"{exprs[c]} AS {qname(c)}" if c in exprs else qname(c)
+            for c in (df.columns if columns is None else columns)
+        ]
+    )
+
+
+def _over(
+    order: list[str], partition_cols: list[str] | None, frame: str = ""
+) -> str:
+    """SQL window clause; ``order`` holds the quoted ORDER BY terms."""
+    part = (
+        f"PARTITION BY {', '.join(qname(c) for c in partition_cols)} "
+        if partition_cols
+        else ""
+    )
+    return f"OVER ({part}ORDER BY {', '.join(order)}{frame})"
 
 
 def whitespace_to_null(df: DataFrame, cols: list[str]) -> DataFrame:
     """F4: whitespace-only strings -> null (process_csv_data.py:119)."""
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.when(_is_blank(c), None).otherwise(qcol(c)))
-    return out
+    return _replace(df, {c: _blank_to_null(qname(c)) for c in cols})
 
 
 def null_report(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -59,7 +95,7 @@ def null_report(df: DataFrame, cols: list[str]) -> DataFrame:
     aggs = []
     for c in cols:
         aggs.append(F.max(qcol(c).isNull()).alias(f"_n_{c}"))
-        aggs.append(F.max(_is_blank(c)).alias(f"_b_{c}"))
+        aggs.append(F.max(F.expr(_blank(qname(c)))).alias(f"_b_{c}"))
     one = df.agg(*aggs)
     per_col = F.array(
         *[
@@ -89,15 +125,24 @@ def all_null_columns(df: DataFrame, cols: list[str]) -> list[str]:
 # pandas fillna(col.rolling(2, min_periods=1).mean()): at a NaN position
 # the window is {prev, NaN} and pandas skips NaN -> prev; two NaNs in a
 # row stay NaN. avg/percentile over ROWS BETWEEN 1 PRECEDING AND CURRENT
-# ROW ignore nulls identically.
+# ROW ignore nulls identically. Each column's window reads only its own
+# input values, so all columns fill in one projection.
 # ---------------------------------------------------------------------------
-def _w(order_cols: list[str], partition_cols: list[str] | None) -> WindowSpec:
-    w = (
-        Window.partitionBy(*[qcol(c) for c in partition_cols])
-        if partition_cols
-        else Window.partitionBy()
+def _rolling_fill(
+    df: DataFrame,
+    cols: list[str],
+    order_cols: list[str],
+    partition_cols: list[str] | None,
+    agg: str,
+) -> DataFrame:
+    w = _over(
+        [qname(c) for c in order_cols],
+        partition_cols,
+        " ROWS BETWEEN 1 PRECEDING AND CURRENT ROW",
     )
-    return w.orderBy(*[qcol(c) for c in order_cols])
+    return _replace(
+        df, {c: f"coalesce({qname(c)}, {agg.format(qname(c))} {w})" for c in cols}
+    )
 
 
 def rolling_mean_fill(
@@ -106,11 +151,7 @@ def rolling_mean_fill(
     order_cols: list[str],
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
-    w = _w(order_cols, partition_cols).rowsBetween(-1, 0)
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.coalesce(qcol(c), F.avg(qcol(c)).over(w)))
-    return out
+    return _rolling_fill(df, cols, order_cols, partition_cols, "avg({})")
 
 
 def rolling_median_fill(
@@ -119,29 +160,36 @@ def rolling_median_fill(
     order_cols: list[str],
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
-    w = _w(order_cols, partition_cols).rowsBetween(-1, 0)
-    out = df
-    for c in cols:
-        out = out.withColumn(
-            c, F.coalesce(qcol(c), F.expr(f"percentile({qname(c)}, 0.5)").over(w))
-        )
-    return out
+    return _rolling_fill(df, cols, order_cols, partition_cols, "percentile({}, 0.5)")
 
 
 # ---------------------------------------------------------------------------
 # W3: linear / nearest interpolation, limit_direction='both'
-# (process_csv_data.py:124-126). A row number over ``order_cols`` fixes
-# one total order per partition (ties in ``order_cols`` are broken once,
-# here, so both neighbours and the distance weights see the same order).
-# Both neighbour lookups are then running frames over that number: the
-# previous known value is last-ignorenulls from unbounded preceding to
-# the current row ordered by it ascending, the next known value the same
-# aggregate ordered descending. Spark keeps a running frame's state as
-# it streams the sorted partition, so each partition costs two sorts and
-# O(n) aggregation, where a frame running to unbounded following would
-# be re-evaluated per row, O(n^2). Leading/trailing gaps take the
-# nearest existing value; 'nearest' ties (equidistant) take the earlier
-# neighbour.
+# (process_csv_data.py:124-126), as three SQL-text projections and a
+# final one:
+#
+# 1. a row number over ``order_cols`` fixes one total order per
+#    partition (ties in ``order_cols`` are broken once, here, so both
+#    neighbours and the distance weights see the same order);
+# 2. per column, the next known value and its row number: last-
+#    ignorenulls from unbounded preceding to the current row, ordered by
+#    the row number descending;
+# 3. per column, the previous known value and its row number: the same
+#    aggregates ordered ascending;
+# 4. the fill: known cells kept, leading/trailing gaps take the nearest
+#    existing value, interior gaps the linear weight by row distance or,
+#    for 'nearest', the closer neighbour (equidistant ties take the
+#    earlier one).
+#
+# Each neighbour is a named helper column, computed once: 4 window
+# aggregates per column, where Column expressions that reference a
+# neighbour several times each plan their own copy. Spark keeps a
+# running frame's state as it streams the sorted partition, so the
+# partition costs three sorts and O(n) aggregation, where a frame
+# running to unbounded following would be re-evaluated per row, O(n^2).
+# The ascending window runs last, so the output leaves in row-number
+# order and the ETL tool writes a file in time order. Helper names are
+# fresh against the input's columns (any CSV header reaches here).
 # ---------------------------------------------------------------------------
 def interpolate_fill(
     df: DataFrame,
@@ -152,39 +200,51 @@ def interpolate_fill(
 ) -> DataFrame:
     if method not in ("linear", "nearest"):
         raise ValueError(f"unsupported interpolation method {method!r}")
-    # the row-number helper must not collide with an input column (any
-    # CSV header reaches here); Spark resolves names case-insensitively
+    # Spark resolves names case-insensitively
     taken = {c.lower() for c in df.columns}
-    rn_name = "_rn"
-    while rn_name in taken:
-        rn_name = "_" + rn_name
-    rn = F.col(rn_name)
-    part = Window.partitionBy(*[qcol(c) for c in partition_cols or []])
-    w_prev = part.orderBy(rn.asc()).rowsBetween(Window.unboundedPreceding, 0)
-    w_next = part.orderBy(rn.desc()).rowsBetween(Window.unboundedPreceding, 0)
-    out = df.withColumn(rn_name, F.row_number().over(_w(order_cols, partition_cols)))
-    for c in cols:
-        rn_if = F.when(qcol(c).isNotNull(), rn)
-        prev_v = F.last(qcol(c), ignorenulls=True).over(w_prev)
-        next_v = F.last(qcol(c), ignorenulls=True).over(w_next)
-        prev_rn = F.last(rn_if, ignorenulls=True).over(w_prev)
-        next_rn = F.last(rn_if, ignorenulls=True).over(w_next)
-        if method == "linear":
-            interp = prev_v + (next_v - prev_v) * (
-                (rn - prev_rn) / (next_rn - prev_rn)
+
+    def fresh(name: str) -> str:
+        while name.lower() in taken:
+            name = "_" + name
+        taken.add(name.lower())
+        return qname(name)
+
+    rn = fresh("_rn")
+    # per column: next value, next row number, previous value, previous
+    # row number
+    helpers = [
+        tuple(fresh(f"_{kind}{i}") for kind in ("nv", "nr", "pv", "pr"))
+        for i in range(len(cols))
+    ]
+    running = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
+    def neighbours(frame: DataFrame, order: str, slot: int) -> DataFrame:
+        w = _over([f"{rn} {order}"], partition_cols, running)
+        exprs = []
+        for c, names in zip(cols, helpers):
+            q, val, row = qname(c), names[slot], names[slot + 1]
+            exprs.append(f"last({q}, true) {w} AS {val}")
+            exprs.append(
+                f"last(CASE WHEN {q} IS NOT NULL THEN {rn} END, true) {w} AS {row}"
             )
+        return frame.selectExpr("*", *exprs)
+
+    by_order = _over([qname(c) for c in order_cols], partition_cols)
+    out = df.selectExpr("*", f"row_number() {by_order} AS {rn}")
+    out = neighbours(out, "DESC", 0)
+    out = neighbours(out, "ASC", 2)
+    fills = {}
+    for c, (nv, nr, pv, pr) in zip(cols, helpers):
+        q = qname(c)
+        if method == "linear":
+            interp = f"{pv} + ({nv} - {pv}) * (({rn} - {pr}) / ({nr} - {pr}))"
         else:
-            interp = F.when(
-                (rn - prev_rn) <= (next_rn - rn), prev_v
-            ).otherwise(next_v)
-        out = out.withColumn(
-            c,
-            F.when(qcol(c).isNotNull(), qcol(c))
-            .when(prev_v.isNull(), next_v)
-            .when(next_v.isNull(), prev_v)
-            .otherwise(interp),
+            interp = f"CASE WHEN ({rn} - {pr}) <= ({nr} - {rn}) THEN {pv} ELSE {nv} END"
+        fills[c] = (
+            f"CASE WHEN {q} IS NOT NULL THEN {q} WHEN {pv} IS NULL THEN {nv}"
+            f" WHEN {nv} IS NULL THEN {pv} ELSE {interp} END"
         )
-    return out.drop(rn_name)
+    return _replace(out, fills, df.columns)
 
 
 # ---------------------------------------------------------------------------
@@ -308,15 +368,15 @@ def repair_nans(
     method: str = "linear",
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
-    df = whitespace_to_null(df, cols)
-    for c in cols:
-        df = df.withColumn(c, qcol(c).cast("double"))
+    df = _replace(
+        df, {c: f"CAST({_blank_to_null(qname(c))} AS DOUBLE)" for c in cols}
+    )
     # ONE aggregate pass decides both policies: count(c)==0 -> dead
     # (all-null, always dropped), count(c)<count(*) -> holed (dropped
     # under method='drop'). Positional access so a data column named
     # like the total alias can't collide.
-    counts = df.agg(
-        F.count(F.lit(1)), *[F.count(qcol(c)) for c in cols]
+    counts = df.selectExpr(
+        "count(1)", *[f"count({qname(c)})" for c in cols]
     ).collect()[0]
     total, per_col = counts[0], dict(zip(cols, counts[1:]))
     dead = [c for c in cols if per_col[c] == 0]

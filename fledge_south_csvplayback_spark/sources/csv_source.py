@@ -43,7 +43,6 @@ from pyspark.sql import types as T
 from fledge_south_csvplayback_spark.schema import (
     ColumnSpec,
     parse_use_columns,
-    qcol,
     qname,
 )
 from fledge_south_csvplayback_spark.sources import lineio
@@ -187,6 +186,8 @@ PANDAS_NA_SENTINELS = (
     "n/a", "nan", "null",
 )
 _MISSING_CELLS = frozenset(PANDAS_NA_SENTINELS) | {""}
+# the sentinels as a SQL IN-list; a quote inside a literal is doubled
+_SENTINELS_SQL = ", ".join("'" + v.replace("'", "''") + "'" for v in PANDAS_NA_SENTINELS)
 
 
 def null_na_sentinels(df: DataFrame) -> DataFrame:
@@ -202,20 +203,25 @@ def null_na_sentinels(df: DataFrame) -> DataFrame:
     spellings — this makes every pandas-faithful read agree. One
     codegen'd select, no shuffle, no Python.
 
+    Built as SQL text, one ``selectExpr`` for the whole schema: every
+    PySpark Column/``functions`` call pays a per-call origin capture
+    (several JVM round trips), and the playback reader applies this
+    once per stream definition. ``qname`` quotes each name exactly
+    (mangled names like ``a.1`` must not parse as struct paths).
+
     Public on purpose: this is the cross-module semantic contract the
     streaming playback reader (streaming/playback.py) shares with the
     batch readers — every pandas-faithful read applies it."""
-    out = []
+    exprs = []
     for f in df.schema.fields:
-        # qcol: mangled names like a.1 must not be parsed as
-        # struct-field paths (plain F.col("a.1") would be)
-        c = qcol(f.name)
+        q = qname(f.name)
         if isinstance(f.dataType, T.StringType):
-            c = F.when(c.isin(*PANDAS_NA_SENTINELS), F.lit(None)).otherwise(c)
+            exprs.append(f"CASE WHEN {q} IN ({_SENTINELS_SQL}) THEN NULL ELSE {q} END AS {q}")
         elif isinstance(f.dataType, _FLOATING_TYPES):
-            c = F.when(F.isnan(c), F.lit(None)).otherwise(c)
-        out.append(c.alias(f.name))
-    return df.select(*out)
+            exprs.append(f"CASE WHEN isnan({q}) THEN NULL ELSE {q} END AS {q}")
+        else:
+            exprs.append(q)
+    return df.selectExpr(*exprs)
 
 
 _INFER_ORDER: tuple[tuple[str, type], ...] = (("bigint", int), ("double", float))

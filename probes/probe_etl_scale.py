@@ -10,13 +10,18 @@ shows the cost class directly: a linear fill grows about 10x from 10k
 to 100k rows, a quadratic one about 100x. Each output is checked
 against pandas ``interpolate(method='linear', limit_direction='both')``
 (the reference tool's call, process_csv_data.py:124-126) and the
-largest absolute difference is reported.
+largest absolute difference is reported. Per size it also reports the
+driver-side build of the repair (``etl.repair`` on the read frame: the
+blank/cast projection, its one count job and the fill's plan), median
+of the reps, and the number of ``last(`` window aggregates and ``Sort [``
+operators in the repaired frame's executed plan.
 
 Usage:
     python probes/probe_etl_scale.py --rows 2000,10000,20000,100000 --reps 3
 
 Prints one JSON line: per size the rows, the median and every wall in
-seconds, and ``max_abs_err`` against pandas.
+seconds, ``max_abs_err`` against pandas, ``repair_build_ms`` and the
+plan counts ``plan_last`` and ``plan_sorts``.
 """
 
 from __future__ import annotations
@@ -73,6 +78,21 @@ def max_abs_err(path: str, out: str) -> float:
     return float((got[cols] - want[cols]).abs().max().max())
 
 
+def repair_build(spark, path: str) -> tuple[float, str]:
+    """Driver-side build of ``run_etl``'s repair on ``path`` (ms), and
+    the repaired frame's executed plan."""
+    from fledge_south_csvplayback_spark import etl
+    from fledge_south_csvplayback_spark.sources import csv_source
+
+    df = csv_source.null_na_sentinels(
+        spark.read.option("header", True).option("escape", '"').csv(path)
+    )
+    t0 = time.perf_counter()
+    repaired = etl.repair(df, "fill", "linear")
+    ms = (time.perf_counter() - t0) * 1000.0
+    return ms, repaired._jdf.queryExecution().executedPlan().toString()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", default="2000,10000,20000,100000")
@@ -98,18 +118,23 @@ def main() -> None:
     for n in sizes:
         (path,) = gen.land_sensor(f"{work}/in_{n}", args.seed, 1, n)
         out = f"{work}/out_{n}"
-        walls = []
+        walls, builds = [], []
         for _ in range(args.reps):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
             etl.run_etl(spark, path, out, "fill", "linear")
             walls.append(round(time.perf_counter() - t0, 3))
+            ms, plan = repair_build(spark, path)
+            builds.append(ms)
         results.append(
             {
                 "rows": n,
                 "wall_s": statistics.median(walls),
                 "walls_s": walls,
                 "max_abs_err": max_abs_err(path, out),
+                "repair_build_ms": round(statistics.median(builds), 1),
+                "plan_last": plan.count("last("),
+                "plan_sorts": plan.count("Sort ["),
             }
         )
         print(json.dumps(results[-1]), file=sys.stderr, flush=True)

@@ -294,6 +294,27 @@ def test_interpolate_plan_has_no_unbounded_following_frame(spark, method):
         assert "unboundedfollowing" not in plan.lower(), plan
 
 
+@pytest.mark.parametrize("method", ["linear", "nearest"])
+def test_interpolate_plan_computes_each_neighbour_once(spark, method):
+    """Each filled column's four neighbours (previous/next value and row
+    number) are one window aggregate each, and the row-number, descending
+    and ascending windows cost one sort each over one Exchange, whatever
+    the column count. Column expressions that reference a neighbour
+    several times plan one aggregate per reference and re-sort per
+    column."""
+    rows = [
+        (i, None if i % 3 == 1 else float(i), None if i % 4 == 0 else -1.0 * i,
+         float(i) if i in (3, 7) else None)
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(rows, "ts int, a double, b double, c double")
+    cols = ["a", "b", "c"]
+    plan = _executed_plan(clean.interpolate_fill(df, cols, ["ts"], method=method))
+    assert plan.count("last(") == 4 * len(cols), plan
+    assert plan.count("Sort [") <= 3, plan
+    assert len([ln for ln in plan.splitlines() if "Exchange " in ln]) == 1, plan
+
+
 def test_interpolate_keeps_user_column_named_like_helper(spark):
     """A CSV header may be anything, including the fill's row-number
     helper name: the input's ``_rn`` column comes back unchanged."""

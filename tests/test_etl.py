@@ -167,3 +167,27 @@ def test_etl_fill_treats_pandas_na_sentinels_as_holes(spark, tmp_path):
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert g == pytest.approx(w)
+
+
+def test_etl_fill_output_keeps_time_order(spark, tmp_path):
+    """The repaired file is written in time order, as the reference
+    tool writes its rows in file order: the playback plugin replays the
+    cleaned file front to back."""
+    import glob
+
+    import pandas as pd
+
+    p = str(tmp_path / "ordered.csv")
+    with open(p, "w") as f:
+        f.write("user_ts,a,b\n")
+        for i in range(60):
+            a = "" if i % 7 in (0, 3) else f"{i}.5"
+            b = "" if i % 5 == 2 else f"{-i}"
+            f.write(f"2020-01-01 00:00:{i:02d},{a},{b}\n")
+    out = str(tmp_path / "out")
+    etl.run_etl(spark, p, out, choice="fill", method="linear")
+    parts = sorted(glob.glob(f"{out}/part-*.csv"))
+    assert len(parts) == 1
+    ts = pd.read_csv(parts[0], dtype={"user_ts": str})["user_ts"].tolist()
+    assert len(ts) == 60
+    assert ts == sorted(ts)

@@ -1904,3 +1904,59 @@ def test_dir_bom_blank_preamble_gz_probe_and_zst_member(spark, tmp_path):
     df2 = cs.read_pick_from_file(spark, str(d2))
     assert dict(df2.dtypes) == {"A": "bigint", "B": "bigint"}
     assert sorted(map(tuple, df2.collect())) == [(1, 2), (3, 4)]
+
+
+# --- hostile names through the SQL-text cleaning build -----------------------
+# The ETL repair and the sentinel pass are built as SQL text over quoted
+# names: backticks, quotes, spaces, dots, SQL keywords and the fill's own
+# helper names (row number, neighbour columns) must all come back as the
+# same columns in the same positions.
+HOSTILE_HEADER = ["user_ts", "a`b", "c d", "order", "q'x", "a.1", "_rn", "_pv0", "_nr0"]
+
+
+def test_etl_fill_hostile_header_matches_pandas(spark, tmp_path):
+    import glob
+
+    import numpy as np
+
+    from fledge_south_csvplayback_spark import etl
+
+    p = str(tmp_path / "hostile_names.csv")
+    n, k = 40, len(HOSTILE_HEADER) - 1
+    with open(p, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(HOSTILE_HEADER)
+        for i in range(n):
+            # a different hole pattern per column, leading and trailing
+            # gaps included; every column keeps some values
+            holes = [(i + j) % (j + 2) == 0 or i in (0, n - 1) for j in range(k)]
+            w.writerow(
+                [f"2020-01-01 00:00:{i:02d}"]
+                + ["" if h else f"{i * (j + 1) / 4}" for j, h in enumerate(holes)]
+            )
+    out = str(tmp_path / "out")
+    res = etl.run_etl(spark, p, out, choice="fill", method="linear")
+    assert res.columns == HOSTILE_HEADER
+    got = pd.concat(
+        pd.read_csv(f, dtype={"user_ts": str})
+        for f in sorted(glob.glob(f"{out}/part-*.csv"))
+    )
+    assert list(got.columns) == HOSTILE_HEADER
+    got = got.sort_values("user_ts").reset_index(drop=True)
+    want = pd.read_csv(p, dtype={"user_ts": str})
+    data = HOSTILE_HEADER[1:]
+    want[data] = want[data].interpolate(method="linear", limit_direction="both")
+    assert got["user_ts"].tolist() == want["user_ts"].tolist()
+    np.testing.assert_allclose(
+        got[data].to_numpy(float), want[data].to_numpy(float), rtol=0, atol=1e-12
+    )
+
+
+def test_null_na_sentinels_backtick_quote_name(spark):
+    name = "x`'y"
+    df = spark.createDataFrame(
+        [("NA",), ("n/a",), ("keep",), ("it's",), (None,)], "`x``'y` string"
+    )
+    out = cs.null_na_sentinels(df)
+    assert out.columns == [name]
+    assert [r[0] for r in out.collect()] == [None, None, "keep", "it's", None]
