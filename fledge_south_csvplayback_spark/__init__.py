@@ -13,12 +13,14 @@ plumbing) a 100 TB training-data pipeline needs.
 
 Layout:
     config.py      playback config (the reference's 20 keys, validated)
-    session.py     SparkSession builder tuned for local[32] testing
+    session.py     SparkSession builder; local[N] sized from SPARK_GRAFT_CPUS
     schema.py      useColumns parser / explicit schema (csvplayback.py:601-649)
     sources/       CSV scan variants, file discovery (S1-S6)
     operators/     timestamps, cleaning, readings envelope, relational,
-                   dedup, similarity, text, multimodal
-    streaming/     rate-controlled playback, sinks, replay (ST1-ST7, S7-S10)
+                   events, dedup, similarity, text, selection, curation,
+                   multimodal, index compaction
+    streaming/     rate-controlled playback, sinks, replay (ST1-ST7, S7-S10);
+                   event-time windows; streaming corpus/media ingest
     etl.py         offline cleaning CLI (E1-E3)
     queries.py     driver-contract registrations (one line per operator)
 """

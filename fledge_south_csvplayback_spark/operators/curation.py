@@ -2294,10 +2294,8 @@ def write_shuffled_corpus(
 # against 100 TB is cheap ONLY if the join never carries the payload:
 # each side reduces to (key, 16-byte content fingerprint) in a narrow
 # codegen'd projection BEFORE the full-outer join, so the two shuffles
-# move ~48 bytes/doc regardless of document size, and snapshots stored
-# bucketed by doc_id (operators/bucketing.py) merge with no Exchange at
-# all. doc_id is unique per side, so the join is skew-free by
-# construction.
+# move ~48 bytes/doc regardless of document size. doc_id is unique per
+# side, so the join is skew-free by construction.
 DIFF_MOD = 50  # synthetic snapshot-B mutation classes (see _snapshot_b)
 DIFF_ADD_OFFSET = 1 << 40  # added docs get ids far above any real doc_id
 DIFF_FP_COLS = ("text", "lang", "source")

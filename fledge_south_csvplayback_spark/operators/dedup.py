@@ -71,21 +71,15 @@ SIMHASH_BANDS = 8  # 8 bits each: any pair within Hamming 7 must share a band
 SIMHASH_MAX_HAMMING = 12  # 8..12 found probabilistically (miss needs all 8 bands hit)
 
 
+# shingling is interpreted higher-order-function work — the most
+# expensive per-row compute in this module; a single-file corpus ran it
+# 2.6× slower at sf0.1 on one core before the fan-out.
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(
+    return fanout.spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet"),
         spark,
         f"{sf_dir}/documents.parquet",
     )
-
-
-# shingling is interpreted higher-order-function work — the most
-# expensive per-row compute in this module; a single-file corpus ran it
-# 2.6× slower at sf0.1 on one core before the fan-out. The guarded
-# implementation moved to the shared ``fanout`` module (round 15);
-# these aliases keep this module's call sites and tests stable.
-_spread = fanout.spread
-_parse_size_bytes = fanout._parse_size_bytes
 
 
 # --- exact dedup -------------------------------------------------------------
@@ -1062,9 +1056,8 @@ def connected_components(
     id_col: str = "doc_id",
     max_iters: int = 20,
 ) -> DataFrame:
-    """Min-label propagation over an undirected pair graph, shared by
-    the text-side ``dedup_clusters`` and the embedding-side
-    ``similarity.embedding_clusters``. Returns (id_col, cluster_id,
+    """Min-label propagation over an undirected pair graph, used by
+    ``dedup_clusters``. Returns (id_col, cluster_id,
     keep) where cluster_id is the component's minimum id and keep
     marks the representative. See ``dedup_clusters`` for the
     scale/convergence rationale (fixed-width label columns, eager

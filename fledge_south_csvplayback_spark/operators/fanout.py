@@ -13,7 +13,7 @@ opposite of the intent.
 Moved out of ``dedup`` (round 15) so the other CPU-dense single-scan
 paths (gram explodes, range-join binning, hashed-ngram featurizers,
 span scrubs) share the one guarded implementation instead of growing
-per-module copies. ``dedup._spread`` remains as an alias.
+per-module copies.
 """
 
 from __future__ import annotations

@@ -10,9 +10,8 @@ fake-succeeding. Three decode paths are REAL: ``text/plain`` payloads
 pass through byte-exact, PPM P6 rasters go through a genuine
 pure-Python parser (``image_stats``: header tokenizer with netpbm
 comment handling, dimension/maxval/buffer validation, per-channel
-pixel sums, 64-bit dHash), and RIFF/WAVE PCM16 audio goes through a
-generic chunk-walking parser (``audio_stats``: fmt/data validation,
-exact peak/energy/zero-crossing stats) — the binary column build,
+pixel sums, 64-bit dHash), and RIFF/AVI video goes through a
+chunk-walking parser (``video_stats``) — the binary column build,
 the metadata
 struct, the mapInPandas batch signature, the output schema, and the
 per-partition batch iteration are the same plumbing a codec-backed
@@ -23,22 +22,19 @@ Scale shape: mapInPandas streams Arrow batches per partition — no
 driver collect, no per-row Python calls; partitioning of the input
 carries through.
 
-Corrupt-payload policy (round 12): the three stats ENTRY POINTS
-(``image_stats`` / ``audio_stats`` / ``video_stats``) accept
-``on_error="quarantine"`` — the CSV/JSONL corrupt-record pattern for
-binary: a bad payload costs one NULL-stats row with a ``decode_error``
-audit column, never the job; ``multimodal_decode_report`` is the
-health check built on them. The composed/index-feeding ops (near-dup
-pairs, fingerprints, downmix, resize) DELIBERATELY stay raise-only:
-they write blocking tables and derived payloads where a silently
-nulled row corrupts downstream joins — the supported pipeline shape is
-quarantine-stats (or the report) first, filter the flagged doc_ids,
+Corrupt-payload policy (round 12): the stats ENTRY POINTS
+(``image_stats`` / ``video_stats``) accept ``on_error="quarantine"`` —
+the CSV corrupt-record pattern for binary: a bad payload costs one
+NULL-stats row with a ``decode_error`` audit column, never the job.
+The composed/index-feeding ops (near-dup pairs, resize) DELIBERATELY
+stay raise-only: they write blocking tables and derived payloads where
+a silently nulled row corrupts downstream joins — the supported
+pipeline shape is quarantine-stats first, filter the flagged doc_ids,
 then index the clean corpus.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -46,14 +42,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-N_FRAMES = 3
-
 FEATURE_SCHEMA = (
     "doc_id long, media_type string, n_bytes int, head_byte int, byte_sum long"
 )
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes int"
-
-
 def _media_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared documents scan behind every synthetic media table,
     routed through the guarded fan-out (round 16): the sf corpora are
@@ -145,35 +136,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, n_frames: int = N_FRAMES) -> DataFrame:
-    """Frame-sampling stub: split the payload into n contiguous chunks.
-
-    Stands in for video frame extraction; demonstrates the 1->N batch
-    fan-out shape (output rows != input rows) that real frame sampling
-    needs from mapInPandas.
-    """
-    decode = _decode_stub  # closure capture -> pickled by value
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_bytes": []}
-            for doc_id, meta, payload in zip(
-                pdf["doc_id"], pdf["meta"], pdf["payload"]
-            ):
-                b = decode(meta["media_type"], payload)
-                if b is None:  # NULL payload: n_frames empty frames
-                    b = b""
-                chunk = -(-len(b) // n_frames)  # ceil
-                for i in range(n_frames):
-                    frame = b[i * chunk : (i + 1) * chunk]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_bytes"].append(len(frame))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, FRAME_SCHEMA)
 
 
 # --- real raster decode: PPM (P6) + pixel stats + dHash ----------------------
@@ -381,12 +343,11 @@ def image_stats(media: DataFrame, on_error: str = "raise") -> DataFrame:
 
     ``on_error`` (round-12): ``"raise"`` — the default and every
     oracle-checked entry's semantics — fails the job loudly on the
-    first malformed payload; ``"quarantine"`` is the CSV/JSONL
+    first malformed payload; ``"quarantine"`` is the CSV
     corrupt-record pattern extended to binary payloads: a payload that
     fails to decode yields ONE row with NULL stats and the error text
     in ``decode_error`` (NULL on clean rows), so one corrupt blob in a
-    100 TB scan costs one quarantined row, not the job.
-    ``multimodal_decode_report`` is the health check built on top."""
+    100 TB scan costs one quarantined row, not the job."""
     _check_on_error(on_error)
     decode = _decode_ppm  # closure capture -> pickled by value
     group_runs = _make_group_runs()
@@ -555,128 +516,7 @@ WITH px AS (
 """
 
 
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sample_frames(media_table(spark, sf_dir))
-
-
-MULTIMODAL_FRAMES_SQL = f"""
-WITH m AS (
-    SELECT doc_id, len(text) AS n,
-           CAST(ceil(len(text) / {N_FRAMES}.0) AS INTEGER) AS chunk
-    FROM documents
-)
-SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-       CAST(GREATEST(0, LEAST(chunk, n - i * chunk)) AS INTEGER) AS frame_bytes
-FROM m, unnest(generate_series(0, {N_FRAMES - 1})) t(i)
-"""
-
-
 # --- real audio decode: WAV (RIFF/PCM16) + exact signal stats ----------------
-# The audio analogue of the PPM path: RIFF/WAVE PCM is a chunked
-# container a pure-Python parser handles generically — no codec
-# library involved — so the audio decode stage is REAL too.
-WAV_RATE = 8000
-WAV_SAMPLES = 256
-AUDIO_STATS_SCHEMA = (
-    "doc_id long, sample_rate int, channels int, n_samples int, "
-    "peak int, sum_abs bigint, sum_sq bigint, zero_crossings int"
-)
-
-
-def audio_table(
-    spark: SparkSession, sf_dir: str, channels: int = 1
-) -> DataFrame:
-    """documents -> (doc_id, payload binary, meta struct) where the
-    payload is a complete deterministic PCM16 WAV: interleaved int16
-    value ``i`` of doc ``d`` is ``((d*7 + i*13) % 2048) - 1024``. Like
-    ``image_table``, construction is declarative — each sample becomes
-    its little-endian int16 hex (byte-swapped ``lpad(hex(...))``) and
-    ``unhex`` builds the data chunk after the fixed RIFF/fmt header —
-    so payload synthesis is JVM-side; only the decode is Python.
-
-    ``channels > 1`` reuses the SAME interleaved data plane (and LUT)
-    under a stereo/N-channel fmt header — frame f, channel c is
-    interleaved value ``f*channels + c`` per the WAV layout — so the
-    multi-channel fixture costs nothing extra to build and its
-    per-channel oracle stays closed-form."""
-    import struct
-
-    docs = _media_docs(spark, sf_dir)
-    n, rate = WAV_SAMPLES, WAV_RATE
-    if channels < 1 or n % channels:
-        raise ValueError(
-            f"channels must be >= 1 and divide {n}, got {channels}"
-        )
-    data_bytes = n * 2
-    header = (
-        b"RIFF"
-        + struct.pack("<I", 36 + data_bytes)
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack(
-            "<IHHIIHH",
-            16,
-            1,
-            channels,
-            rate,
-            rate * 2 * channels,
-            2 * channels,
-            16,
-        )
-        + b"data"
-        + struct.pack("<I", data_bytes)
-    )
-    # the sample formula depends on doc_id only through doc_id*7 %
-    # 2048, so the 2048 possible PCM planes build ONCE over a 2048-row
-    # Range (LE-int16 packed exactly as before) and a broadcast join
-    # assembles the payload — see video_table's synthesis post-mortem.
-    # Round 15: the hex strings build in PYTHON on the driver and ship
-    # as one JSON-literal inline table — the Range formulation
-    # evaluated 2048·n interpreted lambda elements inside the
-    # broadcast build for bytes a driver loop produces in
-    # milliseconds; same (id + c) % 2048 - 1024 samples, same pmod
-    # 65536 two's-complement LE packing, and unhex is
-    # case-insensitive. Plan stays Generate-over-Range (the hygiene
-    # pin: no Scan ExistingRDD).
-    from fledge_south_csvplayback_spark.operators.inline import (
-        literal_cols_df,
-    )
-
-    def le16_hex(s: int) -> str:
-        hx = f"{s % 65536:04x}"
-        return hx[2:4] + hx[0:2]
-
-    pcm_rows = [
-        "".join(
-            le16_hex((aa + i * 13) % 2048 - 1024) for i in range(n)
-        )
-        for aa in range(2048)
-    ]
-    lut = literal_cols_df(
-        spark,
-        {"aa": list(range(2048)), "pcmhex": pcm_rows},
-        "aa int, pcmhex string",
-    )
-    payload = F.concat(
-        F.lit(bytearray(header)).cast("binary"),
-        F.unhex(F.col("pcmhex")),
-    )
-    return (
-        docs.withColumn(
-            "aa", F.pmod(F.col("doc_id") * 7, F.lit(2048)).cast("int")
-        )
-        .join(F.broadcast(lut), "aa")
-        .select(
-            "doc_id",
-            payload.alias("payload"),
-            F.struct(
-                F.lit("audio/wav").alias("media_type"),
-                F.octet_length(payload).alias("declared_bytes"),
-            ).alias("meta"),
-        )
-    )
-
-
 def _make_wav_decoder():
     """Factory (cloudpickle by-value) for a generic RIFF/WAVE PCM16
     parser: walks the chunk list (word-aligned, per the RIFF spec),
@@ -728,520 +568,8 @@ def _make_wav_decoder():
 _decode_wav = _make_wav_decoder()
 
 
-def _wav_preparse(media: DataFrame) -> DataFrame:
-    """Validate the canonical fixed-layout PCM16 WAV shape (12-byte
-    RIFF + 24-byte 'fmt ' + 8-byte 'data' header, even-sized data
-    chunk, nothing after it) declaratively and slice the raw PCM out
-    JVM-side, so the Python side of every audio consumer receives
-    pre-parsed (rate, channels, data) columns and skips the per-row
-    chunk walk — the round-10 probe's conclusion was that audio wall
-    is dominated by synthesis + Arrow transfer + the Python parse
-    (~80 us/row), not math. Non-canonical payloads (extra chunks, odd
-    data size, non-PCM16 fmt, trailing bytes) keep the full payload in
-    ``wav_raw`` and fall back to the generic Python RIFF walker, so
-    semantics are unchanged — the fast path is an optimization, never
-    a requirement.
-
-    Output: (doc_id, wav_rate int, wav_channels int, wav_data binary,
-    wav_raw binary) — exactly one of wav_data / wav_raw is non-NULL
-    for any non-NULL payload; a NULL payload yields both NULL (the
-    header predicate is NULL, neither branch fires) and the batch
-    decoder raises a descriptive per-doc error rather than a
-    bytes(None) TypeError.
-    All expressions are total: the hex-field decodes run on whatever
-    bytes exist (short payloads yield NULL fields via conv('') and
-    fail the predicate), and the only ANSI-sensitive cast (dsize to
-    int for substr) sits inside the ``when`` branch where the
-    length-equality check already bounds it.
-    """
-
-    p = F.col("payload")
-
-    # let-bound header hex so the 44-byte slice hexes once per row
-    def fields(h: Column) -> Column:
-        def b(o: int) -> Column:  # hex pair of byte at 1-based offset o
-            return F.substring(h, (o - 1) * 2 + 1, 2)
-
-        def le16(o: int) -> Column:
-            return F.conv(F.concat(b(o + 1), b(o)), 16, 10).cast("int")
-
-        def le32(o: int) -> Column:
-            return F.conv(
-                F.concat(b(o + 3), b(o + 2), b(o + 1), b(o)), 16, 10
-            ).cast("long")
-
-        return F.struct(
-            le32(5).alias("riff_size"),
-            le16(23).alias("ch"),
-            le32(25).alias("rate"),
-            le32(41).alias("dsize"),
-        )
-
-    hdr = F.element_at(
-        F.transform(F.array(F.hex(F.substring(p, 1, 44))), fields), 1
-    )
-    # fixed byte ranges compare as binary literals (no integer decode):
-    # "RIFF" / "WAVEfmt " + fmt size 16 LE + format 1 (PCM) LE, then
-    # bits-per-sample 16 LE + "data"
-    fast = (
-        (F.octet_length(p) >= 44)
-        & (F.substring(p, 1, 4) == F.lit(b"RIFF"))
-        & (F.substring(p, 9, 14) == F.lit(b"WAVEfmt \x10\x00\x00\x00\x01\x00"))
-        & (F.substring(p, 35, 6) == F.lit(b"\x10\x00data"))
-        & (hdr["ch"] >= 1)
-        & (hdr["dsize"] % 2 == 0)
-        & (hdr["riff_size"] == hdr["dsize"] + 36)
-        & (F.octet_length(p).cast("long") == hdr["dsize"] + 44)
-    )
-    return media.select(
-        "doc_id",
-        F.when(fast, hdr["rate"].cast("int")).alias("wav_rate"),
-        F.when(fast, hdr["ch"]).alias("wav_channels"),
-        F.when(fast, p.substr(F.lit(45), hdr["dsize"].cast("int"))).alias(
-            "wav_data"
-        ),
-        F.when(~fast, p).alias("wav_raw"),
-    )
-
-
-def _make_batch_wav_decode(on_error: str = "raise"):
-    """Factory (cloudpickle by-value) for the Python half of the WAV
-    fast path: given a ``_wav_preparse`` batch, return (rates,
-    channels, raws, errors) — JVM-sliced columns where the header was
-    canonical, the generic RIFF walk per row otherwise. ``errors`` is
-    all-None under ``on_error="raise"`` (a bad payload raises, the
-    historical semantics); under ``"quarantine"`` a failed row carries
-    its error text there with zeroed rate/channels and an empty
-    buffer, for the caller to NULL out at emit."""
-    decode = _decode_wav
-
-    def batch_decode(pdf):
-        import numpy as np
-
-        n = len(pdf)
-        data_col = pdf["wav_data"].to_numpy()
-        slow = [i for i in range(n) if data_col[i] is None]
-        if not slow:  # the common (all-canonical) case: no Python parse
-            return (
-                pdf["wav_rate"].to_numpy().astype(np.int64),
-                pdf["wav_channels"].to_numpy().astype(np.int64),
-                [bytes(d) for d in data_col],
-                [None] * n,
-            )
-        rates = np.empty(n, dtype=np.int64)
-        chans = np.empty(n, dtype=np.int64)
-        raws: list[bytes] = [b""] * n
-        errors: list[str | None] = [None] * n
-        rate_col = pdf["wav_rate"].to_numpy()
-        ch_col = pdf["wav_channels"].to_numpy()
-        raw_col = pdf["wav_raw"].to_numpy()
-        for i in range(n):
-            d = data_col[i]
-            if d is not None:
-                rates[i] = rate_col[i]
-                chans[i] = ch_col[i]
-                raws[i] = bytes(d)
-                continue
-            raw = raw_col[i]
-            try:
-                if raw is None:
-                    # a NULL payload fails BOTH preparse branches (the
-                    # header predicate is NULL, not false) — fail with
-                    # the doc, not a bytes(None) TypeError
-                    raise ValueError(
-                        "NULL WAV payload for doc_id="
-                        f"{pdf['doc_id'].iat[i]}; audio decode "
-                        "requires bytes — filter or repair upstream"
-                    )
-                r, c, d2 = decode(bytes(raw))
-            except ValueError as ex:
-                if on_error == "raise":
-                    raise
-                errors[i] = str(ex) or type(ex).__name__
-                rates[i], chans[i], raws[i] = 0, 1, b""
-                continue
-            rates[i], chans[i], raws[i] = r, c, d2
-        return rates, chans, raws, errors
-
-    return batch_decode
-
-
-def audio_stats(media: DataFrame, on_error: str = "raise") -> DataFrame:
-    """Decode every WAV payload and emit exact integer signal stats:
-    peak = max |s|, sum_abs, sum_sq (energy), and the zero-crossing
-    count (sign(s[i-1]) != sign(s[i]) with sign := s < 0) — the
-    classic cheap voiced/unvoiced + loudness features. Integers only,
-    so the oracle compare has no float tolerance. One mapInPandas
-    pass, no shuffle. After the Python chunk-walk parse, rows sharing
-    a sample count stack into one ``np.frombuffer`` int16 matrix per
-    batch and all four stats run vectorized (the audio_fingerprints /
-    image-stats fast-path pattern; the earlier per-sample Python
-    loops were the measured bottleneck — 35.2 s vs 22.5 s for the
-    image path doing MORE work at 10M). The RIFF parse itself runs
-    JVM-side via ``_wav_preparse`` for canonical fixed-layout
-    payloads; Python only walks non-canonical ones.
-
-    ``on_error``: see ``image_stats`` — ``"quarantine"`` adds a
-    ``decode_error`` column and turns malformed payloads (and the
-    mono-only violation, which is data-shaped too) into NULL-stats
-    rows instead of a job failure."""
-    _check_on_error(on_error)
-    batch_decode = _make_batch_wav_decode(on_error)
-    group_runs = _make_group_runs()
-    schema = AUDIO_STATS_SCHEMA + (
-        ", decode_error string" if on_error == "quarantine" else ""
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            n = len(pdf)
-            if not n:
-                continue
-            rates, chans, raws, errors = batch_decode(pdf)
-            if on_error == "quarantine":
-                for i in range(n):
-                    if errors[i] is None and chans[i] != 1:
-                        errors[i] = (
-                            f"audio_stats is mono-only, got {int(chans[i])} "
-                            "channels — use audio_stats_per_channel"
-                        )
-                        raws[i] = b""
-            elif (chans != 1).any():
-                # the stream is channel-INTERLEAVED: flat stats over
-                # it would mix channels (zero-crossings especially);
-                # fail loudly rather than report wrong numbers.
-                # Per-channel semantics live in audio_stats_per_channel.
-                bad = int(chans[chans != 1][0])
-                raise ValueError(
-                    f"audio_stats is mono-only, got {bad} "
-                    "channels — use audio_stats_per_channel"
-                )
-            counts = np.fromiter(
-                (len(r) for r in raws), dtype=np.int64, count=n
-            ) // 2
-            peak = np.zeros(n, dtype=np.int64)
-            sum_abs = np.zeros(n, dtype=np.int64)
-            sum_sq = np.zeros(n, dtype=np.int64)
-            zc = np.zeros(n, dtype=np.int64)
-            for (c,), idx in group_runs(counts.reshape(-1, 1)):
-                if c == 0:
-                    continue  # the zero-init rows ARE the empty stats
-                # one frombuffer over the joined group buffer (the
-                # image-stats rule: per-row np.stack was the hot spot)
-                s = np.frombuffer(
-                    b"".join(raws[i] for i in idx), dtype="<i2"
-                ).astype(np.int64).reshape(len(idx), c)
-                a = np.abs(s)
-                peak[idx] = a.max(axis=1)
-                sum_abs[idx] = a.sum(axis=1)
-                sum_sq[idx] = (s * s).sum(axis=1)
-                neg = s < 0
-                zc[idx] = (neg[:, :-1] != neg[:, 1:]).sum(axis=1)
-            cols = {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "sample_rate": rates,
-                "channels": np.ones(n, dtype=np.int64),
-                "n_samples": counts,
-                "peak": peak,
-                "sum_abs": sum_abs,
-                "sum_sq": sum_sq,
-                "zero_crossings": zc,
-            }
-            if on_error == "quarantine":
-                if any(e is not None for e in errors):
-                    for c in (
-                        "sample_rate", "channels", "n_samples",
-                        "peak", "sum_abs", "sum_sq", "zero_crossings",
-                    ):
-                        cols[c] = [
-                            None if errors[i] is not None else int(cols[c][i])
-                            for i in range(n)
-                        ]
-                cols["decode_error"] = errors
-            yield pd.DataFrame(cols)
-
-    return _wav_preparse(media).mapInPandas(batches, schema)
-
-
-def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return audio_stats(audio_table(spark, sf_dir))
-
-
-# closed-form oracle over the same sample formula (pytest-checked via
-# the driver's own compare; off-registry under the 50-entry cap)
-MULTIMODAL_AUDIO_STATS_SQL = f"""
-WITH s AS (
-    SELECT doc_id,
-           list_transform(range(0, {WAV_SAMPLES}),
-                          i -> (doc_id * 7 + i * 13) % 2048 - 1024) AS v
-    FROM documents
-)
-SELECT doc_id,
-       CAST({WAV_RATE} AS INTEGER) AS sample_rate,
-       CAST(1 AS INTEGER) AS channels,
-       CAST({WAV_SAMPLES} AS INTEGER) AS n_samples,
-       CAST(list_max(list_transform(v, x -> abs(x))) AS INTEGER) AS peak,
-       CAST(list_aggregate(list_transform(v, x -> abs(x)), 'sum')
-            AS BIGINT) AS sum_abs,
-       CAST(list_aggregate(list_transform(v, x -> x * x), 'sum')
-            AS BIGINT) AS sum_sq,
-       CAST(list_aggregate(
-            list_transform(range(1, {WAV_SAMPLES}),
-                i -> CASE WHEN (v[i] < 0) != (v[i+1] < 0)
-                     THEN 1 ELSE 0 END),
-            'sum') AS INTEGER) AS zero_crossings
-FROM s
-"""
-
-
-# --- per-channel audio stats (stereo / N-channel WAV) ------------------------
-AUDIO_STATS_CH_SCHEMA = (
-    "doc_id long, channel int, sample_rate int, channels int, "
-    "n_frames int, peak int, sum_abs bigint, sum_sq bigint, "
-    "zero_crossings int"
-)
-
-
-def audio_stats_per_channel(media: DataFrame) -> DataFrame:
-    """Decode every WAV payload (ANY channel count) and emit the exact
-    signal stats of ``audio_stats`` PER CHANNEL — one output row per
-    (doc, channel), the 1->N fan-out shape. The interleaved PCM stream
-    deinterleaves by a (frames, channels) reshape; zero-crossings are
-    counted within each channel's own sample sequence, the semantics a
-    flat scan over the interleaved stream gets wrong (which is why
-    ``audio_stats`` refuses multi-channel input rather than degrade).
-
-    One mapInPandas pass, no shuffle. Rows group by (channels,
-    n_frames) so each group is one 3-D numpy block; stats, the
-    doc-major/channel-minor ravel, and the repeat/tile key columns all
-    run vectorized — no per-row (or per-channel) Python math. The RIFF
-    parse runs JVM-side via ``_wav_preparse`` for canonical payloads."""
-    batch_decode = _make_batch_wav_decode()
-    group_runs = _make_group_runs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            n = len(pdf)
-            if not n:
-                continue
-            doc_ids = pdf["doc_id"].to_numpy()
-            rates, chans, raws, _ = batch_decode(pdf)
-            n16s = np.fromiter(
-                (len(r) for r in raws), dtype=np.int64, count=n
-            ) // 2
-            if (chans < 1).any():
-                raise ValueError("fmt declares 0 channels")
-            bad = n16s % chans != 0
-            if bad.any():
-                i = int(np.flatnonzero(bad)[0])
-                raise ValueError(
-                    f"PCM stream of {n16s[i]} int16 values does not "
-                    f"deinterleave into {chans[i]} channels"
-                )
-            geom = np.stack([chans, n16s // chans], axis=1)
-            parts: list[pd.DataFrame] = []
-            for (ch, nf), idx in group_runs(geom):
-                k = len(idx)
-                s = (
-                    np.frombuffer(
-                        b"".join(raws[i] for i in idx), dtype="<i2"
-                    )
-                    .astype(np.int64)
-                    .reshape(k, nf, ch)
-                )
-                a = np.abs(s)
-                neg = s < 0
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": np.repeat(doc_ids[idx], ch),
-                            "channel": np.tile(
-                                np.arange(ch, dtype=np.int64), k
-                            ),
-                            "sample_rate": np.repeat(rates[idx], ch),
-                            "channels": np.full(k * ch, ch, np.int64),
-                            "n_frames": np.full(k * ch, nf, np.int64),
-                            # (k, ch) stat blocks ravel row-major ==
-                            # doc-major/channel-minor, matching the
-                            # repeat/tile key columns above
-                            "peak": a.max(axis=1, initial=0).ravel(),
-                            "sum_abs": a.sum(axis=1).ravel(),
-                            "sum_sq": (s * s).sum(axis=1).ravel(),
-                            "zero_crossings": (
-                                neg[:, :-1, :] != neg[:, 1:, :]
-                            )
-                            .sum(axis=1)
-                            .ravel(),
-                        }
-                    )
-                )
-            yield (
-                pd.concat(parts, ignore_index=True)
-                if len(parts) > 1
-                else parts[0]
-            )
-
-    return _wav_preparse(media).mapInPandas(batches, AUDIO_STATS_CH_SCHEMA)
-
-
-def multimodal_audio_stats_stereo(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return audio_stats_per_channel(audio_table(spark, sf_dir, channels=2))
-
-
-def audio_downmix(media: DataFrame) -> DataFrame:
-    """Stereo/N-channel -> mono WAV: each output frame is the
-    FLOOR-division mean of its channels' samples (exact integer, so
-    the composed decode->downmix->decode->stats pipeline is
-    oracle-checkable end-to-end — the audio analogue of the image box
-    downsample). Output rows carry a complete mono PCM16 WAV payload,
-    so the op COMPOSES with ``audio_stats``/``audio_fingerprints``.
-    Python floor division rounds toward -inf (not C's toward zero),
-    matching both numpy's ``//`` and DuckDB's ``//`` on negatives.
-    One mapInPandas pass, no shuffle; per-(channels, frames) groups
-    run the mean vectorized off one joined-buffer frombuffer. The RIFF
-    parse runs JVM-side via ``_wav_preparse`` for canonical payloads
-    (and the mono output is itself canonical, so composed consumers
-    hit the fast path too)."""
-    batch_decode = _make_batch_wav_decode()
-    group_runs = _make_group_runs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import struct
-
-        for pdf in it:
-            n = len(pdf)
-            if not n:
-                continue
-            rates, chans, raws, _ = batch_decode(pdf)
-            n16s = np.fromiter(
-                (len(r) for r in raws), dtype=np.int64, count=n
-            ) // 2
-            bad = (chans < 1) | (n16s % np.maximum(chans, 1) != 0)
-            if bad.any():
-                i = int(np.flatnonzero(bad)[0])
-                raise ValueError(
-                    f"cannot downmix {n16s[i]} int16 values over "
-                    f"{chans[i]} channels"
-                )
-            geom = np.stack([chans, n16s // chans], axis=1)
-            mono: list[bytes] = [b""] * n
-            for (ch, nf), idx in group_runs(geom):
-                s = (
-                    np.frombuffer(
-                        b"".join(raws[i] for i in idx), dtype="<i2"
-                    )
-                    .astype(np.int64)
-                    .reshape(len(idx), nf, ch)
-                )
-                mixed = (s.sum(axis=2) // ch).astype("<i2")
-                for j, i in enumerate(idx):
-                    mono[i] = mixed[j].tobytes()
-            out = []
-            for i in range(n):
-                data = mono[i]
-                hdr = (
-                    b"RIFF"
-                    + struct.pack("<I", 36 + len(data))
-                    + b"WAVE"
-                    + b"fmt "
-                    + struct.pack(
-                        "<IHHIIHH", 16, 1, 1, int(rates[i]),
-                        int(rates[i]) * 2, 2, 16,
-                    )
-                    + b"data"
-                    + struct.pack("<I", len(data))
-                )
-                out.append(hdr + data)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "payload": out}
-            )
-
-    return _wav_preparse(media).mapInPandas(
-        batches, "doc_id long, payload binary"
-    )
-
-
-def multimodal_audio_downmix_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The composed pipeline: stereo fixture -> downmix -> mono stats
-    (two Arrow passes; the second consumes real WAV payloads the
-    first BUILT)."""
-    return audio_stats(audio_downmix(audio_table(spark, sf_dir, channels=2)))
-
-
-# closed-form oracle: mono frame f = floor((v[2f] + v[2f+1]) / 2) of
-# the interleaved formula. EXPLICIT floor(): DuckDB's // TRUNCATES
-# toward zero on negatives while numpy's floors toward -inf; the
-# float division is exact for these magnitudes
-MULTIMODAL_AUDIO_DOWNMIX_SQL = f"""
-WITH s AS (
-    SELECT doc_id,
-           list_transform(range(0, {WAV_SAMPLES // 2}), f ->
-               CAST(floor((
-                   (doc_id * 7 + (2 * f) * 13) % 2048 - 1024
-                   + (doc_id * 7 + (2 * f + 1) * 13) % 2048 - 1024
-               ) / 2.0) AS BIGINT)
-           ) AS v
-    FROM documents
-)
-SELECT doc_id,
-       CAST({WAV_RATE} AS INTEGER) AS sample_rate,
-       CAST(1 AS INTEGER) AS channels,
-       CAST({WAV_SAMPLES // 2} AS INTEGER) AS n_samples,
-       CAST(list_max(list_transform(v, x -> abs(x))) AS INTEGER) AS peak,
-       CAST(list_aggregate(list_transform(v, x -> abs(x)), 'sum')
-            AS BIGINT) AS sum_abs,
-       CAST(list_aggregate(list_transform(v, x -> x * x), 'sum')
-            AS BIGINT) AS sum_sq,
-       CAST(list_aggregate(
-            list_transform(range(1, {WAV_SAMPLES // 2}),
-                f -> CASE WHEN (v[f] < 0) != (v[f+1] < 0)
-                     THEN 1 ELSE 0 END),
-            'sum') AS INTEGER) AS zero_crossings
-FROM s
-"""
-
-
-# closed-form oracle: frame f, channel c of doc d is interleaved value
-# i = f*2 + c of the same sample formula the mono fixture uses
-MULTIMODAL_AUDIO_STATS_STEREO_SQL = f"""
-WITH ch AS (SELECT * FROM (VALUES (0), (1)) AS t(channel)),
-s AS (
-    SELECT doc_id, channel,
-           list_transform(range(0, {WAV_SAMPLES // 2}),
-                          f -> (doc_id * 7 + (2 * f + channel) * 13)
-                               % 2048 - 1024) AS v
-    FROM documents, ch
-)
-SELECT doc_id,
-       CAST(channel AS INTEGER) AS channel,
-       CAST({WAV_RATE} AS INTEGER) AS sample_rate,
-       CAST(2 AS INTEGER) AS channels,
-       CAST({WAV_SAMPLES // 2} AS INTEGER) AS n_frames,
-       CAST(list_max(list_transform(v, x -> abs(x))) AS INTEGER) AS peak,
-       CAST(list_aggregate(list_transform(v, x -> abs(x)), 'sum')
-            AS BIGINT) AS sum_abs,
-       CAST(list_aggregate(list_transform(v, x -> x * x), 'sum')
-            AS BIGINT) AS sum_sq,
-       CAST(list_aggregate(
-            list_transform(range(1, {WAV_SAMPLES // 2}),
-                f -> CASE WHEN (v[f] < 0) != (v[f+1] < 0)
-                     THEN 1 ELSE 0 END),
-            'sum') AS INTEGER) AS zero_crossings
-FROM s
-"""
-
-
 # --- blocked Hamming near-dup join over a hex fingerprint column -------------
-# Shared by the image dHash and audio energy-fingerprint paths: a
+# Used by the image dHash pairs and the streaming media index: a
 # fingerprint is 2*n_bands hex chars (one byte per band); candidates
 # come from C(n_bands, m) tables keyed on m-band concatenations (Manku
 # WWW'07), exact for Hamming <= n_bands - m; verification is per-band
@@ -1274,8 +602,8 @@ def _band_keys(
     """(doc_id, <hash_col>) frame -> (doc_id, <hash_col>, tbl, kk)
     blocked candidate keys: one row per C(n_bands, m) combination,
     keyed on the concatenation of that combination's bands. This IS
-    the probe/index layout — the inline miner self-joins it, and
-    ``build_media_neardup_index`` persists it."""
+    the probe/index layout — the inline miner self-joins it, and the
+    streaming media index (``streaming/media_ingest``) persists it."""
     import itertools
 
     if not (1 <= m <= n_bands):
@@ -1470,143 +798,6 @@ def image_neardup_pairs(
 
 IMAGE_NEARDUP_SQL = _band_neardup_sql(
     MULTIMODAL_IMAGE_STATS_SQL, "dhash", IMG_BANDS, IMG_BLOCK_M, IMG_MAX_HAMMING
-)
-
-
-# --- audio near-dup pairs over an energy-envelope fingerprint ----------------
-# The audio-side sibling of the dHash join: a Haitsma-Kalker-style
-# robust hash (ISMIR'02) reduced to its time-domain core — window
-# energies compared pairwise — which is what survives without an FFT
-# library in the container. Gain changes scale every window energy by
-# the same factor, so the comparisons (and the fingerprint) are
-# invariant, the property that makes it a near-dup signature.
-AFP_BITS = 64
-AFP_BANDS = 8  # one byte per band, same layout as the image dHash
-
-
-def audio_fingerprints(media: DataFrame) -> DataFrame:
-    """Decode every WAV payload and emit a 64-bit energy-envelope
-    fingerprint as 16 hex chars: the samples split into 64 equal
-    windows (n_samples must be divisible by 64), e_w = sum of squares
-    over window w, and bit w is set iff e_w > e_{(w+1) mod 64} — the
-    circular delta keeps all 64 bits meaningful. Byte b packs bits
-    8b..8b+7 big-endian, so band i of the hex string is byte i, the
-    exact layout ``_band_neardup_pairs`` keys on.
-
-    One mapInPandas pass, no shuffle. After the Python chunk-walk
-    parse, rows sharing a sample count stack into one numpy matrix
-    per batch — energies, circular deltas, and ``packbits`` all run
-    vectorized (the image-stats fast-path pattern; a 256-sample
-    square-sum loop in pure Python was the measured bottleneck). The
-    RIFF parse runs JVM-side via ``_wav_preparse`` for canonical
-    payloads."""
-    batch_decode = _make_batch_wav_decode()
-    group_runs = _make_group_runs()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            n = len(pdf)
-            if not n:
-                continue
-            doc_ids = pdf["doc_id"].to_numpy()
-            _, chans, raws, _ = batch_decode(pdf)
-            if (chans != 1).any():
-                # interleaved windows would mix channels into each
-                # energy — wrong fingerprint, not a degraded one
-                bad = int(chans[chans != 1][0])
-                raise ValueError(
-                    f"audio_fingerprints is mono-only, got {bad} "
-                    "channels — deinterleave upstream"
-                )
-            counts = np.fromiter(
-                (len(r) for r in raws), dtype=np.int64, count=n
-            ) // 2
-            bad_c = counts % AFP_BITS != 0
-            if bad_c.any():
-                raise ValueError(
-                    f"fingerprint needs n_samples divisible by "
-                    f"{AFP_BITS}, got {int(counts[bad_c][0])}"
-                )
-            fps: list[str | None] = [None] * n
-            for (c,), idx in group_runs(counts.reshape(-1, 1)):
-                s = np.frombuffer(
-                    b"".join(raws[i] for i in idx), dtype="<i2"
-                ).astype(np.int64).reshape(len(idx), c)
-                e = (s * s).reshape(len(idx), AFP_BITS, c // AFP_BITS).sum(
-                    axis=2
-                )
-                bits = e > np.roll(e, -1, axis=1)
-                packed = np.packbits(bits, axis=-1, bitorder="big")
-                for j, i in enumerate(idx):
-                    fps[i] = packed[j].tobytes().hex()
-            yield pd.DataFrame({"doc_id": doc_ids, "afp": fps})
-
-    return _wav_preparse(media).mapInPandas(
-        batches, "doc_id long, afp string"
-    )
-
-
-def multimodal_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return audio_fingerprints(audio_table(spark, sf_dir))
-
-
-# closed-form oracle over the same sample formula: 64 window energies,
-# circular strict-greater deltas, big-endian byte packing
-MULTIMODAL_AUDIO_FP_SQL = f"""
-WITH s AS (
-    SELECT doc_id,
-           list_transform(range(0, {WAV_SAMPLES}),
-                          i -> (doc_id * 7 + i * 13) % 2048 - 1024) AS v
-    FROM documents
-), e AS (
-    SELECT doc_id,
-           list_transform(range(0, {AFP_BITS}), w ->
-               list_aggregate(
-                   list_transform(range(0, {WAV_SAMPLES // AFP_BITS}),
-                       j -> v[w*{WAV_SAMPLES // AFP_BITS}+j+1]
-                            * v[w*{WAV_SAMPLES // AFP_BITS}+j+1]),
-                   'sum')) AS e
-    FROM s
-)
-SELECT doc_id,
-       array_to_string(list_transform(range(0, {AFP_BANDS}), b ->
-           lpad(lower(to_hex(list_aggregate(
-               list_transform(range(0, 8), j ->
-                   CASE WHEN e[8*b+j+1] > e[((8*b+j+1) % {AFP_BITS}) + 1]
-                        THEN (1 << (7 - j)) ELSE 0 END),
-               'sum'))), 2, '0')), '') AS afp
-FROM e
-"""
-
-
-AUDIO_MAX_HAMMING = 4
-AUDIO_BLOCK_M = 2
-
-
-def audio_neardup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = AUDIO_MAX_HAMMING,
-    m: int = AUDIO_BLOCK_M,
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Near-duplicate AUDIO pairs by fingerprint Hamming distance:
-    the blocked candidate scheme over ``audio_fingerprints``' 8 bands
-    — identical machinery, sizing rule, and exact-detection bound
-    (Hamming <= 8-m) as ``image_neardup_pairs``; see
-    ``_band_neardup_pairs``. Pass ``stats`` (a precomputed
-    (doc_id, afp) frame) to decouple the join from the synthetic
-    decode path."""
-    st = _hash_frame(
-        stats, "afp", lambda: audio_fingerprints(audio_table(spark, sf_dir))
-    )
-    return _band_neardup_pairs(st, "afp", AFP_BANDS, m, max_hamming)
-
-
-AUDIO_NEARDUP_SQL = _band_neardup_sql(
-    MULTIMODAL_AUDIO_FP_SQL, "afp", AFP_BANDS, AUDIO_BLOCK_M, AUDIO_MAX_HAMMING
 )
 
 
@@ -1991,32 +1182,6 @@ def multimodal_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return video_stats(video_table(spark, sf_dir))
 
 
-def multimodal_decode_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest health check across the three binary modalities — the
-    ``jsonl_corrupt_report`` of the media layer (round 12): each stats
-    op runs in quarantine mode and reduces to one row per modality
-    ``(modality, n_payloads, n_errors, sample_error)``. Each modality
-    is one scan + a global aggregate (map-side partials, a few bytes
-    per task — no wide shuffle); corrupt payloads are counted and
-    sampled, never fatal. Note the video row counts payloads that
-    yielded at least one frame OR an error — a VALID zero-frame AVI
-    contributes no row to ``video_stats`` and so none here."""
-    parts = []
-    for modality, df in (
-        ("image", image_stats(image_table(spark, sf_dir), on_error="quarantine")),
-        ("audio", audio_stats(audio_table(spark, sf_dir), on_error="quarantine")),
-        ("video", video_stats(video_table(spark, sf_dir), on_error="quarantine")),
-    ):
-        parts.append(
-            df.agg(
-                F.countDistinct("doc_id").alias("n_payloads"),
-                F.count("decode_error").alias("n_errors"),
-                F.min("decode_error").alias("sample_error"),
-            ).select(F.lit(modality).alias("modality"), "*")
-        )
-    return parts[0].unionByName(parts[1]).unionByName(parts[2])
-
-
 # closed-form oracle over the LOGICAL pixel formula — the Spark side
 # must round-trip the values through the full storage layout (RIFF
 # build -> bottom-up BGR padded rows -> parse -> normalize) to match
@@ -2056,52 +1221,6 @@ FROM g
 """
 
 
-VIDEO_MAX_HAMMING = 4
-VIDEO_BLOCK_M = 2
-
-
-def video_neardup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = VIDEO_MAX_HAMMING,
-    m: int = VIDEO_BLOCK_M,
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Near-duplicate VIDEO pairs by FRAME-level dHash matching — two
-    videos are near-dups when ANY sampled frame of one is within
-    Hamming <= max_hamming of any frame of the other, the standard
-    shared-frame video-dedup criterion (a clip re-encode, trim, or
-    re-title keeps most frames). Machinery: the same blocked band
-    join (``_band_neardup_pairs``) runs over FRAME rows (a doc
-    contributes VID_FRAMES hash rows), then a doc-pair min-Hamming
-    aggregate collapses frame matches — one extra fine-grained
-    Exchange on (doc_a, doc_b), no quadratic stage anywhere.
-    Intra-video frame matches are excluded by the helper's
-    doc_a < doc_b candidate filter. Pass ``stats`` (a precomputed
-    (doc_id, dhash) frame-rows frame) to decouple the join from the
-    synthetic decode path."""
-    st = _hash_frame(
-        stats,
-        "dhash",
-        lambda: video_stats(video_table(spark, sf_dir)).select(
-            "doc_id", "dhash"
-        ),
-    )
-    pairs = _band_neardup_pairs(st, "dhash", IMG_BANDS, m, max_hamming)
-    return pairs.groupBy("doc_a", "doc_b").agg(
-        F.min("hamming").cast("int").alias("hamming")
-    )
-
-
-VIDEO_NEARDUP_SQL = f"""
-SELECT doc_a, doc_b, CAST(min(hamming) AS INTEGER) AS hamming
-FROM ({_band_neardup_sql(
-    MULTIMODAL_VIDEO_STATS_SQL, "dhash", IMG_BANDS,
-    VIDEO_BLOCK_M, VIDEO_MAX_HAMMING)})
-GROUP BY doc_a, doc_b
-"""
-
-
 # --- incremental near-dup ingest over a persisted band index -----------------
 # The multimodal sibling of dedup.build_neardup_index/neardup_ingest:
 # a 100 TB pipeline maintains the exploded (tbl, key) band table of
@@ -2117,76 +1236,6 @@ GROUP BY doc_a, doc_b
 # rows serialize to ~25 B, so the cap is a few hundred MB broadcast —
 # deliberately above dedup.HOT_BROADCAST_MAX, which prices FULL rows.
 _KEY_BROADCAST_MAX = 16_000_000
-
-
-def build_media_neardup_index(
-    st: DataFrame,
-    index_dir: str,
-    hash_col: str,
-    n_bands: int,
-    m: int,
-) -> None:
-    """Persist a fingerprint frame's blocked band table (the exact
-    ``_band_keys`` layout the inline miner self-joins, so candidate
-    semantics cannot drift) plus a one-row ``meta`` parquet recording
-    the geometry. Ingest reads ``m`` FROM the meta — a probe exploded
-    with a different ``m`` would produce different-length keys and
-    silently join to nothing, so the geometry is index state, not a
-    caller argument. Maintenance contract: after an ingest is
-    accepted, append the batch's band rows (per-doc increment,
-    nothing global recomputes). A production layout would bucket by
-    (tbl, kk) for probe-side scan pruning; plain parquet keeps the
-    fixture honest (the probe is a broadcast hash join against a scan
-    either way)."""
-    spark = st.sparkSession
-    _band_keys(st, hash_col, n_bands, m).write.mode("overwrite").parquet(
-        f"{index_dir}/bands"
-    )
-    from fledge_south_csvplayback_spark.operators.inline import (
-        literal_rows_df,
-    )
-
-    literal_rows_df(
-        spark, [(hash_col, n_bands, m)], "hash_col string, n_bands int, m int"
-    ).write.mode("overwrite").parquet(f"{index_dir}/meta")
-
-
-def media_index_append(
-    spark: SparkSession,
-    index_dir: str,
-    batch_st: DataFrame,
-) -> None:
-    """The maintenance step after an ingest batch is ACCEPTED: append
-    the batch's band rows to the index so the next batch probes
-    against them. Per-doc increment — nothing global recomputes, the
-    geometry comes from the index's own meta, and the appended rows
-    are the same ``_band_keys`` layout the builder writes, so
-    build(corpus)+append(batch) ≡ build(corpus ∪ batch) row-for-row
-    (pinned by the sequential-ingest pytest).
-
-    STREAMING indexes are refused (round-14 advice item): once
-    ``media_ingest.compact_media_index`` has promoted a version, the
-    live band table is whatever ``bands_MANIFEST`` names — an append
-    into the literal ``bands`` dir would land in the SUPERSEDED
-    directory, invisible to every manifest-resolving probe and
-    deleted by the next compaction's deferred sweep. Streaming
-    indexes take appends through ``media_ingest.media_accept_batch``
-    (per-partition overwrite, re-delivery idempotent), which this
-    flat-layout append cannot emulate."""
-    from fledge_south_csvplayback_spark.operators import compaction
-
-    manifest = compaction.manifest_name("bands")
-    if os.path.exists(os.path.join(index_dir, manifest)):
-        raise ValueError(
-            f"{index_dir} is a compacted STREAMING media index "
-            "(bands_MANIFEST present): a flat append here would land "
-            "in a superseded directory and be swept — append through "
-            "media_ingest.media_accept_batch instead"
-        )
-    meta = spark.read.parquet(f"{index_dir}/meta").collect()[0]
-    _band_keys(batch_st, meta.hash_col, meta.n_bands, meta.m).write.mode(
-        "append"
-    ).parquet(f"{index_dir}/bands")
 
 
 def _probe_pairs(
@@ -2245,285 +1294,6 @@ def _probe_pairs(
         batch_keys, hash_col, n_bands, max_hamming
     )
     return cross.unionByName(within)
-
-
-def media_neardup_ingest(
-    spark: SparkSession,
-    index_dir: str,
-    batch_st: DataFrame,
-    hash_col: str,
-    n_bands: int,
-    max_hamming: int,
-    split_id: int | None = None,
-    per_doc_min: bool = False,
-) -> DataFrame:
-    """Near-dup pairs an ingest batch introduces — against the
-    existing corpus (via the persisted band index) and within itself —
-    without re-mining the corpus. Output: exactly the full-corpus
-    miner's (doc_a, doc_b, hamming) pairs that touch a batch doc
-    (pinned by the agreement pytest).
-
-    Work shape (the reason this op exists): the batch's band rows are
-    computed in one batch-sized pass and — guarded by the
-    ``HOT_BROADCAST_MAX`` policy, a multi-million-row batch degrades
-    to a shuffle rather than a broadcast OOM — BROADCAST against one
-    scan of the index's band table: the corpus is scanned, never
-    shuffled, and verification is inline (the fingerprints ride the
-    candidate rows; no second corpus access of any kind). Within-batch
-    pairs reuse the inline miner on the batch alone. Cross and within
-    pair sets are disjoint (one endpoint in corpus vs both in batch),
-    so the union needs no dedup.
-
-    ``split_id`` filters the index to pre-batch docs (the staged-test
-    contract, mirroring ``dedup.neardup_ingest``: an index that
-    already contains the batch's own rows would duplicate every
-    within-batch pair as a cross pair). ``per_doc_min`` enables the
-    video semantics: inputs are FRAME rows and the output collapses
-    to doc pairs by min-Hamming."""
-    meta = spark.read.parquet(f"{index_dir}/meta").collect()[0]
-    if (meta.hash_col, meta.n_bands) != (hash_col, n_bands):
-        raise ValueError(
-            f"index at {index_dir!r} holds {meta.hash_col!r}/"
-            f"{meta.n_bands} bands, queried as {hash_col!r}/{n_bands}"
-        )
-    m = meta.m
-    _check_block_bound(n_bands, m, max_hamming)
-    batch_keys = _band_keys(batch_st, hash_col, n_bands, m).cache()
-    idx = spark.read.parquet(f"{index_dir}/bands")
-    if split_id is not None:
-        idx = idx.filter(F.col("doc_id") < split_id)
-    out = _probe_pairs(idx, batch_keys, hash_col, n_bands, max_hamming)
-    if per_doc_min:
-        out = out.groupBy("doc_a", "doc_b").agg(
-            F.min("hamming").cast("int").alias("hamming")
-        )
-    return out
-
-
-def build_image_neardup_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    m: int = IMG_BLOCK_M,
-    max_doc_id: int | None = None,
-    stats: DataFrame | None = None,
-) -> None:
-    st = _hash_frame(
-        stats,
-        "dhash",
-        lambda: image_stats(image_table(spark, sf_dir)).select(
-            "doc_id", "dhash"
-        ),
-    )
-    if max_doc_id is not None:
-        st = st.filter(F.col("doc_id") < max_doc_id)
-    build_media_neardup_index(st, index_dir, "dhash", IMG_BANDS, m)
-
-
-def image_neardup_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    split_id: int,
-    max_hamming: int = IMG_MAX_HAMMING,
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Image near-dup pairs introduced by the ``doc_id >= split_id``
-    batch, probed against a ``build_image_neardup_index`` index. Pass
-    ``stats`` (full-corpus (doc_id, dhash)) to decouple from the
-    synthetic decode path; it is filtered to the batch here."""
-    st = _hash_frame(
-        stats,
-        "dhash",
-        lambda: image_stats(image_table(spark, sf_dir)).select(
-            "doc_id", "dhash"
-        ),
-    ).filter(F.col("doc_id") >= split_id)
-    return media_neardup_ingest(
-        spark, index_dir, st, "dhash", IMG_BANDS, max_hamming, split_id
-    )
-
-
-def build_audio_neardup_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    m: int = AUDIO_BLOCK_M,
-    max_doc_id: int | None = None,
-    stats: DataFrame | None = None,
-) -> None:
-    st = _hash_frame(
-        stats, "afp", lambda: audio_fingerprints(audio_table(spark, sf_dir))
-    )
-    if max_doc_id is not None:
-        st = st.filter(F.col("doc_id") < max_doc_id)
-    build_media_neardup_index(st, index_dir, "afp", AFP_BANDS, m)
-
-
-def audio_neardup_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    split_id: int,
-    max_hamming: int = AUDIO_MAX_HAMMING,
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    st = _hash_frame(
-        stats, "afp", lambda: audio_fingerprints(audio_table(spark, sf_dir))
-    ).filter(F.col("doc_id") >= split_id)
-    return media_neardup_ingest(
-        spark, index_dir, st, "afp", AFP_BANDS, max_hamming, split_id
-    )
-
-
-def build_video_neardup_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    m: int = VIDEO_BLOCK_M,
-    max_doc_id: int | None = None,
-    stats: DataFrame | None = None,
-) -> None:
-    """Video index rows are FRAME-level (a doc contributes VID_FRAMES
-    band-row groups); the ingest's min-Hamming collapse restores doc
-    pairs."""
-    st = _hash_frame(
-        stats,
-        "dhash",
-        lambda: video_stats(video_table(spark, sf_dir)).select(
-            "doc_id", "dhash"
-        ),
-    )
-    if max_doc_id is not None:
-        st = st.filter(F.col("doc_id") < max_doc_id)
-    build_media_neardup_index(st, index_dir, "dhash", IMG_BANDS, m)
-
-
-def video_neardup_ingest(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    split_id: int,
-    max_hamming: int = VIDEO_MAX_HAMMING,
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    st = _hash_frame(
-        stats,
-        "dhash",
-        lambda: video_stats(video_table(spark, sf_dir)).select(
-            "doc_id", "dhash"
-        ),
-    ).filter(F.col("doc_id") >= split_id)
-    return media_neardup_ingest(
-        spark,
-        index_dir,
-        st,
-        "dhash",
-        IMG_BANDS,
-        max_hamming,
-        split_id,
-        per_doc_min=True,
-    )
-
-
-# --- diff-driven index maintenance --------------------------------------------
-# Composes curation.corpus_diff with the persisted band index: a new
-# crawl's churn (added/changed/removed docs) maps to exactly the
-# (tbl, kk) key groups whose rows move, and the index advances by a
-# churn-sized copy-on-write rewrite instead of a full re-explode of
-# the corpus hashes (the diff_shards_to_recompute precedent, applied
-# to index state instead of training shards).
-
-
-def media_index_maintenance_plan(
-    spark: SparkSession,
-    index_dir: str,
-    diff: DataFrame,
-    new_stats: DataFrame,
-) -> DataFrame:
-    """``corpus_diff`` churn + the new snapshot's hashes -> the
-    distinct (tbl, kk) band-key groups a rewrite must touch:
-    (tbl, kk, n_remove, n_add). Row-movement accounting for a bucketed
-    (tbl, kk) index layout — the partitions NOT in this plan are
-    byte-identical before and after, which is what lets a 100 TB
-    deployment rewrite only churn-touched buckets.
-
-    Work shape: the diff is churn-sized, so both sides are cheap —
-    stale keys come from ONE scan of the index semi-joined (broadcast,
-    ``HOT_BROADCAST_MAX``-guarded) by the leaving doc_ids; new keys
-    explode from the churn docs' hashes only. One fine-grained
-    (tbl, kk) aggregate over the union; neither snapshot is scanned."""
-    from fledge_south_csvplayback_spark.operators.curation import churn_split
-
-    meta = spark.read.parquet(f"{index_dir}/meta").collect()[0]
-    gone, fresh = churn_split(diff)
-    stale = (
-        spark.read.parquet(f"{index_dir}/bands")
-        .join(gone, "doc_id", "left_semi")
-        .select("tbl", "kk", F.lit(1).alias("rm"), F.lit(0).alias("ad"))
-    )
-    minted = (
-        _band_keys(
-            new_stats.join(fresh, "doc_id", "left_semi"),
-            meta.hash_col,
-            meta.n_bands,
-            meta.m,
-        ).select("tbl", "kk", F.lit(0).alias("rm"), F.lit(1).alias("ad"))
-    )
-    return (
-        stale.unionByName(minted)
-        .groupBy("tbl", "kk")
-        .agg(
-            F.sum("rm").cast("bigint").alias("n_remove"),
-            F.sum("ad").cast("bigint").alias("n_add"),
-        )
-    )
-
-
-def media_index_apply_diff(
-    spark: SparkSession,
-    index_dir: str,
-    diff: DataFrame,
-    new_stats: DataFrame,
-    out_dir: str,
-) -> None:
-    """Advance the band index to the new snapshot: copy-on-write to
-    ``out_dir`` (parquet cannot rewrite in place; versioned index dirs
-    are also what lets in-flight ingests finish against the old
-    snapshot). Carried rows = old bands anti-joined by the leaving
-    doc_ids (broadcast-guarded — the corpus-sized side never
-    shuffles); minted rows = the churn docs' hashes exploded through
-    the SAME ``_band_keys`` the full builder uses, so the result is
-    row-identical to a full rebuild from the new snapshot (the
-    reconciliation pytest pins frame equality, and the plan above is
-    exactly the touched-key support of the rewrite)."""
-    from fledge_south_csvplayback_spark.operators.curation import (
-        _paths_overlap,
-        churn_split,
-    )
-
-    if _paths_overlap(out_dir, index_dir):
-        raise ValueError(
-            f"media_index_apply_diff: out_dir {out_dir!r} collides with "
-            "the index read path"
-        )
-    meta = spark.read.parquet(f"{index_dir}/meta").collect()[0]
-    gone, fresh = churn_split(diff)
-    carried = spark.read.parquet(f"{index_dir}/bands").join(
-        gone, "doc_id", "left_anti"
-    )
-    minted = _band_keys(
-        new_stats.join(fresh, "doc_id", "left_semi"),
-        meta.hash_col,
-        meta.n_bands,
-        meta.m,
-    )
-    carried.unionByName(minted).write.mode("overwrite").parquet(
-        f"{out_dir}/bands"
-    )
-    spark.read.parquet(f"{index_dir}/meta").write.mode("overwrite").parquet(
-        f"{out_dir}/meta"
-    )
 
 
 # --- image resize (box downsample) -------------------------------------------

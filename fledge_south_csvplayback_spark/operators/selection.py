@@ -471,70 +471,3 @@ GROUP BY 1
 
 
 CORPUS_SOURCE_DIVERGENCE_SQL = _source_divergence_sql()
-
-
-# --- selected-corpus materializer ---------------------------------------------
-def write_dsir_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    target_source: str = "src1",
-    n_select: int = DSIR_TOP_N,
-    buckets: int = DSIR_BUCKETS,
-    smooth: float = DSIR_SMOOTH,
-    hash_method: str = "md5",
-    share_scan: bool | None = None,
-) -> DataFrame:
-    """Materialize a DSIR-selected corpus end-to-end WITHOUT the
-    recompute trap: the weights pass runs ONCE, lands on disk, and the
-    selection derives from the written frame.
-
-    A naive ``corpus_dsir_select`` call after a ``dsir_logweights``
-    diagnostic pass re-derives the weights from the corpus — at 10M
-    docs that repaid the full two-scan cost on top of the weights pass
-    (78.9 s + 71.0 s, BASELINE.md §Round 9). This writer is the
-    composed path: (1) ``dsir_logweights`` -> parquet at
-    ``out_dir/dsir_weights.parquet`` — the reusable diagnostic /
-    multi-cut artifact; (2) the selection reads THAT (so its plan is a
-    ≤3-column parquet scan + TakeOrderedAndProject — no gram explode,
-    no fit/score Exchanges); (3) the ≤``n_select``-row selection
-    broadcast-joins back to ``documents`` to materialize the selected
-    docs (with their ``score``) at ``out_dir/dsir_selected.parquet``,
-    in one narrow corpus scan. The corpus is scanned twice total
-    (weights + row fetch) regardless of how many cuts are later taken
-    from the weights artifact.
-
-    Returns the selected-corpus DataFrame (read back from disk, so
-    callers compose on the materialized artifact, not the live plan).
-    The overwrite guard from ``write_scrubbed_documents`` applies."""
-    from fledge_south_csvplayback_spark.operators.curation import (
-        _paths_overlap,
-    )
-
-    if _paths_overlap(out_dir, sf_dir):
-        raise ValueError(
-            f"write_dsir_corpus: out_dir {out_dir!r} collides with the "
-            "corpus read path"
-        )
-    weights_path = f"{out_dir}/dsir_weights.parquet"
-    selected_path = f"{out_dir}/dsir_selected.parquet"
-    dsir_logweights(
-        spark, sf_dir, target_source, buckets, smooth, hash_method,
-        share_scan,
-    ).write.mode("overwrite").parquet(weights_path)
-
-    selection = corpus_dsir_select(
-        spark,
-        sf_dir,
-        n_select=n_select,
-        weights=spark.read.parquet(weights_path),
-    )
-    docs = _docs(spark, sf_dir)
-    (
-        docs.join(
-            F.broadcast(selection.select("doc_id", "score")), "doc_id"
-        )
-        .write.mode("overwrite")
-        .parquet(selected_path)
-    )
-    return spark.read.parquet(selected_path)

@@ -18,9 +18,7 @@ Two paths, per the training-pipeline brief:
   original explode + broadcast-join + dedup plan shipped (vec, norm)
   arrays per candidate (30.2 GB at 10M×64-d) and paid an interpreted
   Catalyst dot per candidate (297 s); the mask plan measured 97.8 s /
-  40 KB shuffle, recall@5 1.0, identical output. ``build_lsh_index``
-  is the amortized deployment: (band, key)-partitioned parquet whose
-  queries prune to their own buckets and run no hyperplane math.
+  40 KB shuffle, recall@5 1.0, identical output.
   Because the hyperplanes are *literal* double arrays (not runtime
   hashes), the identical buckets are rebuilt in the DuckDB oracle by
   embedding the same literals in the SQL — the LSH entries are fully
@@ -44,8 +42,6 @@ import struct
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from fledge_south_csvplayback_spark.operators.curation import churn_split
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -693,10 +689,8 @@ def _coarse_centroids(
     centroids: str,
     kmeans_iters: int,
 ) -> list[tuple]:
-    """ONE implementation of the coarse-quantizer selection rule,
-    shared by ``build_ivf_index`` and ``build_ivfpq_index`` (review
-    finding: a copied block means a tie-break or mode change silently
-    misses one index type). Returns sorted (cell_id, vector, norm)
+    """The coarse-quantizer selection rule of ``build_ivf_index``.
+    Returns sorted (cell_id, vector, norm)
     tuples: ``"head"`` = the deterministic first-``cells``-vectors
     rule (cell ids are those vec_ids), ``"kmeans"`` = ``kmeans_fit``
     Lloyd centroids (cell ids 0..cells-1)."""
@@ -906,143 +900,11 @@ def ann_cosine_topk_ivf_via_index(spark: SparkSession, sf_dir: str) -> DataFrame
     return ann_cosine_topk_ivf_indexed(spark, sf_dir, idx)
 
 
-# --- diff-driven IVF index maintenance ----------------------------------------
-# The cell_id sibling of multimodal.media_index_maintenance_plan: a
-# crawl's vector churn maps to exactly the cell partitions whose rows
-# move, and the index advances by rewriting ONLY those partition
-# directories (dynamic partition overwrite) — the other cells' files
-# are untouched bytes, which is the whole point of the
-# partitionBy(cell_id) layout at 100 TB.
-
-
 def _read_centroids(spark: SparkSession, index_dir: str) -> list[tuple]:
     return sorted(
         (r.cell_id, list(r.cv), r.cn)
         for r in spark.read.parquet(f"{index_dir}/_centroids").collect()
     )
-
-
-def ivf_index_maintenance_plan(
-    spark: SparkSession,
-    index_dir: str,
-    diff: DataFrame,
-    new_emb: DataFrame,
-) -> DataFrame:
-    """Vector churn (vec_id, status) + the new snapshot's (vec_id, v)
-    rows -> the cell partitions a rewrite must touch:
-    (cell_id, n_remove, n_add). Leaving vecs' cells come from ONE
-    index scan semi-joined (broadcast — churn-sized) by the leaving
-    ids; entering vecs assign through the index's own persisted
-    centroids via the same GEMM the builder uses. Cells absent from
-    this plan are byte-identical before and after the apply."""
-    cents = _read_centroids(spark, index_dir)
-    gone, fresh = churn_split(diff, "vec_id")
-    stale = (
-        spark.read.parquet(index_dir)
-        .join(gone, "vec_id", "left_semi")
-        .select("cell_id", F.lit(1).alias("rm"), F.lit(0).alias("ad"))
-    )
-    entering = new_emb.join(fresh, "vec_id", "left_semi")
-    minted = _assign_cells(
-        entering.select("vec_id", "v", _norm(F.col("v")).alias("norm")),
-        cents,
-    ).select("cell_id", F.lit(0).alias("rm"), F.lit(1).alias("ad"))
-    return (
-        stale.unionByName(minted)
-        .groupBy("cell_id")
-        .agg(
-            F.sum("rm").cast("bigint").alias("n_remove"),
-            F.sum("ad").cast("bigint").alias("n_add"),
-        )
-    )
-
-
-def ivf_index_apply_diff(
-    spark: SparkSession,
-    index_dir: str,
-    diff: DataFrame,
-    new_emb: DataFrame,
-) -> list[int]:
-    """Advance the IVF index to the new snapshot IN PLACE, rewriting
-    only the churn-touched cell partitions: carried rows of those
-    cells (minus leaving vecs) plus the entering vecs' newly-assigned
-    rows are eagerly materialized (``localCheckpoint`` — the write
-    overwrites the very files the carried rows came from, so lineage
-    to them must be severed first), then written with DYNAMIC
-    partition overwrite, which replaces exactly the partitions present
-    in the written data. Untouched cells keep their files byte-for-
-    byte (pinned in tests). Returns the rewritten cell_ids.
-
-    Trade, stated: in-place dynamic overwrite has a failure window on
-    the touched partitions (a torn job can lose them); a deployment
-    wanting snapshot isolation runs the same op against a versioned
-    table format — the partition-level churn math is identical. The
-    media band index takes the copy-on-write road instead
-    (``media_index_apply_diff``); this op demonstrates the in-place
-    one because the IVF index is corpus-sized and a full copy per
-    crawl is the cost being avoided."""
-    cents = _read_centroids(spark, index_dir)
-    gone, fresh = churn_split(diff, "vec_id")
-    idx = spark.read.parquet(index_dir)
-    touched_old = (
-        idx.join(gone, "vec_id", "left_semi")
-        .select("cell_id")
-        .distinct()
-    )
-    entering = new_emb.join(fresh, "vec_id", "left_semi")
-    # eager: minted feeds both the touched-cell collect and the write
-    # below — without the barrier the entering vecs' GEMM assignment
-    # runs twice
-    minted = _assign_cells(
-        entering.select("vec_id", "v", _norm(F.col("v")).alias("norm")),
-        cents,
-    ).localCheckpoint(eager=True)
-    touched = sorted(
-        r.cell_id
-        for r in touched_old.unionByName(
-            minted.select("cell_id").distinct()
-        )
-        .distinct()
-        .collect()
-    )
-    carried = (
-        idx.filter(F.col("cell_id").isin(touched))
-        .join(gone, "vec_id", "left_anti")
-        .select("vec_id", "v", "norm", "cell_id")
-    )
-    out = carried.unionByName(
-        minted.select("vec_id", "v", "norm", "cell_id")
-    ).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("cell_id").parquet(index_dir)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
-    # dynamic overwrite only replaces partitions PRESENT in the
-    # written data: a touched cell whose vectors ALL leave (none
-    # enter) writes no cell_id=<k> rows, so its directory — stale
-    # removed vectors included — would survive. Delete emptied cells'
-    # partition directories explicitly (Hadoop FS API, so any scheme
-    # works, not just file://).
-    survivors = {
-        r.cell_id for r in out.select("cell_id").distinct().collect()
-    }
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for cell in touched:
-        if cell not in survivors:
-            path = jvm.org.apache.hadoop.fs.Path(
-                f"{index_dir}/cell_id={cell}"
-            )
-            fs = path.getFileSystem(hconf)
-            fs.delete(path, True)
-    return touched
 
 
 def ann_cosine_topk_lsh(
@@ -1116,79 +978,6 @@ def ann_cosine_topk_lsh(
     return _rank_topk(partial)
 
 
-def build_lsh_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """Ingest-time LSH band index: explode every vector into its 8
-    (band, key) buckets ONCE and persist (vec_id, v, norm) parquet
-    partitioned by (band, key) — the amortized deployment the inline
-    entry's numbers call for (its residual cost is re-computing the 16
-    hyperplane dots per row per query; see ``ann_cosine_topk_lsh``).
-
-    The honest LSH-index trade, stated: storage is bands× the corpus
-    (8× here), bought back at query time by partition pruning — a
-    query probes its |bands| buckets out of bands·2^bits directories
-    (8 of 32 here), so the scan reads ~1/4 of the index and NONE of
-    the hyperplane math runs at query time. Band keys come from the
-    same Catalyst expression as the inline entry, so bucket membership
-    is bit-identical across both paths and the oracle."""
-    emb = _emb(spark, sf_dir, scorable=True).withColumn("norm", _norm(F.col("v")))
-    banded = emb.withColumn("bk", F.explode(_lsh_bands(F.col("v")))).select(
-        "vec_id", "v", "norm", F.col("bk.band").alias("band"),
-        F.col("bk.key").alias("key"),
-    )
-    banded.write.mode("overwrite").partitionBy("band", "key").parquet(
-        index_dir
-    )
-
-
-def ann_cosine_topk_lsh_indexed(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> DataFrame:
-    """LSH ANN over a ``build_lsh_index`` output: read ONLY the
-    queries' band buckets (partition pruning — the (band, key) IN
-    predicate reaches PartitionFilters, pinned in tests), GEMM-score
-    the pruned candidates per batch, collapse multi-bucket hits, rank.
-
-    A vector co-bucketed with a query in several bands is read once
-    per such bucket, so duplicates arise at TWO levels and both are
-    handled: within one Arrow batch the scorer's ``bucket_rows`` mode
-    dedups by vec_id BEFORE truncating to top-k (or duplicate rows
-    would eat slots and could evict a distinct true winner), and
-    across batches the groupBy-max collapse merges the identical
-    rounded cosines before the global rank. Not driver-registered
-    (needs the side index); the pytest asserts exact agreement with
-    the inline ``ann_cosine_topk_lsh``."""
-    emb = _emb(spark, sf_dir, scorable=True).withColumn("norm", _norm(F.col("v")))
-    keyed = emb.withColumn(
-        "keys", F.transform(_lsh_bands(F.col("v")), lambda bk: bk["key"])
-    )
-    qrows = keyed.filter(F.col("vec_id") < N_QUERIES).collect()
-    qmat = [
-        (r["vec_id"], list(r["v"]), r["norm"], list(r["keys"]))
-        for r in qrows
-    ]
-    wanted = F.lit(False)
-    for _, _, _, keys in qmat:
-        for band, key in enumerate(keys):
-            wanted = wanted | (
-                (F.col("band") == band) & (F.col("key") == int(key))
-            )
-    idx = (
-        spark.read.parquet(index_dir)
-        .filter(wanted)
-        .select("vec_id", "v", "norm", "band", "key")
-    )
-    partial = idx.mapInPandas(
-        _masked_partial_topk(qmat, mode="bucket_rows"),
-        "query_id long, vec_id long, cosine double",
-    )
-    collapsed = partial.groupBy("query_id", "vec_id").agg(
-        F.max("cosine").alias("cosine")
-    )
-    return _rank_topk(collapsed)
-
-
 def _ann_cosine_topk_lsh_sql() -> str:
     return f"""
 WITH {_banded_sql()},
@@ -1215,159 +1004,6 @@ SELECT query_id, rank, vec_id, cosine FROM r WHERE rank <= {TOP_K}
 
 
 ANN_COSINE_TOPK_LSH_SQL = _ann_cosine_topk_lsh_sql()
-
-
-# --- embedding near-dup clusters ---------------------------------------------
-def embedding_clusters(
-    spark: SparkSession, sf_dir: str, max_iters: int = 20
-) -> DataFrame:
-    """Connected components over the embedding near-dup pair graph
-    (``embedding_cosine_pairs``) — the vector-space mirror of
-    ``dedup.dedup_clusters``: every vector in any above-threshold
-    pair, labeled with its component's min vec_id, keep = the
-    representative. The same shared min-label propagation runs on the
-    pair output; the oracle rebuilds the identical pairs (literal
-    hyperplanes) and closes them with a recursive CTE."""
-    from fledge_south_csvplayback_spark.operators.dedup import (
-        connected_components,
-    )
-
-    pairs = embedding_cosine_pairs(spark, sf_dir).select("vec_a", "vec_b")
-    return connected_components(pairs, "vec_a", "vec_b", "vec_id", max_iters)
-
-
-def _embedding_clusters_sql() -> str:
-    from fledge_south_csvplayback_spark.operators.dedup import closure_ctes
-
-    return f"""
-WITH RECURSIVE {closure_ctes(EMBEDDING_COSINE_PAIRS_SQL, "vec_a", "vec_b")}
-SELECT s AS vec_id, MIN(d) AS cluster_id,
-       s = MIN(d) AS keep
-FROM reach GROUP BY s
-"""
-
-
-EMBEDDING_CLUSTERS_SQL = _embedding_clusters_sql()
-
-
-# --- distributed PCA over the embedding column -------------------------------
-PCA_K = 8
-
-
-def pca_model(
-    spark: SparkSession, sf_dir: str, k: int = PCA_K
-) -> tuple[list[float], list[list[float]], list[float]]:
-    """Fit PCA via the one-pass moment sketch — the covariance route
-    that scales to any row count because per-task state is d² doubles,
-    never the data: each Arrow batch contributes (n, Σx, flattened
-    Σxxᵀ) partials; the ≤ #tasks partial rows are reduced on the
-    driver (metadata-scale, same class as the IVF centroid collect);
-    the d×d covariance ``Σxxᵀ/n − μμᵀ`` is eigendecomposed with
-    ``numpy.linalg.eigh``. Deterministic output: eigh's ascending
-    eigenvalues are reversed for the top-k, and each component's sign
-    is fixed so its largest-|coordinate| entry is positive (sign is
-    the one genuine ambiguity of PCA; pinning it makes the model — and
-    the SQL oracle built from it — reproducible).
-
-    Returns (mean, components [k×d, row-major], explained_variance
-    [k eigenvalues]).
-    """
-    import numpy as np
-
-    def _moments(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["v"].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "n": [len(m)],
-                    "s": [m.sum(axis=0).tolist()],
-                    "ss": [(m.T @ m).ravel().tolist()],
-                }
-            )
-
-    parts = (
-        _emb(spark, sf_dir)
-        .mapInPandas(_moments, "n long, s array<double>, ss array<double>")
-        .collect()
-    )
-    if not parts:
-        raise ValueError("pca_model: embeddings table is empty")
-    n = sum(p["n"] for p in parts)
-    s = np.sum([p["s"] for p in parts], axis=0)
-    ss = np.sum([p["ss"] for p in parts], axis=0)
-    d = len(s)
-    if not 0 < k <= d:
-        # negative indices would silently wrap around and re-emit the
-        # top eigenvectors as duplicate "extra" components
-        raise ValueError(f"pca_model: need 0 < k <= dim, got k={k}, dim={d}")
-    mean = s / n
-    cov = ss.reshape(d, d) / n - np.outer(mean, mean)
-    evals, evecs = np.linalg.eigh(cov)
-    comps = []
-    variances = []
-    for idx in range(d - 1, d - 1 - k, -1):
-        vec = evecs[:, idx]
-        if vec[int(np.argmax(np.abs(vec)))] < 0:
-            vec = -vec
-        comps.append([float(x) for x in vec])
-        variances.append(float(evals[idx]))
-    return [float(x) for x in mean], comps, variances
-
-
-def embedding_pca(
-    spark: SparkSession, sf_dir: str, k: int = PCA_K
-) -> DataFrame:
-    """Project every embedding onto its corpus's top-k principal
-    components (dimensionality reduction ahead of clustering /
-    visualization / cheaper ANN). Two phases:
-
-    1. fit — ``pca_model``'s one-pass moment sketch (see there);
-    2. transform — the k×d component matrix and the k precomputed
-       ``μ·c_j`` offsets ship as LITERALS, so the projection is a pure
-       Catalyst expression (one ``zip_with``/``aggregate`` dot per
-       component), codegen'd at scan speed: zero shuffle, zero Python
-       in the per-row path (pinned in tests).
-
-    Output: (vec_id, pc array<double> of length k), each coordinate
-    rounded to 6 like every cross-engine float in this repo.
-    """
-    mean, comps, _ = pca_model(spark, sf_dir, k)
-    mean_dots = [sum(m * c for m, c in zip(mean, comp)) for comp in comps]
-    projections = [
-        F.round(
-            _dot(F.col("v"), F.array(*[F.lit(x) for x in comp])) - F.lit(md),
-            6,
-        )
-        for comp, md in zip(comps, mean_dots)
-    ]
-    return _emb(spark, sf_dir).select(
-        "vec_id", F.array(*projections).alias("pc")
-    )
-
-
-def _pca_sql(mean: list[float], comps: list[list[float]]) -> str:
-    """DuckDB oracle for the transform phase, built from the SAME
-    fitted model literals (the fit itself is numpy-deterministic, so
-    cross-engine agreement of the projection is the meaningful
-    check)."""
-    cols = []
-    for comp, md in zip(
-        comps, [sum(m * c for m, c in zip(mean, comp)) for comp in comps]
-    ):
-        lit = "[" + ", ".join(repr(x) for x in comp) + "]"
-        cols.append(
-            "ROUND(list_dot_product(list_transform(embedding, x -> "
-            f"CAST(x AS DOUBLE)), {lit}) - ({md!r}), 6)"
-        )
-    return (
-        f"SELECT vec_id, [{', '.join(cols)}] AS pc FROM embeddings "
-        "WHERE embedding IS NOT NULL"
-    )
 
 
 # --- k-means over the embedding column ---------------------------------------
@@ -1492,609 +1128,6 @@ def kmeans_fit(
     return [[float(x) for x in row] for row in cents], inertia
 
 
-def embedding_kmeans(
-    spark: SparkSession, sf_dir: str, k: int = KMEANS_K, iters: int = KMEANS_ITERS
-) -> DataFrame:
-    """Assign every embedding to its fitted k-means cluster. The fit is
-    ``kmeans_fit``; the final assignment is one more narrow
-    ``mapInPandas`` GEMM pass — no shuffle (pinned in tests).
-
-    Output: (vec_id, cluster_id, sq_dist rounded to 6)."""
-    import numpy as np
-
-    cents, _ = kmeans_fit(spark, sf_dir, k, iters)
-    c = np.array(cents, dtype=np.float64)
-
-    def _assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        c_sq = (c * c).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["v"].to_numpy())
-            d2 = c_sq[None, :] - 2.0 * (m @ c.T)
-            a = np.argmin(d2, axis=1)
-            full = d2[np.arange(len(m)), a] + (m * m).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cluster_id": a,
-                    "sq_dist": np.round(np.maximum(full, 0.0), 6),
-                }
-            )
-
-    return _emb(spark, sf_dir).mapInPandas(
-        _assign, "vec_id long, cluster_id long, sq_dist double"
-    )
-
-
-# --- product quantization (IVFADC's fine quantizer) --------------------------
-# 64-d -> PQ_M subspaces of 8 dims, PQ_K centroids each: codes are
-# PQ_M small ints (8 bytes as int8s vs 256 bytes of float32 vector) —
-# the 32x storage compression that makes billion-vector ANN serving
-# fit in memory (Jégou, Douze & Schmid, "Product quantization for
-# nearest neighbor search", TPAMI 2011).
-PQ_M = 8
-# k=256 = 8 bits per subspace — the standard PQ geometry, and the SAME
-# 8-bytes/vector budget k=16 half-used (4 bits). The round-11 10M A/B
-# (BASELINE.md): at matched rescore, k=256 lifts recall@5 0.26→0.62
-# (pq iso), 0.28→0.72 (ivfpq iso), 0.00→0.36/0.28 (clustered, with
-# returned-cosine quality within 0.002 of optimal); the only cost is
-# one-time fit wall (~4× Lloyd GEMM) and a 256-row LUT per subspace.
-#
-# m=8/k=256 is the END of the geometry ladder, not a tunable: the
-# round-12 10M clustered A/B (BASELINE.md) shows m=16/k=16 (same 8-byte
-# budget, bits moved to subspace count) collapses recall 0.36→0.02,
-# and m=16/k=256 (DOUBLE budget) buys only 0.36→0.40 while halving
-# compression. PQ/IVFADC here are blocking/shortlist-grade on
-# near-tie corpora — returned neighbors within ~0.001 cosine of
-# optimal — never exact-k retrievers (1e-4 top-k margins are below
-# any practical code resolution); exact-k users take SQ8 (recall 1.00
-# at 4× the bytes) or the IVF family.
-PQ_K = 256
-PQ_ITERS = 5
-
-
-def pq_fit(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-):
-    """Fit the PQ codebooks: an independent k-means per coordinate
-    subspace, all M subspaces trained in ONE scan per iteration (the
-    ``kmeans_fit`` shape — broadcast codebooks into the closure, each
-    Arrow batch GEMMs its reshaped rows against every subspace's
-    centroids and emits ≤ batches·m·k partial rows, driver merge).
-    Zero shuffle, scan-bound per iteration at any corpus size.
-
-    Determinism (the ``kmeans_fit`` rules, per subspace): init is the
-    first k vectors' subvectors by vec_id, assignment ties take the
-    lowest centroid id (np.argmin first-minimum), an emptied centroid
-    keeps its previous value, no RNG anywhere — pinned against a pure
-    numpy replica in tests.
-
-    Returns (codebooks m×k×(dim/m) as nested lists, inertia per
-    iteration — non-increasing).
-    """
-    import numpy as np
-
-    if iters < 1 or m < 1 or k < 1:
-        raise ValueError("pq_fit: need m, k, iters >= 1")
-    emb = _emb(spark, sf_dir)
-    init_rows = emb.orderBy("vec_id").limit(k).collect()
-    if len(init_rows) < k:
-        raise ValueError(f"pq_fit: need {k} seed vectors, got {len(init_rows)}")
-    dim = len(list(init_rows[0]["v"]))
-    if dim % m:
-        raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    # (m, k, d_sub): subspace j seeded with the first k vectors' j-th slice
-    cents = np.array(
-        [[list(r["v"])[j * d_sub : (j + 1) * d_sub] for r in init_rows] for j in range(m)],
-        dtype=np.float64,
-    )
-    books_arr, inertia = _pq_train(emb, cents, m, k, iters, d_sub)
-    books = [[[float(x) for x in row] for row in books_arr[j]] for j in range(m)]
-    return books, inertia
-
-
-def _pq_train(emb, cents0, m: int, k: int, iters: int, d_sub: int, transform=None):
-    """ONE implementation of the per-subspace Lloyd loop, shared by
-    ``pq_fit`` (flat PQ, identity) and ``build_ivfpq_index`` (residual
-    PQ) — review finding: a copied loop means an assignment-rule fix
-    silently misses one of them. ``transform`` is a picklable callable
-    ``(x_matrix, norm_array) -> matrix`` applied per batch before
-    reshaping (None = identity); when given, the input frame must
-    carry a ``norm`` column. Returns (codebooks ndarray (m, k, d_sub),
-    inertia list — Σ squared distances at each iteration's START)."""
-    import numpy as np
-
-    cents = cents0
-    inertia: list[float] = []
-    for _ in range(iters):
-        c = cents
-
-        def _partials(batches, c=c, m=m, k=k, d_sub=d_sub, transform=transform):
-            import numpy as np
-            import pandas as pd
-
-            c_sq = (c * c).sum(axis=2)  # (m, k)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.stack(pdf["v"].to_numpy())
-                if transform is not None:
-                    x = transform(x, pdf["norm"].to_numpy())
-                x = x.reshape(-1, m, d_sub)
-                n = x.shape[0]
-                out_j, out_c, out_n, out_s, out_e = [], [], [], [], []
-                for j in range(m):
-                    d2 = c_sq[j][None, :] - 2.0 * (x[:, j, :] @ c[j].T)
-                    a = np.argmin(d2, axis=1)
-                    full = d2[np.arange(n), a] + (x[:, j, :] ** 2).sum(axis=1)
-                    cnt = np.bincount(a, minlength=k)
-                    sums = np.zeros((k, d_sub))
-                    np.add.at(sums, a, x[:, j, :])
-                    err = np.bincount(a, weights=full, minlength=k)
-                    out_j.extend([j] * k)
-                    out_c.extend(range(k))
-                    out_n.extend(cnt)
-                    out_s.extend(list(sums))
-                    out_e.extend(err)
-                yield pd.DataFrame(
-                    {"j": out_j, "cid": out_c, "n": out_n, "s": out_s, "err": out_e}
-                )
-
-        parts = emb.mapInPandas(
-            _partials, "j long, cid long, n long, s array<double>, err double"
-        ).collect()
-        n_acc = np.zeros((m, k))
-        s_acc = np.zeros_like(cents)
-        err = 0.0
-        for p in parts:
-            n_acc[p["j"], p["cid"]] += p["n"]
-            s_acc[p["j"], p["cid"]] += np.asarray(p["s"])
-            err += p["err"]
-        inertia.append(float(err))
-        nonempty = n_acc > 0
-        cents = np.where(
-            nonempty[:, :, None],
-            s_acc / np.maximum(n_acc, 1)[:, :, None],
-            cents,
-        )
-    return cents, inertia
-
-
-# exact-rescore candidate budget for the 8-byte-code paths (PQ /
-# IVFADC). 40·k, not SQ8's 4·k: an 8-byte code ranks ~8× more coarsely
-# than 64 bytes of SQ8 codes, so the true top-k sits deeper in the ADC
-# ordering; the rescore is |Q|·C point lookups either way — trivial.
-PQ_RESCORE_C = 40 * TOP_K
-
-
-def build_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-) -> None:
-    """Encode every vector to its PQ codes ONCE and persist
-    (vec_id, codes array of M small ints) — 8 bytes of payload per
-    vector instead of 256, the compressed representation ADC scoring
-    reads. Codebooks persist under ``{index_dir}/_codebooks`` (the
-    IVF ``_centroids`` sidecar pattern: underscore-prefixed, written
-    AFTER the data so overwrite cannot wipe it, read back at query
-    time so index and query can never disagree about the quantizer).
-
-    Encoding is one mapInPandas pass: reshape, per-subspace argmin
-    against the broadcast codebooks — scan-bound, no shuffle.
-    """
-    import numpy as np
-
-    books, _ = pq_fit(spark, sf_dir, m, k, iters)
-    c = np.array(books, dtype=np.float64)  # (m, k, d_sub)
-    d_sub = c.shape[2]
-
-    def _encode(batches, c=c, m=m, d_sub=d_sub):
-        import numpy as np
-        import pandas as pd
-
-        c_sq = (c * c).sum(axis=2)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["v"].to_numpy()).reshape(-1, m, d_sub)
-            codes = np.empty((x.shape[0], m), dtype=np.int32)
-            for j in range(m):
-                d2 = c_sq[j][None, :] - 2.0 * (x[:, j, :] @ c[j].T)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "codes": list(codes)}
-            )
-
-    emb = _emb(spark, sf_dir, scorable=True)
-    emb.mapInPandas(_encode, "vec_id long, codes array<int>").write.mode(
-        "overwrite"
-    ).parquet(index_dir)
-    rows = [
-        (j, cid, [float(x) for x in c[j, cid]])
-        for j in range(m)
-        for cid in range(c.shape[1])
-    ]
-    _literal_cols_df(
-        spark,
-        {
-            "j": [r[0] for r in rows],
-            "cid": [r[1] for r in rows],
-            "cv": [r[2] for r in rows],
-        },
-        "j long, cid long, cv array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/_codebooks")
-
-
-def ann_cosine_topk_pq_indexed(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    rescore_c: int | None = PQ_RESCORE_C,
-) -> DataFrame:
-    """ADC (asymmetric distance computation) top-k over a
-    ``build_pq_index``: queries stay full-precision, candidates are
-    scored from their 8-byte codes via per-query lookup tables —
-    LUT[j][c] = dot(q_j, codebook[j][c]) — so a candidate's
-    approximate dot product is M table lookups and its reconstruction
-    norm is exact (subspaces are disjoint coordinates, so
-    ‖x̂‖² = Σ_j ‖c_{j,code_j}‖² with no cross terms):
-    cosine ≈ Σ_j LUT[j][code_j] / (‖q‖·‖x̂‖).
-
-    The scan reads ONLY (vec_id, codes) — 8 bytes of payload per
-    vector, never the embedding column — and the scorer is the same
-    per-batch partial top-k contract as every other entry (round 6,
-    vec_id tiebreak, batches·|Q|·k rows to the global window).
-    Approximate by construction (quantization error), so the gate is
-    recall vs the in-session brute ground truth (pytest floor at
-    fixture scale, measured at 10M in BASELINE.md), not an equality
-    oracle — the documented weaker gate, like k-means.
-
-    ``rescore_c`` (default ``PQ_RESCORE_C``) runs the SQ8-style exact
-    top-C re-rank (ADC+R, Jégou et al.) on the ADC candidates: the
-    clustered 10M probe measured pure ADC at recall@5 = 0.00 on dense
-    clusters (1e-4 cosine margins are below 8-byte code resolution),
-    and an exact re-rank of C point lookups is how PQ serves in
-    practice — C is larger than SQ8's because 8-byte codes rank far
-    more coarsely than 64. ``rescore_c=None`` keeps the raw-ADC path
-    — the numpy-replica gate and the A/B baseline.
-    """
-    import numpy as np
-
-    emb = _emb(spark, sf_dir, scorable=True).withColumn("norm", _norm(F.col("v")))
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    cb = spark.read.parquet(f"{index_dir}/_codebooks").collect()
-    m = 1 + max(r["j"] for r in cb)
-    k = 1 + max(r["cid"] for r in cb)
-    c = np.zeros((m, k, len(cb[0]["cv"])))
-    for r in cb:
-        c[r["j"], r["cid"]] = r["cv"]
-    d_sub = c.shape[2]
-    qm = np.array([list(r["v"]) for r in qrows]).reshape(-1, m, d_sub)
-    qn = np.array([r["norm"] for r in qrows])
-    qids = np.array([r["vec_id"] for r in qrows])
-    # per-query LUTs (|Q|, m, k) + exact reconstruction norms (m, k)
-    luts = np.einsum("qjd,jkd->qjk", qm, c)
-    recon_sq = (c * c).sum(axis=2)  # (m, k)
-
-    # the per-batch cutoff rides in as a default arg bound at
-    # definition time — an int global pickles BY VALUE into the worker
-    # closure (only module-level FUNCTIONS pickle by reference), and
-    # binding it keeps the per-batch truncation in lockstep with the
-    # downstream global ranking (review finding: a hard-coded 5
-    # would silently break ranks 6..k if TOP_K ever changed)
-    cutoff = TOP_K if rescore_c is None else rescore_c
-    out_col = "cosine" if rescore_c is None else "approx"
-
-    def _score(batches, luts=luts, recon_sq=recon_sq, qn=qn, qids=qids, m=m,
-               top_k=cutoff, out_col=out_col):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            jj = np.arange(m)
-            # luts[:, jj, codes]: basic first axis (|Q|) + adjacent
-            # advanced axes broadcast to (n, m) -> (|Q|, n, m); sum
-            # the subspace axis and transpose to the (n, |Q|) layout
-            # the shared ranking code below expects
-            dots = luts[:, jj, codes].sum(axis=2).T
-            xnorm = np.sqrt(recon_sq[jj, codes].sum(axis=1))
-            sims = np.round(dots / (xnorm[:, None] * qn[None, :] + 1e-300), 6)
-            out = {"query_id": [], "vec_id": [], out_col: []}
-            for qi, qid in enumerate(qids):
-                mask = ids != qid
-                cand_ids, cand_sims = ids[mask], sims[mask, qi]
-                order = np.lexsort((cand_ids, -cand_sims))[:top_k]
-                out["query_id"].extend([qid] * len(order))
-                out["vec_id"].extend(cand_ids[order])
-                out[out_col].extend(cand_sims[order])
-            yield pd.DataFrame(out)
-
-    codes_df = spark.read.parquet(index_dir).select("vec_id", "codes")
-    partial = codes_df.mapInPandas(
-        _score, f"query_id long, vec_id long, {out_col} double"
-    )
-    if rescore_c is not None:
-        return _exact_rescore(spark, sf_dir, partial, rescore_c, qrows=qrows)
-    return _rank_topk(partial)
-
-
-# --- IVF + residual PQ (the full IVFADC index) -------------------------------
-def build_ivfpq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    cells: int = IVF_CELLS,
-    centroids: str = "kmeans",
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    kmeans_iters: int = 5,
-) -> None:
-    """The full IVFADC layout (Jégou et al. TPAMI'11): a coarse
-    quantizer splits the corpus into cells — persisted as parquet
-    ``partitionBy(cell_id)`` so probes become partition pruning — and
-    a PQ codebook trained on the RESIDUALS (x − cell centroid)
-    compresses each vector to M small ints inside its cell. Residual
-    encoding is what makes IVFADC beat flat PQ: residuals concentrate
-    near the origin, so the same code budget quantizes them with far
-    less error than raw vectors.
-
-    One residual codebook is shared across cells (the standard
-    choice). Training runs the ``pq_fit`` loop with the coarse
-    centroids riding along in the closure: each scan assigns the
-    batch (BLAS argmax on cosine — the ``build_ivf_index`` rule,
-    first-maximum ties), subtracts the centroid, and emits per-
-    subspace partials over the residuals — still zero shuffle, still
-    scan-bound per iteration.
-
-    Sidecars ``_centroids`` and ``_codebooks`` persist both quantizers
-    with the data (written AFTER the data so overwrite cannot wipe
-    them); the query path reads them back, so index and query can
-    never disagree.
-    """
-    import numpy as np
-
-    emb = _emb(spark, sf_dir, scorable=True).withColumn("norm", _norm(F.col("v")))
-    cents_l = _coarse_centroids(spark, sf_dir, cells, centroids, kmeans_iters)
-    cid_arr = np.array([c[0] for c in cents_l], dtype=np.int64)
-    cm = np.array([c[1] for c in cents_l], dtype=np.float64)
-    cn = np.array([c[2] for c in cents_l], dtype=np.float64)
-
-    init_rows = emb.orderBy("vec_id").limit(k).collect()
-    if len(init_rows) < k:
-        raise ValueError(f"build_ivfpq_index: need {k} seed vectors")
-    dim = len(list(init_rows[0]["v"]))
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-
-    def _residuals(x, nrm, cm=cm, cn=cn, cid_arr=cid_arr):
-        # cosine argmax against the coarse centroids (build_ivf_index
-        # rule: np.argmax first-maximum = lowest cell on exact ties)
-        import numpy as np
-
-        sims = (x @ cm.T) / (nrm[:, None] * cn[None, :])
-        a = np.argmax(sims, axis=1)
-        return cid_arr[a], x - cm[a]
-
-    # seed the residual codebook with the first k vectors' residuals
-    seed_x = np.array([list(r["v"]) for r in init_rows])
-    seed_n = np.array([r["norm"] for r in init_rows])
-    _, seed_res = _residuals(seed_x, seed_n)
-    books0 = np.array(
-        [
-            [seed_res[i, j * d_sub : (j + 1) * d_sub] for i in range(k)]
-            for j in range(m)
-        ],
-        dtype=np.float64,
-    )
-
-    def _res_only(x, nrm, _residuals=_residuals):
-        return _residuals(x, nrm)[1]
-
-    # the shared Lloyd loop with residual subtraction as the batch
-    # transform — same assignment/update rules as flat pq_fit by
-    # construction (one implementation, see _pq_train)
-    cfinal, _inertia = _pq_train(
-        emb, books0, m, k, iters, d_sub, transform=_res_only
-    )
-
-    def _encode(batches, c=cfinal, m=m, d_sub=d_sub, _residuals=_residuals):
-        import numpy as np
-        import pandas as pd
-
-        c_sq = (c * c).sum(axis=2)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["v"].to_numpy())
-            nrm = pdf["norm"].to_numpy()
-            cell, res = _residuals(x, nrm)
-            r = res.reshape(-1, m, d_sub)
-            codes = np.empty((r.shape[0], m), dtype=np.int32)
-            for j in range(m):
-                d2 = c_sq[j][None, :] - 2.0 * (r[:, j, :] @ c[j].T)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell_id": cell, "codes": list(codes)}
-            )
-
-    emb.mapInPandas(
-        _encode, "vec_id long, cell_id long, codes array<int>"
-    ).write.mode("overwrite").partitionBy("cell_id").parquet(index_dir)
-    _literal_cols_df(
-        spark,
-        {
-            "cell_id": [cid for cid, _, _ in cents_l],
-            "cv": [cv for _, cv, _ in cents_l],
-            "cn": [cnn for _, _, cnn in cents_l],
-        },
-        "cell_id long, cv array<double>, cn double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/_centroids")
-    rows_cb = [
-        (j, cid, [float(x) for x in cfinal[j, cid]])
-        for j in range(m)
-        for cid in range(k)
-    ]
-    _literal_cols_df(
-        spark,
-        {
-            "j": [r[0] for r in rows_cb],
-            "cid": [r[1] for r in rows_cb],
-            "cv": [r[2] for r in rows_cb],
-        },
-        "j long, cid long, cv array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/_codebooks")
-
-
-def ann_cosine_topk_ivfpq(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    nprobe: int = IVF_NPROBE,
-    rescore_c: int | None = PQ_RESCORE_C,
-) -> DataFrame:
-    """Query the IVFADC index: probe ``nprobe`` cells by centroid
-    cosine (partition pruning — only those cells' files open), then
-    ADC over the residual codes. For a candidate in cell c with codes
-    (b_1..b_M):
-
-        x̂ = centroid_c + r̂,  r̂_j = codebook[j][b_j]
-        dot(q, x̂)  = dot(q, centroid_c) + Σ_j LUT_q[j][b_j]
-        ‖x̂‖²      = ‖centroid_c‖² + 2·Σ_j XLUT_c[j][b_j] + Σ_j ‖r̂_j‖²
-
-    — all three terms are table lookups: LUT_q (per query, M×K dots),
-    XLUT_c (per probed cell, M×K centroid-residual cross terms, exact
-    because subspaces are disjoint coordinates), and the code-norm
-    table. Everything driver-side is |cells|- or |Q|-sized; the scan
-    reads (vec_id, cell_id, codes) only. Same partial-top-k ranking
-    contract as every entry; same exact-numpy-replica pytest gate as
-    the flat PQ path.
-
-    ``rescore_c`` (default ``PQ_RESCORE_C``) = the ADC+R exact top-C
-    re-rank, same rationale and knob as ``ann_cosine_topk_pq_indexed``
-    (clustered-probe recall 0.00 without it); ``None`` keeps raw
-    IVFADC — the replica gate and A/B baseline.
-    """
-    import numpy as np
-
-    emb = _emb(spark, sf_dir, scorable=True).withColumn("norm", _norm(F.col("v")))
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    cents = sorted(
-        (r["cell_id"], list(r["cv"]), r["cn"])
-        for r in spark.read.parquet(f"{index_dir}/_centroids").collect()
-    )
-    cb = spark.read.parquet(f"{index_dir}/_codebooks").collect()
-    m = 1 + max(r["j"] for r in cb)
-    k = 1 + max(r["cid"] for r in cb)
-    d_sub = len(cb[0]["cv"])
-    books = np.zeros((m, k, d_sub))
-    for r in cb:
-        books[r["j"], r["cid"]] = r["cv"]
-
-    queries = [(r["vec_id"], list(r["v"]), r["norm"]) for r in qrows]
-    probe_cells = _probe_sets(queries, cents, nprobe)
-    qm = np.array([q[1] for q in queries]).reshape(len(queries), m, d_sub)
-    qn = np.array([q[2] for q in queries])
-    qids = np.array([q[0] for q in queries])
-    cell_ids = np.array([c[0] for c in cents], dtype=np.int64)
-    cmat = np.array([c[1] for c in cents])
-    # dense cell_id -> row index (cell ids may be sparse for head mode)
-    cell_row = {int(cid): i for i, cid in enumerate(cell_ids)}
-    qdotc = np.einsum(
-        "qjd,cjd->qc", qm, cmat.reshape(len(cents), m, d_sub)
-    )  # dot(q, centroid_c)
-    luts = np.einsum("qjd,jkd->qjk", qm, books)
-    xlut = np.einsum(
-        "cjd,jkd->cjk", cmat.reshape(len(cents), m, d_sub), books
-    )
-    c_sq = (cmat * cmat).sum(axis=1)
-    r_sq = (books * books).sum(axis=2)  # (m, k)
-    probes_arr = [
-        np.array(sorted(probe_cells[int(qid)]), dtype=np.int64) for qid in qids
-    ]
-    cutoff = TOP_K if rescore_c is None else rescore_c
-    out_col = "cosine" if rescore_c is None else "approx"
-
-    def _score(
-        batches,
-        luts=luts,
-        xlut=xlut,
-        qdotc=qdotc,
-        c_sq=c_sq,
-        r_sq=r_sq,
-        qn=qn,
-        qids=qids,
-        m=m,
-        cell_row=cell_row,
-        probes_arr=probes_arr,
-        top_k=cutoff,  # bound by value at definition (see PQ scorer note)
-        out_col=out_col,
-    ):
-        import numpy as np
-        import pandas as pd
-
-        jj = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            cells_b = pdf["cell_id"].to_numpy().astype(np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            rows = np.array([cell_row[int(c)] for c in cells_b])
-            rdots = luts[:, jj, codes].sum(axis=2).T  # (n, |Q|)
-            cross = xlut[rows[:, None], jj[None, :], codes].sum(axis=1)
-            xnorm = np.sqrt(
-                np.maximum(c_sq[rows] + 2.0 * cross + r_sq[jj, codes].sum(axis=1), 0)
-            )
-            out = {"query_id": [], "vec_id": [], out_col: []}
-            for qi, qid in enumerate(qids):
-                sims = np.round(
-                    (qdotc[qi, rows] + rdots[:, qi])
-                    / (xnorm * qn[qi] + 1e-300),
-                    6,
-                )
-                mask = (ids != qid) & np.isin(cells_b, probes_arr[qi])
-                if not mask.any():
-                    continue
-                cand_ids, cand_sims = ids[mask], sims[mask]
-                order = np.lexsort((cand_ids, -cand_sims))[:top_k]
-                out["query_id"].extend([qid] * len(order))
-                out["vec_id"].extend(cand_ids[order])
-                out[out_col].extend(cand_sims[order])
-            yield pd.DataFrame(out)
-
-    needed = sorted({c for cs in probe_cells.values() for c in cs})
-    idx = (
-        spark.read.parquet(index_dir)
-        .filter(F.col("cell_id").isin(needed))
-        .select("vec_id", "cell_id", "codes")
-    )
-    partial = idx.mapInPandas(
-        _score, f"query_id long, vec_id long, {out_col} double"
-    )
-    if rescore_c is not None:
-        return _exact_rescore(spark, sf_dir, partial, rescore_c, qrows=qrows)
-    return _rank_topk(partial)
-
-
 # --- SemDeDup: semantic deduplication over k-means cells ---------------------
 SEMDEDUP_EPS = 0.95
 
@@ -2110,9 +1143,9 @@ def semantic_dedup(
     within each cell drop every example whose cosine to a PRIOR
     example (cell scan order: distance-to-centroid DESC, vec_id ASC —
     the paper's "keep the most atypical" rule made deterministic)
-    meets ``eps``. Unlike ``embedding_clusters``' connected
-    components, duplicates are defined per-cell with the paper's
-    upper-triangular rule — no iterative closure, one pass.
+    meets ``eps``. Unlike a connected-components clustering,
+    duplicates are defined per-cell with the paper's upper-triangular
+    rule — no iterative closure, one pass.
 
     Shape: ``kmeans_fit`` (scan-bound, zero shuffle) + ONE Exchange
     keyed on the assigned cell + a per-cell masked GEMM in
@@ -2294,62 +1327,6 @@ def _sq8_code_expr(vmin: list[float], vmax: list[float]) -> Column:
     return F.transform(F.col("v"), code)
 
 
-def sq8_code_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact-oracle entry for the quantizer: every vector's 64
-    codes hex-packed into one 128-char string (2 chars/dim, the
-    fingerprint convention) so the value hash is layout-stable across
-    engines."""
-    vmin, vmax = sq8_fit(spark, sf_dir)
-    codes = _sq8_code_expr(vmin, vmax)
-    return _emb(spark, sf_dir).select(
-        "vec_id",
-        F.concat_ws(
-            "", F.transform(codes, lambda c: F.lpad(F.lower(F.hex(c)), 2, "0"))
-        ).alias("code_hex"),
-    )
-
-
-def _sq8_code_hex_sql() -> str:
-    los = ", ".join(f"min(v[{d + 1}])" for d in range(DIM))
-    his = ", ".join(f"max(v[{d + 1}])" for d in range(DIM))
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-           WHERE embedding IS NOT NULL),
-mm AS (SELECT [{los}] AS lo, [{his}] AS hi FROM e)
-SELECT vec_id,
-       array_to_string(list_transform(range(0, {DIM}), d ->
-           lpad(lower(to_hex(CAST(
-               CASE WHEN hi[d+1] = lo[d+1] THEN 0.0
-                    ELSE least(255.0, greatest(0.0,
-                        floor((v[d+1] - lo[d+1]) * {SQ8_LEVELS}
-                              / (hi[d+1] - lo[d+1]) + 0.5)))
-               END AS INTEGER))), 2, '0')), '') AS code_hex
-FROM e, mm
-"""
-
-
-SQ8_CODE_HEX_SQL = _sq8_code_hex_sql()
-
-
-def build_sq8_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """Encode once and persist (vec_id, codes array<int>) — 64 small
-    ints of payload per vector; the quantizer persists under
-    ``{index_dir}/_quantizer`` (the IVF ``_centroids`` sidecar pattern:
-    written AFTER the data so overwrite cannot wipe it, read back at
-    query time so index and query can never disagree). Encoding is the
-    codegen'd expression — no Python anywhere in the build."""
-    vmin, vmax = sq8_fit(spark, sf_dir)
-    _emb(spark, sf_dir, scorable=True).select(
-        "vec_id", _sq8_code_expr(vmin, vmax).alias("codes")
-    ).write.mode("overwrite").parquet(index_dir)
-    _literal_cols_df(
-        spark, {"lo": [vmin], "hi": [vmax]},
-        "lo array<double>, hi array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/_quantizer")
-
-
 def _sq8_search(
     spark: SparkSession,
     sf_dir: str,
@@ -2417,39 +1394,15 @@ def _sq8_search(
     )
 
 
-def _literal_df(spark: SparkSession, structs: list, ddl: str) -> DataFrame:
-    """Driver-local rows as a literal inline table (``inline`` over a
-    1-row range) — plans as Generate over Range, fully JVM-side,
-    instead of ``createDataFrame``'s ``Scan ExistingRDD`` Python
-    round-trip. For zero rows, an empty typed projection.
-
-    BOTH branches honor the declared DDL: ``F.lit(python_int)`` is
-    IntegerType for values under 2^31, so an uncast inline table's
-    dtypes would drift with the DATA (int for small ids, long via the
-    empty branch) — a schema-contract break against the bigint
-    oracle (round-14 advice item). The casts constant-fold; the plan
-    stays Generate over Range."""
-    from pyspark.sql import types as T
-
-    st = T.StructType.fromDDL(ddl)
-    if structs:
-        return spark.range(1).select(F.inline(F.array(*structs))).select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in st.fields]
-        )
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]
-    )
-
-
 def _literal_cols_df(
     spark: SparkSession, cols: dict[str, list], ddl: str
 ) -> DataFrame:
-    """Column-oriented sibling of ``_literal_df`` for larger inline
-    tables — delegates to the shared ``operators.inline`` helper (ONE
-    JSON-literal Py4J round trip however many rows; plan stays
-    Generate over Range; dtypes from the DDL). The struct form costs
-    one Py4J call per VALUE — measured ~3 s of driver-side tree
-    construction per invocation for the rescore tables (round 15)."""
+    """Column-oriented inline literal table — delegates to the shared
+    ``operators.inline`` helper (ONE JSON-literal Py4J round trip
+    however many rows; plan stays Generate over Range; dtypes from the
+    DDL). A per-row struct form costs one Py4J call per VALUE —
+    measured ~3 s of driver-side tree construction per invocation for
+    the rescore tables (round 15)."""
     from fledge_south_csvplayback_spark.operators.inline import (
         literal_cols_df,
     )
@@ -2555,8 +1508,7 @@ def ann_cosine_topk_sq8(
     spark: SparkSession, sf_dir: str, rescore_c: int = SQ8_RESCORE_C
 ) -> DataFrame:
     """Self-contained SQ8 ANN: fit + codegen'd encode + two-stage
-    search in one plan (the inline sibling of
-    ``ann_cosine_topk_sq8_indexed``, like the inline IVF/LSH entries).
+    search in one plan.
     The quantizer fit and the query-row collect are independent driver
     jobs, so they run from two driver threads (guide §2.6 overlap)."""
     from concurrent.futures import ThreadPoolExecutor
@@ -2574,36 +1526,6 @@ def ann_cosine_topk_sq8(
     )
     return _sq8_search(
         spark, sf_dir, codes_df, vmin, vmax, rescore_c, qrows=qrows
-    )
-
-
-def ann_cosine_topk_sq8_indexed(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    rescore_c: int = SQ8_RESCORE_C,
-) -> DataFrame:
-    """Two-stage SQ8 ANN over a ``build_sq8_index``: the codes scan
-    reads 64 bytes of payload per vector (never the embedding column);
-    the quantizer comes from the ``_quantizer`` sidecar. The sidecar
-    read and the query-row collect are independent driver jobs — two
-    driver threads (guide §2.6 overlap)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    embq = _emb(spark, sf_dir, scorable=True).withColumn(
-        "norm", _norm(F.col("v"))
-    )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_q = pool.submit(
-            lambda: spark.read.parquet(f"{index_dir}/_quantizer").collect()[0]
-        )
-        f_rows = pool.submit(embq.filter(F.col("vec_id") < N_QUERIES).collect)
-        q = f_q.result()
-        qrows = f_rows.result()
-    codes_df = spark.read.parquet(index_dir).select("vec_id", "codes")
-    return _sq8_search(
-        spark, sf_dir, codes_df, list(q["lo"]), list(q["hi"]), rescore_c,
-        qrows=qrows,
     )
 
 
@@ -2658,58 +1580,6 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.array_remove(F.array_distinct(F.split(F.col("text"), " ")), "")
     return docs.filter(F.col("text").isNotNull()).select(
         "doc_id", toks.alias("toks")
-    )
-
-
-def lexical_topk_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expression-variant sparse top-k (the round-12 original): the
-    |Q|-row query-token frame broadcasts (BroadcastNestedLoopJoin)
-    into ONE corpus scan, Jaccard via ``array_intersect`` /
-    ``array_union``, partial Sort + WindowGroupLimit ranking. The
-    plan SHAPE is right (~30 KB shuffle at 10M, probed) but the
-    per-row array expressions evaluate INTERPRETED — measured
-    40.3k docs/s at 10M (BASELINE.md round 12) — which is why
-    ``lexical_topk`` below routes scoring through the dense arm's
-    mapInPandas machinery instead (round-13 verdict item 5). Kept
-    public as the A/B baseline and the declarative reference
-    semantics; exact agreement with the scorer variant is pinned in
-    tests/test_similarity.py."""
-    from pyspark.sql import Window as W
-
-    d = _doc_tokens(spark, sf_dir)
-    q = d.filter(F.col("doc_id") < N_QUERIES).select(
-        F.col("doc_id").alias("query_id"), F.col("toks").alias("q_toks")
-    )
-    scored = d.crossJoin(F.broadcast(q)).filter(
-        F.col("doc_id") != F.col("query_id")
-    )
-    inter = F.size(F.array_intersect("toks", "q_toks"))
-    uni = F.size(F.array_union("toks", "q_toks"))
-    # floor(j·1e6 + 0.5)/1e6 rather than F.round: the scorer variant
-    # (_lexical_partial_topk) rounds on the FLOAT PRODUCT in numpy, and
-    # F.round is BigDecimal HALF_UP on the exact decimal — the two
-    # disagree whenever the product's rounding error crosses the .5
-    # boundary (round-13 advice item; measured 1064/142860 adversarial
-    # half-boundary doubles). The floor form is bit-identical to the
-    # numpy emulation by IEEE determinism (same multiply/add/floor) —
-    # agreement by construction, not fixture luck — and ALSO matches
-    # DuckDB's ROUND(double, 6) on every probed boundary value, where
-    # F.round does not (probe in tests/test_similarity.py).
-    jac = (
-        F.when(
-            uni > 0,
-            F.floor(inter.cast("double") / uni * 1e6 + 0.5) / 1e6,
-        )
-        .otherwise(F.lit(0.0))
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("jaccard").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.select("query_id", "doc_id", jac.alias("jaccard"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "doc_id", "jaccard")
     )
 
 
@@ -2806,11 +1676,10 @@ def lexical_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch top-k, so the query_id exchange carries
     ≤ tasks·|Q|·k survivor rows — the exact plan shape of
     ``ann_cosine_topk`` (Scan → Project → MapInPandas → Sort +
-    WindowGroupLimit partial → tiny Exchange → final window). The
-    interpreted-expression variant this replaces
-    (``lexical_topk_expr``, 40.3k docs/s at 10M) stays public as the
-    declarative reference; exact agreement is pinned in tests and the
-    10M A/B row lives in BASELINE.md.
+    WindowGroupLimit partial → tiny Exchange → final window). It
+    replaced an interpreted-expression variant (40.3k docs/s at 10M;
+    the A/B row lives in BASELINE.md); ``LEXICAL_TOPK_SQL`` is the
+    value oracle.
     """
     from pyspark.sql import Window as W
 

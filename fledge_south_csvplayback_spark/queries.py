@@ -208,8 +208,7 @@ register(
 # highest-value variant per family): the REAL raster decode — PPM P6
 # parse + pixel sums + dHash over a declaratively-built binary payload
 # — replaces the frame-sample slice of the same multimodal fixture
-# family; `multimodal_frame_sample` stays public + pytest-oracle-
-# checked through the driver's own compare.
+# family.
 register(
     "multimodal_image_stats",
     multimodal.multimodal_image_stats,

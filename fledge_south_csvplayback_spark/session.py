@@ -68,19 +68,3 @@ def ensure_ltz(df: DataFrame, ts_col: str) -> DataFrame:
         return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver testdata parquet tables as a dict of DataFrames."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

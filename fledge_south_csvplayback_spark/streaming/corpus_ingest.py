@@ -237,8 +237,7 @@ def _neardup_gate(
     # probe's `cached` contract. The SAME frames are the index rows to
     # append (shingles / band rows / per-shingle df), so acceptance
     # reuses them instead of shingling the batch a second time;
-    # same-path overwrite keeps re-delivery idempotent (this is the
-    # streaming-safe form of media_index_append).
+    # same-path overwrite keeps re-delivery idempotent.
     caches: dict = {}
     try:
         _neardup_probe(

@@ -1,10 +1,10 @@
 """Streaming media near-dup ingest — the band-index lifecycle as a
 Structured Streaming pipeline.
 
-The batch pair (``multimodal.media_neardup_ingest`` +
-``media_index_append``) answers "probe THIS crawl batch"; a production
-pipeline accepts fingerprint shards continuously. This module runs the
-same semantics per micro-batch via ``foreachBatch``: new hashes probe
+The batch miner (``multimodal.image_neardup_pairs``) answers "mine
+THIS corpus"; a production pipeline accepts fingerprint shards
+continuously. This module runs incremental ingest per micro-batch via
+``foreachBatch``: new hashes probe
 the persisted band index (cross pairs), mine within themselves, and —
 once accepted — their band rows become index state the NEXT batch
 probes.
@@ -169,8 +169,7 @@ def media_accept_batch(
             f"{out_dir}/pairs/ingest_batch={batch_id}"
         )
         # acceptance: the batch's band rows become next batches' state;
-        # same-path overwrite keeps re-delivery idempotent (this is the
-        # streaming-safe form of media_index_append)
+        # same-path overwrite keeps re-delivery idempotent
         batch_keys.write.mode("overwrite").parquet(
             f"{bands_dir}/ingest_batch={batch_id}"
         )

@@ -248,9 +248,7 @@ def replay(
 def throughput(query: StreamingQuery) -> dict[str, float]:
     """Readings/sec from the engine's own progress telemetry — the
     reference's TIME_IT counters (csvplayback.py:908-922) for free."""
-    p = query.lastProgress
-    if not p:
-        return {"input_rows_per_second": 0.0, "processed_rows_per_second": 0.0}
+    p = query.lastProgress or {}
     return {
         "input_rows_per_second": float(p.get("inputRowsPerSecond") or 0.0),
         "processed_rows_per_second": float(p.get("processedRowsPerSecond") or 0.0),

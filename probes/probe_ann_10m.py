@@ -18,7 +18,7 @@ Usage:
     python probes/probe_ann_10m.py brute --rows 10000000
     python probes/probe_ann_10m.py ivf   --rows 10000000
     python probes/probe_ann_10m.py lsh   --rows 10000000
-    python probes/probe_ann_10m.py lsh_indexed --rows 10000000
+    python probes/probe_ann_10m.py ivf_indexed --rows 10000000
 """
 
 from __future__ import annotations
@@ -52,7 +52,7 @@ def gen_vectors(spark: SparkSession, n: int, dist: str = "iso") -> str:
     ``clustered``: a deterministic mixture of N_CLUSTERS compact
     clusters — each vector is its cluster's center (seeded uniform in
     [-1, 1) per dim) plus small uniform noise (±NOISE), the shape real
-    embedding spaces actually have and the one IVF/PQ recall claims
+    embedding spaces actually have and the one IVF recall claims
     should be graded on."""
     out = f"{PROBE_ROOT}/emb_{n}" + ("" if dist == "iso" else f"_{dist}")
     path = f"{out}/embeddings.parquet"
@@ -98,31 +98,11 @@ def main() -> None:
             "ivf_kmeans_indexed",
             "lsh",
             "lsh_prod",
-            "lsh_indexed",
-            "pq_indexed",
-            "sq8_indexed",
-            "ivfpq",
-            "pca",
             "kmeans",
         ],
     )
     ap.add_argument("--rows", type=int, default=10_000_000)
     ap.add_argument("--dist", choices=["iso", "clustered"], default="iso")
-    ap.add_argument(
-        "--pq-k",
-        type=int,
-        default=None,
-        help="subquantizer codebook size for pq_indexed/ivfpq "
-        "(default: the module PQ_K)",
-    )
-    ap.add_argument(
-        "--pq-m",
-        type=int,
-        default=None,
-        help="subspace count for pq_indexed/ivfpq (default: the module "
-        "PQ_M). m=16,k=16 matches the default 8-byte/vector budget "
-        "with twice the subspaces; m=16,k=256 doubles the budget.",
-    )
     args = ap.parse_args()
 
     spark = probe_session(f"probe_ann_{args.op}")
@@ -136,38 +116,6 @@ def main() -> None:
         return
 
     from fledge_south_csvplayback_spark.operators import similarity
-
-    if args.op == "pca":
-        # fit = one moment-sketch pass (d^2 per-task state); transform =
-        # literal-matrix projection materialized through a noop write
-        shuffle_before = shuffle_write_bytes(spark)
-        t0 = time.perf_counter()
-        mean, comps, var = similarity.pca_model(spark, sf_dir)
-        fit_sec = round(time.perf_counter() - t0, 1)
-        t0 = time.perf_counter()
-        similarity.embedding_pca(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        # embedding_pca refits internally, so subtract one fit cost for
-        # the transform-only number
-        total = round(time.perf_counter() - t0, 1)
-        print(
-            json.dumps(
-                {
-                    "op": "pca",
-                    "rows": args.rows,
-                    "fit_sec": fit_sec,
-                    "fit_plus_transform_sec": total,
-                    "shuffle_bytes": shuffle_delta(
-                        shuffle_before, shuffle_write_bytes(spark)
-                    ),
-                    "top_variance": round(var[0], 6),
-                    "gen_sec": gen_sec,
-                }
-            )
-        )
-        spark.stop()
-        return
 
     if args.op == "kmeans":
         shuffle_before = shuffle_write_bytes(spark)
@@ -228,90 +176,6 @@ def main() -> None:
         builders["ivf_kmeans_indexed"] = (
             lambda s, d: similarity.ann_cosine_topk_ivf_indexed(s, d, index_dir)
         )
-    elif args.op == "pq_indexed":
-        # ADC over 8-byte codes: the compressed-serving deployment.
-        # Recall on this corpus is a property of the CORPUS (isotropic
-        # random vectors are PQ's worst case — no structure to
-        # quantize; see the pytest docstring) — reported honestly, the
-        # throughput/size numbers are the point.
-        import os as _os
-
-        pq_k = args.pq_k or similarity.PQ_K
-        pq_m = args.pq_m or similarity.PQ_M
-        index_dir = f"{sf_dir}/pq_index_{pq_k}" + (
-            "" if pq_m == similarity.PQ_M else f"_m{pq_m}"
-        )
-        t0 = time.perf_counter()
-        similarity.build_pq_index(spark, sf_dir, index_dir, m=pq_m, k=pq_k)
-        build_sec = round(time.perf_counter() - t0, 1)
-        idx_bytes = sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _, fs in _os.walk(index_dir)
-            for f in fs
-            if f.endswith(".parquet") and "_codebooks" not in r
-        )
-        raw = f"{sf_dir}/embeddings.parquet"
-        raw_bytes = sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _, fs in _os.walk(raw)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-        print(json.dumps({"pq_index_bytes": idx_bytes, "raw_bytes": raw_bytes,
-                          "compression": round(raw_bytes / idx_bytes, 1)}))
-        builders["pq_indexed"] = (
-            lambda s, d: similarity.ann_cosine_topk_pq_indexed(s, d, index_dir)
-        )
-    elif args.op == "sq8_indexed":
-        # two-stage SQ8: 64-byte codes scan for approx top-C, exact
-        # rescore via pushed-down point lookups; compression reported
-        # like the PQ row
-        import os as _os
-
-        index_dir = f"{sf_dir}/sq8_index"
-        t0 = time.perf_counter()
-        similarity.build_sq8_index(spark, sf_dir, index_dir)
-        build_sec = round(time.perf_counter() - t0, 1)
-        idx_bytes = sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _, fs in _os.walk(index_dir)
-            for f in fs
-            if f.endswith(".parquet") and "_quantizer" not in r
-        )
-        raw = f"{sf_dir}/embeddings.parquet"
-        raw_bytes = sum(
-            _os.path.getsize(_os.path.join(r, f))
-            for r, _, fs in _os.walk(raw)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-        print(json.dumps({"sq8_index_bytes": idx_bytes, "raw_bytes": raw_bytes,
-                          "compression": round(raw_bytes / idx_bytes, 1)}))
-        builders["sq8_indexed"] = (
-            lambda s, d: similarity.ann_cosine_topk_sq8_indexed(s, d, index_dir)
-        )
-    elif args.op == "ivfpq":
-        # the full IVFADC: kmeans cells (partition-pruned probes) +
-        # residual-PQ codes (compressed in-cell ADC)
-        pq_k = args.pq_k or similarity.PQ_K
-        pq_m = args.pq_m or similarity.PQ_M
-        index_dir = f"{sf_dir}/ivfpq_index_{pq_k}" + (
-            "" if pq_m == similarity.PQ_M else f"_m{pq_m}"
-        )
-        t0 = time.perf_counter()
-        similarity.build_ivfpq_index(spark, sf_dir, index_dir, m=pq_m, k=pq_k)
-        build_sec = round(time.perf_counter() - t0, 1)
-        builders["ivfpq"] = (
-            lambda s, d: similarity.ann_cosine_topk_ivfpq(s, d, index_dir)
-        )
-    elif args.op == "lsh_indexed":
-        index_dir = f"{sf_dir}/lsh_index"
-        t0 = time.perf_counter()
-        similarity.build_lsh_index(spark, sf_dir, index_dir)
-        build_sec = round(time.perf_counter() - t0, 1)
-        builders["lsh_indexed"] = (
-            lambda s, d: similarity.ann_cosine_topk_lsh_indexed(s, d, index_dir)
-        )
     shuffle_before = shuffle_write_bytes(spark)
     t0 = time.perf_counter()
     rows = builders[args.op](spark, sf_dir).collect()
@@ -330,12 +194,8 @@ def main() -> None:
     }
     if build_sec is not None:
         result["index_build_sec"] = build_sec
-    if args.op in ("pq_indexed", "ivfpq"):
-        result["pq_m"] = args.pq_m or similarity.PQ_M
-        result["pq_k"] = args.pq_k or similarity.PQ_K
     if args.op in (
         "ivf", "ivf_indexed", "ivf_kmeans_indexed", "lsh", "lsh_prod",
-        "lsh_indexed", "pq_indexed", "sq8_indexed", "ivfpq",
     ):
         # recall@k vs the brute-force operator run in the same session
         truth_rows = similarity.ann_cosine_topk(spark, sf_dir).collect()
@@ -346,9 +206,7 @@ def main() -> None:
         # identity is ill-conditioned (1e-4 cosine margins among ~1e5
         # near-ties), so also report how close the RETURNED neighbors'
         # cosine mass is to the true top-k's. Exact for every op whose
-        # pipeline ends in exact scoring (IVF/LSH/SQ8/rescored PQ);
-        # for raw-ADC runs (rescore_c=None) the returned cosine is
-        # approximate and this reads as code-vs-exact drift instead.
+        # pipeline ends in exact scoring (IVF/LSH).
         t_mean = sum(r["cosine"] for r in truth_rows) / len(truth_rows)
         g_mean = sum(r["cosine"] for r in rows) / len(rows) if rows else 0.0
         result["mean_cosine_true"] = round(t_mean, 6)

@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Scale probes for the multimodal decode ops (BASELINE.md rows).
 
-- ``stats``: ``image_stats`` and ``audio_stats`` end-to-end (declarative
-  payload synthesis -> pure-Python parse -> stats) over the cached
-  curation corpus's doc_ids — measures Arrow-batched Python decode
-  throughput at N rows. Both plans are one narrow mapInPandas scan;
+- ``stats``: ``image_stats`` end-to-end (declarative payload synthesis
+  -> pure-Python parse -> stats) over the cached curation corpus's
+  doc_ids — measures Arrow-batched Python decode throughput at N rows.
+  The plan is one narrow mapInPandas scan;
   the wall IS the Python codec cost, which is what a real decode stage
   pays too.
 - ``neardup``: the blocked dHash band join at N rows with DIVERSE
@@ -44,9 +44,8 @@ from probes._common import (
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
-        "op", choices=["stats", "video", "neardup", "ingest", "quarantine"]
+        "op", choices=["stats", "video", "neardup", "quarantine"]
     )
-    ap.add_argument("--batch", type=int, default=100_000)
     ap.add_argument("--rows", type=int, default=10_000_000)
     ap.add_argument("--m", type=int, default=3)
     ap.add_argument("--max-hamming", type=int, default=4)
@@ -81,8 +80,7 @@ def main() -> None:
     if args.op in ("stats", "video"):
         out = {"op": args.op, "rows": args.rows}
         ops = (
-            (("image", multimodal.multimodal_image_stats),
-             ("audio", multimodal.multimodal_audio_stats))
+            (("image", multimodal.multimodal_image_stats),)
             if args.op == "stats"
             else (("video", multimodal.multimodal_video_stats),)
         )
@@ -93,53 +91,11 @@ def main() -> None:
         print(json.dumps(out))
         return
 
-    # neardup/ingest: diverse-hash probes (md5-injected; see module doc)
+    # neardup: diverse-hash probe (md5-injected; see module doc)
     docs = spark.read.parquet(f"{d}/documents.parquet").select("doc_id")
     stats = docs.select(
         "doc_id", F.substring(F.md5(F.col("doc_id").cast("string")), 1, 16).alias("dhash")
     )
-
-    if args.op == "ingest":
-        # the incremental path at its design point: a 100k-doc crawl
-        # batch probes the persisted band index of the (rows - batch)
-        # corpus instead of re-mining it (the full miner's row: 418 s /
-        # 14.1 GB shuffle at 10M per crawl)
-        split = args.rows - args.batch
-        # cache key carries --batch too: the index content depends on the
-        # corpus/batch split (built with max_doc_id = rows - batch)
-        idx = f"{PROBE_ROOT}/img_band_idx_{args.rows}_{args.m}_{args.batch}"
-        if os.path.exists(f"{idx}/bands/_SUCCESS"):
-            build_sec = None  # cached from a prior run (ingest is the op)
-        else:
-            t0 = time.perf_counter()
-            multimodal.build_image_neardup_index(
-                spark, d, idx, m=args.m, max_doc_id=split, stats=stats
-            )
-            build_sec = round(time.perf_counter() - t0, 1)
-        before = shuffle_write_bytes(spark)
-        t1 = time.perf_counter()
-        pairs = multimodal.image_neardup_ingest(
-            spark, d, idx, split, max_hamming=args.max_hamming, stats=stats
-        )
-        n_pairs = pairs.count()
-        ingest_sec = round(time.perf_counter() - t1, 1)
-        sh = shuffle_delta(before, shuffle_write_bytes(spark))
-        print(
-            json.dumps(
-                {
-                    "op": "ingest",
-                    "rows": args.rows,
-                    "batch": args.batch,
-                    "m": args.m,
-                    "max_hamming": args.max_hamming,
-                    "build_sec": build_sec,
-                    "ingest_sec": ingest_sec,
-                    "ingest_shuffle_bytes": sh,
-                    "pairs": n_pairs,
-                }
-            )
-        )
-        return
 
     before = shuffle_write_bytes(spark)
     t0 = time.perf_counter()

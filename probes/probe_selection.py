@@ -13,7 +13,7 @@ deterministic sharded shuffle.
   regime; the per-cell GEMM is quadratic IN THE CELL by design).
   Isotropic vectors are near-orthogonal, so eps is set low enough to
   exercise drops; the keep-rate is reported, not asserted — the
-  number measures the corpus (like the PQ recall probe).
+  number measures the corpus (like the ANN recall probe).
 - ``shuffle``: ``corpus_shuffle_order`` at 10M docs / 64 shards —
   one Exchange + per-shard sort, the claim is "scan-bound".
 
@@ -94,8 +94,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "op",
-        choices=["gen", "dsir", "dsir_materialize", "semdedup", "shuffle",
-                 "divergence", "qfit"],
+        choices=["gen", "dsir", "semdedup", "shuffle", "divergence", "qfit"],
     )
     ap.add_argument("--rows", type=int, default=10_000_000)
     ap.add_argument("--cells", type=int, default=4096)
@@ -146,48 +145,6 @@ def main() -> None:
                     "shuffle_bytes": sh,
                     "mean_logw_by_source": by,
                     "top10k_positive_logw": n_top_tgtlike,
-                }
-            )
-        )
-        return
-
-    if args.op == "dsir_materialize":
-        # write_dsir_corpus at corpus scale: the weights pass runs
-        # ONCE and lands on disk; the claim is (a) total ~= the
-        # logweights wall + the row-fetch scan, and (b) any further
-        # cut from the written weights costs TakeOrdered over a
-        # 3-column parquet scan, not a recompute (the +71 s trap row,
-        # BASELINE.md round 9)
-        import shutil
-
-        d = gen_corpus(spark, args.rows)
-        out = f"{PROBE_ROOT}/dsir_mat_{args.rows}"
-        shutil.rmtree(out, ignore_errors=True)
-        before = shuffle_write_bytes(spark)
-        t0 = time.perf_counter()
-        sel = selection.write_dsir_corpus(
-            spark, d, out, target_source="tgt", n_select=10000
-        )
-        n_sel = sel.count()
-        total = round(time.perf_counter() - t0, 1)
-        sh = shuffle_delta(before, shuffle_write_bytes(spark))
-        t1 = time.perf_counter()
-        w = spark.read.parquet(f"{out}/dsir_weights.parquet")
-        recut = selection.corpus_dsir_select(
-            spark, d, n_select=50000, weights=w
-        )
-        n_recut = recut.count()
-        recut_sec = round(time.perf_counter() - t1, 1)
-        print(
-            json.dumps(
-                {
-                    "op": "dsir_materialize",
-                    "rows": args.rows,
-                    "total_sec": total,
-                    "recut50k_sec": recut_sec,
-                    "shuffle_bytes": sh,
-                    "n_selected": n_sel,
-                    "n_recut": n_recut,
                 }
             )
         )

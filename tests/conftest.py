@@ -65,39 +65,6 @@ HOSTILE_DOCS = [
 
 
 @pytest.fixture(scope="session")
-def hostile_video_sf_dir(hostile_sf_dir, tmp_path_factory):
-    """hostile_sf_dir with the documents table SLICED to the first 160
-    base docs plus every planted row (round 16). The video near-dup
-    parity checks are quadratic in the doc count and the synthetic
-    video formula is 256-periodic, so the full 500-doc corpus is one
-    giant near-dup cluster: ~103k pairs whose re-verification repeats
-    identical work (~125 s of suite wall across the two video parity
-    tests). The slice keeps every planted ragged shape, every dd class
-    the slice's docs span, and the full decode→hash→band→verify path,
-    at ~10x less pair volume."""
-    import duckdb
-
-    out = tmp_path_factory.mktemp("hostile_video_sf")
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "embeddings events"
-    ).split():
-        p = os.path.join(hostile_sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            os.symlink(p, out / f"{t}.parquet")
-    duckdb.sql(
-        f"""
-        COPY (
-          SELECT * FROM read_parquet('{hostile_sf_dir}/documents.parquet')
-          WHERE doc_id < 160 OR doc_id >= 8000000
-          ORDER BY doc_id
-        ) TO '{out}/documents.parquet' (FORMAT PARQUET)
-        """
-    )
-    return str(out)
-
-
-@pytest.fixture(scope="session")
 def hostile_sf_dir(tmp_path_factory):
     """A scale-factor dir whose documents table is sf0.001 UNION the
     planted ragged docs above, and whose embeddings table plants a

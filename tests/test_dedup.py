@@ -178,16 +178,6 @@ def test_lsh_df_cap_uses_full_corpus_df(spark, tmp_path, monkeypatch):
     assert lsh == exact
 
 
-def test_parse_size_bytes():
-    f = dedup._parse_size_bytes
-    assert f("134217728") == 134217728
-    assert f("128m") == 128 << 20
-    assert f("128MB") == 128 << 20
-    assert f("1G") == 1 << 30
-    assert f("64k") == 64 << 10
-    assert f("garbage") == 134217728  # falls back, never raises
-
-
 def test_simhash_fp_overflow_yields_null(spark, tmp_path):
     """A doc with > 65535 shingles would overflow the 16-bit SWAR vote
     lanes; the contract is a NULL fingerprint (doc drops out of

@@ -58,11 +58,7 @@ _EXPLICIT = [
     # union entry sweeps via registration); the constituent miner
     # keeps its own hostile sweep here
     ("dedup_ngram_jaccard", dedup.dedup_ngram_jaccard, dedup.NGRAM_JACCARD_SQL),
-    ("multimodal_frame_sample", multimodal.multimodal_frame_sample, multimodal.MULTIMODAL_FRAMES_SQL),
     ("image_neardup_pairs", multimodal.image_neardup_pairs, multimodal.IMAGE_NEARDUP_SQL),
-    ("audio_neardup_pairs", multimodal.audio_neardup_pairs, multimodal.AUDIO_NEARDUP_SQL),
-    ("video_neardup_pairs", multimodal.video_neardup_pairs, multimodal.VIDEO_NEARDUP_SQL),
-    ("multimodal_audio_downmix_stats", multimodal.multimodal_audio_downmix_stats, multimodal.MULTIMODAL_AUDIO_DOWNMIX_SQL),
     ("multimodal_image_resize_stats", multimodal.multimodal_image_resize_stats, multimodal.MULTIMODAL_IMAGE_RESIZE_SQL),
     # de-registered in the round-15 events_activity_suite fold: the
     # constituents keep their hostile sweep here (the de-registration
@@ -151,19 +147,10 @@ def test_sweep_is_complete():
     assert not missing, f"documents-table oracles not swept: {missing}"
 
 
-# the video near-dup sweep runs on the SLICED hostile dir: its check is
-# quadratic in doc count and the 256-periodic synthetic corpus is one
-# giant near-dup cluster (~103k pairs at 500 docs, ~60 s of identical
-# re-verification) — the slice keeps every planted shape and the whole
-# decode→hash→band→verify path (see the fixture's docstring, round 16)
-_SLICED_SWEEP = {"video_neardup_pairs"}
-
-
 @pytest.mark.parametrize("name", sorted(_PAIRS))
-def test_hostile_oracle_parity(spark, hostile_sf_dir, hostile_video_sf_dir, name):
+def test_hostile_oracle_parity(spark, hostile_sf_dir, name):
     fn, sql = _PAIRS[name]
-    d = hostile_video_sf_dir if name in _SLICED_SWEEP else hostile_sf_dir
-    ok, msg = compare(fn(spark, d), sql, d)
+    ok, msg = compare(fn(spark, hostile_sf_dir), sql, hostile_sf_dir)
     assert ok, f"{name}: {msg}"
 
 
@@ -176,10 +163,6 @@ def test_hostile_embeddings_indexed_variants(spark, hostile_sf_dir, tmp_path):
 
     builders = [
         (S.build_ivf_index, S.ann_cosine_topk_ivf_indexed),
-        (S.build_lsh_index, S.ann_cosine_topk_lsh_indexed),
-        (S.build_pq_index, S.ann_cosine_topk_pq_indexed),
-        (S.build_sq8_index, S.ann_cosine_topk_sq8_indexed),
-        (S.build_ivfpq_index, S.ann_cosine_topk_ivfpq),
     ]
     for i, (build, query) in enumerate(builders):
         d = str(tmp_path / f"idx{i}")

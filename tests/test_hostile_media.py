@@ -47,10 +47,9 @@ def _corruptions(good: bytes) -> list[bytes | None]:
     "table_fn,stats_fn",
     [
         (M.image_table, M.image_stats),
-        (M.audio_table, M.audio_stats),
         (M.video_table, M.video_stats),
     ],
-    ids=["image", "audio", "video"],
+    ids=["image", "video"],
 )
 def test_quarantine_isolates_bad_payloads(spark, table_fn, stats_fn):
     good = _good_payload(spark, table_fn)
@@ -81,34 +80,6 @@ def test_quarantine_isolates_bad_payloads(spark, table_fn, stats_fn):
         vals = [v for k, v in r.asDict().items() if k not in ("doc_id", "decode_error")]
         assert all(v is None for v in vals), (doc_id, vals)
     assert "NULL payload" in by_doc[3][0].decode_error or "NULL" in by_doc[3][0].decode_error
-
-
-def test_audio_quarantine_flags_mono_violation(spark):
-    stereo = M.audio_table(spark, TEST_SF_DIR, channels=2).limit(2)
-    with pytest.raises(Exception, match="mono-only"):
-        M.audio_stats(stereo).collect()
-    out = M.audio_stats(stereo, on_error="quarantine").collect()
-    assert len(out) == 2
-    assert all("mono-only" in r.decode_error for r in out)
-    assert all(r.n_samples is None for r in out)
-
-
-def test_decode_report_counts(spark):
-    """The health check: clean fixtures report zero errors and full
-    payload counts across all three modalities."""
-    rep = {
-        r.modality: r
-        for r in M.multimodal_decode_report(spark, TEST_SF_DIR).collect()
-    }
-    assert set(rep) == {"image", "audio", "video"}
-    n_docs = (
-        M.media_table(spark, TEST_SF_DIR).select("doc_id").distinct().count()
-    )
-    for m in ("image", "audio"):
-        assert rep[m].n_errors == 0, m
-        assert rep[m].n_payloads == n_docs, m
-        assert rep[m].sample_error is None, m
-    assert rep["video"].n_errors == 0
 
 
 def test_avi_list_nesting_bomb_is_quarantinable(spark):

@@ -14,30 +14,6 @@ def test_decode_stub_fails_loudly_for_real_media():
         M._decode_stub("image/png", b"\x89PNG")
 
 
-def test_frame_sample_fanout(spark):
-    media = M.media_table(spark, TEST_SF_DIR)
-    n_docs = media.count()
-    frames = M.sample_frames(media)
-    assert frames.count() == n_docs * M.N_FRAMES
-    # frames partition the payload: per-doc byte sum == payload length
-    tot = frames.groupBy("doc_id").sum("frame_bytes")
-    feats = M.extract_features(media).select("doc_id", "n_bytes")
-    joined = tot.join(feats, "doc_id")
-    assert joined.filter("`sum(frame_bytes)` != n_bytes").count() == 0
-
-
-# --- de-registered in round 9 (slot rotated to multimodal_image_stats):
-# frame sampling keeps the driver's own value check here in pytest
-def test_frame_sample_oracle_parity(spark):
-    from tests.conftest import ORACLE_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf_dir in (TEST_SF_DIR, ORACLE_SF_DIR):
-        df = M.multimodal_frame_sample(spark, sf_dir)
-        ok, msg = compare(df, M.MULTIMODAL_FRAMES_SQL, sf_dir)
-        assert ok, msg
-
-
 # --- real PPM decode -----------------------------------------------------
 def _ppm(w, h, pixels, maxval=255, header_extra=""):
     head = f"P6{header_extra}\n{w} {h}\n{maxval}\n".encode()
@@ -152,38 +128,6 @@ def test_wav_parser_roundtrip_and_malformed():
         M._decode_wav(b"RIFF\x00\x00\x00\x00WAVE")
     with pytest.raises(ValueError, match="truncated"):
         M._decode_wav(wav[:-2])
-
-
-def test_audio_stats_oracle_parity(spark):
-    """End-to-end WAV encode -> parse -> stats matches the closed-form
-    DuckDB recomputation (the driver's own compare; off-registry under
-    the 50-entry cap)."""
-    from tests.conftest import ORACLE_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf_dir in (TEST_SF_DIR, ORACLE_SF_DIR):
-        df = M.multimodal_audio_stats(spark, sf_dir)
-        ok, msg = compare(df, M.MULTIMODAL_AUDIO_STATS_SQL, sf_dir)
-        assert ok, msg
-
-
-def test_audio_stats_hand_computed(spark, tmp_path):
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        [(3, "x", "en", "s", 1)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = M.multimodal_audio_stats(spark, sf_dir).collect()[0]
-    s = [(3 * 7 + i * 13) % 2048 - 1024 for i in range(M.WAV_SAMPLES)]
-    assert (got.sample_rate, got.channels, got.n_samples) == (
-        M.WAV_RATE, 1, M.WAV_SAMPLES,
-    )
-    assert got.peak == max(abs(x) for x in s)
-    assert got.sum_abs == sum(abs(x) for x in s)
-    assert got.sum_sq == sum(x * x for x in s)
-    assert got.zero_crossings == sum(
-        1 for a, b in zip(s, s[1:]) if (a < 0) != (b < 0)
-    )
 
 
 def test_image_neardup_oracle_parity(spark):
@@ -301,74 +245,6 @@ def _ref_afp(samples):
                 byte |= 1 << (7 - j)
         out += f"{byte:02x}"
     return out
-
-
-def test_audio_fp_oracle_parity(spark):
-    """End-to-end WAV encode -> parse -> fingerprint matches the
-    closed-form DuckDB recomputation (driver's own compare;
-    off-registry under the 50-entry cap)."""
-    from tests.conftest import ORACLE_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf_dir in (TEST_SF_DIR, ORACLE_SF_DIR):
-        df = M.multimodal_audio_fp(spark, sf_dir)
-        ok, msg = compare(df, M.MULTIMODAL_AUDIO_FP_SQL, sf_dir)
-        assert ok, msg
-
-
-def test_audio_fp_gain_invariant_and_validates(spark):
-    """Scaling every sample by a constant scales every window energy
-    by its square, so all pairwise comparisons — and the fingerprint —
-    are unchanged; a different signal differs; a sample count not
-    divisible by 64 is rejected (worker-side)."""
-    base = [((i * 37) % 400) - 200 for i in range(256)]
-    rows = [
-        (1, bytearray(_wav(base))),
-        (2, bytearray(_wav([3 * x for x in base]))),
-        (3, bytearray(_wav([((i * i * 11) % 500) - 250 for i in range(256)]))),
-        (4, bytearray(_wav(base[:128]))),  # 128 samples: also valid
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id long, payload binary"
-    ).coalesce(1)
-    got = {r.doc_id: r.afp for r in M.audio_fingerprints(media).collect()}
-    assert got[1] == _ref_afp(base)
-    assert got[2] == got[1]
-    assert got[3] != got[1]
-    assert got[4] == _ref_afp(base[:128])
-    bad = spark.createDataFrame(
-        [(9, bytearray(_wav([0] * 100)))], "doc_id long, payload binary"
-    )
-    with pytest.raises(Exception, match="divisible"):
-        M.audio_fingerprints(bad).collect()
-
-
-def test_audio_neardup_oracle_parity_and_planted(spark, tmp_path):
-    """Blocked fingerprint band join == the DuckDB oracle at sf0.001;
-    the sample formula is 2048-periodic in doc_id, so docs d and
-    d+2048 render identical audio and come back at Hamming 0."""
-    from tests.oracle_harness import compare
-
-    df = M.audio_neardup_pairs(spark, TEST_SF_DIR)
-    ok, msg = compare(df, M.AUDIO_NEARDUP_SQL, TEST_SF_DIR)
-    assert ok, msg
-
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        [(d, "x", "en", "s", 1) for d in (5, 2053, 100000)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    rows = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in M.audio_neardup_pairs(spark, sf_dir).collect()
-    }
-    assert rows[(5, 2053)] == 0
-    with pytest.raises(ValueError, match="exact-detection"):
-        M.audio_neardup_pairs(spark, sf_dir, max_hamming=7)
-    pre = spark.createDataFrame([(1, "00" * 8)], "doc_id long, afp string")
-    assert M.audio_neardup_pairs(spark, sf_dir, stats=pre).count() == 0
-    with pytest.raises(ValueError, match="lacks column"):
-        M.audio_neardup_pairs(spark, sf_dir, stats=pre.select("doc_id"))
 
 
 # --- real AVI video decode ------------------------------------------------
@@ -517,116 +393,7 @@ def test_video_frame0_matches_image_stats(spark):
     )
 
 
-def test_video_neardup_oracle_parity_and_planted(
-    spark, tmp_path, hostile_video_sf_dir
-):
-    """Frame-level blocked band join + doc-pair min == the DuckDB
-    oracle over the SLICED hostile corpus (round 16 — the full 500-doc
-    corpus is one giant near-dup cluster under the 256-periodic
-    formula: ~103k pairs, ~60 s of identical re-verification; the
-    slice keeps the planted ragged shapes and the whole pipeline);
-    doc_id and doc_id+256 render identical frames, so the separately
-    planted pair below is Hamming 0."""
-    from tests.oracle_harness import compare
-
-    df = M.video_neardup_pairs(spark, hostile_video_sf_dir)
-    ok, msg = compare(df, M.VIDEO_NEARDUP_SQL, hostile_video_sf_dir)
-    assert ok, msg
-
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        [(5, "a", "en", "s", 1), (261, "b", "en", "s", 1),
-         (1000, "c", "en", "s", 1)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in M.video_neardup_pairs(spark, sf_dir).collect()
-    }
-    assert got[(5, 261)] == 0
-    # validation: bound enforcement + stats-frame schema
-    with pytest.raises(ValueError, match="exact-detection bound"):
-        M.video_neardup_pairs(spark, sf_dir, max_hamming=7, m=2)
-    with pytest.raises(ValueError, match="lacks column"):
-        M.video_neardup_pairs(
-            spark, sf_dir, stats=spark.range(3).select("id")
-        )
-
-
 # --- round-9 review hardening ----------------------------------------------
-def test_audio_ops_reject_multichannel(spark):
-    """Interleaved multi-channel streams would yield wrong
-    zero-crossings/fingerprints; both ops fail loudly instead."""
-    stereo = _wav([0, 0, 100, -100] * 32, channels=2)
-    media = spark.createDataFrame(
-        [(1, bytearray(stereo))], "doc_id long, payload binary"
-    )
-    with pytest.raises(Exception, match="mono-only"):
-        M.audio_stats(media).collect()
-    with pytest.raises(Exception, match="mono-only"):
-        M.audio_fingerprints(media).collect()
-
-
-def test_audio_stats_per_channel_stereo_oracle_parity(spark):
-    """End-to-end stereo WAV encode -> deinterleave -> per-channel
-    stats matches the closed-form DuckDB recomputation over the
-    interleaved sample formula (frame f, channel c = value 2f+c)."""
-    from tests.conftest import ORACLE_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf_dir in (TEST_SF_DIR, ORACLE_SF_DIR):
-        df = M.multimodal_audio_stats_stereo(spark, sf_dir)
-        ok, msg = compare(df, M.MULTIMODAL_AUDIO_STATS_STEREO_SQL, sf_dir)
-        assert ok, msg
-
-
-def test_audio_stats_per_channel_semantics(spark):
-    """Hand-planted stereo: per-channel zero-crossings differ from any
-    flat scan of the interleaved stream (the exact wrongness the
-    mono-only guard exists for); mono input reduces to audio_stats
-    rows exactly; malformed channel layouts fail loudly."""
-    # L alternates sign every frame (63 crossings over 64 frames);
-    # R is the constant 50 (0 crossings). Interleaved flat scan would
-    # cross at EVERY step instead.
-    inter = []
-    for f in range(64):
-        inter += [100 if f % 2 == 0 else -100, 50]
-    media = spark.createDataFrame(
-        [(1, bytearray(_wav(inter, channels=2)))],
-        "doc_id long, payload binary",
-    )
-    rows = {r.channel: r for r in M.audio_stats_per_channel(media).collect()}
-    assert set(rows) == {0, 1}
-    assert rows[0].zero_crossings == 63
-    assert rows[1].zero_crossings == 0
-    assert rows[0].peak == 100 and rows[1].peak == 50
-    assert rows[0].n_frames == 64 and rows[0].channels == 2
-    assert rows[1].sum_sq == 64 * 50 * 50
-    # mono input: identical numbers to audio_stats, channel pinned 0
-    mono_media = M.audio_table(spark, TEST_SF_DIR)
-    per_ch = {
-        r.doc_id: r
-        for r in M.audio_stats_per_channel(mono_media).collect()
-    }
-    for r in M.audio_stats(mono_media).collect():
-        p = per_ch[r.doc_id]
-        assert (p.channel, p.channels, p.n_frames) == (0, 1, r.n_samples)
-        assert (p.peak, p.sum_abs, p.sum_sq, p.zero_crossings) == (
-            r.peak, r.sum_abs, r.sum_sq, r.zero_crossings,
-        )
-    # 3 int16 values do not deinterleave into 2 channels
-    bad = spark.createDataFrame(
-        [(1, bytearray(_wav([1, 2, 3], channels=2)))],
-        "doc_id long, payload binary",
-    )
-    with pytest.raises(Exception, match="deinterleave"):
-        M.audio_stats_per_channel(bad).collect()
-    # the stereo fixture builder rejects channel counts that don't
-    # divide the sample plane
-    with pytest.raises(ValueError, match="divide"):
-        M.audio_table(spark, TEST_SF_DIR, channels=3)
-
-
 def test_ppm_comment_glued_to_token():
     """A '#' immediately after a header token is spec-legal (comments
     live in header whitespace); the comment's newline IS the single
@@ -775,353 +542,3 @@ def _flip_bits(hex16, bits):
     for b in bits:
         v ^= 1 << b
     return f"{v:016x}"
-
-
-def test_media_neardup_ingest_matches_full_miner(spark, tmp_path):
-    """The ingest gate (dedup.neardup_ingest's contract, extended to
-    the Hamming family): ingest output == the full miner restricted to
-    batch-touching pairs, on a diverse-hash corpus with planted
-    corpus-corpus (must NOT surface), corpus-batch, and batch-batch
-    near-dups."""
-    split, n = 400, 500
-    hashes = {i: _md5hex16(i) for i in range(n)}
-    hashes[11] = _flip_bits(hashes[10], [3])          # corpus-corpus
-    hashes[450] = _flip_bits(hashes[20], [0, 9, 17])  # corpus-batch
-    hashes[470] = _flip_bits(hashes[460], [5, 40])    # batch-batch
-    st = spark.createDataFrame(
-        [(i, h) for i, h in hashes.items()], "doc_id long, dhash string"
-    )
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.image_neardup_pairs(spark, TEST_SF_DIR, stats=st).collect()
-    }
-    assert (10, 11, 1) in full
-    want = {p for p in full if p[0] >= split or p[1] >= split}
-    assert {(20, 450, 3), (460, 470, 2)} <= want
-    assert (10, 11, 1) not in want
-
-    idx = str(tmp_path / "img_idx")
-    M.build_image_neardup_index(
-        spark, TEST_SF_DIR, idx, max_doc_id=split, stats=st
-    )
-    ingest_df = M.image_neardup_ingest(spark, TEST_SF_DIR, idx, split, stats=st)
-    got = {(r.doc_a, r.doc_b, r.hamming) for r in ingest_df.collect()}
-    assert got == want
-    # the cross probe BROADCASTS the batch bands against one scan of
-    # the index — the corpus side never enters an Exchange
-    plan = ingest_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    # geometry is index state: querying with the wrong hash family
-    # fails loudly instead of joining to nothing
-    with pytest.raises(ValueError, match="holds 'dhash'"):
-        M.media_neardup_ingest(
-            spark,
-            idx,
-            st.withColumnRenamed("dhash", "afp"),
-            "afp",
-            M.AFP_BANDS,
-            M.AUDIO_MAX_HAMMING,
-            split,
-        )
-
-
-def test_audio_neardup_ingest_matches_full_miner(spark, tmp_path):
-    split, n = 300, 360
-    hashes = {i: _md5hex16(i, "a") for i in range(n)}
-    hashes[330] = _flip_bits(hashes[7], [12, 33])
-    st = spark.createDataFrame(
-        [(i, h) for i, h in hashes.items()], "doc_id long, afp string"
-    )
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.audio_neardup_pairs(spark, TEST_SF_DIR, stats=st).collect()
-    }
-    want = {p for p in full if p[0] >= split or p[1] >= split}
-    assert (7, 330, 2) in want
-    idx = str(tmp_path / "afp_idx")
-    M.build_audio_neardup_index(
-        spark, TEST_SF_DIR, idx, max_doc_id=split, stats=st
-    )
-    got = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.audio_neardup_ingest(
-            spark, TEST_SF_DIR, idx, split, stats=st
-        ).collect()
-    }
-    assert got == want
-
-
-def test_video_neardup_ingest_matches_full_miner(spark, tmp_path):
-    """Frame-level index rows, doc-pair min-Hamming collapse: a batch
-    clip sharing ONE frame with a corpus clip is a pair; the min over
-    several matching frames is taken across cross+within."""
-    split, n, nf = 80, 100, 3
-    rows = []
-    fh = {}
-    for d in range(n):
-        for f in range(nf):
-            fh[(d, f)] = _md5hex16(d * 7 + f, "v")
-    fh[(90, 1)] = _flip_bits(fh[(30, 2)], [8])       # corpus-batch, ham 1
-    fh[(91, 0)] = _flip_bits(fh[(92, 2)], [2, 50])   # batch-batch, ham 2
-    fh[(91, 2)] = fh[(92, 0)]                        # same pair, ham 0 -> min
-    rows = [(d, h) for (d, _f), h in fh.items()]
-    st = spark.createDataFrame(rows, "doc_id long, dhash string")
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.video_neardup_pairs(spark, TEST_SF_DIR, stats=st).collect()
-    }
-    want = {p for p in full if p[0] >= split or p[1] >= split}
-    assert {(30, 90, 1), (91, 92, 0)} <= want
-    idx = str(tmp_path / "vid_idx")
-    M.build_video_neardup_index(
-        spark, TEST_SF_DIR, idx, max_doc_id=split, stats=st
-    )
-    got = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.video_neardup_ingest(
-            spark, TEST_SF_DIR, idx, split, stats=st
-        ).collect()
-    }
-    assert got == want
-
-
-def test_image_neardup_ingest_end_to_end_decode_path(spark):
-    """No injected hashes: the sf0.001 decode path itself (256-periodic
-    formula, so heavy genuine duplicates) through build-index + ingest
-    agrees with the full miner's batch-touching restriction."""
-    import tempfile
-
-    n_docs = spark.read.parquet(
-        f"{TEST_SF_DIR}/documents.parquet"
-    ).count()
-    split = n_docs // 2
-    full = M.image_neardup_pairs(spark, TEST_SF_DIR)
-    want = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in full.collect()
-        if r.doc_a >= split or r.doc_b >= split
-    }
-    assert want  # the periodic fixture guarantees batch-touching dups
-    with tempfile.TemporaryDirectory() as idx:
-        M.build_image_neardup_index(spark, TEST_SF_DIR, idx, max_doc_id=split)
-        got = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in M.image_neardup_ingest(
-                spark, TEST_SF_DIR, idx, split
-            ).collect()
-        }
-    assert got == want
-
-
-def test_media_index_diff_maintenance_reconciles(spark, tmp_path):
-    """Diff-driven maintenance: applying a crawl's churn to the band
-    index copy-on-write equals a full rebuild from the new snapshot
-    (frame equality), the plan's keys are exactly the touched-key
-    support of the rewrite, and untouched keys never appear."""
-    n = 200
-    old = {i: _md5hex16(i, "m") for i in range(n)}
-    new = dict(old)
-    del new[5]                                # removed
-    new[7] = _md5hex16(7, "changed")          # changed
-    new[300] = _md5hex16(300, "m")            # added
-    old_st = spark.createDataFrame(
-        list(old.items()), "doc_id long, dhash string"
-    )
-    new_st = spark.createDataFrame(
-        list(new.items()), "doc_id long, dhash string"
-    )
-    diff = spark.createDataFrame(
-        [(5, "removed"), (7, "changed"), (300, "added")],
-        "doc_id long, status string",
-    )
-    idx = str(tmp_path / "idx")
-    nxt = str(tmp_path / "next")
-    M.build_image_neardup_index(spark, "unused", idx, stats=old_st)
-    M.media_index_apply_diff(spark, idx, diff, new_st, nxt)
-    # reconciliation: copy-on-write result == full rebuild on new snap
-    rebuilt = str(tmp_path / "rebuilt")
-    M.build_image_neardup_index(spark, "unused", rebuilt, stats=new_st)
-    got = {
-        tuple(r) for r in spark.read.parquet(f"{nxt}/bands").collect()
-    }
-    want = {
-        tuple(r)
-        for r in spark.read.parquet(f"{rebuilt}/bands").collect()
-    }
-    assert got == want
-    assert (
-        spark.read.parquet(f"{nxt}/meta").collect()
-        == spark.read.parquet(f"{idx}/meta").collect()
-    )
-    # the plan is the exact touched-key support of the rewrite
-    plan = M.media_index_maintenance_plan(spark, idx, diff, new_st)
-    plan_rows = {(r.tbl, r.kk): (r.n_remove, r.n_add) for r in plan.collect()}
-    before = {
-        tuple(r)
-        for r in spark.read.parquet(f"{idx}/bands")
-        .select("tbl", "kk", "doc_id")
-        .collect()
-    }
-    after = {
-        tuple(r)
-        for r in spark.read.parquet(f"{nxt}/bands")
-        .select("tbl", "kk", "doc_id")
-        .collect()
-    }
-    touched = {(t, k) for (t, k, _d) in before ^ after}
-    assert set(plan_rows) == touched
-    # counts: removed doc 5 + changed doc 7 leave; added 300 + changed
-    # 7 enter; every key group's totals line up with the row movement
-    for (t, k), (nr, na) in plan_rows.items():
-        assert nr == len(
-            {(t2, k2, d) for (t2, k2, d) in before - after
-             if (t2, k2) == (t, k)}
-        )
-        assert na == len(
-            {(t2, k2, d) for (t2, k2, d) in after - before
-             if (t2, k2) == (t, k)}
-        )
-    # an ingest against the advanced index sees the new snapshot: the
-    # changed doc's OLD hash no longer collides
-    with pytest.raises(ValueError, match="collides"):
-        M.media_index_apply_diff(spark, idx, diff, new_st, f"{idx}/sub")
-
-
-def test_media_index_append_sequential_ingests(spark, tmp_path):
-    """The index lifecycle end-to-end: build(corpus) + ingest(batch1)
-    + append(batch1) + ingest(batch2) produces, across the two
-    ingests, exactly the full miner's batch-touching pairs for each
-    stage — batch2 collides against batch1 only because the append
-    advanced the index."""
-    s1, s2, n = 300, 400, 500
-    hashes = {i: _md5hex16(i, "q") for i in range(n)}
-    hashes[350] = _flip_bits(hashes[8], [4])    # corpus x batch1
-    hashes[450] = _flip_bits(hashes[350], [9])  # batch1 x batch2 (!)
-    st = spark.createDataFrame(
-        [(i, h) for i, h in hashes.items()], "doc_id long, dhash string"
-    )
-    idx = str(tmp_path / "idx")
-    M.build_image_neardup_index(spark, "unused", idx, max_doc_id=s1, stats=st)
-    got1 = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.image_neardup_ingest(
-            spark, "unused", idx, s1, stats=st.filter(f"doc_id < {s2}")
-        ).collect()
-    }
-    # batch1 = [s1, s2): pairs touching it, both endpoints < s2
-    full = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.image_neardup_pairs(spark, "unused", stats=st).collect()
-    }
-    want1 = {
-        p for p in full
-        if (s1 <= p[0] < s2 or s1 <= p[1] < s2) and p[0] < s2 and p[1] < s2
-    }
-    assert got1 == want1 and (8, 350, 1) in got1
-    # accept batch1 -> append, then ingest batch2 = [s2, n)
-    M.media_index_append(
-        spark, idx, st.filter(f"doc_id >= {s1} and doc_id < {s2}")
-    )
-    got2 = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in M.image_neardup_ingest(spark, "unused", idx, s2, stats=st)
-        .collect()
-    }
-    want2 = {p for p in full if p[0] >= s2 or p[1] >= s2}
-    assert got2 == want2 and (350, 450, 1) in got2
-    # build(corpus)+append(batch1) == build(corpus ∪ batch1) row-for-row
-    rebuilt = str(tmp_path / "rb")
-    M.build_image_neardup_index(
-        spark, "unused", rebuilt, max_doc_id=s2, stats=st
-    )
-    a = {tuple(r) for r in spark.read.parquet(f"{idx}/bands").collect()}
-    b = {tuple(r) for r in spark.read.parquet(f"{rebuilt}/bands").collect()}
-    assert a == b
-
-
-def test_media_index_append_refuses_compacted_streaming_index(spark, tmp_path):
-    """A compacted STREAMING index resolves its live band table via
-    bands_MANIFEST; the batch append's literal-path write would land
-    in the superseded dir — invisible to every probe and deleted by
-    the next sweep (round-14 advice item). It must fail loudly and
-    leave the index untouched."""
-    import os
-
-    from fledge_south_csvplayback_spark.streaming import media_ingest as MI
-
-    st = spark.createDataFrame(
-        [(i, _md5hex16(i, "g")) for i in range(40)],
-        "doc_id long, dhash string",
-    )
-    idx = str(tmp_path / "sidx")
-    MI.seed_media_index(spark, st, idx)
-    batch = spark.createDataFrame(
-        [(100 + i, _md5hex16(100 + i, "g")) for i in range(5)],
-        "doc_id long, dhash string",
-    )
-    MI.media_accept_batch(batch, 0, idx, str(tmp_path / "out"))
-    MI.compact_media_index(spark, idx)
-    assert os.path.exists(f"{idx}/bands_MANIFEST")
-    live_before = {
-        tuple(r) for r in spark.read.parquet(MI.media_bands_dir(idx)).collect()
-    }
-    with pytest.raises(ValueError, match="media_accept_batch"):
-        M.media_index_append(spark, idx, st.limit(5))
-    assert {
-        tuple(r) for r in spark.read.parquet(MI.media_bands_dir(idx)).collect()
-    } == live_before
-
-
-def test_audio_downmix_stats_oracle_parity(spark):
-    """decode -> floor-mean downmix -> re-encode -> decode -> stats
-    matches the closed-form interleaved-formula oracle (explicit
-    floor(): DuckDB's // truncates on negatives, numpy's floors)."""
-    from tests.conftest import ORACLE_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf_dir in (TEST_SF_DIR, ORACLE_SF_DIR):
-        df = M.multimodal_audio_downmix_stats(spark, sf_dir)
-        ok, msg = compare(df, M.MULTIMODAL_AUDIO_DOWNMIX_SQL, sf_dir)
-        assert ok, msg
-
-
-def test_audio_downmix_hand_computed_and_validates(spark):
-    """Hand-planted stereo: mono frame = floor((L+R)/2) incl. the
-    negative-odd case; mono input passes through value-identical;
-    malformed layouts fail loudly."""
-    inter = [100, 50, -101, 50, 7, -8, -32768, 32767]  # 4 frames
-    media = spark.createDataFrame(
-        [(1, bytearray(_wav(inter, channels=2)))],
-        "doc_id long, payload binary",
-    )
-    out = M.audio_downmix(media).collect()[0]
-    rate, ch, data = M._decode_wav(bytes(out.payload))
-    assert (rate, ch) == (8000, 1)
-    got = list(np.frombuffer(data, "<i2"))
-    assert got == [75, -26, -1, -1]  # floor((-101+50)/2) = -26
-    mono = M.audio_table(spark, TEST_SF_DIR)
-    same = M.audio_stats(M.audio_downmix(mono)).collect()
-    want = {r.doc_id: r for r in M.audio_stats(mono).collect()}
-    for r in same:
-        w = want[r.doc_id]
-        assert (r.peak, r.sum_abs, r.sum_sq, r.zero_crossings) == (
-            w.peak, w.sum_abs, w.sum_sq, w.zero_crossings,
-        )
-    bad = spark.createDataFrame(
-        [(1, bytearray(_wav([1, 2, 3], channels=2)))],
-        "doc_id long, payload binary",
-    )
-    with pytest.raises(Exception, match="cannot downmix"):
-        M.audio_downmix(bad).collect()
-
-
-def test_audio_stats_null_payload_descriptive_error(spark):
-    """A NULL payload fails both preparse branches; the decoder must
-    name the doc rather than die on bytes(None)."""
-    import pytest
-
-    df = spark.createDataFrame(
-        [(1, None)], "doc_id long, payload binary"
-    )
-    with pytest.raises(Exception, match="NULL WAV payload for doc_id=1"):
-        M.audio_stats(df).collect()

@@ -9,8 +9,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import functions as F
-
 from fledge_south_csvplayback_spark.operators import selection
 from tests.conftest import ORACLE_SF_DIR, TEST_SF_DIR
 from tests.oracle_harness import compare
@@ -259,46 +257,4 @@ def test_dsir_select_reuses_precomputed_weights(spark):
     with pytest.raises(ValueError, match="logw"):
         selection.corpus_dsir_select(
             spark, TEST_SF_DIR, weights=w.select("doc_id", "n_grams")
-        )
-
-
-def test_write_dsir_corpus_matches_select(spark, tmp_path):
-    """The materializer's selected parquet holds exactly the
-    corpus_dsir_select docs (score included), the weights artifact is
-    complete + reusable for further cuts, the selection plan over the
-    artifact carries no gram/fit stages, and the overwrite guard
-    fires."""
-    import pytest
-
-    out = str(tmp_path / "out")
-    got = selection.write_dsir_corpus(spark, TEST_SF_DIR, out)
-    want = {
-        (r.doc_id, r.score)
-        for r in selection.corpus_dsir_select(spark, TEST_SF_DIR).collect()
-    }
-    assert {(r.doc_id, r.score) for r in got.collect()} == want
-    # the materialized rows are full document rows + score
-    docs_cols = set(
-        spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet").columns
-    )
-    assert set(got.columns) == docs_cols | {"score"}
-    # the weights artifact covers the whole corpus and re-cuts cheaply
-    w = spark.read.parquet(f"{out}/dsir_weights.parquet")
-    assert w.count() == spark.read.parquet(
-        f"{TEST_SF_DIR}/documents.parquet"
-    ).count()
-    recut = selection.corpus_dsir_select(
-        spark, TEST_SF_DIR, n_select=7, weights=w
-    )
-    top = recut.collect()
-    assert len(top) == 7
-    assert {(r.doc_id, r.score) for r in top} <= want
-    # selecting FROM the artifact never re-derives weights: no gram
-    # explode (Generate) and no aggregate Exchange in the plan
-    plan = recut._jdf.queryExecution().executedPlan().toString()
-    assert "Generate" not in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
-    with pytest.raises(ValueError, match="collides"):
-        selection.write_dsir_corpus(
-            spark, TEST_SF_DIR, f"{TEST_SF_DIR}/nested"
         )

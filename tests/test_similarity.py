@@ -132,63 +132,6 @@ def test_ivf_indexed_prunes_partitions(spark, tmp_path):
     assert probed and probed < on_disk, (probed, on_disk)
 
 
-def test_lsh_indexed_matches_inline(spark, tmp_path):
-    """The persisted band index (build_lsh_index +
-    ann_cosine_topk_lsh_indexed) must return exactly the inline
-    band-mask entry's rows: same Catalyst band keys, same ranking
-    contract — only where the hyperplane math runs (ingest vs query)
-    differs."""
-    index_dir = str(tmp_path / "lsh_index")
-    S.build_lsh_index(spark, TEST_SF_DIR, index_dir)
-    inline = {
-        tuple(r) for r in S.ann_cosine_topk_lsh(spark, TEST_SF_DIR).collect()
-    }
-    indexed = {
-        tuple(r)
-        for r in S.ann_cosine_topk_lsh_indexed(
-            spark, TEST_SF_DIR, index_dir
-        ).collect()
-    }
-    assert indexed == inline
-
-
-def test_lsh_indexed_prunes_partitions(spark, tmp_path):
-    """The queries' (band, key) bucket predicate must reach the scan
-    as PartitionFilters so unprobed bucket directories are never
-    opened; the probed bucket set must be a strict subset of the
-    on-disk buckets."""
-    import os
-
-    index_dir = str(tmp_path / "lsh_index")
-    S.build_lsh_index(spark, TEST_SF_DIR, index_dir)
-    df = S.ann_cosine_topk_lsh_indexed(spark, TEST_SF_DIR, index_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    pf = [
-        ln
-        for ln in plan.splitlines()
-        if "PartitionFilters" in ln and "band" in ln and "key" in ln
-    ]
-    assert pf, plan
-    on_disk = set()
-    for band_dir in os.listdir(index_dir):
-        if band_dir.startswith("band="):
-            b = int(band_dir.split("=")[1])
-            for key_dir in os.listdir(os.path.join(index_dir, band_dir)):
-                if key_dir.startswith("key="):
-                    on_disk.add((b, int(key_dir.split("=")[1])))
-    emb = S._emb(spark, TEST_SF_DIR)
-    from pyspark.sql import functions as F
-
-    keyed = emb.withColumn(
-        "keys", F.transform(S._lsh_bands(F.col("v")), lambda bk: bk["key"])
-    )
-    probed = set()
-    for r in keyed.filter(F.col("vec_id") < S.N_QUERIES).collect():
-        for band, key in enumerate(r["keys"]):
-            probed.add((band, key))
-    assert probed < on_disk, (len(probed), len(on_disk))
-
-
 def test_bucket_row_scorer_dedups_within_batch():
     """Regression (round-5 review finding): in bucket_rows mode,
     duplicate rows of one vector inside a single Arrow batch must NOT
@@ -223,111 +166,6 @@ def test_bucket_row_scorer_dedups_within_batch():
     assert len(got) == S.TOP_K
     assert len(set(got)) == S.TOP_K  # all distinct
     assert got == [100, 101, 102, 103, 104]
-
-
-def test_embedding_clusters_oracle_parity(spark):
-    ok, msg = compare(
-        S.embedding_clusters(spark, TEST_SF_DIR),
-        S.EMBEDDING_CLUSTERS_SQL,
-        TEST_SF_DIR,
-    )
-    assert ok, msg
-
-
-def test_embedding_clusters_cover_pairs(spark):
-    """Every mined pair must be co-clustered, and each cluster's keep
-    row must be its minimum member."""
-    pairs = S.embedding_cosine_pairs(spark, TEST_SF_DIR).collect()
-    assert pairs
-    labels = {
-        r.vec_id: (r.cluster_id, r.keep)
-        for r in S.embedding_clusters(spark, TEST_SF_DIR).collect()
-    }
-    for p in pairs:
-        assert labels[p.vec_a][0] == labels[p.vec_b][0], p
-    by_cluster: dict[int, list[int]] = {}
-    for vid, (cid, _) in labels.items():
-        by_cluster.setdefault(cid, []).append(vid)
-    for cid, members in by_cluster.items():
-        assert cid == min(members)
-        assert labels[cid][1] is True
-
-
-# --- distributed PCA ---------------------------------------------------------
-def test_pca_matches_exact_numpy(spark):
-    """The one-pass moment sketch reproduces exact in-memory PCA:
-    same covariance eigenvalues, orthonormal components, identical
-    projections under the shared sign rule."""
-    import numpy as np
-
-    mean, comps, var = S.pca_model(spark, TEST_SF_DIR, k=4)
-    x = np.array(
-        [
-            list(r.embedding)
-            for r in spark.read.parquet(
-                f"{TEST_SF_DIR}/embeddings.parquet"
-            ).collect()
-        ],
-        dtype=np.float64,
-    )
-    mu = x.mean(axis=0)
-    cov = (x - mu).T @ (x - mu) / len(x)
-    evals, evecs = np.linalg.eigh(cov)
-    assert np.allclose(mean, mu, atol=1e-9)
-    for j in range(4):
-        want_val = evals[-1 - j]
-        vec = evecs[:, -1 - j]
-        if vec[int(np.argmax(np.abs(vec)))] < 0:
-            vec = -vec
-        assert abs(var[j] - want_val) < 1e-9
-        assert np.allclose(comps[j], vec, atol=1e-8)
-    # orthonormality and descending variance
-    c = np.array(comps)
-    assert np.allclose(c @ c.T, np.eye(4), atol=1e-8)
-    assert var == sorted(var, reverse=True)
-    # empirical variance of each projected coordinate equals its eigenvalue
-    pcs = np.array(
-        [r.pc for r in S.embedding_pca(spark, TEST_SF_DIR, k=4).collect()]
-    )
-    assert np.allclose(pcs.var(axis=0), var, atol=1e-4)
-
-
-def test_pca_projection_oracle_parity(spark):
-    mean, comps, _ = S.pca_model(spark, TEST_SF_DIR)
-    df = S.embedding_pca(spark, TEST_SF_DIR)
-    ok, msg = compare(df, S._pca_sql(mean, comps), TEST_SF_DIR)
-    assert ok, msg
-
-
-def test_pca_projection_oracle_parity_sf001(spark):
-    sf = "/root/testdata/sf0.01"
-    mean, comps, _ = S.pca_model(spark, sf)
-    df = S.embedding_pca(spark, sf)
-    ok, msg = compare(df, S._pca_sql(mean, comps), sf)
-    assert ok, msg
-
-
-def test_pca_transform_plan_is_narrow(spark):
-    """The transform phase is literal-matrix Catalyst math: scan +
-    project, no Exchange, no Python in the per-row path."""
-    plan = (
-        S.embedding_pca(spark, TEST_SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-    assert "Join" not in plan, plan
-    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan, plan
-
-
-def test_pca_rejects_bad_k(spark):
-    """k > dim must raise, not silently wrap numpy's negative indices
-    into duplicated components."""
-    import pytest
-
-    with pytest.raises(ValueError, match="k <= dim"):
-        S.pca_model(spark, TEST_SF_DIR, k=80)
 
 
 # --- k-means -----------------------------------------------------------------
@@ -367,36 +205,6 @@ def test_kmeans_inertia_monotone_and_deterministic(spark):
     c2, i2 = S.kmeans_fit(spark, TEST_SF_DIR)
     assert c1 == c2 and i1 == i2  # no RNG, partitioning-independent
     assert all(b <= a + 1e-9 for a, b in zip(i1, i1[1:]))  # Lloyd's descent
-
-
-def test_kmeans_assignment_is_nearest_final_centroid(spark):
-    import numpy as np
-
-    cents, _ = S.kmeans_fit(spark, TEST_SF_DIR)
-    c = np.array(cents)
-    got = {
-        r.vec_id: (r.cluster_id, r.sq_dist)
-        for r in S.embedding_kmeans(spark, TEST_SF_DIR).collect()
-    }
-    rows = spark.read.parquet(f"{TEST_SF_DIR}/embeddings.parquet").collect()
-    assert len(got) == len(rows)
-    for r in rows:
-        v = np.array([float(x) for x in r.embedding])
-        d2 = ((c - v) ** 2).sum(axis=1)
-        cid = int(np.argmin(d2))
-        assert got[r.vec_id][0] == cid, r.vec_id
-        assert abs(got[r.vec_id][1] - round(float(d2[cid]), 6)) <= 1e-6
-
-
-def test_kmeans_assignment_plan_is_narrow(spark):
-    plan = (
-        S.embedding_kmeans(spark, TEST_SF_DIR)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan, plan
-    assert "Join" not in plan, plan
 
 
 def test_lsh_production_keys_match_reproducible(spark):
@@ -506,253 +314,6 @@ def test_ivf_index_rejects_unknown_centroid_mode(spark, tmp_path):
         S.build_ivf_index(
             spark, TEST_SF_DIR, str(tmp_path / "x"), centroids="magic"
         )
-
-
-def test_pq_fit_matches_numpy_replica(spark):
-    """pq_fit == an independent pure-numpy Lloyd per subspace with the
-    same deterministic rules — the iterative-op gate (the kmeans
-    precedent): no RNG, first-minimum ties, empty keeps previous."""
-    import numpy as np
-
-    m, k, iters = 4, 8, 3
-    books, inertia = S.pq_fit(spark, TEST_SF_DIR, m=m, k=k, iters=iters)
-    rows = sorted(
-        (r["vec_id"], [float(x) for x in r["v"]])
-        for r in S._emb(spark, TEST_SF_DIR).collect()
-    )
-    x = np.array([v for _, v in rows]).reshape(len(rows), m, -1)
-    d_sub = x.shape[2]
-    cents = np.array(
-        [[v[j * d_sub : (j + 1) * d_sub] for _, v in rows[:k]] for j in range(m)]
-    )
-    ref_inertia = []
-    for _ in range(iters):
-        err = 0.0
-        new = cents.copy()
-        for j in range(m):
-            d2 = ((x[:, j, :, None] - cents[j].T[None]) ** 2).sum(axis=1)
-            a = np.argmin(d2, axis=1)
-            err += d2[np.arange(len(x)), a].sum()
-            for cid in range(k):
-                sel = x[a == cid, j, :]
-                if len(sel):
-                    new[j, cid] = sel.mean(axis=0)
-        ref_inertia.append(err)
-        cents = new
-    assert np.allclose(np.array(books), cents, rtol=1e-9, atol=1e-9)
-    assert np.allclose(inertia, ref_inertia, rtol=1e-6)
-    assert all(b >= a for a, b in zip(inertia[1:], inertia[:-1]))  # non-increasing
-
-
-def test_pq_index_matches_numpy_adc_replica(spark, tmp_path):
-    """The ADC path over 8-byte codes must EXACTLY match a pure-numpy
-    encode+LUT replica (same codebooks, same round-6 + vec_id ranking
-    contract) — that is the correctness gate. Recall vs true top-k is
-    NOT floored here: the synthetic fixture vectors are isotropic
-    random — PQ's worst case by construction (no low-dimensional
-    structure to exploit; measured quantization error ~0.74 of unit
-    norm at m=8/k=16, ADC-vs-exact cosine correlation ~0.68) — so a
-    recall number on this corpus measures the corpus, not the code.
-    Also pinned: the codes scan never touches the embedding column,
-    and rebuilds are deterministic."""
-    import numpy as np
-    import os
-
-    index_dir = str(tmp_path / "pq_index")
-    S.build_pq_index(spark, TEST_SF_DIR, index_dir)
-    # rescore_c=None = the raw-ADC path this replica mirrors; the
-    # default (rescored) path has its own replica test below
-    got = S.ann_cosine_topk_pq_indexed(
-        spark, TEST_SF_DIR, index_dir, rescore_c=None
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema" in plan and "embedding" not in plan
-    rows = {(r.query_id, r.rank, r.vec_id, r.cosine) for r in got.collect()}
-
-    # numpy replica from the PERSISTED artifacts
-    cb = spark.read.parquet(f"{index_dir}/_codebooks").collect()
-    m = 1 + max(r["j"] for r in cb)
-    c = np.zeros((m, 1 + max(r["cid"] for r in cb), len(cb[0]["cv"])))
-    for r in cb:
-        c[r["j"], r["cid"]] = r["cv"]
-    code_rows = sorted(
-        (r["vec_id"], list(r["codes"]))
-        for r in spark.read.parquet(index_dir).collect()
-    )
-    ids = np.array([i for i, _ in code_rows])
-    codes = np.array([cd for _, cd in code_rows])
-    emb = {r["vec_id"]: np.array(list(r["v"])) for r in S._emb(spark, TEST_SF_DIR).collect()}
-    recon = c[np.arange(m), codes].reshape(len(ids), -1)
-    rnorm = np.linalg.norm(recon, axis=1)
-    want = set()
-    for qid in range(S.N_QUERIES):
-        q = emb[qid]
-        qn = np.linalg.norm(q)
-        sims = np.round(recon @ q / (rnorm * qn), 6)
-        mask = ids != qid
-        order = np.lexsort((ids[mask], -sims[mask]))[: S.TOP_K]
-        for rank, oi in enumerate(order, 1):
-            want.add((qid, rank, int(ids[mask][oi]), float(sims[mask][oi])))
-    assert rows == want
-
-    # deterministic rebuild
-    index_dir2 = str(tmp_path / "pq_index2")
-    S.build_pq_index(spark, TEST_SF_DIR, index_dir2)
-    rows2 = {
-        (r.query_id, r.rank, r.vec_id, r.cosine)
-        for r in S.ann_cosine_topk_pq_indexed(
-            spark, TEST_SF_DIR, index_dir2, rescore_c=None
-        ).collect()
-    }
-    assert rows2 == rows
-    # compression: codes parquet ≪ the raw embeddings parquet
-    def psize(p):
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(p)
-            for f in fs
-            if f.endswith(".parquet") and "_codebooks" not in r
-        )
-
-    raw = os.path.getsize(f"{TEST_SF_DIR}/embeddings.parquet") if os.path.isfile(
-        f"{TEST_SF_DIR}/embeddings.parquet"
-    ) else psize(f"{TEST_SF_DIR}/embeddings.parquet")
-    assert psize(index_dir) < raw / 4, (psize(index_dir), raw)
-
-
-def test_pq_fit_validates_args(spark):
-    import pytest
-
-    with pytest.raises(ValueError):
-        S.pq_fit(spark, TEST_SF_DIR, m=7)  # 64 not divisible
-    with pytest.raises(ValueError):
-        S.pq_fit(spark, TEST_SF_DIR, iters=0)
-
-
-def test_ivfpq_matches_numpy_replica_and_prunes(spark, tmp_path):
-    """IVFADC query == a pure-numpy replica built from the PERSISTED
-    artifacts (centroids + residual codebooks + codes), under a
-    full-cell probe so masking is not in play; at nprobe=1 the scan
-    prunes to the probed cells' partitions."""
-    import numpy as np
-    import re as _re
-
-    index_dir = str(tmp_path / "ivfpq")
-    S.build_ivfpq_index(spark, TEST_SF_DIR, index_dir, kmeans_iters=2, iters=2)
-
-    cents = sorted(
-        (r["cell_id"], np.array(list(r["cv"])), r["cn"])
-        for r in spark.read.parquet(f"{index_dir}/_centroids").collect()
-    )
-    cb = spark.read.parquet(f"{index_dir}/_codebooks").collect()
-    m = 1 + max(r["j"] for r in cb)
-    books = np.zeros((m, 1 + max(r["cid"] for r in cb), len(cb[0]["cv"])))
-    for r in cb:
-        books[r["j"], r["cid"]] = r["cv"]
-    code_rows = sorted(
-        (r["vec_id"], r["cell_id"], list(r["codes"]))
-        for r in spark.read.parquet(index_dir).collect()
-    )
-    ids = np.array([i for i, _, _ in code_rows])
-    cells_v = np.array([c for _, c, _ in code_rows])
-    codes = np.array([cd for _, _, cd in code_rows])
-    cmap = {cid: cv for cid, cv, _ in cents}
-    recon = np.stack(
-        [
-            cmap[cells_v[i]] + books[np.arange(m), codes[i]].reshape(-1)
-            for i in range(len(ids))
-        ]
-    )
-    rnorm = np.linalg.norm(recon, axis=1)
-    emb = {
-        r["vec_id"]: np.array(list(r["v"]))
-        for r in S._emb(spark, TEST_SF_DIR).collect()
-    }
-    want = set()
-    for qid in range(S.N_QUERIES):
-        q = emb[qid]
-        qn = np.linalg.norm(q)
-        sims = np.round(recon @ q / (rnorm * qn), 6)
-        mask = ids != qid
-        order = np.lexsort((ids[mask], -sims[mask]))[: S.TOP_K]
-        for rank, oi in enumerate(order, 1):
-            want.add((qid, rank, int(ids[mask][oi]), float(sims[mask][oi])))
-    got = {
-        (r.query_id, r.rank, r.vec_id, r.cosine)
-        for r in S.ann_cosine_topk_ivfpq(
-            spark, TEST_SF_DIR, index_dir, nprobe=S.IVF_CELLS, rescore_c=None
-        ).collect()
-    }
-    assert got == want
-
-    # plan-shape pin on the raw path: the default path's rescore stage
-    # collects its candidate list eagerly, so the returned frame is the
-    # tiny rescore join, not the pruned codes scan
-    pruned = S.ann_cosine_topk_ivfpq(
-        spark, TEST_SF_DIR, index_dir, nprobe=1, rescore_c=None
-    )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    pf = [
-        ln
-        for ln in plan.splitlines()
-        if "PartitionFilters" in ln and "cell_id" in ln
-    ]
-    assert pf, plan
-    # the probe predicate renders as `IN (a,b,...)` for several cells
-    # but collapses to `= N` when all queries probe ONE cell (possible
-    # with data-driven kmeans cells) — parse both shapes
-    m_in = _re.search(r"IN \(([0-9,\s]+)\)", pf[0])
-    if m_in:
-        probed = {
-            int(v) for v in m_in.group(1).replace(" ", "").split(",") if v
-        }
-    else:
-        m_eq = _re.search(r"cell_id#\d+L?\s*=\s*(\d+)", pf[0])
-        assert m_eq, pf[0]
-        probed = {int(m_eq.group(1))}
-    # nprobe=1 over N_QUERIES queries probes at most N_QUERIES cells
-    assert probed and len(probed) <= S.N_QUERIES
-
-
-def test_ivfpq_residuals_beat_flat_pq(spark, tmp_path):
-    """The reason IVFADC encodes residuals: with density-placed coarse
-    cells, residuals concentrate near the origin, so the same code
-    budget reconstructs with LESS error than flat PQ on the raw
-    vectors — asserted on the fixture corpus."""
-    import numpy as np
-
-    flat_dir = str(tmp_path / "flat")
-    ivf_dir = str(tmp_path / "ivfpq")
-    S.build_pq_index(spark, TEST_SF_DIR, flat_dir)
-    S.build_ivfpq_index(spark, TEST_SF_DIR, ivf_dir)
-
-    emb = {
-        r["vec_id"]: np.array(list(r["v"]))
-        for r in S._emb(spark, TEST_SF_DIR).collect()
-    }
-
-    def recon_err(index_dir, with_cells):
-        cb = spark.read.parquet(f"{index_dir}/_codebooks").collect()
-        m = 1 + max(r["j"] for r in cb)
-        books = np.zeros((m, 1 + max(r["cid"] for r in cb), len(cb[0]["cv"])))
-        for r in cb:
-            books[r["j"], r["cid"]] = r["cv"]
-        cmap = {}
-        if with_cells:
-            cmap = {
-                r["cell_id"]: np.array(list(r["cv"]))
-                for r in spark.read.parquet(f"{index_dir}/_centroids").collect()
-            }
-        errs = []
-        for r in spark.read.parquet(index_dir).collect():
-            base = cmap[r["cell_id"]] if with_cells else 0.0
-            xh = base + books[np.arange(m), list(r["codes"])].reshape(-1)
-            errs.append(np.linalg.norm(emb[r["vec_id"]] - xh))
-        return float(np.mean(errs))
-
-    e_flat = recon_err(flat_dir, with_cells=False)
-    e_ivf = recon_err(ivf_dir, with_cells=True)
-    assert e_ivf < e_flat, (e_ivf, e_flat)
 
 
 # --- SemDeDup ----------------------------------------------------------------
@@ -915,19 +476,6 @@ def test_semdedup_deterministic_and_validates(spark):
 
 
 # --- SQ8 scalar quantization --------------------------------------------------
-def test_sq8_code_hex_oracle_parity(spark):
-    """The codegen'd encoder == DuckDB's closed-form recomputation of
-    the same fit (exact per-dim min/max, floor(x+0.5), clamp-after-
-    floor) at sf0.001 and sf0.01 — the quantizer is an exact operator,
-    unlike PQ's iterative codebooks."""
-    from tests.conftest import ORACLE_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf in (TEST_SF_DIR, ORACLE_SF_DIR):
-        ok, msg = compare(S.sq8_code_hex(spark, sf), S.SQ8_CODE_HEX_SQL, sf)
-        assert ok, msg
-
-
 def test_sq8_reconstruction_error_bounded(spark):
     """|v̂ - v| <= (hi-lo)/(2·255) per coordinate for in-range values —
     the quantizer's defining guarantee (round-to-nearest level)."""
@@ -962,294 +510,11 @@ def test_sq8_topk_matches_brute(spark):
         assert ok, msg
 
 
-def test_literal_df_honors_ddl_on_both_branches(spark):
-    """F.lit(small_python_int) is IntegerType, so an uncast inline
-    table's dtypes would drift with the DATA (int for ids < 2^31,
-    long only via the empty branch) — both branches must yield the
-    declared DDL types, and the non-empty plan must stay a literal
-    Generate (no Scan ExistingRDD), so the SQ8 rescore's output
-    schema is data-independent (round-14 advice item)."""
-    from pyspark.sql import functions as F
-
-    ddl = "query_id bigint, vec_id bigint"
-    structs = [
-        F.struct(F.lit(1).alias("query_id"), F.lit(2).alias("vec_id"))
-    ]
-    nonempty = S._literal_df(spark, structs, ddl)
-    empty = S._literal_df(spark, [], ddl)
-    assert dict(nonempty.dtypes) == dict(empty.dtypes) == {
-        "query_id": "bigint",
-        "vec_id": "bigint",
-    }
-    assert [tuple(r) for r in nonempty.collect()] == [(1, 2)]
-    plan = nonempty._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan, plan
-
-
 def test_sq8_output_dtypes_are_data_independent(spark):
     """The registered SQ8 query's id columns are bigint regardless of
     id magnitude (the DuckDB oracle yields BIGINT)."""
     got = dict(S.ann_cosine_topk_sq8(spark, TEST_SF_DIR).dtypes)
     assert got["query_id"] == "bigint" and got["vec_id"] == "bigint", got
-
-
-def test_sq8_indexed_matches_inline_and_reads_codes_only(spark, tmp_path):
-    """The persisted-index path returns the inline result; its stage-1
-    scan reads the 64-byte codes (never the embedding column), and the
-    stage-2 exact fetch arrives as a pushed-down point lookup."""
-    index_dir = str(tmp_path / "sq8_index")
-    S.build_sq8_index(spark, TEST_SF_DIR, index_dir)
-    got = S.ann_cosine_topk_sq8_indexed(spark, TEST_SF_DIR, index_dir)
-    want = {
-        (r.query_id, r.rank, r.vec_id, r.cosine)
-        for r in S.ann_cosine_topk_sq8(spark, TEST_SF_DIR).collect()
-    }
-    assert {
-        (r.query_id, r.rank, r.vec_id, r.cosine) for r in got.collect()
-    } == want
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    # stage-2 point lookup is pushed to the parquet scan
-    assert "in(vec_id" in plan.lower(), plan
-    # the sidecar quantizer round-trips exactly
-    q = spark.read.parquet(f"{index_dir}/_quantizer").collect()[0]
-    vmin, vmax = S.sq8_fit(spark, TEST_SF_DIR)
-    assert list(q["lo"]) == vmin and list(q["hi"]) == vmax
-
-
-def test_ivf_index_diff_maintenance(spark, tmp_path):
-    """Diff-driven IVF maintenance: the in-place dynamic-partition-
-    overwrite apply equals a full rebuild from the new snapshot (row
-    sets), UNTOUCHED cell partitions keep their files byte-for-byte,
-    and the plan's cells are exactly the rewritten ones."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    index_dir = str(tmp_path / "ivf_index")
-    S.build_ivf_index(spark, TEST_SF_DIR, index_dir)
-
-    def files_by_cell():
-        out = {}
-        for d in os.listdir(index_dir):
-            if d.startswith("cell_id="):
-                cell = int(d.split("=")[1])
-                out[cell] = sorted(
-                    (f, os.path.getsize(f"{index_dir}/{d}/{f}"))
-                    for f in os.listdir(f"{index_dir}/{d}")
-                    if f.endswith(".parquet")
-                )
-        return out
-
-    before_files = files_by_cell()
-    emb = spark.read.parquet(f"{TEST_SF_DIR}/embeddings.parquet")
-    ids = sorted(r.vec_id for r in emb.select("vec_id").collect())
-    rm, ch = ids[-1], ids[-2]
-    add_id = max(ids) + 1
-    # new snapshot: drop rm, negate ch's vector (flips its best cell
-    # in general), add a copy of the first non-query vector under a
-    # fresh id
-    src = emb.filter(F.col("vec_id") == ids[S.N_QUERIES]).select(
-        F.lit(add_id).alias("vec_id"),
-        *[c for c in emb.columns if c != "vec_id"],
-    )
-    new_emb_tbl = (
-        emb.filter(F.col("vec_id") != rm)
-        .withColumn(
-            "embedding",
-            F.when(
-                F.col("vec_id") == ch,
-                F.transform(F.col("embedding"), lambda x: -x),
-            ).otherwise(F.col("embedding")),
-        )
-        .unionByName(src)
-    )
-    new_dir = str(tmp_path / "snap2")
-    new_emb_tbl.write.parquet(f"{new_dir}/embeddings.parquet")
-    diff = spark.createDataFrame(
-        [(rm, "removed"), (ch, "changed"), (add_id, "added")],
-        "vec_id long, status string",
-    )
-    new_v = spark.read.parquet(f"{new_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "v"
-        ),
-    )
-    plan = {
-        r.cell_id: (r.n_remove, r.n_add)
-        for r in S.ivf_index_maintenance_plan(
-            spark, index_dir, diff, new_v
-        ).collect()
-    }
-    touched = S.ivf_index_apply_diff(spark, index_dir, diff, new_v)
-    assert sorted(plan) == touched
-    # untouched partitions: identical file names AND sizes
-    after_files = files_by_cell()
-    for cell, files in before_files.items():
-        if cell not in touched:
-            assert after_files[cell] == files, cell
-    # reconciliation: in-place result == full rebuild on the new snap
-    rebuilt = str(tmp_path / "rebuilt")
-    S.build_ivf_index(spark, new_dir, rebuilt)
-    got = {
-        (r.vec_id, tuple(r.v), r.cell_id)
-        for r in spark.read.parquet(index_dir).collect()
-    }
-    want = {
-        (r.vec_id, tuple(r.v), r.cell_id)
-        for r in spark.read.parquet(rebuilt).collect()
-    }
-    assert got == want
-    # total movement counts line up with the diff classes
-    assert sum(nr for nr, _ in plan.values()) == 2  # rm + ch leave
-    assert sum(na for _, na in plan.values()) == 2  # add + ch enter
-
-
-def test_ivf_index_apply_diff_empties_cell(spark, tmp_path):
-    """A touched cell whose vectors ALL leave must not survive as a
-    stale partition: dynamic overwrite cannot rewrite an absent
-    partition, so the apply deletes the emptied cell's directory
-    (review finding, round 10). Reconciliation vs a full rebuild pins
-    that no removed vector is still queryable."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    index_dir = str(tmp_path / "ivf_index")
-    S.build_ivf_index(spark, TEST_SF_DIR, index_dir)
-    by_cell = {
-        r.cell_id: r.ids
-        for r in spark.read.parquet(index_dir)
-        .groupBy("cell_id")
-        .agg(F.collect_list("vec_id").alias("ids"))
-        .collect()
-    }
-    # empty the smallest cell (minimizes fixture churn)
-    cell, ids = min(by_cell.items(), key=lambda kv: len(kv[1]))
-    diff = spark.createDataFrame(
-        [(int(i), "removed") for i in ids], "vec_id long, status string"
-    )
-    emb = spark.read.parquet(f"{TEST_SF_DIR}/embeddings.parquet")
-    new_dir = str(tmp_path / "snap2")
-    emb.filter(~F.col("vec_id").isin([int(i) for i in ids])).write.parquet(
-        f"{new_dir}/embeddings.parquet"
-    )
-    new_v = spark.read.parquet(f"{new_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "v"
-        ),
-    )
-    touched = S.ivf_index_apply_diff(spark, index_dir, diff, new_v)
-    assert cell in touched
-    assert not os.path.exists(f"{index_dir}/cell_id={cell}")
-    rebuilt = str(tmp_path / "rebuilt")
-    S.build_ivf_index(spark, new_dir, rebuilt)
-    got = {
-        (r.vec_id, r.cell_id)
-        for r in spark.read.parquet(index_dir).collect()
-    }
-    want = {
-        (r.vec_id, r.cell_id)
-        for r in spark.read.parquet(rebuilt).collect()
-    }
-    assert got == want
-    assert not any(v in {int(i) for i in ids} for v, _c in got)
-
-
-def test_pq_and_ivfpq_rescored_default_matches_two_stage_replica(
-    spark, tmp_path
-):
-    """The DEFAULT PQ/IVFADC paths are ADC+R since round 11 (the
-    clustered 10M probe measured raw ADC at recall@5 = 0.00 on dense
-    clusters): approximate top-C candidates from the codes scan, then
-    exact-cosine re-rank. Gate = exact agreement with a pure-numpy
-    two-stage replica built from the persisted artifacts — the same
-    strength as the raw-ADC replica tests, mirroring stage order,
-    the (approx DESC, vec_id) candidate cut, and the final
-    (round(cosine,6) DESC, vec_id) ranking."""
-    import numpy as np
-
-    emb = {
-        r["vec_id"]: np.array(list(r["v"]))
-        for r in S._emb(spark, TEST_SF_DIR).collect()
-    }
-
-    def two_stage(ids, recon, c):
-        rnorm = np.linalg.norm(recon, axis=1)
-        want = set()
-        for qid in range(S.N_QUERIES):
-            q = emb[qid]
-            qn = np.linalg.norm(q)
-            sims = np.round(recon @ q / (rnorm * qn + 1e-300), 6)
-            mask = ids != qid
-            cand = np.lexsort((ids[mask], -sims[mask]))[:c]
-            cand_ids = ids[mask][cand]
-            exact = np.round(
-                np.array(
-                    [emb[i] @ q / (np.linalg.norm(emb[i]) * qn) for i in cand_ids]
-                ),
-                6,
-            )
-            order = np.lexsort((cand_ids, -exact))[: S.TOP_K]
-            for rank, oi in enumerate(order, 1):
-                want.add((qid, rank, int(cand_ids[oi]), float(exact[oi])))
-        return want
-
-    # flat PQ
-    pq_dir = str(tmp_path / "pq")
-    S.build_pq_index(spark, TEST_SF_DIR, pq_dir)
-    cb = spark.read.parquet(f"{pq_dir}/_codebooks").collect()
-    m = 1 + max(r["j"] for r in cb)
-    books = np.zeros((m, 1 + max(r["cid"] for r in cb), len(cb[0]["cv"])))
-    for r in cb:
-        books[r["j"], r["cid"]] = r["cv"]
-    code_rows = sorted(
-        (r["vec_id"], list(r["codes"]))
-        for r in spark.read.parquet(pq_dir).collect()
-    )
-    ids = np.array([i for i, _ in code_rows])
-    codes = np.array([cd for _, cd in code_rows])
-    recon = books[np.arange(m), codes].reshape(len(ids), -1)
-    got = {
-        (r.query_id, r.rank, r.vec_id, r.cosine)
-        for r in S.ann_cosine_topk_pq_indexed(
-            spark, TEST_SF_DIR, pq_dir
-        ).collect()
-    }
-    assert got == two_stage(ids, recon, S.PQ_RESCORE_C)
-
-    # IVFADC (full probe so cell masking is not in play)
-    ivf_dir = str(tmp_path / "ivfpq")
-    S.build_ivfpq_index(spark, TEST_SF_DIR, ivf_dir, kmeans_iters=2, iters=2)
-    cb = spark.read.parquet(f"{ivf_dir}/_codebooks").collect()
-    m = 1 + max(r["j"] for r in cb)
-    books = np.zeros((m, 1 + max(r["cid"] for r in cb), len(cb[0]["cv"])))
-    for r in cb:
-        books[r["j"], r["cid"]] = r["cv"]
-    cmap = {
-        r["cell_id"]: np.array(list(r["cv"]))
-        for r in spark.read.parquet(f"{ivf_dir}/_centroids").collect()
-    }
-    code_rows = sorted(
-        (r["vec_id"], r["cell_id"], list(r["codes"]))
-        for r in spark.read.parquet(ivf_dir).collect()
-    )
-    ids = np.array([i for i, _, _ in code_rows])
-    codes = np.array([cd for _, _, cd in code_rows])
-    recon = np.stack(
-        [
-            cmap[c] + books[np.arange(m), codes[i]].reshape(-1)
-            for i, (_, c, _) in enumerate(code_rows)
-        ]
-    )
-    got = {
-        (r.query_id, r.rank, r.vec_id, r.cosine)
-        for r in S.ann_cosine_topk_ivfpq(
-            spark, TEST_SF_DIR, ivf_dir, nprobe=S.IVF_CELLS
-        ).collect()
-    }
-    assert got == two_stage(ids, recon, S.PQ_RESCORE_C)
 
 
 # --- hybrid sparse+dense RRF fusion (round 12) --------------------------------
@@ -1327,29 +592,6 @@ def test_lexical_topk_plan_shape(spark):
     assert "MapInPandas" in plan
     assert "WindowGroupLimit" in plan
     assert "Join" not in plan
-
-
-def test_lexical_topk_expr_plan_shape(spark):
-    """The declarative baseline keeps its round-12 pins: query frame
-    broadcasts into one corpus scan, partial WindowGroupLimit."""
-    plan = S.lexical_topk_expr(spark, TEST_SF_DIR)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "WindowGroupLimit" in plan
-
-
-def test_lexical_topk_scorer_agrees_with_expr(spark):
-    """Exact agreement (every column, rounded jaccard included)
-    between the mapInPandas scorer and the interpreted expression
-    variant it replaced — the round-13 GEMM-lever contract."""
-    got = sorted(
-        tuple(r) for r in S.lexical_topk(spark, TEST_SF_DIR).collect()
-    )
-    want = sorted(
-        tuple(r) for r in S.lexical_topk_expr(spark, TEST_SF_DIR).collect()
-    )
-    assert got == want
 
 
 def test_lexical_rounding_agrees_by_construction(spark):

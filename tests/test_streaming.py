@@ -159,6 +159,19 @@ def test_throughput_counters(spark):
     assert t["processed_rows_per_second"] > 0
 
 
+def test_throughput_before_first_progress():
+    """A query with no progress yet reports the same keys, all zero."""
+
+    class NoProgress:
+        lastProgress = None
+
+    assert pb.throughput(NoProgress()) == {
+        "input_rows_per_second": 0.0,
+        "processed_rows_per_second": 0.0,
+        "num_input_rows": 0.0,
+    }
+
+
 def test_csv_append_writer(spark, tmp_path):
     out = str(tmp_path / "out")
     df = spark.range(5).selectExpr("id", "id * 2 AS v")
