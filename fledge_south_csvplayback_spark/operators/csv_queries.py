@@ -192,23 +192,12 @@ def csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CSV_GZIP_SQL = f"""
-SELECT * FROM read_csv('{_fx("vibration.csv.gz")}', header=true,
-    columns={{'channel1': 'DOUBLE', 'channel2': 'DOUBLE', 'user_ts': 'VARCHAR'}})
-"""
-
-
 def csv_bzip2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cs.read_pick_from_file(
         spark,
         _fx("vibration.csv.bz2"),
         schema="channel1 double, channel2 double, user_ts string",
     )
-
-
-# DuckDB cannot read bz2, but the .bz2 fixture is the compressed twin of
-# vibration.csv — the oracle reads the uncompressed original.
-CSV_BZIP2_SQL = CSV_PICK_FROM_FILE_SQL
 
 
 def csv_compressed_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,15 +212,6 @@ def csv_compressed_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CSV_CODECS_SQL = f"""
-SELECT *, 'gz' AS codec FROM read_csv('{_fx("vibration.csv.gz")}', header=true,
-    columns={{'channel1': 'DOUBLE', 'channel2': 'DOUBLE', 'user_ts': 'VARCHAR'}})
-UNION ALL
-SELECT *, 'bz2' AS codec FROM read_csv('{_fx("vibration.csv")}', header=true,
-    columns={{'channel1': 'DOUBLE', 'channel2': 'DOUBLE', 'user_ts': 'VARCHAR'}})
-"""
-
-
 # --- S1: multi-file directory scan (the batch union of a playback dir) -------
 def csv_directory_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cs.read_pick_from_file(
@@ -242,14 +222,6 @@ def csv_directory_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn(
         "src_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
     )
-
-
-CSV_DIRECTORY_SQL = f"""
-SELECT channel1, channel2, user_ts,
-       string_split(filename, '/')[-1] AS src_file
-FROM read_csv('{_fx("multi")}/*.csv', header=true, filename=true,
-    columns={{'channel1': 'DOUBLE', 'channel2': 'DOUBLE', 'user_ts': 'VARCHAR'}})
-"""
 
 
 # --- S5 pass_in_datapoint: metadata rows merged into every reading (F4) ------

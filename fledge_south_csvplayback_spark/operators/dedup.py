@@ -136,11 +136,9 @@ def shingles(text: Column, n: int = NGRAM) -> Column:
 def positional_shingles(text: Column, n: int = NGRAM) -> Column:
     """Word n-gram shingle hashes IN POSITION ORDER (no distinct):
     element j of the result (1-based) is the gram key starting at
-    token j — the span-surgery consumer (decontaminate_spans) needs to
-    know WHERE a benchmark gram matched, not just that it did. This is
-    the ONE gram-key builder: ``shingles`` is its array_distinct, so
-    positional and distinct keys cannot disagree structurally (review
-    finding: two hand-copied builders could drift).
+    token j. This is the ONE gram-key builder: ``shingles`` is its
+    array_distinct, so positional and distinct keys cannot disagree
+    structurally (two hand-copied builders could drift).
 
     TOTAL by construction: the gram array is guarded by a ``when``
     INSIDE the expression (a short doc yields ``array()``), because a

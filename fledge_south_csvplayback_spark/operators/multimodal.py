@@ -516,58 +516,6 @@ WITH px AS (
 """
 
 
-# --- real audio decode: WAV (RIFF/PCM16) + exact signal stats ----------------
-def _make_wav_decoder():
-    """Factory (cloudpickle by-value) for a generic RIFF/WAVE PCM16
-    parser: walks the chunk list (word-aligned, per the RIFF spec),
-    reads 'fmt ' and 'data', validates PCM/16-bit, and returns
-    (sample_rate, channels, raw little-endian PCM16 data bytes).
-    Returning the raw byte slice (not a Python int list) is what lets
-    every consumer go straight to ``np.frombuffer(data, '<i2')`` and
-    keep the per-sample math vectorized — the measured bottleneck of
-    the earlier list-based decode was building 256 Python ints per
-    row, not the chunk walk."""
-
-    def decode_wav(payload: bytes) -> tuple[int, int, bytes]:
-        import struct
-
-        if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            raise ValueError(
-                f"not a RIFF/WAVE payload: {payload[:4]!r}/{payload[8:12]!r}"
-            )
-        pos, fmt, data = 12, None, None
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            body = payload[pos + 8 : pos + 8 + size]
-            if len(body) != size:
-                raise ValueError(f"truncated {cid!r} chunk")
-            if cid == b"fmt ":
-                if size < 16:
-                    raise ValueError(
-                        f"'fmt ' chunk declares {size} bytes, need >= 16"
-                    )
-                fmt = struct.unpack("<HHIIHH", body[:16])
-            elif cid == b"data":
-                data = body
-            pos += 8 + size + (size & 1)  # chunks are word-aligned
-        if fmt is None or data is None:
-            raise ValueError("missing fmt /data chunk")
-        audio_format, channels, rate, _, _, bits = fmt
-        if audio_format != 1 or bits != 16:
-            raise ValueError(
-                f"only PCM16 supported, got format={audio_format} bits={bits}"
-            )
-        if len(data) % 2:
-            raise ValueError("odd PCM16 data length")
-        return rate, channels, data
-
-    return decode_wav
-
-
-_decode_wav = _make_wav_decoder()
-
-
 # --- blocked Hamming near-dup join over a hex fingerprint column -------------
 # Used by the image dHash pairs and the streaming media index: a
 # fingerprint is 2*n_bands hex chars (one byte per band); candidates
@@ -802,9 +750,9 @@ IMAGE_NEARDUP_SQL = _band_neardup_sql(
 
 
 # --- real video decode: uncompressed AVI (RIFF) + per-frame stats ------------
-# The video analogue of the PPM/WAV paths: AVI is a RIFF container
-# whose LIST chunks nest (hdrl -> strl, movi -> frames), so the same
-# chunk-walking approach extends with LIST descent; frames are
+# The video analogue of the PPM path: AVI is a RIFF container whose
+# LIST chunks nest (hdrl -> strl, movi -> frames), so the chunk walk
+# descends into LIST chunks; frames are
 # uncompressed DIBs, which carry the three classic bitmap storage
 # traps — BOTTOM-UP row order (positive biHeight), BGR channel order,
 # and 4-byte row stride padding — all of which the decoder must undo

@@ -8,7 +8,7 @@ distribution with Gumbel-top-k — the standard recipe for "pretrain on
 web-scale raw text, but shaped like the trusted/high-quality slice".
 
 This module extends the curation family (`curation.py` holds the
-budget/mixture/split operators); nothing here exists in the reference
+budget/quality/dedup operators); nothing here exists in the reference
 (`/root/reference` is a CSV playback plugin — selection is part of the
 LLM-pipeline surface this engine adds on top).
 

@@ -14,8 +14,9 @@ whole-stage codegen and scales embarrassingly):
 - **fingerprint**: md5 over normalized text — the canonical
   content-defined document fingerprint used by exact dedup.
 - **corpus-level**: unigram log-prob scoring, top-k n-grams, BM25
-  keyword search, Gopher repetition signals, PII redaction,
-  winnowing fingerprints.
+  keyword search, Gopher repetition signals, repeated-line and
+  repeated-span scrubs, BPE tokenization, normalization and HTML
+  extraction.
 """
 
 from __future__ import annotations
@@ -292,95 +293,6 @@ GROUP BY t.doc_id
 """
 
 
-# --- winnowing fingerprint (rolling-hash k-gram minima) ----------------------
-WINNOW_N = 3  # gram width (tokens)
-WINNOW_W = 4  # window of consecutive gram hashes per fingerprint pick
-
-WINNOW_FINGERPRINT_SQL = f"""
-WITH toks AS (
-    SELECT doc_id, list_transform(string_split(text, ' '),
-        t -> ('0x' || substr(md5(t), 1, 14))::BIGINT) AS t
-    FROM documents
-),
-gh AS (
-    SELECT doc_id, list_transform(
-        generate_series(1, len(t) - {WINNOW_N - 1}),
-        i -> xor(xor(t[i], t[i+1] << 2), t[i+2] << 4)) AS g
-    FROM toks WHERE len(t) >= {WINNOW_N + WINNOW_W - 1}
-)
-SELECT DISTINCT doc_id,
-       unnest(list_distinct(list_transform(
-           generate_series(1, len(g) - {WINNOW_W - 1}),
-           i -> list_min(g[i:i+{WINNOW_W - 1}])))) AS fp
-FROM gh
-"""
-
-
-def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document fingerprint (Schleimer/Wilkerson/Aiken, the
-    MOSS algorithm): hash every token k-gram in document order, slide a
-    window of W consecutive gram hashes, keep each window's minimum —
-    the selected minima are the fingerprint set. Guarantees any shared
-    run of >= N + W - 1 tokens between two documents shares at least
-    one fingerprint hash, at ~1/W the index size of full shingling.
-
-    All Catalyst expressions: the token-hash array is let-bound (HOF
-    lambdas re-evaluate copied subtrees otherwise) and gram hashes are
-    md5-token xors, the DuckDB-reproducible construction — this
-    operator is oracle-checked by pytest
-    (tests/test_text_winnow.py) rather than the driver registry, which
-    is capped at 50 entries.
-
-    Output: one (doc_id, fp) row per selected fingerprint hash.
-    """
-    n, w = WINNOW_N, WINNOW_W
-
-    # both levels carry the in-expression `when` totality guard
-    # (dedup.positional_shingles docstring: a filter node does not
-    # protect a non-total gram subtree from Catalyst CSE)
-    def build(toks):
-        def gram(i):
-            out = F.element_at(toks, i)
-            for k in range(1, n):
-                out = out.bitwiseXOR(
-                    F.shiftleft(F.element_at(toks, i + k), 2 * k)
-                )
-            return out
-
-        return F.when(
-            F.size(toks) >= n,
-            F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)), gram),
-        ).otherwise(F.array().cast("array<bigint>"))
-
-    token_hashes = F.transform(
-        F.split(F.col("text"), " "),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 14), 16, 10).cast("long"),
-    )
-    grams = F.element_at(F.transform(F.array(token_hashes), build), 1)
-
-    def minima(g):
-        return F.when(
-            F.size(g) >= w,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(g) - (w - 1)),
-                    lambda i: F.array_min(F.slice(g, i, w)),
-                )
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-
-    docs = _docs(spark, sf_dir).filter(
-        F.size(F.split(F.col("text"), " ")) >= n + w - 1
-    )
-    fp = docs.select(
-        "doc_id",
-        F.explode(
-            F.element_at(F.transform(F.array(grams), minima), 1)
-        ).alias("fp"),
-    )
-    return fp.distinct()
-
-
 # --- corpus-wide top-k n-grams -----------------------------------------------
 TOP_NGRAMS_N = 2
 TOP_NGRAMS_K = 20
@@ -452,38 +364,6 @@ FROM g GROUP BY gram
 ORDER BY cnt DESC, gram
 LIMIT {TOP_NGRAMS_K}
 """
-
-
-# --- PII redaction -----------------------------------------------------------
-# Java-regex / RE2 compatible (no lookaround): both engines match the
-# same spans, so the redaction is oracle-checkable
-PII_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-PII_IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-PII_DIGITS_RE = r"\d{7,}"  # phone/account-number-ish runs
-
-
-def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-corpus PII scrub: emails → <EMAIL>, IPv4s → <IP>,
-    7+-digit runs → <NUM>, with per-class counts for audit. Rules are
-    applied in that fixed order in BOTH engines (an IP's octets must
-    not be half-eaten by the digit rule), every pattern avoids
-    lookaround so Java regex and RE2 agree on spans, and everything is
-    codegen'd ``regexp_replace``/``regexp_count`` — a narrow
-    scan-speed projection at any scale."""
-    docs = _docs(spark, sf_dir)
-    n_email = F.regexp_count(F.col("text"), F.lit(PII_EMAIL_RE))
-    step1 = F.regexp_replace(F.col("text"), PII_EMAIL_RE, "<EMAIL>")
-    n_ip = F.regexp_count(step1, F.lit(PII_IPV4_RE))
-    step2 = F.regexp_replace(step1, PII_IPV4_RE, "<IP>")
-    n_num = F.regexp_count(step2, F.lit(PII_DIGITS_RE))
-    step3 = F.regexp_replace(step2, PII_DIGITS_RE, "<NUM>")
-    return docs.select(
-        "doc_id",
-        step3.alias("text_redacted"),
-        n_email.alias("n_emails"),
-        n_ip.alias("n_ips"),
-        n_num.alias("n_numbers"),
-    )
 
 
 # --- intra-document repetition signals ---------------------------------------
@@ -666,30 +546,6 @@ SELECT doc_id,
                   THEN LEAST(1.0, COALESCE(dup_gram_mass, 0) / n_chars)
                   ELSE 0.0 END, 6) AS dup_gram_char_frac
 FROM a
-"""
-
-
-TEXT_REDACT_PII_SQL = rf"""
-WITH s1 AS (
-    SELECT doc_id, text,
-           CAST(len(regexp_extract_all(text, '{PII_EMAIL_RE}')) AS INTEGER)
-               AS n_emails,
-           regexp_replace(text, '{PII_EMAIL_RE}', '<EMAIL>', 'g') AS t1
-    FROM documents
-),
-s2 AS (
-    SELECT doc_id, n_emails,
-           CAST(len(regexp_extract_all(t1, '{PII_IPV4_RE}')) AS INTEGER)
-               AS n_ips,
-           regexp_replace(t1, '{PII_IPV4_RE}', '<IP>', 'g') AS t2
-    FROM s1
-)
-SELECT doc_id,
-       regexp_replace(t2, '{PII_DIGITS_RE}', '<NUM>', 'g') AS text_redacted,
-       n_emails, n_ips,
-       CAST(len(regexp_extract_all(t2, '{PII_DIGITS_RE}')) AS INTEGER)
-           AS n_numbers
-FROM s2
 """
 
 
@@ -1682,7 +1538,7 @@ def text_bpe_tokenize(
     (the GPT-2 apply algorithm — repeatedly merge the lowest-rank
     adjacent pair). Output: (doc_id, n_ws_tokens, n_bpe_tokens) — the
     tokenizer-REAL token counts the ``token_count`` proxies
-    approximate; join them onto budget/mixture selection when the
+    approximate; join them onto budget selection when the
     training tokenizer's counts are what the budget means.
 
     This is the one text op where Python-per-token is unavoidable (BPE
@@ -1750,9 +1606,9 @@ def text_bpe_tokenize(
 # boilerplate lines, quality features) normalizes implicitly; this op
 # makes the pass standalone and reusable so a pipeline can materialize
 # normalized text ONCE instead of re-normalizing in every stage. Fixed
-# rule order; patterns stay in the Java-regex/RE2 shared subset (the PII
-# module's rule, spelled with \\x{....} escapes both engines parse the
-# same way) so Spark and DuckDB transform identically. The pipeline is
+# rule order; patterns stay in the Java-regex/RE2 shared subset (spelled
+# with \\x{....} escapes both engines parse the same way) so Spark and
+# DuckDB transform identically. The pipeline is
 # IDEMPOTENT -- normalize(normalize(x)) == normalize(x) -- which is
 # what lets stages compose without double-transform drift
 # (property-pinned corpus-wide).
@@ -1943,310 +1799,4 @@ SELECT doc_id,
        CAST(length({_html_sql_chain(HTML_TABLE_SQL_EXPR)}) AS INTEGER)
            AS n_chars
 FROM documents
-"""
-
-
-# --- link extraction (the URL-graph side of the markup pass) ------------------
-# A crawl pipeline mines <a href> targets for the URL frontier, domain
-# stats, and URL-level dedup. Same engine rules as the extractor: the
-# href pattern is backreference/lookaround-free so Java regex and RE2
-# agree, and the whole op is regexp_extract_all -> explode -> one
-# codegen'd projection; the per-domain rollup is one fine-grained
-# aggregate over the (churn-of-links)-sized explode, never the corpus.
-_HREF_PATTERN = (
-    "(?i)<a\\s[^>]*href\\s*=\\s*[\"']([^\"'#>][^\"'>]*)[\"']"
-)
-_DOMAIN_PATTERN = "^(?:[a-zA-Z][a-zA-Z0-9+.\\-]*://)?([^/?:]+)"
-
-
-def html_links(html_df: DataFrame) -> DataFrame:
-    """(doc_id, html) -> (doc_id, url, domain): one row per <a href>
-    occurrence in document order (fragment-only hrefs excluded by the
-    pattern), with the authority extracted scheme-tolerantly and
-    lowercased (DNS rules; the path keeps its case)."""
-    urls = F.regexp_extract_all(F.col("html"), F.lit(_HREF_PATTERN), 1)
-    url = F.explode(urls).alias("url")
-    out = html_df.select("doc_id", url)
-    return out.select(
-        "doc_id",
-        "url",
-        F.lower(
-            F.regexp_extract(F.col("url"), _DOMAIN_PATTERN, 1)
-        ).alias("domain"),
-    )
-
-
-def link_domain_stats(html_df: DataFrame) -> DataFrame:
-    """Per-domain link rollup: (domain, n_links, n_docs) — the crawl
-    frontier's prioritization table. One explode + one fine-grained
-    domain-keyed aggregate."""
-    return (
-        html_links(html_df)
-        .groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).alias("n_links"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
-    )
-
-
-def links_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> (doc_id, html) with deterministic planted links:
-    every doc links its successor (relative), every 3rd doc links a
-    shared hub (absolute), every 5th doc carries an uppercase-scheme
-    duplicate and a fragment-only href (excluded by the pattern) —
-    declarative concat mirrored closed-form in the oracle."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    html = F.concat(
-        F.lit('<html><body><p>t</p><a href="/doc/'),
-        (d + 1).cast("string"),
-        F.lit('">next</a>'),
-        F.when(
-            d % 3 == 0,
-            F.concat(
-                F.lit('<a class="x" href="https://Hub.example.com/h/'),
-                ds,
-                F.lit('">hub</a>'),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            d % 5 == 0,
-            F.lit('<A HREF="HTTPS://cdn.example.com/a.js">x</A>'
-                  '<a href="#frag">skip</a>'),
-        ).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    return docs.select("doc_id", html.alias("html"))
-
-
-def text_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return html_links(links_table(spark, sf_dir))
-
-
-_LINKS_TABLE_SQL = (
-    "'<html><body><p>t</p><a href=\"/doc/' || CAST(doc_id + 1 AS VARCHAR)"
-    " || '\">next</a>' || "
-    "CASE WHEN doc_id % 3 = 0 THEN '<a class=\"x\" "
-    "href=\"https://Hub.example.com/h/' || CAST(doc_id AS VARCHAR) || "
-    "'\">hub</a>' ELSE '' END || "
-    "CASE WHEN doc_id % 5 = 0 THEN '<A HREF=\"HTTPS://cdn.example.com/a.js\">"
-    "x</A><a href=\"#frag\">skip</a>' ELSE '' END || '</body></html>'"
-)
-
-TEXT_HTML_LINKS_SQL = f"""
-WITH h AS (SELECT doc_id, {_LINKS_TABLE_SQL} AS html FROM documents),
-u AS (
-    SELECT doc_id,
-           unnest(regexp_extract_all(html,
-               '{_HREF_PATTERN.replace("'", "''")}', 1)) AS url
-    FROM h
-)
-SELECT doc_id, url,
-       lower(regexp_extract(url, '{_DOMAIN_PATTERN}', 1)) AS domain
-FROM u
-"""
-
-
-# --- URL canonicalization (the first dedup key of a crawl pipeline) -----------
-# CommonCrawl-style pipelines dedup on CANONICAL URLs before any
-# content pass: scheme/host case, default ports, fragments, and
-# tracking parameters are all spelling variation of one resource.
-# Scheme/host/port/fragment rules are a codegen'd regexp chain; the
-# tracking-parameter filter needs per-parameter logic, which is a
-# higher-order array expression (split -> filter -> rejoin) — the
-# documented interpreted-lambda cost (~15 µs/row, selection.py) is
-# paid on the URL table, which is orders smaller than the corpus.
-_TRACKING_PARAMS = ("utm_", "fbclid", "gclid", "msclkid")
-_URL_SCHEME_HOST = "^([a-zA-Z][a-zA-Z0-9+.\\-]*://[^/?#]*)"
-
-
-def url_normalize_expr(col) -> "F.Column":
-    """Canonical URL as a Column: lowercase scheme+authority, strip
-    the fragment, drop :80/:443 default ports (http/https), drop
-    tracking parameters (utm_*, fbclid, gclid, msclkid), drop an
-    emptied query. Path and remaining query keep their case. Null in,
-    null out; idempotent."""
-    u = F.regexp_replace(col, "#.*$", "")  # fragment first
-    # lowercase ONLY the scheme://authority prefix (path is case-
-    # sensitive): rebuild as lower(prefix) + rest
-    prefix = F.regexp_extract(u, _URL_SCHEME_HOST, 1)
-    rest = F.regexp_replace(u, _URL_SCHEME_HOST, "")
-    u = F.concat(F.lower(prefix), rest)
-    # default ports strip before ANY path delimiter ('/', '?', or
-    # end — the fragment is already gone); then an EMPTY path
-    # canonicalizes to '/', so 'http://ex.com', 'http://ex.com:80'
-    # and 'http://ex.com/' all produce one dedup key
-    u = F.regexp_replace(u, "^(http://[^/?#]*):80([/?]|$)", "$1$2")
-    u = F.regexp_replace(u, "^(https://[^/?#]*):443([/?]|$)", "$1$2")
-    u = F.regexp_replace(
-        u, "^([a-z][a-z0-9+.\\-]*://[^/?#]+)(\\?|$)", "$1/$2"
-    )
-    # tracking params: split query, filter, rejoin
-    base = F.regexp_replace(u, "\\?.*$", "")
-    query = F.when(
-        u.contains("?"), F.regexp_replace(u, "^[^?]*\\?", "")
-    ).otherwise(F.lit(""))
-    kept = F.filter(
-        F.split(query, "&"),
-        lambda p: (p != "")
-        & ~F.lower(p).startswith(_TRACKING_PARAMS[0])
-        & ~F.lower(p).startswith(_TRACKING_PARAMS[1])
-        & ~F.lower(p).startswith(_TRACKING_PARAMS[2])
-        & ~F.lower(p).startswith(_TRACKING_PARAMS[3]),
-    )
-    rejoined = F.when(
-        F.size(kept) > 0, F.concat(base, F.lit("?"), F.array_join(kept, "&"))
-    ).otherwise(base)
-    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-        rejoined
-    )
-
-
-def text_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, url, norm_url) over the planted-link fixture enriched
-    with tracking params / ports / fragments / recased authorities —
-    the canonicalization a URL-level dedup keys on."""
-    links = html_links(links_table(spark, sf_dir))
-    d = F.col("doc_id")
-    # deterministically decorate each mined url with spelling noise
-    noisy = F.concat(
-        F.when(d % 2 == 0, F.lit("HTTP://Ex.COM:80/")).otherwise(
-            F.lit("https://ex.com:443/")
-        ),
-        F.regexp_replace(F.col("url"), "^/", ""),
-        F.lit("?utm_source=x&id="),
-        d.cast("string"),
-        F.lit("&UTM_medium=y#frag"),
-    )
-    return links.select(
-        "doc_id",
-        noisy.alias("url"),
-        url_normalize_expr(noisy).alias("norm_url"),
-    )
-
-
-_NOISY_URL_SQL = (
-    "(CASE WHEN doc_id % 2 = 0 THEN 'HTTP://Ex.COM:80/' "
-    "ELSE 'https://ex.com:443/' END || regexp_replace(url, '^/', '') || "
-    "'?utm_source=x&id=' || CAST(doc_id AS VARCHAR) || '&UTM_medium=y#frag')"
-)
-
-
-def _url_normalize_sql(expr: str) -> str:
-    """DuckDB twin of ``url_normalize_expr`` over a VARCHAR expr."""
-    u = f"regexp_replace({expr}, '#.*$', '')"
-    prefix = f"lower(regexp_extract({u}, '{_URL_SCHEME_HOST}', 1))"
-    rest = f"regexp_replace({u}, '{_URL_SCHEME_HOST}', '')"
-    u2 = f"({prefix} || {rest})"
-    u3 = (
-        f"regexp_replace(regexp_replace(regexp_replace({u2}, "
-        "'^(http://[^/?#]*):80([/?]|$)', '\\1\\2'), "
-        "'^(https://[^/?#]*):443([/?]|$)', '\\1\\2'), "
-        "'^([a-z][a-z0-9+.\\-]*://[^/?#]+)(\\?|$)', '\\1/\\2')"
-    )
-    base = f"regexp_replace({u3}, '\\?.*$', '')"
-    query = (
-        f"CASE WHEN contains({u3}, '?') "
-        f"THEN regexp_replace({u3}, '^[^?]*\\?', '') ELSE '' END"
-    )
-    kept = (
-        f"list_filter(string_split({query}, '&'), p -> p != '' "
-        "AND NOT starts_with(lower(p), 'utm_') "
-        "AND NOT starts_with(lower(p), 'fbclid') "
-        "AND NOT starts_with(lower(p), 'gclid') "
-        "AND NOT starts_with(lower(p), 'msclkid'))"
-    )
-    return (
-        f"CASE WHEN len({kept}) > 0 "
-        f"THEN {base} || '?' || array_to_string({kept}, '&') "
-        f"ELSE {base} END"
-    )
-
-
-TEXT_URL_NORMALIZE_SQL = f"""
-WITH h AS (SELECT doc_id, {_LINKS_TABLE_SQL} AS html FROM documents),
-u AS (
-    SELECT doc_id,
-           unnest(regexp_extract_all(html,
-               '{_HREF_PATTERN.replace("'", "''")}', 1)) AS url
-    FROM h
-),
-n AS (SELECT doc_id, {_NOISY_URL_SQL} AS url FROM u)
-SELECT doc_id, url, {_url_normalize_sql('url')} AS norm_url
-FROM n
-"""
-
-
-# --- sentence segmentation (the unit of sentence-level dedup/packing) ---------
-# Terminator rule: one of [.!?] followed by whitespace ends a
-# sentence. RE2 has no lookbehind, so the split point is MARKED first
-# (terminator + whitespace -> terminator + US control char) and the
-# split runs on the marker — the same two-step both engines execute
-# identically. The whitespace class is EXPLICIT, not \s: Java's \s
-# includes \x0B (vertical tab) and RE2's does not, so \s here would
-# split differently per engine on VT-bearing text. Indexing happens
-# BEFORE empty-drop in both engines, so sent_idx is stable under
-# artifacts.
-_SENT_MARK = "\x1e"
-_SENT_WS = "[ \\t\\n\\f\\r]+"
-
-
-def sentence_split_expr(col) -> "F.Column":
-    """array<string> of trimmed sentences (empties kept; callers
-    filter) in document order."""
-    marked = F.regexp_replace(col, "([.!?])" + _SENT_WS, "$1" + _SENT_MARK)
-    return F.transform(F.split(marked, _SENT_MARK), F.trim)
-
-
-def sentence_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> (doc_id, prose): the corpus text wrapped in
-    deterministic multi-sentence prose exercising every rule
-    (terminator variety, run-on whitespace, trailing unterminated
-    tail)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    prose = F.concat(
-        F.lit("Alpha beta. "),
-        F.col("text"),
-        F.lit(" ends here! Gamma?  Tail without terminator"),
-    )
-    return docs.select("doc_id", prose.alias("prose"))
-
-
-def text_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sent_idx, sentence): one row per non-empty sentence of
-    the prose fixture, 0-based index in document order."""
-    t = sentence_table(spark, sf_dir)
-    pos = F.posexplode(sentence_split_expr(F.col("prose")))
-    return (
-        t.select("doc_id", pos.alias("sent_idx", "sentence"))
-        .filter(F.col("sentence") != "")
-        .select("doc_id", F.col("sent_idx").cast("int"), "sentence")
-    )
-
-
-_SENTENCE_TABLE_SQL = (
-    "('Alpha beta. ' || text || ' ends here! Gamma?  "
-    "Tail without terminator')"
-)
-
-TEXT_SENTENCE_SPLIT_SQL = f"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(
-               regexp_replace({_SENTENCE_TABLE_SQL},
-                              '([.!?])[ \\t\\n\\f\\r]+',
-                              '\\1' || chr(30), 'g'),
-               chr(30)) AS l
-    FROM documents
-),
-u AS (
-    SELECT doc_id,
-           unnest(range(1, len(l) + 1)) - 1 AS sent_idx,
-           trim(unnest(l)) AS sentence
-    FROM t
-)
-SELECT doc_id, CAST(sent_idx AS INTEGER) AS sent_idx, sentence
-FROM u WHERE sentence != ''
 """

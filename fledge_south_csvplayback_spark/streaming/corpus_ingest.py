@@ -4,9 +4,8 @@ Structured Streaming pipeline.
 The batch curation suite (``operators/curation.py``) answers "curate
 THIS corpus"; a production corpus is never still: shards land
 continuously and the pipeline that accepts them runs forever. This
-module runs the incremental-acceptance semantics of
-``corpus_incremental_dedup`` — quality gate, then exact dedup against
-everything accepted SO FAR, then within-batch keep-first — per
+module runs incremental acceptance — quality gate, then exact dedup
+against everything accepted SO FAR, then within-batch keep-first — per
 micro-batch via ``foreachBatch``, with the accepted-fingerprint set
 persisted as the cross-batch state.
 

@@ -26,7 +26,6 @@ Usage:
     python probes/probe_curation.py sample --rows 10000000
     python probes/probe_curation.py ab     --rows 10000000 --reps 2
     python probes/probe_curation.py dedup_apply --rows 10000000
-    python probes/probe_curation.py pack   --rows 10000000
 """
 
 from __future__ import annotations
@@ -143,14 +142,12 @@ def main() -> None:
             "sample",
             "ab",
             "dedup_apply",
-            "pack",
             "repetition",
             "repetition_ab",
             "chunk",
             "bm25",
             "diff",
             "normalize",
-            "materialize",
             "profile",
             "top_ngrams",
         ],
@@ -179,25 +176,6 @@ def main() -> None:
             json.dumps(
                 {
                     "op": "dedup_apply",
-                    "rows": args.rows,
-                    "sec": wall,
-                    "shuffle_bytes": shuf,
-                }
-            )
-        )
-        spark.stop()
-        return
-
-    if args.op == "pack":
-        # shared two-pass running sum + dense-rank of the tiny distinct
-        # bin set: proves the contiguity fix stays cheap at 10M
-        wall, shuf = timed(
-            spark, curation.corpus_pack_batches(spark, sf_dir)
-        )
-        print(
-            json.dumps(
-                {
-                    "op": "pack",
                     "rows": args.rows,
                     "sec": wall,
                     "shuffle_bytes": shuf,
@@ -319,46 +297,6 @@ def main() -> None:
         spark.stop()
         return
 
-    if args.op == "materialize":
-        # the END-TO-END pipeline at 10M: Gopher filter -> exact-dedup
-        # keeper -> near-dup loser removal -> hash split -> sequence
-        # chunking -> parquet partitionBy(split, lang). The widest
-        # dependencies are the fingerprint exchange and the pair miner;
-        # everything else is narrow or tiny.
-        import shutil
-
-        out = f"{PROBE_ROOT}/train_corpus_{args.rows}"
-        shutil.rmtree(out, ignore_errors=True)
-        before = shuffle_write_bytes(spark)
-        t0 = time.perf_counter()
-        curation.write_training_corpus(spark, sf_dir, out)
-        wall = round(time.perf_counter() - t0, 1)
-        shuf = shuffle_delta(before, shuffle_write_bytes(spark))
-        written = spark.read.parquet(out)
-        n_out = written.count()
-        n_parts = written.select("split", "lang").distinct().count()
-        out_bytes = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(out)
-            for f in fs
-        )
-        print(
-            json.dumps(
-                {
-                    "op": "materialize",
-                    "rows": args.rows,
-                    "sec": wall,
-                    "shuffle_bytes": shuf,
-                    "out_rows": n_out,
-                    "partitions": n_parts,
-                    "out_bytes": out_bytes,
-                }
-            )
-        )
-        shutil.rmtree(out, ignore_errors=True)
-        spark.stop()
-        return
-
     if args.op == "diff":
         # crawl-over-crawl audit at 10M vs the synthetic next crawl:
         # the scale claim under test is that both full-outer-join
@@ -388,8 +326,7 @@ def main() -> None:
     if args.op == "profile":
         # the per-language dataset card: one grouped aggregate whose
         # exact percentiles BUFFER each group's doc lengths — the
-        # registered entry's honest cost at scale (corpus_profile_sketch
-        # is the bounded-state variant); this row quantifies the trade
+        # registered entry's honest cost at scale
         wall, shuf = timed(spark, curation.corpus_profile(spark, sf_dir))
         print(
             json.dumps(

@@ -94,14 +94,12 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "op",
-        choices=["gen", "dsir", "semdedup", "shuffle", "divergence", "qfit"],
+        choices=["gen", "dsir", "semdedup", "shuffle", "divergence"],
     )
     ap.add_argument("--rows", type=int, default=10_000_000)
     ap.add_argument("--cells", type=int, default=4096)
     ap.add_argument("--eps", type=float, default=0.2)
     ap.add_argument("--shards", type=int, default=64)
-    ap.add_argument("--train-docs", type=int, default=200_000)
-    ap.add_argument("--iters", type=int, default=30)
     args = ap.parse_args()
     spark = probe_session(f"probe-selection-{args.op}")
 
@@ -187,69 +185,6 @@ def main() -> None:
                     "n": agg["n"],
                     "kept": int(agg["kept"]),
                     "max_prior_cos": agg["max_prior"],
-                }
-            )
-        )
-        return
-
-    if args.op == "qfit":
-        # quality_model_fit at corpus scale: the train_docs cap makes
-        # fit cost corpus-size-independent (the fasttext-sample
-        # practice); the trained model is then judged on the FULL 10M
-        # corpus via the serving expression — rank-based ROC AUC
-        # (row_number ties broken by doc_id; scores are rounded to
-        # 1e-6 so tie jitter is ≤ the reported precision)
-        d = gen_corpus(spark, args.rows)
-        before = shuffle_write_bytes(spark)
-        t0 = time.perf_counter()
-        w, b, losses = curation.quality_model_fit(
-            spark,
-            d,
-            target_source="tgt",
-            iters=args.iters,
-            train_docs=args.train_docs,
-        )
-        fit_sec = round(time.perf_counter() - t0, 1)
-        sh = shuffle_delta(before, shuffle_write_bytes(spark))
-        t1 = time.perf_counter()
-        from pyspark.sql import Window
-
-        docs = spark.read.parquet(f"{d}/documents.parquet").select(
-            "doc_id", (F.col("source") == "tgt").cast("int").alias("y")
-        )
-        s = (
-            curation.quality_model_score(spark, d, weights=w, bias=b)
-            .select("doc_id", "score")
-            .join(docs, "doc_id")
-        )
-        ranked = s.withColumn(
-            "rk", F.row_number().over(Window.orderBy("score", "doc_id"))
-        )
-        a = ranked.agg(
-            F.sum(F.when(F.col("y") == 1, F.col("rk"))).alias("rsum"),
-            F.sum("y").alias("npos"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-        npos, n = int(a["npos"]), int(a["n"])
-        auc = (int(a["rsum"]) - npos * (npos + 1) / 2) / (
-            npos * (n - npos)
-        )
-        score_sec = round(time.perf_counter() - t1, 1)
-        print(
-            json.dumps(
-                {
-                    "op": "qfit",
-                    "rows": args.rows,
-                    "train_docs": args.train_docs,
-                    "iters": args.iters,
-                    "fit_sec": fit_sec,
-                    "fit_shuffle_bytes": sh,
-                    "loss_first_last": [
-                        round(losses[0], 4),
-                        round(losses[-1], 4),
-                    ],
-                    "score_auc_full_corpus": round(auc, 4),
-                    "auc_sec": score_sec,
                 }
             )
         )

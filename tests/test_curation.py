@@ -1,7 +1,7 @@
-"""Corpus-curation operators: DuckDB oracle parity (same compare the
-driver runs — these live outside the 50-entry driver registry, like
-``winnow_fingerprint``), semantic invariants, and the plan properties
-the 100 TB design depends on."""
+"""Corpus-curation operators: DuckDB oracle parity (same compare as the
+registered queries — these live outside the 50-entry query registry),
+semantic invariants, and the plan properties the 100 TB design depends
+on."""
 
 from __future__ import annotations
 
@@ -38,24 +38,9 @@ _ORACLES = [
         curation.CORPUS_SAMPLE_BY_SOURCE_SQL,
     ),
     (
-        "quality_filter_adaptive",
-        curation.quality_filter_adaptive,
-        curation.QUALITY_FILTER_ADAPTIVE_SQL,
-    ),
-    (
-        "corpus_pack_batches",
-        curation.corpus_pack_batches,
-        curation.CORPUS_PACK_BATCHES_SQL,
-    ),
-    (
         "corpus_snapshot_diff",
         curation.corpus_snapshot_diff,
         curation.SNAPSHOT_DIFF_SQL,
-    ),
-    (
-        "corpus_diff_shards",
-        curation.corpus_diff_shards,
-        curation.CORPUS_DIFF_SHARDS_SQL,
     ),
 ]
 
@@ -225,133 +210,6 @@ def test_dedup_apply_agrees_with_dedup_exact(spark):
         assert by_fp[s.fingerprint] == s.n_copies
 
 
-def test_pack_batches_shape(spark):
-    """Batch ids are contiguous from 0 per language, every batch
-    except the last holds ≥ batch_tokens − max_doc tokens, and none
-    exceeds batch_tokens + max_doc (offset binning's overflow bound)."""
-    rows = curation.corpus_pack_batches(spark, TEST_SF_DIR).collect()
-    by_lang: dict[str, dict[int, int]] = {}
-    max_doc = max(r.n_tok for r in rows)
-    for r in rows:
-        by_lang.setdefault(r.lang, {}).setdefault(r.batch_id, 0)
-        by_lang[r.lang][r.batch_id] += r.n_tok
-    B = curation.BATCH_TOKENS
-    for lang, batches in by_lang.items():
-        ids = sorted(batches)
-        assert ids == list(range(len(ids))), lang  # contiguous from 0
-        for bid in ids[:-1]:
-            assert batches[bid] >= B - max_doc, (lang, bid, batches[bid])
-        for bid in ids:
-            assert batches[bid] <= B + max_doc, (lang, bid, batches[bid])
-
-
-def test_pack_batches_contiguous_with_long_doc(spark, tmp_path):
-    """Regression (round-5 review finding): a doc LONGER than
-    batch_tokens makes raw offset bins skip values; the dense-rank
-    compaction must still yield contiguous batch ids. Checked against
-    a Python reference on a planted corpus."""
-    rows = [
-        (i, " ".join(["w"] * n), "en", "s", 1)
-        for i, n in enumerate((30, 200, 30, 40, 30))
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    sf_dir = str(tmp_path)
-    df.coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        r.doc_id: r.batch_id
-        for r in curation.corpus_pack_batches(
-            spark, sf_dir, batch_tokens=50
-        ).collect()
-    }
-    # python reference: hash priority order, raw offset bins, dense ids
-    import hashlib
-
-    def bucket(doc_id):
-        return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % curation.BUCKETS
-
-    order = sorted(got, key=lambda d: (bucket(d), d))
-    sizes = {r[0]: len(r[1].split(" ")) for r in rows}
-    cum, raw = 0, {}
-    for d in order:
-        raw[d] = cum // 50
-        cum += sizes[d]
-    dense_map = {b: i for i, b in enumerate(sorted(set(raw.values())))}
-    want = {d: dense_map[b] for d, b in raw.items()}
-    assert got == want
-    ids = sorted(set(got.values()))
-    assert ids == list(range(len(ids)))  # contiguous despite the long doc
-
-
-def test_adaptive_filter_bounds_are_per_lang(spark):
-    """The thresholds must differ across languages (that's the point),
-    every language keeps ~90% of its docs, and the corpus-side plan
-    has no wide exchange — the bounds come back via broadcast."""
-    df = curation.quality_filter_adaptive(spark, TEST_SF_DIR)
-    rows = df.collect()
-    bounds = {(r.lang): (r.lo, r.hi) for r in rows}
-    assert len(set(bounds.values())) > 1
-    by_lang: dict[str, list] = {}
-    for r in rows:
-        by_lang.setdefault(r.lang, []).append(r.keep)
-    for lang, keeps in by_lang.items():
-        frac = sum(keeps) / len(keeps)
-        assert 0.7 <= frac <= 1.0, (lang, frac)
-    # plan from a FRESH frame: after collect(), the adaptive plan
-    # string shows the same exchange twice (query stage + original)
-    plan = _plan(curation.quality_filter_adaptive(spark, TEST_SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    # exactly ONE hashpartitioning exchange: the tiny per-lang bounds
-    # aggregate. A docs-side shuffle (sort-merge join fallback) would
-    # add a second.
-    wide = [
-        ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
-    ]
-    assert len(wide) == 1, wide
-
-
-def test_incremental_dedup_oracle_parity(spark):
-    ok, msg = compare(
-        curation.corpus_incremental_dedup(spark, TEST_SF_DIR),
-        curation.CORPUS_INCREMENTAL_DEDUP_SQL,
-        TEST_SF_DIR,
-    )
-    assert ok, msg
-
-
-def test_incremental_dedup_planted_dups(spark, tmp_path):
-    """The driver corpus has no exact dups, so this plants them: a new
-    batch containing a corpus duplicate, a within-batch duplicate
-    pair, and a fresh doc — only the fresh doc and the first copy of
-    the batch-internal pair survive. Runs against a tmp documents
-    table through the same oracle compare."""
-    rows = [
-        (0, "alpha text", "en", "s1", 10),
-        (1, "beta text", "en", "s1", 9),
-        (400, "alpha text", "en", "s2", 10),  # dup of corpus doc 0
-        (401, "gamma text", "en", "s2", 10),  # fresh
-        (402, "delta text", "en", "s2", 10),  # first of batch pair
-        (403, "delta text", "en", "s2", 10),  # second of batch pair
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    sf_dir = str(tmp_path)
-    df.coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        r.doc_id
-        for r in curation.corpus_incremental_dedup(spark, sf_dir).collect()
-    }
-    assert got == {401, 402}
-    ok, msg = compare(
-        curation.corpus_incremental_dedup(spark, sf_dir),
-        curation.CORPUS_INCREMENTAL_DEDUP_SQL,
-        sf_dir,
-    )
-    assert ok, msg
-
-
 def test_curation_ops_on_empty_corpus(spark, tmp_path):
     """Every curation op must return an empty frame (not crash) on an
     empty documents table — the first micro-batch of a new pipeline is
@@ -369,9 +227,6 @@ def test_curation_ops_on_empty_corpus(spark, tmp_path):
         curation.quality_filter,
         curation.corpus_dedup_apply,
         curation.corpus_profile,
-        curation.corpus_incremental_dedup,
-        curation.quality_filter_adaptive,
-        curation.corpus_pack_batches,
     ):
         assert fn(spark, sf_dir).count() == 0, fn.__name__
 
@@ -440,37 +295,6 @@ def test_neardup_apply_agrees_with_clusters(spark):
     assert got == all_ids - losers
 
 
-def test_write_curated_corpus_roundtrip(spark, tmp_path):
-    """The materialized corpus is exactly (quality keepers ∩ dedup
-    winners among them) with the right split labels, and reading one
-    split prunes partitions at the scan."""
-    out = str(tmp_path / "curated")
-    curation.write_curated_corpus(spark, TEST_SF_DIR, out)
-    back = spark.read.parquet(out)
-
-    q = {r.doc_id for r in curation.quality_filter(spark, TEST_SF_DIR).collect() if r.keep}
-    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet").collect()
-    # expected: min doc_id per text among quality-passing docs
-    best: dict[str, int] = {}
-    for r in docs:
-        if r.doc_id in q:
-            best[r.text] = min(best.get(r.text, r.doc_id), r.doc_id)
-    expected = set(best.values())
-    assert {r.doc_id for r in back.collect()} == expected
-
-    splits = {r.doc_id: r.split for r in curation.corpus_split(spark, TEST_SF_DIR).collect()}
-    for r in back.select("doc_id", "split").collect():
-        assert splits[r.doc_id] == r.split
-
-    # partition pruning: a split+lang filter must reach PartitionFilters
-    plan = _plan(
-        back.filter((F.col("split") == "train") & (F.col("lang") == "en"))
-    )
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters:")[1].splitlines()[0]
-    assert "split" in pf and "lang" in pf, pf
-
-
 def test_dedup_apply_single_exchange(spark):
     """Both window functions share the fingerprint partitioning: one
     wide exchange of the docs table, not two."""
@@ -481,38 +305,6 @@ def test_dedup_apply_single_exchange(spark):
         if "Exchange hashpartitioning" in line
     ]
     assert len(wide) == 1, plan
-
-
-def test_contamination_oracle_parity(spark):
-    ok, msg = compare(
-        curation.corpus_contamination(spark, TEST_SF_DIR),
-        curation.CORPUS_CONTAMINATION_SQL,
-        TEST_SF_DIR,
-    )
-    assert ok, msg
-
-
-def test_contamination_pairs_cross_splits(spark):
-    """Every reported pair must have its train side in 'train' and its
-    eval side elsewhere, and be a genuine near-dup pair from the
-    miner; the fixture's planted dups make the report non-empty."""
-    from fledge_south_csvplayback_spark.operators import dedup
-
-    rows = curation.corpus_contamination(spark, TEST_SF_DIR).collect()
-    assert rows
-    splits = {
-        r.doc_id: r.split
-        for r in curation.corpus_split(spark, TEST_SF_DIR).collect()
-    }
-    mined = {
-        frozenset((r.doc_a, r.doc_b))
-        for r in dedup.dedup_ngram_jaccard(spark, TEST_SF_DIR).collect()
-    }
-    for r in rows:
-        assert splits[r.train_doc] == "train"
-        assert splits[r.eval_doc] != "train"
-        assert r.eval_split == splits[r.eval_doc]
-        assert frozenset((r.train_doc, r.eval_doc)) in mined
 
 
 # --- fixed-length training-sequence chunking ---------------------------------
@@ -781,126 +573,6 @@ def test_mixture_weights_single_scan(spark):
     assert plan.count("Scan parquet") == 1, plan
 
 
-# --- sketch-based dataset card -----------------------------------------------
-def test_profile_sketch_tolerances(spark):
-    """Approximate card vs the exact one: HLL++ distincts within the
-    3-sigma band of the configured rsd, approximate percentiles are
-    real elements of each group's distribution and land within 10% of
-    the interpolated exact quantiles, counts/sums exact."""
-    exact = {
-        r.lang: r for r in curation.corpus_profile(spark, TEST_SF_DIR).collect()
-    }
-    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet")
-    uniq = {
-        r.lang: r.n
-        for r in docs.groupBy("lang")
-        .agg(F.countDistinct(F.md5(F.col("text").cast("binary"))).alias("n"))
-        .collect()
-    }
-    toks = {
-        lang: sorted(
-            r.n
-            for r in docs.filter(F.col("lang") == lang)
-            .select(F.size(F.split(F.col("text"), " ")).alias("n"))
-            .collect()
-        )
-        for lang in exact
-    }
-    rsd = curation.SKETCH_RSD
-    rows = curation.corpus_profile_sketch(spark, TEST_SF_DIR).collect()
-    assert {r.lang for r in rows} == set(exact)
-    for r in rows:
-        e = exact[r.lang]
-        assert r.n_docs == e.n_docs
-        assert r.total_tokens == e.total_tokens
-        assert abs(r.approx_n_sources - e.n_sources) <= max(
-            2, 3 * rsd * e.n_sources
-        )
-        assert abs(r.approx_unique_docs - uniq[r.lang]) <= max(
-            2, 3 * rsd * uniq[r.lang]
-        )
-        assert r.p50_tokens in toks[r.lang]  # a real element, not interpolated
-        assert r.p90_tokens in toks[r.lang]
-        assert abs(r.p50_tokens - e.p50_tokens) <= max(2, 0.1 * e.p50_tokens)
-        assert abs(r.p90_tokens - e.p90_tokens) <= max(2, 0.1 * e.p90_tokens)
-
-
-def test_profile_sketch_single_aggregate_plan(spark):
-    """The whole card is ONE grouped aggregate: one scan, one
-    Exchange on lang, no join/window/second pass."""
-    df = curation.corpus_profile_sketch(spark, TEST_SF_DIR)
-    df.collect()
-    plan = _plan(df).split("Initial Plan")[0]
-    assert plan.count("Scan parquet") == 1, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "Join" not in plan and "Window" not in plan, plan
-
-
-# --- temperature-applied resampling ------------------------------------------
-def test_resample_oracle_parity(spark):
-    df = curation.corpus_resample(spark, TEST_SF_DIR)
-    ok, msg = compare(df, curation.CORPUS_RESAMPLE_SQL, TEST_SF_DIR)
-    assert ok, msg
-
-
-def test_resample_oracle_parity_sf001(spark):
-    df = curation.corpus_resample(spark, ORACLE_SF_DIR)
-    ok, msg = compare(df, curation.CORPUS_RESAMPLE_SQL, ORACLE_SF_DIR)
-    assert ok, msg
-
-
-def test_resample_semantics(spark):
-    """Epoch structure (each kept doc has epochs 1..n exactly), copy
-    counts match the weight table's floor(rate)/frac(rate) split,
-    alpha=1 reproduces the corpus exactly once, and the fractional
-    slice uses the SALTED bucket (not the split/sample bucket)."""
-    import math
-
-    rates = {
-        r.lang: r.rate
-        for r in curation.corpus_mixture_weights(spark, TEST_SF_DIR).collect()
-    }
-    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet")
-    rows = curation.corpus_resample(spark, TEST_SF_DIR).collect()
-    epochs: dict[int, list[int]] = {}
-    langs: dict[int, str] = {}
-    for r in rows:
-        epochs.setdefault(r.doc_id, []).append(r.epoch)
-        langs[r.doc_id] = r.lang
-    for doc_id, es in epochs.items():
-        assert sorted(es) == list(range(1, len(es) + 1)), doc_id
-    # per-language totals decompose as floor(rate)*n + |frac slice|
-    n_by_lang: dict[str, int] = {}
-    for r in docs.select("doc_id", "lang").collect():
-        n_by_lang[r.lang] = n_by_lang.get(r.lang, 0) + 1
-    got_by_lang: dict[str, int] = {}
-    for doc_id, es in epochs.items():
-        got_by_lang[langs[doc_id]] = got_by_lang.get(langs[doc_id], 0) + len(es)
-    # the fractional slice is a FIXED deterministic draw — recompute it
-    # exactly with the same salted-md5 rule rather than a statistical
-    # tolerance (the sf0.001 'de' slice genuinely lands 3.2 sigma low)
-    import hashlib
-
-    def salted_bucket(doc_id: int) -> int:
-        h = hashlib.md5(f"rs{doc_id}".encode()).hexdigest()[:8]
-        return int(h, 16) % curation.BUCKETS
-
-    slice_hits: dict[str, int] = {}
-    for r in docs.select("doc_id", "lang").collect():
-        frac = rates[r.lang] - math.floor(rates[r.lang])
-        if salted_bucket(r.doc_id) < math.floor(frac * curation.BUCKETS):
-            slice_hits[r.lang] = slice_hits.get(r.lang, 0) + 1
-    for lang, rate in rates.items():
-        whole = int(math.floor(rate))
-        extra = got_by_lang.get(lang, 0) - whole * n_by_lang[lang]
-        assert extra == slice_hits.get(lang, 0), (lang, extra)
-    # alpha=1: identity mixture, corpus reproduced exactly once
-    ident = curation.corpus_resample(spark, TEST_SF_DIR, alpha=1.0)
-    assert [r.epoch for r in ident.collect()] == [1] * docs.count()
-    ok, msg = compare(ident, curation._resample_sql(1.0), TEST_SF_DIR)
-    assert ok, msg
-
-
 def test_resample_bucket_is_salted(spark):
     """The fractional-copy slice must not reuse the split/sample
     bucket: the salted and unsalted bucket disagree on essentially
@@ -910,209 +582,6 @@ def test_resample_bucket_is_salted(spark):
     bs = curation._bucket(F.concat(F.lit("rs"), F.col("doc_id").cast("string")))
     same = docs.filter(b == bs).count()
     assert same <= max(2, docs.count() // 1000), same
-
-
-def test_contamination_broadcasts_pairs_not_labels(spark):
-    """Scale contract: the broadcast build sides must be the
-    df-cap-bounded pair set (identified by its jaccard column), never
-    the corpus-sized per-document label table."""
-    import contextlib
-    import io
-
-    df = curation.corpus_contamination(spark, TEST_SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    blocks = plan.split("\n\n")
-    bcast_nodes = [
-        b for b in blocks if b.lstrip().startswith("(") and "BroadcastExchange" in b.splitlines()[0]
-    ]
-    assert bcast_nodes, plan
-    for b in bcast_nodes:
-        assert "jaccard" in b, b  # build side carries the pair column
-
-
-# --- full Gopher filter ------------------------------------------------------
-def test_gopher_filter_oracle_parity(spark):
-    df = curation.quality_filter_gopher(spark, TEST_SF_DIR)
-    ok, msg = compare(df, curation.QUALITY_FILTER_GOPHER_SQL, TEST_SF_DIR)
-    assert ok, msg
-
-
-def test_gopher_filter_oracle_parity_sf001(spark):
-    df = curation.quality_filter_gopher(spark, ORACLE_SF_DIR)
-    ok, msg = compare(df, curation.QUALITY_FILTER_GOPHER_SQL, ORACLE_SF_DIR)
-    assert ok, msg
-
-
-def test_gopher_filter_composition(spark, tmp_path):
-    """keep = stats AND repetition; the stats family agrees with
-    quality_filter; a heavily repetitive doc with healthy stats is
-    dropped by the repetition family alone."""
-    rows = {
-        r.doc_id: r for r in curation.quality_filter_gopher(spark, TEST_SF_DIR).collect()
-    }
-    stats = {
-        r.doc_id: r.keep for r in curation.quality_filter(spark, TEST_SF_DIR).collect()
-    }
-    assert set(rows) == set(stats)
-    for doc_id, r in rows.items():
-        assert r.stats_ok == stats[doc_id]
-        assert r.keep == (r.stats_ok and r.line_rep_ok and r.gram_rep_ok)
-    # make repetition the ONLY violation: healthy varied words (stats
-    # rules pass) but one line repeated 5 times
-    uniq = " ".join(f"tok{i}ab" for i in range(40))
-    text_rep = "\n".join(["dup line content here now"] * 5) + "\n" + uniq
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        [(0, text_rep, "en", "s", 1), (1, uniq + " " + " ".join(f"z{i}qx" for i in range(20)), "en", "s", 1)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        r.doc_id: (r.stats_ok, r.line_rep_ok, r.keep)
-        for r in curation.quality_filter_gopher(spark, sf_dir).collect()
-    }
-    assert got[0][1] is False and got[0][2] is False  # repetition kills it
-    assert got[1] == (True, True, True)
-    ok, msg = compare(
-        curation.quality_filter_gopher(spark, sf_dir),
-        curation.QUALITY_FILTER_GOPHER_SQL,
-        sf_dir,
-    )
-    assert ok, msg
-
-
-def test_gopher_filter_null_text_gets_verdict(spark, tmp_path):
-    """A NULL-text doc has no repetition row (explode(NULL) drops it);
-    the left join + coalesce must still emit a verdict row with
-    keep=False rather than silently omitting the doc."""
-    rows = [
-        (0, None, "en", "s", 0),
-        (1, " ".join(f"tok{i}xy" for i in range(40)), "en", "s", 1),
-    ]
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        r.doc_id: (r.keep, r.line_rep_ok, r.gram_rep_ok)
-        for r in curation.quality_filter_gopher(spark, sf_dir).collect()
-    }
-    assert set(got) == {0, 1}  # the NULL doc is present
-    assert got[0][0] is False  # and dropped, not null/absent
-    assert got[1][0] is True
-    ok, msg = compare(
-        curation.quality_filter_gopher(spark, sf_dir),
-        curation.QUALITY_FILTER_GOPHER_SQL,
-        sf_dir,
-    )
-    assert ok, msg
-
-
-# --- end-to-end training-corpus materializer ---------------------------------
-def test_write_training_corpus_roundtrip(spark, tmp_path):
-    """The materializer is exactly the composition of the
-    independently-tested stages: surviving doc set == gopher-keep ∘
-    dedup-keeper ∘ neardup-loser-removal (with the cluster
-    representative re-elected among quality-passing members, so a
-    cluster whose min-doc representative failed Gopher still keeps one
-    member), split labels match corpus_split, chunks reconstruct their
-    doc (non-overlap config), and the (split, lang) layout prunes at
-    read time."""
-    from fledge_south_csvplayback_spark.operators import dedup
-
-    out = str(tmp_path / "train_corpus")
-    c = curation.CHUNK_TOKENS
-    curation.write_training_corpus(spark, TEST_SF_DIR, out, c, c)
-    got = spark.read.parquet(out)
-
-    keep = {
-        r.doc_id
-        for r in curation.quality_filter_gopher(spark, TEST_SF_DIR)
-        .filter(F.col("keep"))
-        .collect()
-    }
-    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet")
-    kept_docs = docs.filter(F.col("doc_id").isin(keep))
-    dedup_keepers = {
-        r.doc_id for r in curation._keep_first_per_fingerprint(kept_docs).collect()
-    }
-    # replica of the re-election: per cluster, min doc_id among
-    # quality-PASSING members wins; the rest are losers
-    members: dict[int, list[int]] = {}
-    for r in dedup.dedup_clusters(spark, TEST_SF_DIR).collect():
-        if r.doc_id in keep:
-            members.setdefault(r.cluster_id, []).append(r.doc_id)
-    losers = {
-        d for ms in members.values() for d in ms if d != min(ms)
-    }
-    want_ids = dedup_keepers - losers
-    assert {r.doc_id for r in got.select("doc_id").distinct().collect()} == want_ids
-
-    splits = {
-        r.doc_id: r.split for r in curation.corpus_split(spark, TEST_SF_DIR).collect()
-    }
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    by_doc: dict[int, list] = {}
-    for r in got.collect():
-        assert r.split == splits[r.doc_id]
-        by_doc.setdefault(r.doc_id, []).append(r)
-    for doc_id, chunks in by_doc.items():
-        chunks.sort(key=lambda r: r.chunk_id)
-        assert " ".join(r.chunk_text for r in chunks) == texts[doc_id]
-
-    # layout: reading one split/lang prunes to its own directory
-    pruned = spark.read.parquet(out).filter(
-        (F.col("split") == "train") & (F.col("lang") == "en")
-    )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "split" in plan, plan
-    assert {(r.split, r.lang) for r in pruned.collect()} <= {("train", "en")}
-
-
-def test_training_corpus_reelects_cluster_representative(spark, tmp_path):
-    """A near-dup cluster whose min-doc_id member FAILS quality must
-    still contribute its best quality-passing member to the training
-    corpus (the representative is re-elected among Gopher-passing
-    members); previously the whole cluster's content vanished."""
-    words = [f"w{i:02d}xx" for i in range(40)]
-    base = " ".join(words)
-    docs = [
-        # doc 0: near-dup of doc 1 (shares all of base's shingles) with
-        # heavy gram spam appended -> fails the Gopher repetition gate
-        (0, base + " " + " ".join(["spam"] * 60), "en", "web", 0),
-        (1, base, "en", "web", 0),
-        # quality-passing filler, not near anything
-        (2, " ".join(f"z{i:02d}ab" for i in range(30)), "en", "web", 0),
-        (3, " ".join(f"q{i:02d}cd" for i in range(30)), "en", "web", 0),
-    ]
-    sf_dir = str(tmp_path / "corpus")
-    import os
-
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-
-    gopher = {
-        r.doc_id: r.keep
-        for r in curation.quality_filter_gopher(spark, sf_dir).collect()
-    }
-    assert gopher[0] is False and gopher[1] is True, gopher
-
-    from fledge_south_csvplayback_spark.operators import dedup
-
-    clusters = {
-        r.doc_id: r.cluster_id for r in dedup.dedup_clusters(spark, sf_dir).collect()
-    }
-    assert clusters.get(0) == clusters.get(1) == 0, clusters
-
-    out = str(tmp_path / "train")
-    curation.write_training_corpus(spark, sf_dir, out)
-    got = {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
-    assert 1 in got, got  # the re-elected representative survives
-    assert 0 not in got
 
 
 # --- pluggable token counting ------------------------------------------------
@@ -1149,220 +618,6 @@ def test_token_count_rejects_unknown_method():
         curation.token_count(F.col("text"), "bpe")
     with pytest.raises(ValueError):
         curation.token_count_sql("text", "bpe")
-
-
-# --- CCNet perplexity buckets ------------------------------------------------
-def test_ppl_buckets_oracle_parity(spark):
-    df = curation.corpus_perplexity_buckets(spark, TEST_SF_DIR)
-    ok, msg = compare(df, curation._ppl_buckets_sql(), TEST_SF_DIR)
-    assert ok, msg
-
-
-def test_ppl_buckets_oracle_parity_sf001(spark):
-    df = curation.corpus_perplexity_buckets(spark, ORACLE_SF_DIR)
-    ok, msg = compare(df, curation._ppl_buckets_sql(), ORACLE_SF_DIR)
-    assert ok, msg
-
-
-def test_ppl_buckets_are_per_language_terciles(spark):
-    """Every language splits ~equally into head/middle/tail (per-LANG
-    thresholds — CCNet's point), and bucket order tracks the score:
-    min(head) >= max(middle) boundary-wise within each language."""
-    rows = curation.corpus_perplexity_buckets(spark, TEST_SF_DIR).collect()
-    by_lang: dict[str, dict[str, list[float]]] = {}
-    for r in rows:
-        by_lang.setdefault(r.lang, {}).setdefault(r.bucket, []).append(
-            r.mean_logprob
-        )
-    assert len(by_lang) >= 2
-    for lang, buckets in by_lang.items():
-        n = sum(len(v) for v in buckets.values())
-        if n < 12:
-            continue  # tercile balance is meaningless on tiny strata
-        assert set(buckets) == {"head", "middle", "tail"}, (lang, buckets.keys())
-        for b, vals in buckets.items():
-            assert len(vals) >= n // 6, (lang, b, len(vals), n)
-        assert min(buckets["head"]) >= max(buckets["middle"]), lang
-        assert min(buckets["middle"]) >= max(buckets["tail"]), lang
-
-
-# --- scrub staging -----------------------------------------------------------
-def test_scrubbed_documents_is_drop_in_sf_dir(spark, tmp_path):
-    """The staged scrub output must be a drop-in documents table: line
-    boilerplate removed FIRST, then repeated spans over the cleaned
-    text; schema/columns preserved with n_chars recomputed; and any
-    downstream operator runs on it unchanged."""
-    import os
-
-    words = [f"w{i:02d}xy" for i in range(30)]
-    body0 = " ".join(words)
-    body1 = " ".join(f"z{i:02d}ab" for i in range(30))
-    nav = "NAV home about contact"
-    docs = [
-        # shared nav line (df=3) + unique bodies; docs 0/1 also share
-        # body0 -> after line scrub, body0's spans still repeat and
-        # the span stage removes them
-        (0, f"{nav}\n{body0}", "en", "web", 0),
-        (1, f"{body0}\n{nav}", "en", "web", 0),
-        (2, f"{nav}\n{body1}", "en", "web", 0),
-    ]
-    sf_dir = str(tmp_path / "raw")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-
-    out = str(tmp_path / "scrubbed")
-    curation.write_scrubbed_documents(spark, sf_dir, out)
-    got = {r.doc_id: r for r in spark.read.parquet(f"{out}/documents.parquet").collect()}
-    assert set(got) == {0, 1, 2}
-    # nav removed everywhere (line stage); body0 removed from 0 and 1
-    # (span stage: its 10-grams repeat across the two docs)
-    assert got[0].text == "" and got[1].text == ""
-    assert got[2].text == body1
-    for r in got.values():
-        assert r.n_chars == len(r.text)  # recomputed
-    # drop-in: existing operators run on the scrubbed dir unchanged
-    qf = curation.quality_filter(spark, out).collect()
-    assert {r.doc_id for r in qf} == {0, 1, 2}
-    assert curation.corpus_token_budget(spark, out).count() >= 1
-
-
-def test_scrubbed_documents_stage_order_matters(spark, tmp_path):
-    """lines-then-spans != spans-only: a span repeated ONLY inside the
-    boilerplate lines disappears at the line stage, so the span stage
-    sees the cleaned corpus — the reason stages materialize
-    sequentially instead of running independently."""
-    import os
-
-    # nav is 12 tokens: a repeated SPAN by itself
-    nav = " ".join(f"nav{i}" for i in range(12))
-    docs = [
-        (0, f"{nav}\nunique zero body text here", "en", "web", 0),
-        (1, f"{nav}\nother one content words go", "en", "web", 0),
-    ]
-    sf_dir = str(tmp_path / "raw")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-
-    out = str(tmp_path / "scrubbed")
-    curation.write_scrubbed_documents(spark, sf_dir, out)
-    got = {r.doc_id: r.text for r in spark.read.parquet(f"{out}/documents.parquet").collect()}
-    # the line stage removed nav entirely; the span stage then found
-    # nothing left to remove — bodies intact
-    assert got[0] == "unique zero body text here"
-    assert got[1] == "other one content words go"
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        curation.write_scrubbed_documents(spark, sf_dir, out, stages=("nope",))
-
-    # out_dir == input dir would have mode("overwrite") delete the
-    # corpus while the lazy scrub is still reading it — refuse
-    with pytest.raises(ValueError, match="overwrite its own input"):
-        curation.write_scrubbed_documents(spark, sf_dir, sf_dir)
-    # a later stage reading an earlier stage's dir is the same trap
-    with pytest.raises(ValueError, match="overwrite its own input"):
-        curation.write_scrubbed_documents(
-            spark, f"{out}__stage0", out, stages=("lines", "spans")
-        )
-
-
-def test_scrubbed_documents_passes_extra_columns_through(spark, tmp_path):
-    """Pass-through contract (review finding): an upstream column the
-    scrubber doesn't know about must survive staging in place."""
-    import os
-
-    sf_dir = str(tmp_path / "raw")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        [
-            (0, "NAV bar\nbody zero", "en", "web", 0, "train"),
-            (1, "NAV bar\nbody one", "en", "web", 0, "val"),
-        ],
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long, split string",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    out = str(tmp_path / "scrubbed")
-    curation.write_scrubbed_documents(spark, sf_dir, out, stages=("lines",))
-    got = spark.read.parquet(f"{out}/documents.parquet")
-    assert got.columns == [
-        "doc_id", "text", "lang", "source", "n_chars", "split"
-    ]
-    rows = {r.doc_id: r for r in got.collect()}
-    assert rows[0].split == "train" and rows[1].split == "val"
-    assert rows[0].text == "body zero"  # NAV bar df=2 removed
-
-
-def test_token_budget_bpe_matches_replica(spark):
-    """BPE-counted budget selection == a driver-side replica of the
-    running-sum rule over the SAME tokenizer counts (the documented
-    weaker gate — BPE counts are not SQL-expressible), and whitespace
-    vs BPE budgets genuinely differ in the kept set sizes' unit."""
-    from fledge_south_csvplayback_spark.operators import text as text_ops
-
-    sel = {
-        r.doc_id: (r.n_tok, r.cum_tok)
-        for r in curation.corpus_token_budget_bpe(spark, TEST_SF_DIR).collect()
-    }
-    counts = {
-        r.doc_id: r.n_bpe_tokens
-        for r in text_ops.text_bpe_tokenize(spark, TEST_SF_DIR).collect()
-    }
-    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet").select(
-        "doc_id", "lang", curation._bucket(F.col("doc_id")).alias("bucket")
-    ).collect()
-    by_lang: dict[str, list] = {}
-    for r in docs:
-        by_lang.setdefault(r.lang, []).append(r)
-    want: dict[int, tuple] = {}
-    for rows in by_lang.values():
-        rows.sort(key=lambda r: (r.bucket, r.doc_id))
-        cum = 0
-        for r in rows:
-            cum += counts[r.doc_id]
-            if cum <= curation.TOKEN_BUDGET:
-                want[r.doc_id] = (counts[r.doc_id], cum)
-    assert sel == want
-    assert sel  # the budget selects something
-    # NOTE: on this fixture BPE counts EQUAL whitespace counts — its
-    # ~30-word vocabulary is so frequent that 200 merges fully fuse
-    # every word into one token, which is correct BPE behavior; the
-    # unit difference is pinned on a rare-vocabulary corpus below
-
-
-def test_token_budget_bpe_unit_differs_on_rare_vocab(spark, tmp_path):
-    """Rare words stay multi-token under a small merge table, so the
-    BPE-counted budget accounts more tokens than the whitespace one —
-    the reason the op exists."""
-    import os
-
-    sf_dir = str(tmp_path / "corpus")
-    os.makedirs(sf_dir)
-    # 30 docs of globally-unique words: no pair repeats enough to merge
-    docs = [
-        (i, " ".join(f"xq{i:02d}{j:02d}word" for j in range(25)), "en", "w", 0)
-        for i in range(30)
-    ]
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    bpe = {
-        r.doc_id: r.cum_tok
-        for r in curation.corpus_token_budget_bpe(spark, sf_dir, budget=600).collect()
-    }
-    ws = {
-        r.doc_id: r.cum_tok
-        for r in curation.corpus_token_budget(spark, sf_dir, budget=600).collect()
-    }
-    assert bpe  # something selected under the larger unit
-    shared = set(bpe) & set(ws)
-    assert shared and all(bpe[d] > ws[d] for d in shared)
-    # fewer docs fit the same numeric budget in the bigger unit
-    assert len(bpe) < len(ws)
 
 
 # --- deterministic shuffle + sharded export ----------------------------------
@@ -1405,96 +660,6 @@ def test_shuffle_order_is_a_permutation_not_identity(spark):
     assert order0 != sorted(order0)
 
 
-def test_write_shuffled_corpus_file_order_is_training_order(spark, tmp_path):
-    import glob
-    import os
-
-    out = str(tmp_path / "shuffled")
-    curation.write_shuffled_corpus(spark, TEST_SF_DIR, out)
-    want = {
-        (r.shard, r.pos): r.doc_id
-        for r in curation.corpus_shuffle_order(spark, TEST_SF_DIR).collect()
-    }
-    shards = sorted(glob.glob(f"{out}/shard=*"))
-    assert len(shards) == curation.SHUFFLE_SHARDS
-    total = 0
-    for d in shards:
-        s = int(d.rsplit("=", 1)[1])
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1, (d, files)  # one file per shard
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(os.path.join(d, files[0]))
-        ids = t.column("doc_id").to_pylist()
-        # the file's physical row order IS the shard's training order
-        assert ids == [want[(s, p)] for p in range(1, len(ids) + 1)], d
-        total += len(ids)
-    assert total == len(want)
-    import pytest
-
-    with pytest.raises(ValueError, match="collides"):
-        curation.write_shuffled_corpus(spark, TEST_SF_DIR, TEST_SF_DIR)
-    # NESTED collisions are the same data-loss trap (review finding):
-    # out_dir inside the read path, or the read path inside out_dir
-    with pytest.raises(ValueError, match="collides"):
-        curation.write_shuffled_corpus(
-            spark, TEST_SF_DIR, f"{TEST_SF_DIR}/documents.parquet"
-        )
-    with pytest.raises(ValueError, match="collides"):
-        curation.write_shuffled_corpus(
-            spark, f"{str(tmp_path)}/raw", str(tmp_path)
-        )
-
-
-def test_write_shuffled_corpus_passes_extra_columns_through(spark, tmp_path):
-    """Pass-through contract (review finding): a split label added
-    upstream must survive the sharded export."""
-    import os
-
-    sf_dir = str(tmp_path / "raw")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        [
-            (0, "body zero", "en", "web", 9, "train"),
-            (1, "body one", "en", "web", 8, "val"),
-            (2, "body two", "en", "web", 8, "train"),
-        ],
-        "doc_id long, text string, lang string, source string, "
-        "n_chars long, split string",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    out = str(tmp_path / "shuffled")
-    curation.write_shuffled_corpus(spark, sf_dir, out, n_shards=2)
-    got = spark.read.parquet(out)
-    assert set(got.columns) == {
-        "doc_id", "text", "lang", "source", "n_chars", "split", "shard"
-    }
-    rows = {r.doc_id: r for r in got.collect()}
-    assert len(rows) == 3
-    assert rows[0].split == "train" and rows[1].split == "val"
-
-
-def test_scrubbed_documents_rejects_nested_out_dir(spark, tmp_path):
-    """The stage guard catches CONTAINMENT, not just equality: writing
-    inside the read path (or over a parent of it) would recursively
-    delete input files mid-read."""
-    import os
-
-    import pytest
-
-    sf_dir = str(tmp_path / "raw")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        [(0, "a b", "en", "web", 3)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.parquet(f"{sf_dir}/documents.parquet")
-    with pytest.raises(ValueError, match="overwrite its own input"):
-        curation.write_scrubbed_documents(
-            spark, sf_dir, f"{sf_dir}/documents.parquet"
-        )
-    with pytest.raises(ValueError, match="overwrite its own input"):
-        curation.write_scrubbed_documents(spark, sf_dir, str(tmp_path))
-
-
 def test_shuffle_order_one_exchange(spark):
     import re
 
@@ -1507,70 +672,6 @@ def test_shuffle_order_one_exchange(spark):
     }
     assert keys == {"shard"}, (keys, plan)
     assert "rangepartitioning" not in plan  # no global sort
-
-
-def test_paths_overlap_symlink_and_uri(tmp_path):
-    """The overwrite guard resolves symlink aliases of LOCAL paths
-    (realpath) and compares URI-scheme strings on normalized prefixes
-    WITHOUT abspath-coercing them against the driver CWD."""
-    import os
-
-    real = tmp_path / "corpus"
-    real.mkdir()
-    alias = tmp_path / "alias"
-    os.symlink(real, alias)
-    # a symlink alias of the read dir cannot escape the guard
-    assert curation._paths_overlap(str(alias), str(real))
-    assert curation._paths_overlap(str(alias / "out"), str(real))
-    other = tmp_path / "other"
-    other.mkdir()
-    assert not curation._paths_overlap(str(alias), str(other))
-    # URI schemes: prefix containment, trailing-slash normalized
-    assert curation._paths_overlap("s3://bucket/corpus", "s3://bucket/corpus/")
-    assert curation._paths_overlap("s3://bucket/corpus/out", "s3://bucket/corpus")
-    # sibling with a shared string prefix is NOT containment
-    assert not curation._paths_overlap("s3://bucket/corpus2", "s3://bucket/corpus")
-    # a URI never collides with a local path spelled like its suffix
-    assert not curation._paths_overlap("s3://bucket/corpus", "/bucket/corpus")
-    # RFC 3986: scheme and authority are case-INsensitive (S3/HDFS
-    # hosts follow DNS rules) — a recased spelling must not escape the
-    # guard; the path component stays case-sensitive (object keys are)
-    assert curation._paths_overlap("S3://Bucket/corpus/out", "s3://bucket/corpus")
-    assert curation._paths_overlap("HDFS://NN:8020/data", "hdfs://nn:8020/data/out")
-    assert not curation._paths_overlap("s3://bucket/Corpus", "s3://bucket/corpus")
-
-
-def test_write_shuffled_corpus_reserved_columns_reshard(spark, tmp_path):
-    """'shard'/'skey' are the writer's reserved output names: an input
-    that already carries them (re-sharding a previous export) has the
-    stale lineage dropped instead of hitting an ambiguous-column
-    AnalysisException; other columns still pass through."""
-    import os
-
-    sf_dir = str(tmp_path / "raw")
-    os.makedirs(sf_dir)
-    spark.createDataFrame(
-        [
-            (0, "body zero", "en", 9, "old-a", 3, "train"),
-            (1, "body one", "en", 8, "old-b", 1, "val"),
-        ],
-        "doc_id long, text string, lang string, n_chars long, "
-        "skey string, shard long, split string",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    out = str(tmp_path / "reshuffled")
-    curation.write_shuffled_corpus(spark, sf_dir, out, n_shards=2)
-    got = spark.read.parquet(out)
-    assert set(got.columns) == {
-        "doc_id", "text", "lang", "n_chars", "split", "shard"
-    }
-    rows = {r.doc_id: r for r in got.collect()}
-    assert len(rows) == 2 and rows[1].split == "val"
-    # the new shard assignment is the salted-hash rule, not the stale one
-    import hashlib
-
-    for doc_id, r in rows.items():
-        h = hashlib.md5(f"shuffle:{doc_id}".encode()).hexdigest()
-        assert r.shard == int(h[:8], 16) % 2
 
 
 # --- corpus snapshot diff ------------------------------------------------
@@ -1635,21 +736,6 @@ def test_corpus_diff_shuffle_carries_fingerprints_not_text(spark):
             assert "text" not in line, line
 
 
-def test_diff_shards_counts_and_validation(spark):
-    """Shard counts reconcile with the diff's status totals, the shard
-    rule is corpus_shuffle_order's, and n_shards is validated."""
-    diff = curation.corpus_snapshot_diff(spark, TEST_SF_DIR)
-    per_status = {r.status: r.n for r in
-                  diff.groupBy("status").agg(F.count("*").alias("n")).collect()}
-    shards = curation.diff_shards_to_recompute(diff).collect()
-    assert sum(r.n_added for r in shards) == per_status.get("added", 0)
-    assert sum(r.n_removed for r in shards) == per_status.get("removed", 0)
-    assert sum(r.n_changed for r in shards) == per_status.get("changed", 0)
-    assert all(0 <= r.shard < curation.SHUFFLE_SHARDS for r in shards)
-    with pytest.raises(ValueError, match="n_shards"):
-        curation.diff_shards_to_recompute(diff, n_shards=0)
-
-
 # --- benchmark decontamination ---------------------------------------------
 def test_corpus_decontaminate_oracle_parity(spark):
     """13-gram benchmark-overlap flags == the string-gram DuckDB
@@ -1711,164 +797,10 @@ def test_contamination_flags_planted(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_write_training_corpus_decontaminates(spark, tmp_path):
-    """With a benchmark frame, the materializer's surviving doc set
-    additionally excludes every contaminated doc, and the gate sits
-    WITH quality (a contaminated doc neither becomes a dedup keeper
-    nor a cluster representative); without the frame the output is
-    the round-9 pipeline unchanged."""
-    out = str(tmp_path / "train_bench")
-    c = curation.CHUNK_TOKENS
-    bench = curation._benchmark(spark, TEST_SF_DIR)
-    curation.write_training_corpus(
-        spark, TEST_SF_DIR, out, c, c, benchmark=bench
-    )
-    got_ids = {
-        r.doc_id
-        for r in spark.read.parquet(out).select("doc_id").distinct().collect()
-    }
-    contaminated = {
-        r.doc_id
-        for r in curation.corpus_decontaminate(spark, TEST_SF_DIR)
-        .filter(F.col("contaminated"))
-        .collect()
-    }
-    assert contaminated  # the stand-in benchmark plants positives
-    assert not (got_ids & contaminated)
-    # exact replica over the decontaminated keep-set: gopher ∧ clean →
-    # dedup keeper → re-elected-loser removal (the roundtrip test's
-    # replica with the extra gate)
-    from fledge_south_csvplayback_spark.operators import dedup
-
-    keep = {
-        r.doc_id
-        for r in curation.quality_filter_gopher(spark, TEST_SF_DIR)
-        .filter(F.col("keep"))
-        .collect()
-    } - contaminated
-    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet")
-    dedup_keepers = {
-        r.doc_id
-        for r in curation._keep_first_per_fingerprint(
-            docs.filter(F.col("doc_id").isin(keep))
-        ).collect()
-    }
-    members: dict[int, list[int]] = {}
-    for r in dedup.dedup_clusters(spark, TEST_SF_DIR).collect():
-        if r.doc_id in keep:
-            members.setdefault(r.cluster_id, []).append(r.doc_id)
-    losers = {d for ms in members.values() for d in ms if d != min(ms)}
-    assert got_ids == dedup_keepers - losers
-
-
-def test_corpus_split_leakage_oracle_and_planted(spark, tmp_path):
-    """Cross-split near-dup audit: oracle parity on the driver corpus,
-    and a planted corpus where a train/test near-dup pair IS reported
-    while an intra-split pair is NOT."""
-    from tests.conftest import ORACLE_SF_DIR
-
-    from tests.oracle_harness import compare
-
-    for sf in (TEST_SF_DIR, ORACLE_SF_DIR):
-        ok, msg = compare(
-            curation.corpus_split_leakage(spark, sf),
-            curation.CORPUS_SPLIT_LEAKAGE_SQL,
-            sf,
-        )
-        assert ok, msg
-    # planted: find two doc_ids in different splits and two in the
-    # same split; give each pair near-identical long texts
-    sf_dir = str(tmp_path)
-    base = " ".join(f"w{i}" for i in range(30))
-    labels = {
-        r.doc_id: r.split
-        for r in spark.createDataFrame(
-            [(i,) for i in range(200)], "doc_id long"
-        )
-        .withColumn("bucket", curation._bucket(F.col("doc_id")))
-        .select("doc_id", curation._split_label().alias("split"))
-        .collect()
-    }
-    by_split: dict[str, list[int]] = {}
-    for d, s in labels.items():
-        by_split.setdefault(s, []).append(d)
-    tr = sorted(by_split["train"])
-    other_split, others = next(
-        (s, ds) for s, ds in by_split.items() if s != "train" and ds
-    )
-    cross = (tr[0], others[0])
-    intra = (tr[1], tr[2])
-    rows = [
-        (cross[0], base + " tailx"),
-        (cross[1], base + " taily"),
-        (intra[0], base.replace("w1 ", "q1 ") + " tailz"),
-        (intra[1], base.replace("w1 ", "q1 ") + " tailw"),
-    ]
-    spark.createDataFrame(
-        [(d, t, "en", "s", len(t)) for d, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        (r.doc_a, r.doc_b): (r.split_a, r.split_b)
-        for r in curation.corpus_split_leakage(spark, sf_dir).collect()
-    }
-    key = (min(cross), max(cross))
-    assert key in got
-    assert set(got[key]) == {"train", other_split}
-    assert (min(intra), max(intra)) not in got
-
-
-def test_corpus_decontaminate_spans_oracle_parity(spark):
-    from tests.conftest import ORACLE_SF_DIR
-
-    from tests.oracle_harness import compare
-
-    for sf in (TEST_SF_DIR, ORACLE_SF_DIR):
-        ok, msg = compare(
-            curation.corpus_decontaminate_spans(spark, sf),
-            curation.CORPUS_DECONTAMINATE_SPANS_SQL,
-            sf,
-        )
-        assert ok, msg
-
-
-def test_decontaminate_spans_planted(spark):
-    """Span surgery pins: a mid-document 13-word leak removes EXACTLY
-    its window (prefix+suffix survive), overlapping windows merge, a
-    verbatim benchmark doc empties to '', clean and sub-n docs pass
-    through byte-identical."""
-    bw = [f"b{i}" for i in range(20)]
-    bench = spark.createDataFrame(
-        [(0, " ".join(bw))], "bench_id long, text string"
-    )
-    span13 = " ".join(bw[3:16])
-    span14 = " ".join(bw[3:17])  # two overlapping 13-gram windows
-    docs = spark.createDataFrame(
-        [
-            (1, " ".join(bw)),                    # verbatim -> empties
-            (2, "x1 x2 " + span13 + " x3 x4"),    # exact window cut
-            (3, "x1 " + span14 + " x2"),          # merged windows cut
-            (4, "clean doc " + " ".join(f"y{i}" for i in range(15))),
-            (5, "too short"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {
-        r.doc_id: (r.clean_text, r.n_removed_tokens)
-        for r in curation.decontaminate_spans(docs, bench).collect()
-    }
-    assert rows[1] == ("", 20)
-    assert rows[2] == ("x1 x2 x3 x4", 13)
-    assert rows[3] == ("x1 x2", 14)
-    assert rows[4][1] == 0 and rows[4][0].startswith("clean doc")
-    assert rows[5] == ("too short", 0)
-
-
 def test_contamination_short_benchmark_rows_adaptive_window(spark):
     """Review-finding regression: a benchmark row SHORTER than n must
     match at its own full length — a verbatim 8-word eval item leaked
-    into a training doc is contaminated, not silently clean; the
-    adaptive window applies to span surgery identically; unrelated
+    into a training doc is contaminated, not silently clean; unrelated
     docs stay clean and sub-window docs pass through."""
     short = "what is the capital of france paris answer"  # 8 words
     bench = spark.createDataFrame(
@@ -1890,35 +822,6 @@ def test_contamination_short_benchmark_rows_adaptive_window(spark):
     assert flags[1] == (1, True)
     assert flags[2] == (0, False)
     assert flags[3] == (0, False)
-    spans = {
-        r.doc_id: (r.clean_text, r.n_removed_tokens)
-        for r in curation.decontaminate_spans(docs, bench).collect()
-    }
-    assert spans[1] == ("intro words trailing tail", 8)
-    assert spans[2][1] == 0 and spans[3][1] == 0
-
-
-def test_contamination_attribution_planted(spark, hostile_sf_dir):
-    """The attribution audit names the leaked benchmark row: the
-    hostile fixture's 5-token benchmark doc (9000048) is attributed to
-    the doc that embeds it verbatim (9000049) through the adaptive
-    short window, benchmark rows attribute to themselves, and every
-    attributed doc is also flagged by the boolean entry."""
-    from fledge_south_csvplayback_spark.operators import curation
-
-    rows = curation.corpus_contamination_sources(
-        spark, hostile_sf_dir
-    ).collect()
-    pairs = {(r.doc_id, r.bench_id): r.n_hits for r in rows}
-    assert pairs[(9000049, 9000048)] == 1  # the planted leak, ne=5
-    assert pairs[(9000048, 9000048)] == 1  # the bench row itself
-    flagged = {
-        r.doc_id
-        for r in curation.corpus_decontaminate(spark, hostile_sf_dir)
-        .filter("contaminated")
-        .collect()
-    }
-    assert {d for d, _ in pairs} == flagged
 
 
 def test_neardup_keep_best_oracle_parity(spark):
@@ -1998,54 +901,3 @@ def test_neardup_keep_best_plan_shape(spark):
     assert all("LeftAnti" in l for l in smj), smj
 
 
-def test_write_training_corpus_best_score_election(spark, tmp_path):
-    """election='best_score': the cluster representative is the argmax
-    classifier score among quality-PASSING members (min doc_id on
-    ties) — corpus_neardup_keep_best's rule composed after the Gopher
-    gate; unknown election values reject."""
-    from fledge_south_csvplayback_spark.operators import dedup
-
-    out = str(tmp_path / "train_best")
-    c = curation.CHUNK_TOKENS
-    curation.write_training_corpus(
-        spark, TEST_SF_DIR, out, c, c, election="best_score"
-    )
-    got_ids = {
-        r.doc_id
-        for r in spark.read.parquet(out).select("doc_id").distinct().collect()
-    }
-
-    keep = {
-        r.doc_id
-        for r in curation.quality_filter_gopher(spark, TEST_SF_DIR)
-        .filter(F.col("keep"))
-        .collect()
-    }
-    docs = spark.read.parquet(f"{TEST_SF_DIR}/documents.parquet")
-    kept_docs = docs.filter(F.col("doc_id").isin(keep))
-    dedup_keepers = {
-        r.doc_id
-        for r in curation._keep_first_per_fingerprint(kept_docs).collect()
-    }
-    scores = {
-        r.doc_id: r.score
-        for r in curation.quality_model_score(spark, TEST_SF_DIR).collect()
-    }
-    members: dict[int, list[int]] = {}
-    for r in dedup.dedup_clusters(spark, TEST_SF_DIR).collect():
-        if r.doc_id in keep:
-            members.setdefault(r.cluster_id, []).append(r.doc_id)
-    losers = {
-        d
-        for ms in members.values()
-        for d in ms
-        if d != min(ms, key=lambda i: (-scores[i], i))
-    }
-    assert got_ids == dedup_keepers - losers
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="election"):
-        curation.write_training_corpus(
-            spark, TEST_SF_DIR, str(tmp_path / "x"), c, c, election="nope"
-        )

@@ -50,9 +50,6 @@ _EXPLICIT = [
     ("corpus_chunk_documents", curation.corpus_chunk_documents, curation.CORPUS_CHUNK_SQL),
     ("corpus_mixture_weights", curation.corpus_mixture_weights, curation.CORPUS_MIXTURE_SQL),
     ("quality_model_score", curation.quality_model_score, curation.QUALITY_MODEL_SQL),
-    # CORPUS_PPL_BUCKETS_SQL is a {unigram} template; sweep the
-    # formatted oracle the op's own pytest uses
-    ("corpus_perplexity_buckets", curation.corpus_perplexity_buckets, curation._ppl_buckets_sql()),
     ("dedup_simhash_classic_oracle", dedup.dedup_simhash, dedup.SIMHASH_SQL),
     # de-registered in the round-13 dedup_neardup_pairs fold (the
     # union entry sweeps via registration); the constituent miner
@@ -130,8 +127,6 @@ def test_sweep_is_complete():
     of a registered documents entry) — a new documents-table operator
     cannot silently opt out of the ragged-docs check."""
     swept_sqls = {sql for _, sql in _PAIRS.values()}
-    # template constants are swept through their formatted builders
-    formatted = {curation.CORPUS_PPL_BUCKETS_SQL: curation._ppl_buckets_sql()}
     missing = []
     for m in _MODULES:
         for cname in dir(m):
@@ -141,7 +136,7 @@ def test_sweep_is_complete():
             if (
                 isinstance(sql, str)
                 and _hostile_table(sql)
-                and formatted.get(sql, sql) not in swept_sqls
+                and sql not in swept_sqls
             ):
                 missing.append(f"{m.__name__.split('.')[-1]}.{cname}")
     assert not missing, f"documents-table oracles not swept: {missing}"

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from fledge_south_csvplayback_spark.operators import multimodal as M
@@ -93,43 +92,6 @@ def test_image_dhash_brightness_invariant():
     assert dhash(base) != dhash(other)
 
 
-# --- real WAV decode -----------------------------------------------------
-def test_wav_parser_roundtrip_and_malformed():
-    import struct
-
-    samples = [0, 100, -100, 32767, -32768, 5]
-    data = struct.pack(f"<{len(samples)}h", *samples)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    # the decoder returns the RAW LE-PCM16 byte slice (consumers go
-    # straight to np.frombuffer), not a Python int list
-    assert M._decode_wav(wav) == (8000, 1, data)
-    assert list(np.frombuffer(M._decode_wav(wav)[2], "<i2")) == samples
-    # an extra odd-sized chunk before data exercises word alignment
-    wav2 = (
-        b"RIFF" + struct.pack("<I", 0) + b"WAVE"
-        + b"LIST" + struct.pack("<I", 3) + b"abc\x00"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 2, 44100, 176400, 4, 16)
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    assert M._decode_wav(wav2) == (44100, 2, data)
-    with pytest.raises(ValueError, match="RIFF"):
-        M._decode_wav(b"OggS" + wav[4:])
-    with pytest.raises(ValueError, match="PCM16"):
-        bad = wav.replace(
-            struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16),
-            struct.pack("<IHHIIHH", 16, 3, 1, 8000, 32000, 4, 32),
-        )
-        M._decode_wav(bad)
-    with pytest.raises(ValueError, match="missing"):
-        M._decode_wav(b"RIFF\x00\x00\x00\x00WAVE")
-    with pytest.raises(ValueError, match="truncated"):
-        M._decode_wav(wav[:-2])
-
-
 def test_image_neardup_oracle_parity(spark):
     """Blocked dHash band join == the DuckDB oracle (same 28 tables,
     same per-band XOR popcount) at sf0.001."""
@@ -216,35 +178,6 @@ def test_image_neardup_precomputed_stats(spark, tmp_path):
         M.image_neardup_pairs(
             spark, sf_dir, stats=pre.select("doc_id")
         )
-
-
-# --- audio energy-envelope fingerprint + near-dup ------------------------
-def _wav(samples, rate=8000, channels=1):
-    import struct
-
-    data = struct.pack(f"<{len(samples)}h", *samples)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack(
-            "<IHHIIHH", 16, 1, channels, rate, rate * 2 * channels,
-            2 * channels, 16,
-        )
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def _ref_afp(samples):
-    w = len(samples) // 64
-    e = [sum(x * x for x in samples[k * w : (k + 1) * w]) for k in range(64)]
-    bits = [e[k] > e[(k + 1) % 64] for k in range(64)]
-    out = ""
-    for b in range(8):
-        byte = 0
-        for j in range(8):
-            if bits[8 * b + j]:
-                byte |= 1 << (7 - j)
-        out += f"{byte:02x}"
-    return out
 
 
 # --- real AVI video decode ------------------------------------------------
@@ -412,13 +345,6 @@ def test_undersized_header_chunks_rejected():
     ValueError instead of leaking struct.error or reading neighbors."""
     import struct
 
-    bad_wav = (
-        b"RIFF" + struct.pack("<I", 0) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 8) + b"\x01\x00\x01\x00\x40\x1f\x00\x00"
-        + b"data" + struct.pack("<I", 2) + b"\x00\x00"
-    )
-    with pytest.raises(ValueError, match="need >= 16"):
-        M._decode_wav(bad_wav)
     pay = bytearray(_avi_payload(1))
     # shrink the declared avih size (offset 28 is its size field)
     assert pay[24:28] == b"avih"

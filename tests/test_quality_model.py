@@ -7,7 +7,6 @@ import hashlib
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from fledge_south_csvplayback_spark.operators import curation
 from tests.conftest import ORACLE_SF_DIR, TEST_SF_DIR
@@ -67,218 +66,3 @@ def test_quality_model_plan_is_narrow(spark):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "InPandas" not in plan and "PythonRDD" not in plan
-
-
-# --- training (quality_model_fit) --------------------------------------------
-def _fit_fixture(spark, path: str, dim_sep: bool = True) -> None:
-    """60 docs, linearly separable by vocabulary: 20 'good' docs
-    (source=tgt, vocab G) vs 40 raw docs (vocab B, disjoint)."""
-    rows = []
-    for i in range(20):
-        rows.append(
-            (i, f"good clean prose sentence {i % 5} here", "en", "tgt", 0)
-        )
-    for i in range(20, 60):
-        rows.append(
-            (i, f"zz9 spam09 qqq garbled {i % 5} junk", "en", "web", 0)
-        )
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{path}/documents.parquet")
-
-
-def _fit_numpy_replica(rows, target, dim, iters, lr, l2):
-    """Pure-numpy full-batch GD replica of quality_model_fit: same md5
-    bucket hashing, same stable loss, same step rule."""
-    import numpy as np
-
-    ys, bks = [], []
-    for source, text in rows:
-        ys.append(1.0 if source == target else 0.0)
-        bks.append(
-            np.array(
-                [
-                    int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % dim
-                    # null text coalesces to '' exactly like the fit
-                    for t in (text or "").split(" ")
-                ],
-                dtype=np.int64,
-            )
-        )
-    y = np.array(ys)
-    lens = np.array([len(a) for a in bks], dtype=np.float64)
-    # same degenerate-row guard as the fit (curation.quality_model_fit
-    # divides by max(lens, 1) but repeats by RAW lens); split(' ')
-    # never yields an empty array so the guard is a no-op in both —
-    # parity by construction
-    div = np.maximum(lens, 1.0)
-    flat = np.concatenate(bks)
-    docidx = np.repeat(np.arange(len(y)), lens.astype(np.int64))
-    w = np.zeros(dim)
-    b = 0.0
-    losses = []
-    for _ in range(iters):
-        xw = np.bincount(docidx, weights=w[flat], minlength=len(y)) / div
-        z = b + xw
-        p = 1.0 / (1.0 + np.exp(-z))
-        losses.append(
-            float(
-                (
-                    np.log1p(np.exp(-np.abs(z)))
-                    + np.maximum(z, 0.0)
-                    - z * y
-                ).mean()
-            )
-        )
-        r = p - y
-        gw = np.bincount(flat, weights=(r / div)[docidx], minlength=dim)
-        w = w - lr * (gw / len(y) + l2 * w)
-        b = b - lr * (r.sum() / len(y))
-    return w, b, losses
-
-
-def test_quality_model_fit_matches_numpy_replica(spark, tmp_path):
-    """The distributed fit equals the pure-numpy full-batch GD to
-    float tolerance (the documented weaker gate for iterative fits —
-    the kmeans_fit precedent), and the loss decreases on a separable
-    fixture."""
-    import numpy as np
-
-    sf_dir = str(tmp_path)
-    _fit_fixture(spark, sf_dir)
-    iters = 10
-    w, b, losses = curation.quality_model_fit(
-        spark, sf_dir, target_source="tgt", iters=iters
-    )
-    rows = [
-        (r.source, r.text)
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    ]
-    ww, wb, wl = _fit_numpy_replica(
-        rows, "tgt", curation.QMODEL_DIM, iters,
-        curation.QMODEL_FIT_LR, curation.QMODEL_FIT_L2,
-    )
-    assert np.allclose(np.array(w), ww, atol=1e-9)
-    assert abs(b - wb) <= 1e-9
-    assert np.allclose(np.array(losses), wl, atol=1e-9)
-    assert losses == sorted(losses, reverse=True)  # non-increasing
-    assert losses[-1] < losses[0] * 0.7  # actually learned
-
-
-def test_quality_model_fit_serves_through_scorer(spark, tmp_path):
-    """The trained weights plug into quality_model_score's unchanged
-    serving expression and separate the planted fixture: every tgt doc
-    scores above every web doc, and the 0.5 keep threshold splits them
-    after enough epochs."""
-    sf_dir = str(tmp_path)
-    _fit_fixture(spark, sf_dir)
-    w, b, _ = curation.quality_model_fit(
-        spark, sf_dir, target_source="tgt", iters=40
-    )
-    scored = curation.quality_model_score(
-        spark, sf_dir, weights=w, bias=b
-    ).collect()
-    tgt_scores = [r.score for r in scored if r.doc_id < 20]
-    web_scores = [r.score for r in scored if r.doc_id >= 20]
-    assert min(tgt_scores) > max(web_scores)
-    assert all(r.keep for r in scored if r.doc_id < 20)
-    assert not any(r.keep for r in scored if r.doc_id >= 20)
-
-
-def test_quality_model_fit_plan_no_shuffle(spark, tmp_path):
-    """Each epoch is one narrow mapInPandas scan: the partials frame
-    plans with no Exchange, no join."""
-    import pytest
-
-    sf_dir = str(tmp_path)
-    _fit_fixture(spark, sf_dir)
-    # validation
-    with pytest.raises(ValueError, match="iters"):
-        curation.quality_model_fit(spark, sf_dir, iters=0)
-    # plan shape: reconstruct the epoch frame the fit runs
-    from pyspark.sql import functions as SF
-
-    toks = SF.split(SF.col("text"), " ")
-    feats = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select(
-            (SF.col("source") == "tgt").cast("double").alias("y"),
-            SF.transform(
-                toks,
-                lambda t: (
-                    SF.conv(SF.substring(SF.md5(t), 1, 8), 16, 10)
-                    .cast("long") % curation.QMODEL_DIM
-                ).cast("int"),
-            ).alias("bks"),
-        )
-    )
-    plan = feats._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Join" not in plan
-
-
-def test_quality_model_fit_degenerate_rows(spark, tmp_path):
-    """Null-text and empty-text docs fit without crashing (text
-    coalesces to '' -> one empty-string token, the lens guard never
-    divides by zero) and the result still equals the replica."""
-    import numpy as np
-
-    sf_dir = str(tmp_path)
-    rows = [
-        (0, "good clean prose", "en", "tgt", 0),
-        (1, "zz9 spam09 junk", "en", "web", 0),
-        (2, None, "en", "web", 0),
-        (3, "", "en", "web", 0),
-        (4, "   ", "en", "tgt", 0),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    iters = 5
-    w, b, losses = curation.quality_model_fit(
-        spark, sf_dir, target_source="tgt", iters=iters
-    )
-    rows_rt = [
-        (r.source, r.text)
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    ]
-    ww, wb, wl = _fit_numpy_replica(
-        rows_rt, "tgt", curation.QMODEL_DIM, iters,
-        curation.QMODEL_FIT_LR, curation.QMODEL_FIT_L2,
-    )
-    assert np.allclose(np.array(w), ww, atol=1e-9)
-    assert abs(b - wb) <= 1e-9
-    assert np.allclose(np.array(losses), wl, atol=1e-9)
-
-
-def test_quality_model_fit_train_docs_cap(spark, tmp_path):
-    """train_docs bounds the fit to the first N docs by doc_id (the
-    bpe_train sampling rule): the capped fit equals the replica run on
-    exactly that slice, not the full corpus, and validation rejects a
-    non-positive cap."""
-    import numpy as np
-
-    sf_dir = str(tmp_path)
-    _fit_fixture(spark, sf_dir)
-    iters = 5
-    cap = 30
-    w, b, losses = curation.quality_model_fit(
-        spark, sf_dir, target_source="tgt", iters=iters, train_docs=cap
-    )
-    rows = sorted(
-        (r.doc_id, r.source, r.text)
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    )[:cap]
-    ww, wb, wl = _fit_numpy_replica(
-        [(s, t) for _, s, t in rows], "tgt", curation.QMODEL_DIM, iters,
-        curation.QMODEL_FIT_LR, curation.QMODEL_FIT_L2,
-    )
-    assert np.allclose(np.array(w), ww, atol=1e-9)
-    assert abs(b - wb) <= 1e-9
-    assert np.allclose(np.array(losses), wl, atol=1e-9)
-    # the cap actually changed the model vs the full-corpus fit
-    wf, _, _ = curation.quality_model_fit(
-        spark, sf_dir, target_source="tgt", iters=iters
-    )
-    assert not np.allclose(np.array(w), np.array(wf), atol=1e-9)
-    with pytest.raises(ValueError, match="train_docs"):
-        curation.quality_model_fit(spark, sf_dir, train_docs=0)

@@ -1,4 +1,5 @@
-"""Every top-level def in the package must be reached from a product root.
+"""Every top-level def in the package must be reached from a product
+root, and every module-level assignment must be read by someone.
 
 A def is reached when its name is used as an identifier (a name, an
 attribute, an imported alias or an identifier-shaped string such as a
@@ -8,7 +9,12 @@ package module (this includes each ``register(...)`` in
 ``queries.py``), the entry points and root paths below, the
 allow-list and the deferred list. A def that only tests or probes call is dead product
 surface: delete it together with the tests that exist only for it.
-Pure ``ast``; no Spark.
+
+A module-level assignment (a constant, an oracle SQL string) is read
+when its name is loaded anywhere in the package or in one of the
+``READERS`` below. Tests count as readers: the oracle SQL of a kept
+operator that is not registered is the reference its tests compare
+against. Pure ``ast``; no Spark.
 """
 
 from __future__ import annotations
@@ -46,49 +52,60 @@ ALLOW = {
     "compact_bm25_index": "BM25 index family (ROADMAP item 4)",
     "quality_filter": "reference implementation in test_corpus_ingest",
     "image_neardup_pairs": "reference implementation in test_media_ingest",
+    "quality_model_score": (
+        "reference implementation in "
+        "test_neardup_keep_best_elects_argmax_score"
+    ),
+    "corpus_neardup_apply": (
+        "reference implementation in "
+        "test_neardup_keep_best_elects_argmax_score"
+    ),
+    "bpe_train": (
+        "reference implementation in "
+        "test_chunk_documents_bpe_counts_match_tokenizer_and_reconstruct"
+    ),
+    "text_bpe_tokenize": (
+        "reference implementation in "
+        "test_chunk_documents_bpe_counts_match_tokenizer_and_reconstruct"
+    ),
 }
 
 # name -> reason. Unreached defs whose retirement is deferred: each one
 # leaves together with its tests in a later change (ROADMAP item 7).
 # The list may only shrink.
-_DEFERRED_CURATION = "curation surface retired with its tests (ROADMAP item 7)"
-_DEFERRED_TEXT = "text surface retired with its tests (ROADMAP item 7)"
+_DEFERRED_CURATION = "curation sampling retired with its tests (ROADMAP item 7)"
 _DEFERRED_EVENTS = "events pivot retired with its tests (ROADMAP item 7)"
 DEFERRED = {
     **dict.fromkeys(
-        """_paths_overlap _ppl_buckets_sql _split_label churn_split
-        contamination_attribution corpus_contamination
-        corpus_contamination_sources corpus_decontaminate_spans
-        corpus_diff_shards corpus_incremental_dedup corpus_mixture_weights
-        corpus_neardup_apply corpus_pack_batches corpus_perplexity_buckets
-        corpus_profile_sketch corpus_resample corpus_sample
-        corpus_sample_by_source corpus_sample_stratified corpus_split
-        corpus_split_leakage corpus_token_budget_bpe decontaminate_spans
-        diff_shards_to_recompute quality_filter_adaptive
-        quality_filter_gopher quality_model_fit quality_model_score
-        write_curated_corpus write_scrubbed_documents
-        write_shuffled_corpus write_training_corpus""".split(),
+        """_split_label corpus_mixture_weights corpus_sample
+        corpus_sample_by_source corpus_sample_stratified
+        corpus_split""".split(),
         _DEFERRED_CURATION,
-    ),
-    **dict.fromkeys(
-        """bpe_train html_links link_domain_stats links_table
-        sentence_split_expr sentence_table text_bpe_tokenize
-        text_html_links text_redact_pii text_sentence_split
-        text_url_normalize url_normalize_expr winnow_fingerprint""".split(),
-        _DEFERRED_TEXT,
     ),
     **dict.fromkeys(
         ["events_type_pivot", "events_type_unpivot"], _DEFERRED_EVENTS
     ),
 }
 
+# Files and directories (tests included) whose code may read a package
+# module's names, besides the package itself.
+READERS = ("bench.py", "__spark_entry__.py", "perfbench", "tests", "probes")
+# name -> reason. Module-level names kept although nothing reads them.
+UNREAD_ALLOW = {
+    "CSV_METADATA_SQL": "oracle of csv_metadata_datapoint (ROADMAP item 3)",
+}
 
-def _identifiers(nodes) -> set[str]:
+
+def _identifiers(nodes, stores: bool = True) -> set[str]:
+    """Identifiers used in ``nodes``; with ``stores=False`` a plain name
+    counts only where it is loaded (an assignment target is not a
+    read)."""
     out: set[str] = set()
     for node in nodes:
         for n in ast.walk(node):
             if isinstance(n, ast.Name):
-                out.add(n.id)
+                if stores or isinstance(n.ctx, ast.Load):
+                    out.add(n.id)
             elif isinstance(n, ast.Attribute):
                 out.add(n.attr)
             elif isinstance(n, ast.alias):
@@ -108,13 +125,14 @@ def _parse(rel: str) -> ast.Module:
         return ast.parse(f.read(), filename=rel)
 
 
-def _py_files(rel: str) -> list[str]:
-    """``rel`` itself if it is a file, else the .py files under it."""
+def _py_files(rel: str, skip: tuple[str, ...] = ("tests",)) -> list[str]:
+    """``rel`` itself if it is a file, else the .py files under it
+    outside the ``skip`` directories."""
     if rel.endswith(".py"):
         return [rel]
     out = []
     for root, dirs, files in os.walk(os.path.join(REPO, rel)):
-        dirs[:] = [d for d in dirs if d not in ("tests", "__pycache__")]
+        dirs[:] = [d for d in dirs if d not in (*skip, "__pycache__")]
         out += [
             os.path.relpath(os.path.join(root, f), REPO)
             for f in files
@@ -176,3 +194,44 @@ def test_every_product_def_is_reached():
         "CLI or allow-listed root:\n  " + "\n  ".join(dead)
     )
 
+
+def unread_module_names() -> list[str]:
+    """``module:NAME`` for every module-level assignment in the package
+    that no package module and no reader loads."""
+    bound: list[tuple[str, str]] = []
+    reads: set[str] = set()
+    for rel in _py_files(PACKAGE):
+        tree = _parse(rel)
+        reads |= _identifiers([tree], stores=False)
+        for stmt in tree.body:
+            targets = (
+                stmt.targets if isinstance(stmt, ast.Assign)
+                else [stmt.target] if isinstance(stmt, ast.AnnAssign)
+                else []
+            )
+            bound += [
+                (rel, n.id)
+                for t in targets
+                for n in ast.walk(t)
+                if isinstance(n, ast.Name)
+            ]
+    this = os.path.relpath(os.path.abspath(__file__), REPO)
+    for entry in READERS:
+        for rel in _py_files(entry, skip=()):
+            if rel != this:  # the allow-lists above are not reads
+                reads |= _identifiers([_parse(rel)], stores=False)
+    return sorted(
+        f"{rel}:{name}"
+        for rel, name in bound
+        if name not in reads
+        and name not in UNREAD_ALLOW
+        and not name.startswith("__")
+    )
+
+
+def test_every_module_name_is_read():
+    unread = unread_module_names()
+    assert not unread, (
+        f"{len(unread)} module-level names are read by no package "
+        "module, entry point, test or probe:\n  " + "\n  ".join(unread)
+    )

@@ -172,138 +172,3 @@ def test_html_extract_composes_with_normalize(spark):
     assert (
         again.filter(~F.col("again").eqNullSafe(F.col("norm"))).count() == 0
     )
-
-
-def test_text_html_links_oracle_parity(spark):
-    """regexp_extract_all link mining, Java-regex vs RE2 over the
-    planted-link fixture (pytest oracle; off-registry under the
-    50-entry cap)."""
-    from tests.conftest import ORACLE_SF_DIR, TEST_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf in (TEST_SF_DIR, ORACLE_SF_DIR):
-        ok, msg = compare(
-            text.text_html_links(spark, sf), text.TEXT_HTML_LINKS_SQL, sf
-        )
-        assert ok, msg
-
-
-def test_html_links_planted_semantics(spark):
-    """href mining pins: attribute-order/case tolerance, fragment-only
-    exclusion, scheme-tolerant lowercased domain, relative links get
-    domain ''."""
-    import pyspark.sql.functions as F
-
-    html = (
-        '<a href="/doc/7#sec">rel</a>'
-        '<A HREF="HTTPS://Ex.COM/Path/X">abs</A>'
-        '<a class="k" href="ftp://files.net/a">attr-before</a>'
-        '<a href="#only-fragment">skip</a>'
-        "<a href=unquoted>skip-too</a>"
-    )
-    df = spark.createDataFrame([(1, html)], "doc_id long, html string")
-    rows = text.html_links(df).orderBy("url").collect()
-    got = [(r.url, r.domain) for r in rows]
-    assert got == sorted(
-        [
-            ("/doc/7#sec", ""),
-            ("HTTPS://Ex.COM/Path/X", "ex.com"),
-            ("ftp://files.net/a", "files.net"),
-        ]
-    ), got
-    stats = {
-        r.domain: (r.n_links, r.n_docs)
-        for r in text.link_domain_stats(df).collect()
-    }
-    assert stats["ex.com"] == (1, 1)
-
-
-def test_text_url_normalize_oracle_parity(spark):
-    from tests.conftest import ORACLE_SF_DIR, TEST_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf in (TEST_SF_DIR, ORACLE_SF_DIR):
-        ok, msg = compare(
-            text.text_url_normalize(spark, sf),
-            text.TEXT_URL_NORMALIZE_SQL,
-            sf,
-        )
-        assert ok, msg
-
-
-def test_url_normalize_planted_and_idempotent(spark):
-    """Canonicalization pins: authority lowercased (path case kept),
-    default ports stripped, fragment dropped, tracking params (any
-    case) dropped, emptied query dropped, null in null out; the
-    whole expression is idempotent."""
-    import pyspark.sql.functions as F
-
-    cases = [
-        ("HTTP://Ex.COM:80/Path/X?utm_source=a", "http://ex.com/Path/X"),
-        ("https://a.net:443/p?id=1&UTM_medium=m", "https://a.net/p?id=1"),
-        ("https://a.net/p?a=1&b=2#frag", "https://a.net/p?a=1&b=2"),
-        ("https://a.net/p?fbclid=x&gclid=y&msclkid=z", "https://a.net/p"),
-        ("https://a.net:8443/p", "https://a.net:8443/p"),  # real port kept
-        ("/relative/Path?utm_x=1", "/relative/Path"),
-        # one dedup key for every spelling of the same root resource:
-        # default port before '?', bare default port, bare host
-        ("http://ex.com:80?q=1", "http://ex.com/?q=1"),
-        ("http://ex.com:80", "http://ex.com/"),
-        ("http://ex.com", "http://ex.com/"),
-        ("http://ex.com/", "http://ex.com/"),
-        (None, None),
-    ]
-    df = spark.createDataFrame(
-        [(i, u) for i, (u, _) in enumerate(cases)], "i long, url string"
-    ).select(
-        "i",
-        text.url_normalize_expr(F.col("url")).alias("norm"),
-        text.url_normalize_expr(
-            text.url_normalize_expr(F.col("url"))
-        ).alias("norm2"),
-    )
-    got = {r.i: (r.norm, r.norm2) for r in df.collect()}
-    for i, (u, want) in enumerate(cases):
-        assert got[i][0] == want, (u, got[i][0], want)
-        assert got[i][1] == want, ("idempotence", u, got[i][1], want)
-
-
-def test_text_sentence_split_oracle_parity(spark):
-    from tests.conftest import ORACLE_SF_DIR, TEST_SF_DIR
-    from tests.oracle_harness import compare
-
-    for sf in (TEST_SF_DIR, ORACLE_SF_DIR):
-        ok, msg = compare(
-            text.text_sentence_split(spark, sf),
-            text.TEXT_SENTENCE_SPLIT_SQL,
-            sf,
-        )
-        assert ok, msg
-
-
-def test_sentence_split_planted(spark):
-    """Terminator variety, run-on whitespace, unterminated tail,
-    mid-token dots (e.g. versions) NOT split on."""
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame(
-        [(1, "One two. Three!  Four?\nFive v1.2 six. tail")],
-        "doc_id long, prose string",
-    )
-    rows = (
-        df.select(
-            F.posexplode(
-                text.sentence_split_expr(F.col("prose"))
-            ).alias("i", "s")
-        )
-        .filter("s != ''")
-        .orderBy("i")
-        .collect()
-    )
-    assert [r.s for r in rows] == [
-        "One two.",
-        "Three!",
-        "Four?",
-        "Five v1.2 six.",
-        "tail",
-    ]

@@ -1,7 +1,6 @@
 """Corpus-level unigram log-probability scorer: DuckDB oracle parity
-(driver registry capped at 50 entries, same pattern as
-``winnow_fingerprint``), score semantics, and the plan's
-exchange-reuse property."""
+(query registry capped at 50 entries), score semantics, and the
+plan's exchange-reuse property."""
 
 from __future__ import annotations
 
@@ -110,43 +109,6 @@ def test_top_ngrams_takeordered_not_full_sort(spark):
         .toString()
     )
     assert "TakeOrderedAndProject" in plan
-
-
-def test_redact_pii_oracle_parity(spark):
-    ok, msg = compare(
-        text.text_redact_pii(spark, TEST_SF_DIR),
-        text.TEXT_REDACT_PII_SQL,
-        TEST_SF_DIR,
-    )
-    assert ok, msg
-
-
-def test_redact_pii_planted(spark, tmp_path):
-    """Planted emails/IPs/digit runs: exact redactions and counts, and
-    the same DuckDB compare on the planted table (Java regex and RE2
-    must agree on every span)."""
-    rows = [
-        (0, "contact bob.smith+x@example.co.uk or 10.0.0.1 now", "en", "s", 1),
-        (1, "call 5551234567 twice 5551234567", "en", "s", 1),
-        (2, "ip 192.168.254.254 and mail a@b.io and acct 123456789", "en", "s", 1),
-        (3, "clean text no pii at all", "en", "s", 1),
-    ]
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
-    got = {
-        r.doc_id: (r.text_redacted, r.n_emails, r.n_ips, r.n_numbers)
-        for r in text.text_redact_pii(spark, sf_dir).collect()
-    }
-    assert got[0] == ("contact <EMAIL> or <IP> now", 1, 1, 0)
-    assert got[1] == ("call <NUM> twice <NUM>", 0, 0, 2)
-    assert got[2] == ("ip <IP> and mail <EMAIL> and acct <NUM>", 1, 1, 1)
-    assert got[3] == ("clean text no pii at all", 0, 0, 0)
-    ok, msg = compare(
-        text.text_redact_pii(spark, sf_dir), text.TEXT_REDACT_PII_SQL, sf_dir
-    )
-    assert ok, msg
 
 
 # --- intra-document repetition signals ---------------------------------------
