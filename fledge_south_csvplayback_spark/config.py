@@ -9,8 +9,8 @@ dataclass, including the ``plugin_init`` range/enum/dependency checks
 In the Spark design the derived numbers map onto Structured Streaming
 knobs instead of pandas chunk iterators:
 
-- ``chunk_size``  -> rows per micro-batch (``maxFilesPerTrigger`` /
-  rate-source ``rowsPerSecond``)
+- ``chunk_size``  -> rows per burst, cut per file inside a byte-capped
+  micro-batch (streaming/playback.py)
 - ``period_s``    -> ``Trigger.ProcessingTime`` interval
 """
 

@@ -287,19 +287,7 @@ def _running_token_sum(
     """Per-language INCLUSIVE running token sum in deterministic hash
     priority order (bucket, doc_id) — the two-pass scalable plan (see
     module docstring) behind ``corpus_token_budget``. Output: (doc_id,
-    lang, n_tok, bucket, cum_tok). ``method`` is the ``token_count`` rule."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        token_count(F.col("text"), method).alias("n_tok"),
-        _bucket(F.col("doc_id")).alias("bucket"),
-    )
-    return _running_sum_two_pass(docs)
-
-
-def _running_sum_two_pass(docs: DataFrame) -> DataFrame:
-    """The two-pass per-language running sum over a (doc_id, lang,
-    n_tok, bucket) frame.
+    lang, n_tok, bucket, cum_tok). ``method`` is the ``token_count`` rule.
 
     The grouping/join key is ``coalesce(lang, NUL)``, not ``lang``: a
     window PARTITION BY (the oracle's shape) treats NULL as a real
@@ -307,7 +295,13 @@ def _running_sum_two_pass(docs: DataFrame) -> DataFrame:
     NULL-lang docs (NULL keys never equi-join) — found by the
     hostile-docs sweep. No real language code contains NUL, so the
     surrogate cannot collide."""
-    docs = docs.withColumn("_lkey", F.coalesce(F.col("lang"), F.lit("\x00")))
+    docs = _docs(spark, sf_dir).select(
+        "doc_id",
+        "lang",
+        token_count(F.col("text"), method).alias("n_tok"),
+        _bucket(F.col("doc_id")).alias("bucket"),
+        F.coalesce(F.col("lang"), F.lit("\x00")).alias("_lkey"),
+    )
     per_bucket = docs.groupBy("_lkey", "bucket").agg(
         F.sum("n_tok").alias("b_tok"),
         F.count("n_tok").alias("b_cnt"),  # non-NULL count

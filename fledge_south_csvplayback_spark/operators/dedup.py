@@ -128,17 +128,6 @@ def shingles(text: Column, n: int = NGRAM) -> Column:
     count, ~1e-11 odds at oracle scale. SimHash, whose oracle must
     rebuild the per-gram hash VALUES bit-for-bit, uses
     ``shingle_strings`` + md5 instead.
-    """
-
-    return F.array_distinct(positional_shingles(text, n))
-
-
-def positional_shingles(text: Column, n: int = NGRAM) -> Column:
-    """Word n-gram shingle hashes IN POSITION ORDER (no distinct):
-    element j of the result (1-based) is the gram key starting at
-    token j. This is the ONE gram-key builder: ``shingles`` is its
-    array_distinct, so positional and distinct keys cannot disagree
-    structurally (two hand-copied builders could drift).
 
     TOTAL by construction: the gram array is guarded by a ``when``
     INSIDE the expression (a short doc yields ``array()``), because a
@@ -166,7 +155,9 @@ def positional_shingles(text: Column, n: int = NGRAM) -> Column:
         ).otherwise(F.array().cast("array<bigint>"))
 
     token_hashes = F.transform(F.split(text, " "), lambda t: F.xxhash64(t))
-    return F.element_at(F.transform(F.array(token_hashes), build), 1)
+    return F.array_distinct(
+        F.element_at(F.transform(F.array(token_hashes), build), 1)
+    )
 
 
 def shingles_multi(text: Column, ne_values: list[int]) -> Column:
@@ -180,7 +171,7 @@ def shingles_multi(text: Column, ne_values: list[int]) -> Column:
     builder shares the let-bound token-hash array across every class,
     so the corpus is scanned and tokenized once per invocation at any
     scale. Per class the gram construction, ``array_distinct`` and the
-    in-expression ``when`` totality guard (see ``positional_shingles``)
+    in-expression ``when`` totality guard (see ``shingles``)
     are identical to ``shingles(text, ne)``, so the double-exploded
     (ne, g) set is exactly the union of the per-ne builds (pinned by
     ``test_shingles_multi_matches_per_ne_builds``). A struct-per-GRAM
@@ -226,7 +217,7 @@ def shingle_strings(text: Column, n: int = NGRAM) -> Column:
     """Distinct word n-gram shingles as STRINGS — the slow path, kept
     for operators whose oracle must re-derive per-gram hash values
     (SimHash md5 halves). Same let-binding structure AND the same
-    in-expression ``when`` totality guard as ``positional_shingles``
+    in-expression ``when`` totality guard as ``shingles``
     (see its docstring: a filter node does not protect against CSE)."""
 
     def build(toks: Column) -> Column:

@@ -38,6 +38,7 @@ accumulate in the same precision.
 from __future__ import annotations
 
 import hashlib
+import math
 import struct
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -682,36 +683,6 @@ FROM r WHERE rank <= {TOP_K}
 """
 
 
-def _coarse_centroids(
-    spark: SparkSession,
-    sf_dir: str,
-    cells: int,
-    centroids: str,
-    kmeans_iters: int,
-) -> list[tuple]:
-    """The coarse-quantizer selection rule of ``build_ivf_index``.
-    Returns sorted (cell_id, vector, norm)
-    tuples: ``"head"`` = the deterministic first-``cells``-vectors
-    rule (cell ids are those vec_ids), ``"kmeans"`` = ``kmeans_fit``
-    Lloyd centroids (cell ids 0..cells-1)."""
-    import math as _math
-
-    emb = _emb(spark, sf_dir, scorable=True).withColumn("norm", _norm(F.col("v")))
-    if centroids == "head":
-        cent_rows = emb.filter(
-            (F.col("vec_id") >= N_QUERIES)
-            & (F.col("vec_id") < N_QUERIES + cells)
-        ).collect()
-        return sorted((r["vec_id"], list(r["v"]), r["norm"]) for r in cent_rows)
-    if centroids == "kmeans":
-        cmat, _inertia = kmeans_fit(spark, sf_dir, k=cells, iters=kmeans_iters)
-        return [
-            (cid, cv, _math.sqrt(sum(x * x for x in cv)))
-            for cid, cv in enumerate(cmat)
-        ]
-    raise ValueError(f"unknown centroids mode: {centroids!r}")
-
-
 def _assign_cells(emb: DataFrame, cents: list[tuple]) -> DataFrame:
     """(vec_id, v, norm) + centroid tuples -> the same rows with their
     coarse cell_id: one BLAS GEMM per Arrow batch (m @ centroids.T,
@@ -794,7 +765,22 @@ def build_ivf_index(
     append to their cell partitions.
     """
     emb = _emb(spark, sf_dir, scorable=True).withColumn("norm", _norm(F.col("v")))
-    cents = _coarse_centroids(spark, sf_dir, cells, centroids, kmeans_iters)
+    # sorted (cell_id, vector, norm): "head" cell ids are the chosen
+    # vec_ids, "kmeans" ones 0..cells-1
+    if centroids == "head":
+        cent_rows = emb.filter(
+            (F.col("vec_id") >= N_QUERIES)
+            & (F.col("vec_id") < N_QUERIES + cells)
+        ).collect()
+        cents = sorted((r["vec_id"], list(r["v"]), r["norm"]) for r in cent_rows)
+    elif centroids == "kmeans":
+        cmat, _inertia = kmeans_fit(spark, sf_dir, k=cells, iters=kmeans_iters)
+        cents = [
+            (cid, cv, math.sqrt(sum(x * x for x in cv)))
+            for cid, cv in enumerate(cmat)
+        ]
+    else:
+        raise ValueError(f"unknown centroids mode: {centroids!r}")
     assigned = _assign_cells(emb, cents)
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(index_dir)
     # AFTER the data write: overwriting index_dir would wipe a

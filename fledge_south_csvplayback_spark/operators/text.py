@@ -329,7 +329,7 @@ def text_top_ngrams(
             parts = [F.element_at(t, i + j) for j in range(n)]
             return F.concat_ws(" ", *parts)
 
-        # in-expression totality guard (dedup.positional_shingles
+        # in-expression totality guard (dedup.shingles
         # docstring): the .filter below does not protect against CSE
         return F.when(
             F.size(t) >= n,

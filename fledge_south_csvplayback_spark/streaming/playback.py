@@ -4,19 +4,26 @@ The reference's core runtime is a rate-controlled producer/consumer
 pair over chunked pandas iterators (reference csvplayback.py:787-930).
 Structured Streaming replaces the whole apparatus:
 
-- ST1 micro-batching: file-source ``readStream`` with
-  ``maxFilesPerTrigger`` — the chunk queue, producer thread, and
-  sentinel protocol (csvplayback.py:787-867) disappear.
-- ST2 pacing: ``Trigger.ProcessingTime(burst_interval)`` is the
-  sleep-to-deadline loop (csvplayback.py:928-930).
-- ST3 burst vs continuous: burst stamps every batch row with one
-  wall-clock timestamp (T2); continuous spreads the batch across its
-  anchor second (T1). Spark emits micro-batches either way — what
-  downstream sees is the timestamps, which is exactly the reference's
-  observable behavior (SURVEY.md §7 'what's hard' #3).
-- ST4 backpressure: ``maxFilesPerTrigger`` bounds in-flight work; the
+- ST1 micro-batching: file-source ``readStream`` capped at
+  ``MAX_BYTES_PER_TRIGGER`` bytes per trigger. ``foreachBatch`` numbers
+  each row by its position in its file and cuts every file into
+  ``chunk_size``-row bursts, a file's last burst possibly short — the
+  reference's ``read_csv(chunksize=...)`` (csvplayback.py:294-318,574).
+  The chunk queue, producer thread and sentinel protocol
+  (csvplayback.py:787-867) disappear; one micro-batch may hold many
+  bursts, and its offset log entry records which files it admitted.
+- ST2 pacing: ``Trigger.ProcessingTime(burst_interval)`` admits the
+  files; inside a trigger burst *b* is handed out at its stamp, the
+  sleep-to-deadline loop (csvplayback.py:928-930). AvailableNow drains
+  hand bursts out back to back.
+- ST3 burst vs continuous: burst *b* of a trigger is stamped
+  ``anchor + b * period`` (T2); continuous adds ``i * floor(1e6/n)``
+  microseconds for row *i* of the burst (T1). The session carries the
+  next free stamp, so a later trigger never reuses or precedes an
+  earlier one.
+- ST4 backpressure: the byte cap bounds what one trigger admits; the
   poll adapter's bounded queue reproduces the reference's 3-chunk cap
-  (MAX_QUEUE_CHUNK_CAPACITY, csvplayback.py:787).
+  (MAX_QUEUE_CHUNK_CAPACITY, csvplayback.py:787), counted in bursts.
 - ST5/ST9: ``query.stop()`` / ``Trigger.AvailableNow`` termination.
 - ST6 reconfigure=restart: stop, rebuild from a new config, start —
   ``restart()`` below (csvplayback.py:336-353).
@@ -25,10 +32,12 @@ Structured Streaming replaces the whole apparatus:
   442-447,832-834).
 - S9 file lifecycle: ``cleanSource`` delete/archive ≈ the reference's
   delete/rename post-process (csvplayback.py:828-863).
-- S7 poll sink: bounded-queue adapter; ``poll()`` returns one batch of
+- S7 poll sink: bounded-queue adapter; ``poll()`` returns one burst of
   readings per call like ``plugin_poll`` (csvplayback.py:423-474).
-- S8 async sink: ``foreachBatch`` invoking a registered callback ≈
-  ``async_ingest.ingest_callback`` (csvplayback.py:907-912).
+- S8 async sink: ``foreachBatch`` invoking a registered callback once
+  per burst ≈ ``async_ingest.ingest_callback`` (csvplayback.py:
+  907-912). The trigger reaches the driver as one ``toArrow()`` table;
+  each burst becomes a list of ``Row(asset, timestamp, readings)``.
 - S10 CSV append writer: ``write.mode('append').csv`` (the ETL tool's
   chunked append, process_csv_data.py:76,81).
 """
@@ -36,18 +45,30 @@ Structured Streaming replaces the whole apparatus:
 from __future__ import annotations
 
 import queue
+import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import _create_row
 
 from fledge_south_csvplayback_spark.config import IngestMode, PlaybackConfig
 from fledge_south_csvplayback_spark.operators import readings as env
 from fledge_south_csvplayback_spark.sources import csv_source
 
 MAX_QUEUE_CHUNK_CAPACITY = 3  # reference bounded buffer, csvplayback.py:787
+# CSV bytes one trigger admits (maxBytesPerTrigger; a larger file is
+# still admitted whole). The driver holds one trigger's Arrow table and
+# one burst's Rows at a time, so this cap bounds playback driver memory.
+MAX_BYTES_PER_TRIGGER = 64 << 20
+# where each row sits in its file: the file, and the start of the split
+# (partition) that read it
+_POSITION = ("_file", "_block")
+_POSITION_SQL = ("_metadata.file_path AS _file", "_metadata.file_block_start AS _block")
+_ROW_FIELDS = ["asset", "timestamp", "readings"]
 
 
 def stream_source(
@@ -56,9 +77,9 @@ def stream_source(
     schema: str,
     clean_source: str | None = None,
     archive_dir: str | None = None,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """File-source readStream over the config's directory + pattern (S1).
+    """File-source readStream over the config's directory + pattern (S1),
+    with each row's ``_file`` and ``_block`` for the burst cut (ST1).
 
     Directory watching, alphabetical pick-up, and decompression are
     native to the file source; ``cleanSource`` covers the delete/rename
@@ -69,7 +90,7 @@ def stream_source(
         spark.readStream.schema(schema)
         .option("header", True)
         .option("escape", '"')
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
     )
     if clean_source:
         reader = reader.option("cleanSource", clean_source)
@@ -80,58 +101,75 @@ def stream_source(
     # string columns ('NA' stayed literal)
     return csv_source.null_na_sentinels(
         reader.csv(f"{cfg.resolve_csv_dir()}/{pattern}")
-    )
+    ).selectExpr("*", *_POSITION_SQL)
+
+
+def _period_us(cfg: PlaybackConfig) -> int:
+    """Stamp distance of consecutive bursts: the burst interval, or one
+    second for a continuous chunk (a second's worth of rows, T1)."""
+    if cfg.ingest_mode is IngestMode.BURST:
+        return round(cfg.period_s * 1_000_000)
+    return 1_000_000
 
 
 def stamp_batch(df: DataFrame, cfg: PlaybackConfig, anchor: str | None = None) -> DataFrame:
-    """Apply the configured timestamp style to one micro-batch (ST3).
+    """Stamp a file-source frame the way one playback trigger stamps it
+    (ST3), in SQL.
 
-    Burst: one wall-clock stamp for the whole batch (T2). Continuous:
-    rows spread evenly across the anchor second (T1) by batch-local
-    row number. The anchor defaults to now() — pass one for
-    deterministic tests.
+    Files are cut into ``chunk_size``-row bursts in file order; burst
+    *b* of the frame is stamped ``anchor + b * period`` (T2), and in
+    continuous mode row *i* of a burst gets ``i * floor(1e6/n)``
+    microseconds more (T1). ``df`` must read ``_metadata`` (a file
+    source). The anchor defaults to now() — pass one for deterministic
+    tests.
     """
     if anchor is None:
         anchor = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-    if cfg.ingest_mode is IngestMode.BURST:
-        return df.withColumn("timestamp", F.lit(anchor).cast("timestamp"))
     n = cfg.chunk_size
-    step_us = 1_000_000 // n
-    # Batch-local spreading id: the low 33 bits of
-    # monotonically_increasing_id are a per-partition 0-based sequence
-    # that RESTARTS per partition — used alone, a multi-partition batch
-    # would cluster every partition's rows near the anchor instead of
-    # spreading across the second. Each partition therefore starts at
-    # its own offset: 0 for partition 0 (a single-partition batch walks
-    # the second consecutively, unchanged semantics), xxhash64(pid) % n
-    # for the rest — a hashed offset cannot ALIGN for every partition,
-    # which equal strides do whenever pid*stride ≡ 0 (mod n) (e.g.
-    # stride = n//defaultParallelism degenerates to stride=n on
-    # local[1], putting every partition back at the anchor — the
-    # original bug). All without the per-trigger driver round-trip a
-    # global row number costs (with_global_row_number collect()s
-    # partition counts; at high trigger rates that's driver chatter per
-    # micro-batch). Exact global positions stay with the oracle-checked
-    # batch T1 operator (timestamps.current_time_continuous).
-    pid = F.spark_partition_id()
-    offset = F.when(pid == 0, F.lit(0).cast("long")).otherwise(
-        F.pmod(F.xxhash64(pid), F.lit(n)).cast("long")
+    offset = f"(dense_rank() OVER (ORDER BY _file, _row div {n}) - 1) * {_period_us(cfg)}"
+    if cfg.ingest_mode is IngestMode.CONTINUOUS:
+        offset += f" + (_row % {n}) * {1_000_000 // n}"
+    # a split's rows keep their read order inside one partition, so
+    # (split start, per-partition id) orders a file over several partitions
+    return (
+        df.selectExpr("*", *_POSITION_SQL, "monotonically_increasing_id() AS _mid")
+        .selectExpr(
+            "*", "row_number() OVER (PARTITION BY _file ORDER BY _block, _mid) - 1 AS _row"
+        )
+        .selectExpr(
+            "*", f"timestampadd(MICROSECOND, {offset}, TIMESTAMP '{anchor}') AS timestamp"
+        )
+        .drop("_file", "_block", "_mid", "_row")
     )
-    numbered = df.withColumn(
-        "_k",
-        F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1) + offset,
-    )
-    return numbered.withColumn(
-        "timestamp",
-        F.expr(
-            f"timestampadd(MICROSECOND, (_k % {n}) * {step_us}, "
-            f"TIMESTAMP '{anchor}')"
-        ),
-    ).drop("_k")
 
 
 def to_envelope(df: DataFrame, cfg: PlaybackConfig) -> DataFrame:
     return env.build_envelope(df, asset=cfg.asset_name)
+
+
+def _stamp_strings(us: np.ndarray) -> list[str]:
+    """UTC microsecond stamps as Spark casts a timestamp to string: the
+    fraction without trailing zeros, none for a whole second."""
+    text = np.datetime_as_string(us.astype("datetime64[us]")).tolist()
+    return [t.replace("T", " ").rstrip("0").rstrip(".") for t in text]
+
+
+def _burst_rows(tbl, stamps: list[str]) -> list:
+    """One burst's Arrow slice as ``Row(asset, timestamp, readings)``s,
+    equal to what ``collect()`` returns for the same envelope."""
+    readings = tbl.column("readings").combine_chunks()
+    offsets = readings.offsets.to_numpy().tolist()
+    keys = readings.keys.to_numpy(zero_copy_only=False).tolist()
+    items = readings.items.to_numpy(zero_copy_only=False).tolist()
+    return [
+        _create_row(_ROW_FIELDS, (asset, ts, dict(zip(keys[a:b], items[a:b]))))
+        for asset, ts, a, b in zip(
+            tbl.column("asset").to_numpy(zero_copy_only=False).tolist(),
+            stamps,
+            offsets,
+            offsets[1:],
+        )
+    ]
 
 
 @dataclass
@@ -141,7 +179,7 @@ class _Batch:
 
 
 class PlaybackSession:
-    """One playback run: source -> stamp -> envelope -> sink."""
+    """One playback run: source -> bursts -> stamp -> envelope -> sink."""
 
     def __init__(
         self,
@@ -157,22 +195,64 @@ class PlaybackSession:
         self.clean_source = clean_source
         self.archive_dir = archive_dir
         self.query: StreamingQuery | None = None
+        # first stamp a later burst may take (ST3); carried across
+        # triggers and restarts
+        self._next_stamp_us = 0
         # S7 poll adapter: bounded like the reference's readings queue
         self._poll_queue: queue.Queue[_Batch] = queue.Queue(
             maxsize=MAX_QUEUE_CHUNK_CAPACITY
         )
 
+    def _play(self, tbl, callback, batch_id: int, paced: bool) -> None:
+        """Cut one trigger's table into bursts, stamp them, and hand each
+        to ``callback`` — at its stamp when ``paced``."""
+        cfg = self.cfg
+        n, period = cfg.chunk_size, _period_us(cfg)
+        # file order: a split's rows keep their read order inside one
+        # partition, so (split start, per-partition id) orders a file
+        # read by several partitions
+        tbl = tbl.sort_by([(c, "ascending") for c in ("_file", "_block", "_mid")])
+        files = tbl.column("_file").to_numpy(zero_copy_only=False)
+        first = np.flatnonzero(np.r_[True, files[1:] != files[:-1]])
+        # row position in its file; a burst starts wherever it is 0 mod n
+        row = np.arange(tbl.num_rows) - np.repeat(first, np.diff(np.r_[first, tbl.num_rows]))
+        starts = np.flatnonzero(row % n == 0).tolist()
+        # now in whole seconds, like the reference's T1 chunk anchor
+        anchor = max(int(time.time()) * 1_000_000, self._next_stamp_us)
+        self._next_stamp_us = anchor + len(starts) * period
+        step = 1_000_000 // n if cfg.ingest_mode is IngestMode.CONTINUOUS else 0
+        for b, (lo, hi) in enumerate(zip(starts, starts[1:] + [tbl.num_rows])):
+            stamp = anchor + b * period
+            if paced:
+                time.sleep(max(0.0, stamp / 1e6 - time.time()))
+            if step:
+                stamps = _stamp_strings(stamp + step * np.arange(hi - lo, dtype=np.int64))
+            else:
+                stamps = _stamp_strings(np.array([stamp])) * (hi - lo)
+            callback(_burst_rows(tbl.slice(lo, hi - lo), stamps), batch_id)
+
     # -- S8: async ingest callback -------------------------------------
     def start_async(self, callback, available_now: bool = False) -> StreamingQuery:
-        """foreachBatch sink: callback(list_of_reading_rows, batch_id)."""
+        """foreachBatch sink: ``callback(rows, batch_id)`` once per burst.
+
+        Several bursts may share one micro-batch, and so one
+        ``batch_id``. A processingTime stream hands each burst out at
+        its stamp; an AvailableNow drain hands them out back to back.
+        """
         cfg = self.cfg
         src = stream_source(
             self.spark, cfg, self.schema, self.clean_source, self.archive_dir
         )
+        # the envelope minus its timestamp, planned once per stream
+        src = src.select(
+            F.lit(cfg.asset_name).alias("asset"),
+            env.readings_map(src, exclude=("timestamp", *_POSITION)).alias("readings"),
+            *_POSITION,
+        )
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
-            out = to_envelope(stamp_batch(batch_df, cfg), cfg)
-            callback(out.collect(), batch_id)
+            tbl = batch_df.selectExpr("*", "monotonically_increasing_id() AS _mid").toArrow()
+            self._play(tbl, callback, batch_id, not available_now)
 
         writer = src.writeStream.foreachBatch(handle)
         if available_now:

@@ -30,7 +30,8 @@ def test_async_stream_drains_all_files(spark):
     q = session.start_async(cb, available_now=True)
     q.awaitTermination()
     assert sum(got) == 4000  # 2 files x 2000 data rows
-    assert len(got) >= 2  # maxFilesPerTrigger=1 -> one batch per file
+    # chunk_size is 8000: each 2000-row file plays as one short burst
+    assert got == [2000, 2000]
 
 
 def test_poll_mode_envelope_shape(spark):
@@ -56,45 +57,121 @@ def test_continuous_mode_spreads_timestamps(spark):
     assert len(stamps) > 100
 
 
-def test_multi_partition_batch_spreads_across_second(spark):
-    """A multi-partition micro-batch must spread across the anchor
-    second, not cluster every partition's rows near the anchor: the
-    per-partition spreading id restarts at 0, so partition 0 starts at
-    slot 0 and every other partition at xxhash64(pid) % n (an equal
-    stride pid * (n/P̂) degenerates whenever pid*stride ≡ 0 mod n —
-    stride = n on local[1] put EVERY partition back at the anchor).
-    The expected slot set is recomputed here from the same formula, so
-    the assertion is exact and host-independent."""
-    from pyspark.sql import functions as F
+def _land(d, name: str, rows: int) -> None:
+    """A vib CSV whose channel1 is the row's position in the file."""
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, name), "w") as f:
+        f.write("channel1,channel2,user_ts\n")
+        f.writelines(f"{i},{name},x\n" for i in range(rows))
 
+
+def _bursts(spark, cfg):
+    got = []
+    session = pb.PlaybackSession(spark, cfg, SCHEMA)
+    q = session.start_async(lambda rows, bid: got.append(rows), available_now=True)
+    q.awaitTermination()
+    return got
+
+
+def _stamp_us(ts: str) -> int:
+    from datetime import datetime, timezone
+
+    fmt = "%Y-%m-%d %H:%M:%S.%f" if "." in ts else "%Y-%m-%d %H:%M:%S"
+    t = datetime.strptime(ts, fmt).replace(tzinfo=timezone.utc)
+    return round(t.timestamp() * 1_000_000)
+
+
+@pytest.fixture
+def small_splits(spark):
+    """Split every file into ~16 KB partitions for the test's duration."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    yield
+    spark.conf.set(key, old)
+
+
+def test_file_plays_as_chunk_size_bursts(spark, tmp_path):
+    """ST1: a 20k-row file plays as 8000, 8000 and 4000-row bursts, each
+    with one stamp, period_s apart, rows in file order (the reference's
+    read_csv(chunksize=...), csvplayback.py:294-318,574)."""
+    d = str(tmp_path / "land")
+    _land(d, "vib_a.csv", 20_000)
+    cfg = _cfg(d)
+    assert cfg.chunk_size == 8000
+    got = _bursts(spark, cfg)
+    assert [len(b) for b in got] == [8000, 8000, 4000]
+    stamps = []
+    for burst in got:
+        assert len({r.timestamp for r in burst}) == 1
+        stamps.append(_stamp_us(burst[0].timestamp))
+    period_us = round(cfg.period_s * 1_000_000)
+    assert [b - a for a, b in zip(stamps, stamps[1:])] == [period_us] * 2
+    rows = [int(r.readings["channel1"]) for burst in got for r in burst]
+    assert rows == list(range(20_000))
+
+
+def test_split_file_bursts_keep_row_order(spark, tmp_path, small_splits):
+    """A two-file micro-batch whose first file spans several partitions
+    still plays file by file, in row order."""
+    d = str(tmp_path / "land")
+    _land(d, "vib_a.csv", 20_000)
+    _land(d, "vib_b.csv", 3_000)
+    parts = spark.read.csv(os.path.join(d, "vib_a.csv")).rdd.getNumPartitions()
+    assert parts > 2
+    got = _bursts(spark, _cfg(d))
+    assert [len(b) for b in got] == [8000, 8000, 4000, 3000]
+    order = [
+        (r.readings["channel2"], int(r.readings["channel1"]))
+        for burst in got
+        for r in burst
+    ]
+    assert order == [("vib_a.csv", i) for i in range(20_000)] + [
+        ("vib_b.csv", i) for i in range(3_000)
+    ]
+
+
+def test_poll_queue_counts_bursts(spark, tmp_path):
+    """S7/ST4: the bounded poll queue holds bursts, not files."""
+    d = str(tmp_path / "land")
+    _land(d, "vib_a.csv", 20_000)
+    session = pb.PlaybackSession(spark, _cfg(d), SCHEMA)
+    session.start_polling(available_now=True)
+    sizes = []
+    while (batch := session.poll()) is not None:
+        sizes.append(len(batch))
+    assert sizes == [8000, 8000, 4000]  # chunk_size 8000
+
+
+def test_continuous_bursts_sit_on_exact_t1_slots(spark, tmp_path, small_splits):
+    """T1: row i of a continuous burst of n rows sits at its burst's
+    anchor + i * floor(1e6/n) microseconds, and burst b's anchor is the
+    first one's + b seconds, whether the file is read in one partition
+    or several. Checked on ``stamp_batch`` (SQL) and on the stream
+    (driver-side stamps) alike."""
     n = 2000
-    rows_per_part = 100
-    cfg = _cfg(FIXTURE_MULTI, ingest_mode=IngestMode.CONTINUOUS, sample_rate=n)
-    df = spark.range(400, numPartitions=4).selectExpr("id AS channel1")
-    stamped = pb.stamp_batch(df, cfg, anchor="2020-01-01 00:00:00")
-    micros = [
-        r[0]
-        for r in stamped.selectExpr(
-            "unix_micros(timestamp) - unix_micros(TIMESTAMP '2020-01-01 00:00:00')"
-        ).collect()
-    ]
+    d = str(tmp_path / "land")
+    _land(d, "vib_a.csv", 5_000)
+    cfg = _cfg(d, ingest_mode=IngestMode.CONTINUOUS, sample_rate=n)
     step = 1_000_000 // n
-    slots = {m // step for m in micros}
-    offsets = [0] + [
-        r[0]
-        for r in spark.range(1, 4)
-        .select(F.pmod(F.xxhash64(F.col("id").cast("int")), F.lit(n)))
-        .collect()
-    ]
-    expected = {
-        (off + k) % n for off in offsets for k in range(rows_per_part)
-    }
-    assert slots == expected, (sorted(slots)[:5], sorted(expected)[:5])
-    # hashed offsets must actually decorrelate the 4 partitions: the
-    # slot union is near-4x one partition's reach (allowing overlap)
-    assert len(slots) > 2 * rows_per_part
-    # and the spread stays inside the anchor second
-    assert 0 <= min(micros) and max(micros) < 1_000_000
+    expected = [(k // n) * 1_000_000 + (k % n) * step for k in range(5_000)]
+
+    df = spark.read.schema(SCHEMA).option("header", True).csv(d)
+    assert df.rdd.getNumPartitions() > 1
+    stamped = pb.stamp_batch(df, cfg, anchor="2020-01-01 00:00:00")
+    got = sorted(
+        stamped.selectExpr(
+            "CAST(channel1 AS INT)",
+            "unix_micros(timestamp) - unix_micros(TIMESTAMP '2020-01-01 00:00:00')",
+        ).collect()
+    )
+    assert [us for _, us in got] == expected
+
+    bursts = _bursts(spark, cfg)
+    assert [len(b) for b in bursts] == [2000, 2000, 1000]
+    rows = [r for b in bursts for r in b]
+    first = _stamp_us(rows[0].timestamp)
+    assert [_stamp_us(r.timestamp) - first for r in rows] == expected
 
 
 def test_replay_loop_doubles_rows(spark):
@@ -106,11 +183,28 @@ def test_replay_loop_doubles_rows(spark):
 
 
 def test_clean_source_archive_moves_files(spark, tmp_path):
+    """S9: cleanSource=archive relocates consumed files. Spark cleans a
+    micro-batch's files when it plans the next micro-batch, and one
+    trigger admits every file that fits the byte cap, so the files land
+    one after the other in a processingTime stream."""
+    import time
+
     src = tmp_path / "incoming"
     src.mkdir()
-    for name in os.listdir(FIXTURE_MULTI):
-        shutil.copy(os.path.join(FIXTURE_MULTI, name), src / name)
+    first, second = sorted(os.listdir(FIXTURE_MULTI))
+
+    def land(name: str) -> None:
+        shutil.copy(os.path.join(FIXTURE_MULTI, name), src / (name + ".tmp"))
+        os.rename(src / (name + ".tmp"), src / name)  # never a half file
+
+    def wait_for(pred) -> None:
+        for _ in range(120):
+            if pred():
+                return
+            time.sleep(0.5)
+
     archive = tmp_path / "done"
+    got: list[int] = []
     session = pb.PlaybackSession(
         spark,
         _cfg(str(src)),
@@ -118,18 +212,18 @@ def test_clean_source_archive_moves_files(spark, tmp_path):
         clean_source="archive",
         archive_dir=str(archive),
     )
-    q = session.start_async(lambda rows, bid: None, available_now=True)
-    q.awaitTermination()
-    # archival is asynchronous maintenance work; allow it to settle
-    import time
-
-    for _ in range(40):
-        if not any(f.endswith(".csv") for f in os.listdir(src)):
-            break
-        time.sleep(0.5)
-    archived = list(archive.rglob("*.csv")) if archive.exists() else []
-    moved = not any(f.endswith(".csv") for f in os.listdir(src))
-    assert moved or archived, "cleanSource=archive should relocate consumed files"
+    land(first)
+    session.start_async(lambda rows, bid: got.append(len(rows)))
+    try:
+        wait_for(lambda: got)
+        land(second)
+        # archival is asynchronous maintenance work; allow it to settle
+        wait_for(lambda: not (src / first).exists())
+    finally:
+        session.stop()
+    archived = [p.name for p in archive.rglob("*.csv")] if archive.exists() else []
+    assert not (src / first).exists(), "cleanSource=archive should relocate consumed files"
+    assert first in archived
 
 
 def test_restart_with_new_config(spark):
