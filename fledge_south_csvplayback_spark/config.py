@@ -132,7 +132,7 @@ class PlaybackConfig:
     # -- pacing math: mirrors csvplayback.py:294-318 --------------------
     def _derive_pacing(self) -> tuple[float, int]:
         if self.ingest_mode is IngestMode.BURST:
-            # one burst's worth of rows per micro-batch
+            # one burst's worth of rows, played period apart
             period = round(
                 self.burst_interval_ms / 1000.0, len(str(self.burst_interval_ms)) + 1
             )

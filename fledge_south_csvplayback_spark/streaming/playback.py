@@ -24,14 +24,18 @@ Structured Streaming replaces the whole apparatus:
 - ST4 backpressure: the byte cap bounds what one trigger admits; the
   poll adapter's bounded queue reproduces the reference's 3-chunk cap
   (MAX_QUEUE_CHUNK_CAPACITY, csvplayback.py:787), counted in bursts.
-- ST5/ST9: ``query.stop()`` / ``Trigger.AvailableNow`` termination.
+- ST5/ST9: ``stop()`` / ``Trigger.AvailableNow`` termination; ``stop()``
+  ends a paced wait at once and drops the running trigger's bursts not
+  yet handed out.
 - ST6 reconfigure=restart: stop, rebuild from a new config, start —
   ``restart()`` below (csvplayback.py:336-353).
 - ST7 replay (continue_playing): no native stream replay; a driver
   loop re-runs an AvailableNow pass per iteration (csvplayback.py:
   442-447,832-834).
 - S9 file lifecycle: ``cleanSource`` delete/archive ≈ the reference's
-  delete/rename post-process (csvplayback.py:828-863).
+  delete/rename post-process (csvplayback.py:828-863). Spark cleans a
+  micro-batch's files when it plans the next one, so with a lifecycle
+  the source admits one file per trigger instead of the byte cap.
 - S7 poll sink: bounded-queue adapter; ``poll()`` returns one burst of
   readings per call like ``plugin_poll`` (csvplayback.py:423-474).
 - S8 async sink: ``foreachBatch`` invoking a registered callback once
@@ -45,6 +49,7 @@ Structured Streaming replaces the whole apparatus:
 from __future__ import annotations
 
 import queue
+import threading
 import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -61,8 +66,9 @@ from fledge_south_csvplayback_spark.sources import csv_source
 
 MAX_QUEUE_CHUNK_CAPACITY = 3  # reference bounded buffer, csvplayback.py:787
 # CSV bytes one trigger admits (maxBytesPerTrigger; a larger file is
-# still admitted whole). The driver holds one trigger's Arrow table and
-# one burst's Rows at a time, so this cap bounds playback driver memory.
+# still admitted whole; one file per trigger with a cleanSource). The
+# driver holds one trigger's Arrow table and one burst's Rows at a time,
+# so this cap bounds playback driver memory.
 MAX_BYTES_PER_TRIGGER = 64 << 20
 # where each row sits in its file: the file, and the start of the split
 # (partition) that read it
@@ -86,16 +92,17 @@ def stream_source(
     post-process (S9).
     """
     pattern = f"*{cfg.csv_file_name}*.csv" if cfg.csv_file_name else "*.csv"
-    reader = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("escape", '"')
-        .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
-    )
+    reader = spark.readStream.schema(schema).option("header", True).option("escape", '"')
     if clean_source:
-        reader = reader.option("cleanSource", clean_source)
+        # Spark cleans a micro-batch's files only when it plans the next
+        # micro-batch, so a drain admitted in one trigger would clean
+        # none: with a file lifecycle the source admits one file per
+        # trigger, and every file but the last one is cleaned
+        reader = reader.option("maxFilesPerTrigger", 1).option("cleanSource", clean_source)
         if clean_source == "archive":
             reader = reader.option("sourceArchiveDir", archive_dir)
+    else:
+        reader = reader.option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
     # same pandas NA-sentinel semantics as the batch readers (round 12):
     # without this a streamed file diverged from its batch read on
     # string columns ('NA' stayed literal)
@@ -198,6 +205,9 @@ class PlaybackSession:
         # first stamp a later burst may take (ST3); carried across
         # triggers and restarts
         self._next_stamp_us = 0
+        # set by stop(): ends a paced wait and drops the bursts of the
+        # running trigger that are not handed out yet
+        self._stopping = threading.Event()
         # S7 poll adapter: bounded like the reference's readings queue
         self._poll_queue: queue.Queue[_Batch] = queue.Queue(
             maxsize=MAX_QUEUE_CHUNK_CAPACITY
@@ -223,8 +233,8 @@ class PlaybackSession:
         step = 1_000_000 // n if cfg.ingest_mode is IngestMode.CONTINUOUS else 0
         for b, (lo, hi) in enumerate(zip(starts, starts[1:] + [tbl.num_rows])):
             stamp = anchor + b * period
-            if paced:
-                time.sleep(max(0.0, stamp / 1e6 - time.time()))
+            if self._stopping.wait(max(0.0, stamp / 1e6 - time.time()) if paced else 0):
+                return
             if step:
                 stamps = _stamp_strings(stamp + step * np.arange(hi - lo, dtype=np.int64))
             else:
@@ -238,8 +248,10 @@ class PlaybackSession:
         Several bursts may share one micro-batch, and so one
         ``batch_id``. A processingTime stream hands each burst out at
         its stamp; an AvailableNow drain hands them out back to back.
+        After ``stop()`` no further burst is handed out.
         """
         cfg = self.cfg
+        self._stopping.clear()
         src = stream_source(
             self.spark, cfg, self.schema, self.clean_source, self.archive_dir
         )
@@ -267,7 +279,12 @@ class PlaybackSession:
     # -- S7: poll handoff ----------------------------------------------
     def start_polling(self, available_now: bool = True) -> StreamingQuery:
         def enqueue(rows: list, batch_id: int) -> None:
-            self._poll_queue.put(_Batch(batch_id, rows))  # blocks at cap (ST4)
+            # blocks at cap (ST4) until poll() takes a burst or stop()
+            while not self._stopping.is_set():
+                try:
+                    return self._poll_queue.put(_Batch(batch_id, rows), timeout=0.1)
+                except queue.Full:
+                    pass
 
         return self.start_async(enqueue, available_now=available_now)
 
@@ -286,6 +303,9 @@ class PlaybackSession:
 
     # -- ST5/ST6 --------------------------------------------------------
     def stop(self) -> None:
+        """Stop the query without waiting out the running trigger's
+        remaining bursts: they are dropped."""
+        self._stopping.set()
         if self.query is not None and self.query.isActive:
             self.query.stop()
 

@@ -183,10 +183,35 @@ def test_replay_loop_doubles_rows(spark):
 
 
 def test_clean_source_archive_moves_files(spark, tmp_path):
-    """S9: cleanSource=archive relocates consumed files. Spark cleans a
-    micro-batch's files when it plans the next micro-batch, and one
-    trigger admits every file that fits the byte cap, so the files land
-    one after the other in a processingTime stream."""
+    src = tmp_path / "incoming"
+    src.mkdir()
+    for name in os.listdir(FIXTURE_MULTI):
+        shutil.copy(os.path.join(FIXTURE_MULTI, name), src / name)
+    archive = tmp_path / "done"
+    session = pb.PlaybackSession(
+        spark,
+        _cfg(str(src)),
+        SCHEMA,
+        clean_source="archive",
+        archive_dir=str(archive),
+    )
+    q = session.start_async(lambda rows, bid: None, available_now=True)
+    q.awaitTermination()
+    # archival is asynchronous maintenance work; allow it to settle
+    import time
+
+    for _ in range(40):
+        if not any(f.endswith(".csv") for f in os.listdir(src)):
+            break
+        time.sleep(0.5)
+    archived = list(archive.rglob("*.csv")) if archive.exists() else []
+    moved = not any(f.endswith(".csv") for f in os.listdir(src))
+    assert moved or archived, "cleanSource=archive should relocate consumed files"
+
+
+def test_clean_source_archive_moves_streamed_files(spark, tmp_path):
+    """S9 in a processingTime stream: a file landed after the first one
+    is a later micro-batch, whose planning archives the first file."""
     import time
 
     src = tmp_path / "incoming"
@@ -224,6 +249,59 @@ def test_clean_source_archive_moves_files(spark, tmp_path):
     archived = [p.name for p in archive.rglob("*.csv")] if archive.exists() else []
     assert not (src / first).exists(), "cleanSource=archive should relocate consumed files"
     assert first in archived
+
+
+def _stop_within(session, seconds: float) -> None:
+    """Call session.stop() on a thread; fail instead of hanging if it
+    takes longer than ``seconds``."""
+    import threading
+
+    stopper = threading.Thread(target=session.stop, daemon=True)
+    stopper.start()
+    stopper.join(seconds)
+    assert not stopper.is_alive(), f"stop() still running after {seconds} s"
+
+
+def test_stop_ends_a_paced_trigger(spark, tmp_path):
+    """ST5: a processingTime trigger of several bursts sleeps until each
+    burst's stamp; stop() ends that wait at once and no further burst
+    reaches the callback."""
+    import time
+
+    d = str(tmp_path / "land")
+    _land(d, "vib_a.csv", 20_000)
+    cfg = _cfg(d, burst_interval_ms=5000, sample_rate=1000)
+    assert (cfg.chunk_size, cfg.period_s) == (5000, 5.0)  # 4 bursts, 5 s apart
+    got: list[int] = []
+    session = pb.PlaybackSession(spark, cfg, SCHEMA)
+    session.start_async(lambda rows, bid: got.append(len(rows)))
+    for _ in range(120):
+        if got:
+            break
+        time.sleep(0.25)
+    assert got == [5000]
+    _stop_within(session, cfg.period_s)
+    time.sleep(0.5)
+    assert got == [5000]
+
+
+def test_stop_releases_a_full_poll_queue(spark, tmp_path):
+    """ST4/ST5: a trigger blocked on the full poll queue does not hold
+    stop() up."""
+    import time
+
+    d = str(tmp_path / "land")
+    _land(d, "vib_a.csv", 5_000)
+    cfg = _cfg(d, sample_rate=1000)
+    assert cfg.chunk_size == 1000  # 5 bursts against a queue of 3
+    session = pb.PlaybackSession(spark, cfg, SCHEMA)
+    session.start_polling(available_now=True)
+    for _ in range(120):
+        if session._poll_queue.full():
+            break
+        time.sleep(0.25)
+    assert session._poll_queue.full()
+    _stop_within(session, 10.0)
 
 
 def test_restart_with_new_config(spark):
